@@ -150,7 +150,6 @@ def main() -> None:
         # the frozen bench.py's _groups10
         from peregrine_spark.operators.groups import (
             GroupCountContext,
-            _totals_many,
             group_count_many,
         )
         from peregrine_spark.operators.motifs import all_motifs

@@ -78,13 +78,15 @@ _LIVE_CONTEXTS: dict[int, tuple] = {}
 def live_context_for(edges: DataFrame) -> "GroupCountContext | None":
     """The live GroupCountContext built on EXACTLY this DataFrame object,
     if one exists (identity check guards against id() reuse)."""
+    # prune dead entries: a DataFrame or context collected without an
+    # unpersist() (its id may already belong to a new object)
+    for key, (eref, cref) in list(_LIVE_CONTEXTS.items()):
+        if eref() is None or cref() is None:
+            del _LIVE_CONTEXTS[key]
     ent = _LIVE_CONTEXTS.get(id(edges))
-    if ent is None:
+    if ent is None or ent[0]() is not edges:
         return None
-    eref, cref = ent
-    if eref() is not edges:
-        return None
-    return cref()
+    return ent[1]()
 
 
 class GroupCountContext:
@@ -229,8 +231,11 @@ class GroupCountContext:
         )
 
     def unpersist(self) -> None:
-        if self._edges_key is not None:
-            _LIVE_CONTEXTS.pop(self._edges_key, None)
+        # drop the registry entry only while it is ours: a later context
+        # on the same edges DataFrame overwrote it and is still live
+        ent = _LIVE_CONTEXTS.get(self._edges_key)
+        if ent is not None and ent[1]() is self:
+            del _LIVE_CONTEXTS[self._edges_key]
         for df in self._caches:
             df.unpersist()
 

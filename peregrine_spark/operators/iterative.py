@@ -27,12 +27,23 @@ from peregrine_spark.operators.skew import (
 from peregrine_spark.plans.superstep import SuperstepDriver, SuperstepResult
 
 
-def _vertices_from_edges(edges: DataFrame) -> DataFrame:
-    return (
-        edges.select(F.col("src").alias("id"))
-        .union(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
+HUB_CAP = 2048  # hub keys embedded as isin() literals (see skew.hub_keys)
+
+
+def _hub_keys(deg: DataFrame, col: str, max_deg: int, n_rows: int) -> list[int]:
+    """Ids whose degree column exceeds the hub threshold for n_rows, hottest
+    first. The setup aggregation already knows the max degree, so the
+    collect job runs only when some vertex is actually a hub."""
+    thr = auto_hub_threshold(n_rows)
+    if max_deg <= thr:
+        return []
+    return [
+        r["id"]
+        for r in deg.filter(F.col(col) > thr)
+        .orderBy(F.col(col).desc())
+        .limit(HUB_CAP)
+        .collect()
+    ]
 
 
 # --------------------------------------------------------------------------
@@ -65,31 +76,41 @@ def pagerank(
     state twice per superstep, so the unmaterialized plan tree would grow
     2^k.
     """
-    if vertices is None:
-        vertices = _vertices_from_edges(edges)
     # Pre-partition the static edge side by the gather key ONCE: the
     # cached hash partitioning matches the per-superstep join requirement,
     # so only the (|V|-sized) state side shuffles each superstep. Hub
     # edges are split into their own ROUND-ROBIN cache (see hub_presplit).
     n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     edges = edges.select("src", "dst")
-    out_deg = edges.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).alias("out_deg")
-    )
-    vstatic = (
-        vertices.select("id")
-        .join(out_deg, "id", "left")
-        .select("id", F.coalesce("out_deg", F.lit(0)).alias("out_deg"))
-        .cache()
-    )
+    if vertices is None:
+        # ONE groupBy over both edge ends: every end is a vertex and its
+        # src ends count its out-degree (replaces a union-distinct, a
+        # second groupBy and a join — three shuffles for one)
+        vstatic = (
+            edges.select(F.col("src").alias("id"), F.lit(1).alias("o"))
+            .union(edges.select(F.col("dst").alias("id"), F.lit(0).alias("o")))
+            .groupBy("id")
+            .agg(F.sum("o").alias("out_deg"))
+        )
+    else:
+        out_deg = edges.groupBy(F.col("src").alias("id")).agg(
+            F.count(F.lit(1)).alias("out_deg")
+        )
+        vstatic = (
+            vertices.select("id")
+            .join(out_deg, "id", "left")
+            .select("id", F.coalesce("out_deg", F.lit(0)).alias("out_deg"))
+        )
+    vstatic = vstatic.cache()
     # ONE setup aggregation over the cached |V| table replaces three
     # separate jobs (vstatic.count, the dangling limit(1) probe, and
     # edges.count for the hub threshold — Σ out_deg IS the edge count);
-    # guide §1.2: remove whole passes before tuning inside them.
+    # its max out-degree rules the hub collect job out on hub-free graphs.
     srow = vstatic.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum((F.col("out_deg") == 0).cast("long")).alias("n_dangling"),
         F.coalesce(F.sum("out_deg"), F.lit(0).cast("long")).alias("n_e"),
+        F.coalesce(F.max("out_deg"), F.lit(0).cast("long")).alias("max_deg"),
     ).first()
     n = int(srow["n"])
     if n == 0:
@@ -109,15 +130,7 @@ def pagerank(
     # pin the gather join on a single task take the broadcast path.
     # src multiplicity in `edges` IS out_deg, so the hub keys come from a
     # scan of the cached vstatic — no extra full-edge groupBy job.
-    n_e = int(srow["n_e"])
-    thr = auto_hub_threshold(n_e)
-    hubs = [
-        r["id"]
-        for r in vstatic.filter(F.col("out_deg") > thr)
-        .orderBy(F.col("out_deg").desc())
-        .limit(2048)
-        .collect()
-    ]
+    hubs = _hub_keys(vstatic, "out_deg", int(srow["max_deg"]), int(srow["n_e"]))
     if skew_mode == "hub_split":
         e_rest, e_hub = hub_presplit(edges, "src", hubs, n_part)
     else:
@@ -227,6 +240,49 @@ def pagerank(
     return res
 
 
+def _closure_setup(
+    spark: SparkSession,
+    edges: DataFrame,
+    vertices: DataFrame | None,
+    num_partitions: int | None,
+    skew_mode: str,
+) -> tuple[DataFrame, list[int], DataFrame, DataFrame | None, list[DataFrame]]:
+    """The static side of CC and LP over the undirected closure:
+    (vertex ids, hub keys, rest edges, hub edges, caches to release).
+
+    The closure is cached ONCE: the degree pass, the rest-split and the
+    hub-split all scan it. If the CALLER already cached an identical plan
+    (bench.py caches undirected(edges) for pagerank), cache() is a no-op
+    and their cache is not ours to release. One |V|-row degree pass gives
+    the vertex set, and one aggregation over it the edge count (src
+    multiplicity in the closure == degree) and the max degree, which rules
+    the hub collect job out on hub-free graphs."""
+    n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    und = undirected(edges)
+    und_ours = not (und.storageLevel.useMemory or und.storageLevel.useDisk)
+    und = und.cache()
+    degt = und.groupBy(F.col("src").alias("id")).agg(
+        F.count(F.lit(1)).alias("_deg")
+    ).cache()
+    caches = [degt] + ([und] if und_ours else [])
+    if vertices is None:
+        vstatic = degt.select("id")
+    else:
+        vstatic = vertices.select("id").cache()
+        caches.append(vstatic)
+    row = degt.agg(
+        F.coalesce(F.sum("_deg"), F.lit(0).cast("long")).alias("n_und"),
+        F.coalesce(F.max("_deg"), F.lit(0).cast("long")).alias("max_deg"),
+    ).first()
+    hubs = _hub_keys(degt, "_deg", int(row["max_deg"]), int(row["n_und"]))
+    if skew_mode == "hub_split":
+        u_rest, u_hub = hub_presplit(und, "src", hubs, n_part)
+    else:
+        u_rest, u_hub = und.repartition(n_part, "src").cache(), None
+    caches += [u_rest] + ([u_hub] if u_hub is not None else [])
+    return vstatic, hubs, u_rest, u_hub, caches
+
+
 # --------------------------------------------------------------------------
 # Connected components (hash-min)
 # --------------------------------------------------------------------------
@@ -255,42 +311,9 @@ def connected_components(
     """
     if checkpoint_interval > 1 and skew_mode == "hub_split":
         skew_mode = "aqe"
-    n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # cache the closure ONCE: hub detection, the rest-split and the
-    # hub-split all scan it — uncached, the canonical distinct shuffle
-    # ran three times per call (guide §2.4: remove repeated passes).
-    # If the CALLER already cached an identical plan (bench.py caches
-    # undirected(edges) for pagerank), cache() is a no-op and we must
-    # not unpersist their cache at the end.
-    und = undirected(edges)
-    und_ours = not (und.storageLevel.useMemory or und.storageLevel.useDisk)
-    und = und.cache()
-    # one |V|-row degree pass yields the vertex set, the edge count AND
-    # the hub keys (src multiplicity in the closure == degree) — instead
-    # of a separate union-distinct job plus a full-closure groupBy
-    degt = und.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).alias("_deg")
-    ).cache()
-    if vertices is None:
-        vstatic = degt.select("id")
-        n_und = int(
-            degt.agg(F.coalesce(F.sum("_deg"), F.lit(0).cast("long"))).first()[0]
-        )
-    else:
-        vstatic = vertices.select("id").cache()
-        n_und = und.count()
-    thr = auto_hub_threshold(n_und)
-    hubs = [
-        r["id"]
-        for r in degt.filter(F.col("_deg") > thr)
-        .orderBy(F.col("_deg").desc())
-        .limit(2048)
-        .collect()
-    ]
-    if skew_mode == "hub_split":
-        u_rest, u_hub = hub_presplit(und, "src", hubs, n_part)
-    else:
-        u_rest, u_hub = und.repartition(n_part, "src").cache(), None
+    vstatic, hubs, u_rest, u_hub, caches = _closure_setup(
+        spark, edges, vertices, num_partitions, skew_mode
+    )
 
     # interval == 1 (default): carry a per-row changed flag so the delta
     # is a narrow agg over the new state, not an old ⨝ new join. For
@@ -338,11 +361,6 @@ def connected_components(
         materialize_every=checkpoint_interval, input_fingerprint=input_fingerprint,
     )
     res = driver.run(init, step, delta, resume=resume)
-    caches = [degt, u_rest] + ([u_hub] if u_hub is not None else [])
-    if und_ours:
-        caches.append(und)
-    if vertices is not None:
-        caches.append(vstatic)
     for df in caches:
         df.unpersist()
     if carry_delta:
@@ -376,36 +394,9 @@ def label_propagation(
     """
     if checkpoint_interval > 1 and skew_mode == "hub_split":
         skew_mode = "aqe"
-    n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # same setup shape as connected_components: closure cached once
-    # (respecting a pre-existing caller cache), one degree pass
-    # providing vertices + edge count + hub keys
-    und = undirected(edges)
-    und_ours = not (und.storageLevel.useMemory or und.storageLevel.useDisk)
-    und = und.cache()
-    degt = und.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).alias("_deg")
-    ).cache()
-    if vertices is None:
-        vstatic = degt.select("id")
-        n_und = int(
-            degt.agg(F.coalesce(F.sum("_deg"), F.lit(0).cast("long"))).first()[0]
-        )
-    else:
-        vstatic = vertices.select("id").cache()
-        n_und = und.count()
-    thr = auto_hub_threshold(n_und)
-    hubs = [
-        r["id"]
-        for r in degt.filter(F.col("_deg") > thr)
-        .orderBy(F.col("_deg").desc())
-        .limit(2048)
-        .collect()
-    ]
-    if skew_mode == "hub_split":
-        u_rest, u_hub = hub_presplit(und, "src", hubs, n_part)
-    else:
-        u_rest, u_hub = und.repartition(n_part, "src").cache(), None
+    vstatic, hubs, u_rest, u_hub, caches = _closure_setup(
+        spark, edges, vertices, num_partitions, skew_mode
+    )
 
     def init() -> DataFrame:
         return vstatic.select("id", F.col("id").alias("label"))
@@ -446,11 +437,6 @@ def label_propagation(
         materialize_every=checkpoint_interval, input_fingerprint=input_fingerprint,
     )
     res = driver.run(init, step, None, resume=resume)
-    caches = [degt, u_rest] + ([u_hub] if u_hub is not None else [])
-    if und_ours:
-        caches.append(und)
-    if vertices is not None:
-        caches.append(vstatic)
     for df in caches:
         df.unpersist()
     return res

@@ -61,8 +61,9 @@ def all_motifs(k: int) -> dict[str, SmallGraph]:
 from peregrine_spark.operators.csr import BROADCAST_MAX_EDGES  # noqa: E402
 
 # cycle4 route-1 packs a vertex pair into one signed 64-bit key
-# (x · 2³² + y); ids must stay below 2³¹ for the product to stay
-# positive under ANSI. Module-level so tests can force the fallback.
+# (x · 2³² + y); ids must lie strictly inside (−2³¹, 2³¹) for the key to
+# neither overflow under ANSI nor collide. Module-level so tests can
+# force the fallback.
 PACK_MAX_ID = 1 << 31
 
 # route-1 wedge budget: total wedges Σ C(deg,2) is exactly the row count
@@ -235,7 +236,7 @@ def cycle4_count(edges: DataFrame) -> DataFrame:
     pass.
 
     1. FULL WEDGE ENUMERATION (small unskewed graphs:
-       |E| ≤ broadcast_max_edges, ids < 2³¹, total wedges Σ C(deg,2) ≤
+       |E| ≤ broadcast_max_edges, |ids| < 2³¹, total wedges Σ C(deg,2) ≤
        WEDGE_ENUM_MAX): A ∪ B ∪ C at a center is ALL unordered pairs of
        its neighbours, so one sorted full-neighbourhood run per vertex
        (built straight from the canonical set — no orientation) feeds a
@@ -265,17 +266,19 @@ def cycle4_count(edges: DataFrame) -> DataFrame:
         # one aggregation over the CACHED degree table picks route 1 vs
         # 2 and validates the id packing — orientation-free (route 1
         # enumerates ALL neighbour pairs, so only the total wedge count
-        # and the id bound matter; fwd/adj stay lazy and route 1 never
+        # and the id bounds matter; fwd/adj stay lazy and route 1 never
         # pays the orient joins at all)
         st = deg.agg(
             F.coalesce(
                 F.sum(F.expr("cast(deg as bigint) * (deg - 1) DIV 2")),
                 F.lit(0),
             ).alias("wedges"),
+            F.min("id").alias("min_id"),
             F.max("id").alias("max_id"),
         ).first()
         full_enum = (
             st["max_id"] is not None
+            and -PACK_MAX_ID < int(st["min_id"])
             and int(st["max_id"]) < PACK_MAX_ID
             and int(st["wedges"]) <= WEDGE_ENUM_MAX
         )

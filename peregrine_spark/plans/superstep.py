@@ -13,6 +13,12 @@ Why materialize every superstep (SURVEY.md §7 hard parts):
 - per-partition lineage metrics (algo, superstep, partition_id, rows,
   checksum, delta, wall_ms) are appended to a metrics table per superstep,
   so a resumed run can prove it continued from exactly the state it wrote.
+  The rows are already on the driver, so the driver writes them itself:
+  one parquet file per superstep under ``<dir>/metrics/`` (pyarrow), with
+  no Spark job and no Python worker. The checkpoint dir must therefore be
+  visible to the driver, as ``_latest.json`` already requires.
+- the state is read back (and resumed) with its known schema, so no
+  schema-inference job runs per superstep.
 
 With no checkpoint dir (tests/bench), ``localCheckpoint`` truncates lineage
 in memory and metrics stay driver-side only.
@@ -20,16 +26,36 @@ in memory and metrics stay driver-side only.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import time
+import uuid
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 LATEST_FILE = "_latest.json"
+# the column types of <dir>/metrics/ (Spark: string, int, int, long,
+# string, double, double)
+METRICS_SCHEMA = pa.schema(
+    [
+        ("algo", pa.string()),
+        ("superstep", pa.int32()),
+        ("partition_id", pa.int32()),
+        ("rows", pa.int64()),
+        ("checksum", pa.string()),
+        ("delta", pa.float64()),
+        ("wall_ms", pa.float64()),
+    ]
+)
+# the key under which Spark stores a parquet file's Spark schema
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 @dataclass
@@ -124,13 +150,25 @@ class SuperstepDriver:
                 f"{ckpt_fp!r}, refusing to resume on {self.input_fingerprint!r}"
             )
         k = meta["superstep"]
-        return k, self.spark.read.parquet(self._state_path(k))
+        return k, self._read_state(self._state_path(k))
+
+    def _read_state(self, path: str, schema: StructType | None = None) -> DataFrame:
+        """Read a state snapshot without a schema-inference job: with the
+        schema it was written with, else the Spark schema in the footer
+        of one of its files."""
+        if schema is None:
+            files = sorted(glob.glob(os.path.join(path, "part-*.parquet")))
+            meta = (pq.read_schema(files[0]).metadata or {}) if files else {}
+            if SPARK_SCHEMA_KEY in meta:
+                schema = StructType.fromJson(json.loads(meta[SPARK_SCHEMA_KEY]))
+        reader = self.spark.read
+        return (reader.schema(schema) if schema else reader).parquet(path)
 
     def _materialize(self, state: DataFrame, k: int) -> DataFrame:
         if self.dir:
             path = self._state_path(k)
             state.write.mode("overwrite").parquet(path)
-            return self.spark.read.parquet(path)
+            return self._read_state(path, state.schema)
         chk = state.localCheckpoint(eager=True)
         return chk
 
@@ -147,23 +185,7 @@ class SuperstepDriver:
             for p in (parts or [{"partition_id": -1, "rows": -1, "checksum": ""}])
         ]
         if self.dir:
-            mdf = self.spark.createDataFrame(
-                [
-                    (
-                        r["algo"],
-                        r["superstep"],
-                        r["partition_id"],
-                        r["rows"],
-                        r["checksum"],
-                        float(r["delta"]) if r["delta"] is not None else None,
-                        r["wall_ms"],
-                    )
-                    for r in recs
-                ],
-                "algo string, superstep int, partition_id int, rows long, "
-                "checksum string, delta double, wall_ms double",
-            )
-            mdf.write.mode("append").parquet(os.path.join(self.dir, "metrics"))
+            self._write_metrics(k, recs)
             with open(os.path.join(self.dir, LATEST_FILE), "w") as f:
                 json.dump(
                     {
@@ -174,6 +196,18 @@ class SuperstepDriver:
                     f,
                 )
         return recs
+
+    def _write_metrics(self, k: int, recs: list[dict]) -> None:
+        """Append one superstep's rows to <dir>/metrics/ as one parquet
+        file, written under a hidden name and renamed into place so a
+        reader never sees a partial file."""
+        mdir = os.path.join(self.dir, "metrics")
+        os.makedirs(mdir, exist_ok=True)
+        table = pa.Table.from_pylist(recs, schema=METRICS_SCHEMA)
+        name = f"superstep-{k:06d}-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(mdir, "." + name)
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(mdir, name))
 
     def run(
         self,

@@ -3,15 +3,37 @@
 Local-mode knobs mirror what a multi-executor submit would set via
 spark-submit conf; the partitioning strategy (explicit repartition on graph
 keys, AQE for skew) is what actually carries to a 1000-executor cluster.
+
+Defaults fit the host they run on: ``local[<usable cores>]``, a driver
+heap of at most half the host's memory, and 2 × ``defaultParallelism``
+shuffle partitions (the width ``labels.py``, ``motifs.py`` and the tests
+already use).
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = 32
+MAX_DRIVER_MEM_MB = 16 * 1024
+
+
+def _default_driver_mem() -> str:
+    """16g, capped at half the host's memory (MemTotal): the heap must
+    leave room for the JVM's off-heap use, Python workers and the OS."""
+    host_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{max(1024, min(MAX_DRIVER_MEM_MB, host_mb // 2))}m"
+
+
+def _local_cores(master: str) -> int | None:
+    """The defaultParallelism a local master resolves to (local, local[N],
+    local[*], local[N,F]); None for a cluster master."""
+    m = re.fullmatch(r"local(?:\[(\d+|\*)(?:,\d+)?\])?", master)
+    if m is None:
+        return None
+    return len(os.sched_getaffinity(0)) if m[1] == "*" else int(m[1] or 1)
 
 
 def get_spark(
@@ -22,21 +44,26 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    master defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
-    AQE is on: it coalesces small shuffle partitions and splits skewed
-    ones at runtime — the safety net under our explicit salting.
+    master defaults to ``local[$SPARK_GRAFT_CPUS]``, else to the number of
+    cores this process may run on. ``spark.sql.shuffle.partitions`` is
+    ``shuffle_partitions``, else ``$SPARK_GRAFT_SHUFFLE``, else 2 × the
+    session's ``defaultParallelism``. AQE is on: it coalesces small
+    shuffle partitions and splits skewed ones at runtime — the safety net
+    under our explicit salting.
     """
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
         master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE", DEFAULT_SHUFFLE_PARTITIONS)
-        )
+    if shuffle_partitions is None and os.environ.get("SPARK_GRAFT_SHUFFLE"):
+        shuffle_partitions = int(os.environ["SPARK_GRAFT_SHUFFLE"])
+    cores = _local_cores(master)
+    if shuffle_partitions is None and cores:
+        # known before start-up, so it goes in with the builder: a runtime
+        # conf set would build the session state inside set-up (~0.5 s)
+        shuffle_partitions = 2 * cores
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -44,7 +71,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
+        )
     )
     # Shuffle/spill files on tmpfs when available (overridable via
     # SPARK_GRAFT_LOCAL_DIR): this box's /tmp is a spinning-rust ext4 —
@@ -58,9 +88,18 @@ def get_spark(
         local_dir = "/dev/shm/spark-local"
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
+    if shuffle_partitions is not None:
+        builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    if shuffle_partitions is None and "spark.sql.shuffle.partitions" not in (
+        extra_conf or {}
+    ):
+        # a cluster master: its parallelism is known once it runs
+        spark.conf.set(
+            "spark.sql.shuffle.partitions", str(2 * spark.sparkContext.defaultParallelism)
+        )
     return spark

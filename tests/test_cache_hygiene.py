@@ -88,3 +88,38 @@ def test_live_context_registry_reuse_and_cleanup(spark, dense_edges):
 
     leaked = _persistent_ids(spark) - before
     assert not leaked, f"persistent RDDs leaked by registry reuse: {leaked}"
+
+
+def test_live_context_registry_two_contexts_same_edges(spark, dense_edges):
+    """Two contexts over the SAME edges DataFrame: the later registration
+    owns the entry, and unpersisting the earlier context leaves it in
+    place. An entry whose context was collected without unpersist() is
+    pruned on the next lookup."""
+    import gc
+
+    from peregrine_spark.operators import groups
+    from peregrine_spark.operators.groups import (
+        GroupCountContext,
+        live_context_for,
+    )
+
+    before = _persistent_ids(spark)
+    first = GroupCountContext(dense_edges)
+    second = GroupCountContext(dense_edges)
+    assert live_context_for(dense_edges) is second
+    first.unpersist()
+    assert live_context_for(dense_edges) is second
+    second.unpersist()
+    assert live_context_for(dense_edges) is None
+
+    dropped = GroupCountContext(dense_edges)
+    caches = list(dropped._caches)
+    del dropped
+    gc.collect()
+    assert live_context_for(dense_edges) is None
+    assert id(dense_edges) not in groups._LIVE_CONTEXTS
+    for df in caches:
+        df.unpersist()
+
+    leaked = _persistent_ids(spark) - before
+    assert not leaked, f"persistent RDDs leaked: {leaked}"

@@ -1,8 +1,13 @@
 """PageRank / CC / LP vs the NumPy oracle, plus checkpoint/resume
 equivalence (FIXTURES.md §3, SURVEY.md §5 implications a/d)."""
 
+import json
+import os
+import shutil
+
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from peregrine_spark import reference as ref
 from peregrine_spark.operators.iterative import (
@@ -44,6 +49,29 @@ def test_pagerank_directed_star_vs_oracle(spark):
     for k in got:
         assert abs(got[k] - want[k]) < 1e-6
     assert abs(sum(got.values()) - 1.0) < 1e-9  # mass conserved w/ dangling hub
+
+
+# in-only (dangling) vertices 4 and 6, out-only vertex 7
+DIRECTED_DANGLING = np.array(
+    [(1, 2), (2, 3), (3, 1), (1, 4), (2, 5), (5, 6), (7, 1), (3, 5)],
+    dtype=np.int64,
+)
+
+
+def test_pagerank_implicit_vertices_match_explicit(spark):
+    """vertices=None derives (id, out_deg) from the edge ends in one
+    pass; it must equal an explicit vertex set, dangling vertices
+    included."""
+    pairs = DIRECTED_DANGLING
+    e = golden.to_spark_edges(spark, pairs)
+    ids = sorted({int(v) for v in pairs.ravel()})
+    verts = spark.createDataFrame([(i,) for i in ids], "id long")
+    implicit = pr_dict(pagerank(spark, e, tol=1e-9))
+    explicit = pr_dict(pagerank(spark, e, vertices=verts, tol=1e-9))
+    want = ref.pagerank(pairs, tol=1e-9)
+    assert set(implicit) == set(explicit) == set(want) == set(ids)
+    assert max(abs(implicit[k] - explicit[k]) for k in ids) < 1e-12
+    assert max(abs(implicit[k] - want[k]) for k in ids) < 1e-6
 
 
 def test_pagerank_tiny_ingested_vs_oracle(spark, tiny_repo_files):
@@ -129,6 +157,102 @@ def test_lineage_metrics_written(spark, tmp_path):
         ).collect()
     }
     assert all(v == 10 for v in per_step.values())
+
+
+METRICS_TYPES = {
+    "algo": "string",
+    "superstep": "int",
+    "partition_id": "int",
+    "rows": "bigint",
+    "checksum": "string",
+    "delta": "double",
+    "wall_ms": "double",
+}
+
+
+def _rows_per_superstep(m) -> dict[int, int]:
+    return {
+        r.superstep: r.total
+        for r in m.groupBy("superstep").agg(F.sum("rows").alias("total")).collect()
+    }
+
+
+def test_pagerank_checkpoint_metrics_table(spark, tmp_path):
+    """A checkpointed PageRank, written then resumed, leaves a metrics/
+    table with the checkpoint format's column types, one set of
+    per-partition rows per superstep summing to |V|."""
+    pairs = both_dirs(golden.TWO_TRI_BRIDGE)
+    e = golden.to_spark_edges(spark, pairs)
+    d = str(tmp_path / "prm")
+    pagerank(spark, e, tol=None, max_iter=2, checkpoint_dir=d)
+    res = pagerank(spark, e, tol=None, max_iter=4, checkpoint_dir=d, resume=True)
+    assert res.supersteps == 4
+    m = spark.read.parquet(f"{d}/metrics")
+    assert dict(m.dtypes) == METRICS_TYPES
+    assert _rows_per_superstep(m) == {k: 6 for k in range(5)}
+    with open(f"{d}/_latest.json") as f:
+        assert json.load(f) == {
+            "superstep": 4, "algo": "pagerank", "input_fingerprint": None,
+        }
+
+
+def test_resume_spark_written_metrics_layout(spark, tmp_path):
+    """A checkpoint whose metrics/ table Spark itself wrote (the layout
+    of checkpoints from before the driver-side metrics writer) still
+    resumes, and the table stays readable after the new appends."""
+    pairs = both_dirs(golden.TWO_TRI_BRIDGE)
+    e = golden.to_spark_edges(spark, pairs)
+    straight = pr_dict(pagerank(spark, e, tol=None, max_iter=3))
+    d = str(tmp_path / "prold")
+    pagerank(spark, e, tol=None, max_iter=1, checkpoint_dir=d)
+    old = spark.read.parquet(f"{d}/metrics").collect()
+    shutil.rmtree(f"{d}/metrics")
+    spark.createDataFrame(
+        old, ", ".join(f"{c} {t}" for c, t in METRICS_TYPES.items())
+    ).write.parquet(f"{d}/metrics")
+    assert os.path.exists(f"{d}/metrics/_SUCCESS")
+    res = pagerank(spark, e, tol=None, max_iter=3, checkpoint_dir=d, resume=True)
+    assert res.supersteps == 3
+    got = pr_dict(res)
+    assert max(abs(got[k] - straight[k]) for k in straight) < 1e-12
+    m = spark.read.parquet(f"{d}/metrics")
+    assert dict(m.dtypes) == METRICS_TYPES
+    assert _rows_per_superstep(m) == {k: 6 for k in range(4)}
+
+
+def _jobs_in_group(spark, group: str, fn) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+# Spark jobs of one 2-superstep checkpointed PageRank on the golden graph
+# at 8 shuffle partitions (adaptive execution runs each shuffle stage as
+# a job of its own). It was 34 while the metrics rows went through
+# createDataFrame + a parquet write, every read-back inferred its schema
+# and the vertex setup took three shuffles. Change it only together with
+# the plan change that explains the new number.
+PAGERANK_CHECKPOINT_JOBS = 25
+
+
+def test_pagerank_checkpoint_job_count(spark, tmp_path):
+    pairs = both_dirs(golden.TWO_TRI_BRIDGE)
+    e = golden.to_spark_edges(spark, pairs)
+    e.cache().count()
+    d = str(tmp_path / "prjobs")
+    n = _jobs_in_group(
+        spark,
+        "test-pagerank-jobs",
+        lambda: pagerank(spark, e, tol=1e-12, max_iter=2, checkpoint_dir=d),
+    )
+    e.unpersist()
+    assert n == PAGERANK_CHECKPOINT_JOBS
 
 
 def test_checkpoint_interval_equivalence(spark):

@@ -145,6 +145,23 @@ def test_cycle4_count_oriented_vs_oracle(spark):
             motifs_mod.PACK_MAX_ID = oldp
 
 
+def test_cycle4_count_ids_below_int32(spark):
+    """Ids below −2³¹ with the max id below 2³¹: route 1's packed key
+    x·2³² + y would overflow (ANSI error, or colliding keys with ANSI
+    off), so the id-bound check must send the count elsewhere and it
+    must still match the oracle."""
+    import numpy as np
+
+    from peregrine_spark.operators.motifs import cycle4_count
+
+    base = golden.random_graph(12, 50, seed=3)
+    shift = {v: v - (1 << 40) if v % 2 else v for p in base for v in p}
+    pairs = np.array([(shift[a], shift[b]) for a, b in base], dtype=np.int64)
+    assert pairs.min() < -(1 << 31) and pairs.max() < (1 << 31)
+    got = cycle4_count(golden.to_spark_edges(spark, pairs)).collect()[0]["n_cycles"]
+    assert got == ref.pattern_count(pairs, SmallGraph.cycle(4))
+
+
 def test_motifs5_catalog_vs_oracle(spark):
     """k=5 catalog (21 isomorphism classes) — golden parity with the
     brute-force oracle, mirroring the reference's 5-motif truth files
