@@ -3,19 +3,17 @@ extra instrumentation lives here).
 
 Modes:
   python bench_extra.py control            # ~5-10 s pure-compute host-health control
-  python bench_extra.py cycle4             # phase isolation for cycle4_count (noop sinks)
-  python bench_extra.py explain [tag]      # dump .explain("formatted") for the bench
-                                           # queries to plans/r06/<q>_<tag>.txt
+  python bench_extra.py groups10           # phase isolation for motifs5_groups10_mod4
   python bench_extra.py suite [k]          # min-of-k timed run of the 11 bench queries
                                            # (same methodology as bench.py, one JSON/run)
+
+Plan shapes are pinned by tests/test_plan_shape.py, not by explain dumps.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
 """
 
 from __future__ import annotations
 
-import contextlib
-import io
 import json
 import os
 import sys
@@ -31,12 +29,6 @@ from peregrine_spark.sources.testdata import copurchase_edges, part_labels  # no
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def noop(df) -> float:
-    t0 = time.perf_counter()
-    df.write.format("noop").mode("overwrite").save()
-    return round(time.perf_counter() - t0, 3)
-
-
 def timed(fn) -> float:
     t0 = time.perf_counter()
     fn()
@@ -44,11 +36,15 @@ def timed(fn) -> float:
 
 
 def control(spark) -> float:
-    """Pure-compute hash-fold, no shuffle — the BENCH.md host-health
-    control (healthy: ~0.7-1.5 s at 32c for 2B rows; we run 1B ≈ half)."""
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """Pure-compute hash-fold over 1B rows, no shuffle — the BENCH.md
+    host-health control. The range has 2 × defaultParallelism partitions,
+    so it fits whatever cores the session runs on; compare a wall only
+    against runs at the same core count (the BENCH.md history is
+    local[32])."""
     return timed(
-        lambda: spark.range(0, 1_000_000_000, 1, cores * 2)
+        lambda: spark.range(
+            0, 1_000_000_000, 1, spark.sparkContext.defaultParallelism * 2
+        )
         .select(F.xxhash64("id").alias("h"))
         .select(F.bit_count("h").alias("b"))
         .agg(F.sum("b"))
@@ -66,83 +62,7 @@ def main() -> None:
         return
 
     edges = copurchase_edges(spark, SF_DIR).cache()
-    n_edges = edges.count()
-
-    if mode == "cycle4":
-        from peregrine_spark.operators.csr import oriented_adjacency_context
-
-        out: dict[str, float] = {"n_edges": n_edges}
-        sc = spark.sparkContext
-
-        t0 = time.perf_counter()
-        _caches: list = []
-        fwd, adj, hubs = oriented_adjacency_context(edges, caches=_caches)
-        adj = adj.cache()
-        n_fwd = fwd.count()
-        adj.count()
-        out["setup_ctx"] = round(time.perf_counter() - t0, 3)
-
-        sc.setJobDescription("cycle4: A-wedges explode only")
-        aw = adj.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(adj, (a, i) ->"
-                    " transform(slice(adj, i + 2, size(adj) - i - 1),"
-                    " b -> struct(least(a, b) as x, greatest(a, b) as y))))"
-                )
-            ).alias("p")
-        ).select("p.x", "p.y", F.lit(1).alias("is_a"))
-        out["aw_rows"] = aw.count()
-        out["aw_noop"] = noop(aw)
-
-        sc.setJobDescription("cycle4: B-wedges explode only")
-        bw_joined = fwd.join(
-            F.broadcast(adj.select(F.col("id").alias("dst"), "adj")), "dst"
-        )
-        bw = bw_joined.select(
-            F.col("src").alias("a"), F.explode("adj").alias("b")
-        ).select(
-            F.least("a", "b").alias("x"),
-            F.greatest("a", "b").alias("y"),
-            F.lit(0).alias("is_a"),
-        )
-        out["bw_rows"] = bw.count()
-        out["bw_noop"] = noop(bw)
-
-        sc.setJobDescription("cycle4: pairs groupBy")
-        pairs = (
-            aw.unionByName(bw)
-            .groupBy("x", "y")
-            .agg(F.count(F.lit(1)).alias("nab"), F.sum("is_a").alias("na"))
-        )
-        out["pairs_rows"] = pairs.count()
-        out["pairs_noop"] = noop(pairs)
-
-        sc.setJobDescription("cycle4: + C-term broadcast joins + final agg")
-        ax = adj.select(F.col("id").alias("x"), F.col("adj").alias("ax"))
-        ay = adj.select(F.col("id").alias("y"), F.col("adj").alias("ay"))
-        with_ay = pairs.join(F.broadcast(ax), "x", "left").join(
-            F.broadcast(ay), "y", "left"
-        )
-        final = with_ay.select(
-            (
-                F.expr("nab * (nab - 1) DIV 2 + na * (na - 1) DIV 2")
-                + F.col("nab")
-                * F.when(
-                    F.col("ax").isNotNull() & F.col("ay").isNotNull(),
-                    F.size(F.array_intersect("ax", "ay")),
-                ).otherwise(F.lit(0))
-            ).alias("v")
-        ).agg(F.expr("coalesce(sum(v), 0L) DIV 2").cast("long").alias("n_cycles"))
-        out["full_tail"] = timed(lambda: final.collect())
-
-        sc.setJobDescription("cycle4: end-to-end")
-        from peregrine_spark.operators.motifs import cycle4_count
-
-        out["end_to_end"] = timed(lambda: cycle4_count(edges).collect())
-        out["n_fwd"] = n_fwd
-        print(json.dumps(out))
-        return
+    edges.count()
 
     if mode == "groups10":
         # phase isolation for the motifs5_groups10_mod4 bench entry:
@@ -184,88 +104,6 @@ def main() -> None:
         e4.unpersist()
         out["_control"] = control(spark)
         print(json.dumps(out))
-        return
-
-    if mode == "explain":
-        tag = sys.argv[2] if len(sys.argv) > 2 else "before"
-        os.makedirs("plans/r06", exist_ok=True)
-        from peregrine_spark.operators import graph as G
-        from peregrine_spark.operators.labels import (
-            discover_star_labels,
-            discover_star_labels_3,
-            mni_star2_supports,
-        )
-        from peregrine_spark.operators.motifs import cycle4_count
-        from peregrine_spark.operators.triangles import triangle_count
-
-        lab = part_labels(spark, SF_DIR)
-        # dump the INTERNAL lazy plans of the eager operators
-        import peregrine_spark.operators.labels as labels_mod
-        from peregrine_spark.operators.csr import _triangle_count_df
-
-        labels_mod.EAGER_SMALL = False
-        plans = {
-            "derive_edges": lambda: copurchase_edges(spark, SF_DIR),
-            "triangle_count": lambda: _triangle_count_df(edges),
-            "degrees": lambda: G.degrees(edges),
-            "cycle4": None,  # eager .first() inside; route-1 plan below
-            "star2_labels": lambda: discover_star_labels(edges, lab),
-            "star3_labels": lambda: discover_star_labels_3(edges, lab),
-            "mni_star2_supports": lambda: mni_star2_supports(edges, lab),
-        }
-        for name, fn in plans.items():
-            if fn is None:
-                continue
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                fn().explain("formatted")
-            with open(f"plans/r06/{name}_{tag}.txt", "w") as f:
-                f.write(buf.getvalue())
-            print(f"wrote plans/r06/{name}_{tag}.txt")
-
-        # cycle4 route 1 (full wedge enumeration) — cycle4_count is
-        # eager, so rebuild its route-1 plan here (same expressions as
-        # operators/motifs.py) for the .explain dump
-        from peregrine_spark.operators.csr import _oriented_adjacency
-
-        _caches: list = []
-        fwd, _adj, _hubs, _n, _small, _deg, _can = _oriented_adjacency(
-            edges, caches=_caches, broadcast_max_edges=20_000_000
-        )
-        sc = spark.sparkContext
-        nbr = _can.select("src", F.col("dst").alias("nb")).union(
-            _can.select(F.col("dst").alias("src"), F.col("src").alias("nb"))
-        )
-        runs = nbr.groupBy(F.col("src").alias("id")).agg(
-            F.sort_array(F.collect_list("nb")).alias("adj")
-        ).repartition(sc.defaultParallelism * 4)
-        P = 1 << 32
-        pairs = (
-            runs.select(F.posexplode("adj").alias("i", "x"), "adj")
-            .select(
-                F.col("x"),
-                F.explode(F.expr("slice(adj, i + 2, size(adj) - i - 1)")).alias("y"),
-            )
-            .select((F.col("x").cast("bigint") * F.lit(P) + F.col("y")).alias("k"))
-        )
-        route1 = (
-            pairs.repartition(64, "k")
-            .groupBy("k")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .agg(
-                F.expr("coalesce(sum(n * (n - 1) DIV 2), 0L) DIV 2")
-                .cast("long")
-                .alias("n_cycles")
-            )
-        )
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            route1.explain("formatted")
-        with open(f"plans/r06/cycle4_route1_{tag}.txt", "w") as f:
-            f.write(buf.getvalue())
-        print(f"wrote plans/r06/cycle4_route1_{tag}.txt")
-        for df in _caches:
-            df.unpersist()
         return
 
     if mode == "suite":

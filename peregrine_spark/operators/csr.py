@@ -1,30 +1,18 @@
-"""CSR-packed adjacency + Arrow intersection kernels.
+"""Per-vertex sorted adjacency runs and the frontier-intersection set-up.
 
 The reference's physical core is ordered-set algebra over sorted uint32
-adjacency runs (std::set_intersection at
-/root/reference/core/PatternMatching.hh:1116-1217). Spark-first we express
-the same dataflow two ways:
-
-1. triangles_via_adjacency — pure JVM: pack per-vertex sorted adjacency
-   arrays (groupBy + sort_array(collect_list)), then per oriented edge
-   (u,v) count |N+(u) ∩ N+(v)| with array_intersect inside whole-stage
-   codegen. The "edge-iterator" triangle algorithm; zero Python.
-
-2. triangles_csr_arrow — the same plan, but the intersection runs in a
-   vectorized numpy kernel over Arrow batches (mapInArrow). Inside each
-   batch the list column IS a CSR run (offsets + values) — this is the
-   per-partition CSR-packed Arrow buffer path the north rule names, and
-   the template for custom kernels Spark built-ins can't express.
-
-Both bound intermediate size by out-degree of the ORIENTED DAG
-(O(sqrt E)), exactly like the reference's symmetry-broken candidate sets.
+adjacency runs (std::set_intersection, Peregrine's
+core/PatternMatching.hh:1116-1217). Spark-first, each
+vertex's forward run is one sorted array column (groupBy +
+sort_array(collect_list)) over the degree-ordered DAG, and the
+intersection is JVM array_intersect inside whole-stage codegen — zero
+Python. Triangles, cliques and cycle4 share this set-up; out-degrees of
+the ORIENTED DAG are O(sqrt E), which bounds every run exactly like the
+reference's symmetry-broken candidate sets.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -49,48 +37,31 @@ def adjacency(fwd: DataFrame, src_col: str = "src", dst_col: str = "dst") -> Dat
     )
 
 
-def oriented_adjacency_context(
-    edges: DataFrame,
-    n_vertices: int | None = None,
-    caches: list[DataFrame] | None = None,
-    broadcast_max_edges: int | None = None,
-) -> tuple[DataFrame, DataFrame, list[int]]:
-    """(fwd, adj, hubs): the degree-ordered DAG, its forward-adjacency
-    arrays, and the driver-side list of skewed dst keys. The shared
-    set-up for every frontier-intersection plan (triangles, cliques,
-    cycle4).
-
-    Canonicalizes and computes degrees ONCE, shared between the
-    orientation and the broadcast decision — callers that already know
-    |V| pass n_vertices and skip the deg.count() job entirely. Pass a
-    `caches` list to receive the internally cached DataFrames (can, deg,
-    fwd) for unpersisting once the caller's action has run.
-
-    broadcast_max_edges: callers that take a whole-adjacency BROADCAST
-    route when |E| ≤ the bound pass it here; when the graph is under the
-    bound, hub detection is skipped entirely (hubs = []) — the hub list
-    only serves shuffle-join fallbacks, and its groupBy + collect is a
-    full extra pass over the DAG (guide §1.2). Such callers must gate
-    their plan on len(hubs)-independent logic: use
-    `_oriented_adjacency` below to get the decision."""
-    fwd, adj, hubs, _, _, _, _ = _oriented_adjacency(
-        edges, n_vertices, caches, broadcast_max_edges
-    )
-    return fwd, adj, hubs
-
-
 def _oriented_adjacency(
     edges: DataFrame,
-    n_vertices: int | None = None,
     caches: list[DataFrame] | None = None,
     broadcast_max_edges: int | None = None,
 ) -> tuple[DataFrame, DataFrame, list[int], int, bool, DataFrame, DataFrame]:
-    """(fwd, adj, hubs, n_edges, small, deg, can) — see
-    oriented_adjacency_context; deg is the cached (id, deg) table (also
-    appended to `caches`) so callers can read degree stats without
-    another shuffle, and can the cached canonical edge set (fwd and adj
-    are LAZY — a caller whose plan never references them, like cycle4's
-    orientation-free route 1, never pays the orient joins at all)."""
+    """(fwd, adj, hubs, n_edges, small, deg, can): the degree-ordered DAG,
+    its forward-adjacency arrays, the driver-side list of skewed dst keys,
+    |E|, the broadcast decision, the cached (id, deg) table and the cached
+    canonical edge set — the shared set-up for every frontier-intersection
+    plan (triangles, cliques, cycle4).
+
+    Canonicalizes and computes degrees ONCE, shared between the
+    orientation and the broadcast decision; |V| and |E| come out of ONE
+    one-row action over the degree table (or from a live
+    GroupCountContext). Pass a `caches` list to receive the internally
+    cached DataFrames (can, deg, fwd) for unpersisting once the caller's
+    action has run. fwd and adj are LAZY — a caller whose plan never
+    references them, like cycle4's orientation-free route 1, never pays
+    the orient joins at all.
+
+    broadcast_max_edges: callers that take a whole-adjacency BROADCAST
+    route when |E| ≤ the bound pass it here (small=True); under the bound
+    hub detection is skipped entirely (hubs = []) — the hub list only
+    serves shuffle-join fallbacks, and its groupBy + collect is a full
+    extra pass over the DAG (guide §1.2)."""
     from peregrine_spark.operators.graph import canonical
     from peregrine_spark.operators.groups import live_context_for
     from peregrine_spark.operators.skew import auto_hub_threshold, hub_keys
@@ -109,8 +80,7 @@ def _oriented_adjacency(
         deg = ctx.deg.select(
             F.col("src").alias("id"), F.col("_deg").alias("deg")
         )
-        if n_vertices is None:
-            n_vertices = ctx.n_vertices
+        n_vertices = ctx.n_vertices
         n_edges = ctx.n_und // 2
         own_can_deg = False
     else:
@@ -128,8 +98,7 @@ def _oriented_adjacency(
             F.count(F.lit(1)).alias("nv"),
             F.coalesce(F.sum("deg"), F.lit(0)).alias("sd"),
         ).first()
-        if n_vertices is None:
-            n_vertices = int(row["nv"])
+        n_vertices = int(row["nv"])
         n_edges = int(row["sd"]) // 2
     fwd = (
         orient(can, deg=deg, n_vertices=n_vertices, assume_canonical=True)
@@ -184,63 +153,3 @@ def _edge_adjacency_pairs(
         return fwd.join(F.broadcast(a_u), "src").join(F.broadcast(a_v), "dst")
     with_u = fwd.join(a_u, "src")
     return hub_split_join(with_u, a_v, "dst", hubs)
-
-
-def _triangle_count_df(
-    edges: DataFrame, caches: list[DataFrame] | None = None
-) -> DataFrame:
-    """Lazy single-row triangle-count plan (bench_extra dumps this for
-    the .explain evidence; triangles_via_adjacency is its eager form)."""
-    pairs = _edge_adjacency_pairs(edges, caches=caches)
-    return pairs.select(
-        F.size(F.array_intersect("adj_u", "adj_v")).alias("c")
-    ).agg(F.coalesce(F.sum("c"), F.lit(0)).cast("long").alias("n_triangles"))
-
-
-def triangles_via_adjacency(edges: DataFrame) -> DataFrame:
-    """Triangle count via JVM array_intersect — single-row (n_triangles).
-    EAGER: runs the aggregation and drops the context caches (the lazy
-    form leaked can/deg/fwd per call for the session lifetime)."""
-    _caches: list[DataFrame] = []
-    row = _triangle_count_df(edges, caches=_caches).first()
-    for df in _caches:
-        df.unpersist()
-    return edges.sparkSession.createDataFrame(
-        [(int(row["n_triangles"]),)], "n_triangles long"
-    )
-
-
-def triangles_csr_arrow(edges: DataFrame) -> DataFrame:
-    """Triangle count with the intersection in a numpy kernel over Arrow
-    batches. Per batch: flatten both list columns to contiguous value
-    buffers + offsets (CSR), intersect per edge with searchsorted —
-    vectorized, no per-row Python function calls."""
-    import numpy as np
-
-    pairs = _edge_adjacency_pairs(edges).select("adj_u", "adj_v")
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        total = 0
-        for batch in batches:
-            au = batch.column(0)
-            av = batch.column(1)
-            # CSR view of the Arrow list arrays: (offsets, values)
-            u_off = au.offsets.to_numpy(zero_copy_only=False)
-            u_val = au.values.to_numpy(zero_copy_only=False)
-            v_off = av.offsets.to_numpy(zero_copy_only=False)
-            v_val = av.values.to_numpy(zero_copy_only=False)
-            for i in range(len(batch)):
-                a = u_val[u_off[i] : u_off[i + 1]]
-                b = v_val[v_off[i] : v_off[i + 1]]
-                if len(a) > len(b):
-                    a, b = b, a
-                if len(a) == 0:
-                    continue
-                # sorted-run membership: searchsorted == set_intersection
-                idx = np.searchsorted(b, a)
-                idx[idx == len(b)] = 0
-                total += int((b[idx] == a).sum())
-        yield pa.RecordBatch.from_pydict({"n": pa.array([total], pa.int64())})
-
-    per_part = pairs.mapInArrow(kernel, "n long")
-    return per_part.agg(F.sum("n").alias("n_triangles"))

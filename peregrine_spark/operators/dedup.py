@@ -9,7 +9,7 @@ stage shuffles on small band keys, never on raw text.
 Scale notes: LSH bucket join self-joins only within buckets — the shuffle
 key is (band, band_hash), and a pathological bucket (boilerplate docs) is
 capped via `max_bucket` to bound the quadratic blowup, mirroring the
-skew-salting philosophy of the link-graph layer.
+hub-splitting philosophy of the link-graph layer.
 """
 
 from __future__ import annotations

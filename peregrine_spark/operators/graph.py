@@ -52,13 +52,6 @@ def degrees(edges: DataFrame) -> DataFrame:
     return ends.groupBy("id").agg(F.count(F.lit(1)).alias("deg"))
 
 
-def out_degrees(edges: DataFrame) -> DataFrame:
-    """Directed out-degree per source vertex (PageRank denominator)."""
-    return edges.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).alias("out_deg")
-    )
-
-
 def orient(
     edges: DataFrame,
     deg: DataFrame | None = None,
@@ -72,7 +65,8 @@ def orient(
     edge; the result is a DAG whose out-degrees are O(sqrt(E)).
 
     Degrees ride along so downstream wedge enumeration can re-establish
-    the total order WITHOUT re-joining degrees (operators/triangles.py).
+    the total order WITHOUT re-joining degrees (the oriented-wedge
+    oracles in plans/oracles.py do exactly that).
 
     The two degree joins dominated triangle counting wall time (each
     re-shuffles every edge, and the dst side is hub-skewed). When the

@@ -22,11 +22,6 @@ from peregrine_spark.plans.patterns import SmallGraph
 # vertex-sized fact table, not a dimension).
 BROADCAST_LABELS_LIMIT = 20_000_000
 
-# bench_extra.py flips this to dump the small paths' INTERNAL plans via
-# .explain (the eager collect otherwise reduces them to a local scan).
-# Always True in real runs.
-EAGER_SMALL = True
-
 
 def _leaf_label_hist(
     edges: DataFrame, labels: DataFrame, caches: list[DataFrame] | None = None
@@ -40,12 +35,14 @@ def _leaf_label_hist(
     label multiplicities).
 
     small=True (labels table ≤ BROADCAST_LABELS_LIMIT rows): the label
-    join is a map-side broadcast, everything stays LAZY — no caches, no
-    repartition, no hub-detection actions. The hist groupBy is map-side
+    join is a map-side broadcast — no repartition, no hub-detection
+    actions, and hist/lv come back uncached. The hist groupBy is map-side
     combinable, so even a mega-hub's Σ deg rows collapse before its one
-    shuffle; repeated uses of hist/lv inside one final plan dedupe via
-    exchange reuse instead of a cache (round-6: the eager path cost
-    star2_labels three extra jobs and three leaked caches per call).
+    shuffle. Every caller then scope-caches what its plan reads more than
+    once (hist, or lv and the center-labelled hist), collects its
+    dimension-sized result and drops those caches before returning:
+    runtime exchange reuse does NOT dedupe the repeated subtrees (see
+    discover_star_labels).
 
     small=False fallback: the previous shuffle path — balancing
     round-robin repartition (a mega-hub's edges arrive CLUSTERED in the
@@ -142,8 +139,7 @@ def discover_star_labels(
         # DataFrame, and the cache is dropped before returning — no
         # leaked storage, no per-branch recompute (runtime exchange
         # reuse did NOT dedupe the six hist subtrees: measured 5 → 13 s)
-        if EAGER_SMALL:
-            hist.count()
+        hist.count()
     elif caches is not None:
         caches.append(hist)
     h1 = hist.select("c", F.col("ll").alias("l1"), F.col("cnt").alias("n1"))
@@ -164,7 +160,7 @@ def discover_star_labels(
         .groupBy(F.col("cl").alias("center_label"), "l1", "l2")
         .agg(F.sum("term").alias("n"))
     )
-    if small and EAGER_SMALL:
+    if small:
         rows = out.collect()
         hist.unpersist()
         return edges.sparkSession.createDataFrame(rows, out.schema)
@@ -190,8 +186,7 @@ def discover_star_labels_3(
     if small:
         # EAGER small path — see discover_star_labels (here the triple
         # expansion references hist SIX times)
-        if EAGER_SMALL:
-            hist.count()
+        hist.count()
     elif caches is not None:
         caches.append(hist)
     h1 = hist.select("c", F.col("ll").alias("l1"), F.col("cnt").alias("n1"))
@@ -228,7 +223,7 @@ def discover_star_labels_3(
         .groupBy(F.col("cl").alias("center_label"), "l1", "l2", "l3")
         .agg(F.sum("term").alias("n"))
     )
-    if small and EAGER_SMALL:
+    if small:
         rows = out.collect()
         hist.unpersist()
         return edges.sparkSession.createDataFrame(rows, out.schema)
@@ -422,7 +417,7 @@ def mni_star2_supports(
             for lo in lab_vals
         ]
     )
-    if small and EAGER_SMALL:
+    if small:
         # finish on the driver: centers is ≤ L³ rows, sums ≤ L² rows —
         # the remaining explode/filter/join algebra is exact integer
         # arithmetic on dimension-sized tables. The centers collect runs
@@ -549,8 +544,7 @@ def mni_star3_supports(
     hc = _center_labelled(hist, labels, small)
     if small:
         hc = hc.cache()
-        if EAGER_SMALL:
-            hc.count()
+        hc.count()
     h1 = hc.select(
         "c", "cl", F.col("ll").alias("k1"), F.col("cnt").alias("n1")
     )
@@ -616,7 +610,7 @@ def mni_star3_supports(
         F.col("k3").alias("l3"),
         F.least("_dc", "_dl").cast("long").alias("support"),
     )
-    if small and EAGER_SMALL:
+    if small:
         rows = out.collect()
         for df in (lv, hc, qual):
             df.unpersist()

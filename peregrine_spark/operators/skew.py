@@ -1,18 +1,20 @@
-"""Skew handling: hub detection + salted two-phase aggregation/join.
+"""Skew handling: hub detection + hub-split joins.
 
 Link graphs from source code are power-law: a handful of hub files (stdlib
 headers) carry a large share of edges. The reference absorbs skew with
 sub-vertex work stealing (/root/reference/core/Peregrine.hh:94-102); Spark
-tasks are partition-granular, so we defuse skew structurally instead:
+tasks are partition-granular, so we defuse skew structurally instead
+(Hurricane's point: split the hot work, don't re-randomize all of it):
 
 - groupBy aggregations (sum/min/count) already two-phase map-side — a hub
   dst reduces to one row per map partition before the shuffle. Nothing to
-  salt there.
+  split there.
 - JOIN skew is the real risk: state ⨝ edges on src puts all of a hub's
-  closure rows in one task. AQE's skew-join splitting handles it at
-  runtime; salted_join below is the explicit structural fix for when AQE
-  can't (e.g. a cached/bucketed side), and the two-phase agg helper covers
-  non-partial aggregates (collect_list/set).
+  closure rows in one task. AQE's skew-join splitting handles unhinted
+  joins at runtime; hub_split_join / hub_presplit are the explicit
+  structural fix where AQE can't (hinted SHUFFLE_HASH joins, cached
+  sides): the few hub keys, found by hub_keys, join against a BROADCAST
+  slice of the small side while everything else takes the shuffle join.
 """
 
 from __future__ import annotations
@@ -20,33 +22,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from peregrine_spark.operators.graph import degrees
 
-
-def hubs(edges: DataFrame, threshold: int) -> DataFrame:
-    """(id, deg) of vertices with undirected degree > threshold."""
-    return degrees(edges).filter(F.col("deg") > threshold)
-
-
-def hub_keys(
-    df: DataFrame, key: str, threshold: int, cap: int = 2048
-) -> list[int]:
+def hub_keys(df: DataFrame, key: str, threshold: int) -> list[int]:
     """Driver-side list of join-key values whose row multiplicity in `df`
     exceeds threshold — the keys that would single-handedly fill a shuffle
     partition. Power-law graphs have only a handful.
 
-    `cap` bounds PLAN size, not correctness: hub_split_join embeds the
-    list as `isin(...)` literals, so each hub key appears twice in the
-    expression tree (2,048 keys ≈ tens of KB of plan — fine; 10⁶ would
-    stall Catalyst analysis and blow the broadcast of the hub slice).
-    Keys past the cap simply stay on the shuffle path — at worst a hot
-    task, never a wrong result. Raise only alongside a plan-size check."""
+    At most 2,048 keys, hottest first. The cap bounds PLAN size, not
+    correctness: hub_split_join embeds the list as `isin(...)` literals,
+    so each hub key appears twice in the expression tree (2,048 keys ≈
+    tens of KB of plan — fine; 10⁶ would stall Catalyst analysis and blow
+    the broadcast of the hub slice). Keys past the cap simply stay on the
+    shuffle path — at worst a hot task, never a wrong result. Raise only
+    alongside a plan-size check."""
     rows = (
         df.groupBy(key)
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") > threshold)
         .orderBy(F.col("n").desc())
-        .limit(cap)
+        .limit(2048)
         .collect()
     )
     return [r[key] for r in rows]
@@ -65,25 +59,8 @@ def auto_hub_threshold(n_rows: int, shuffle_partitions: int | None = None) -> in
     return max(65_536, n_rows // (4 * shuffle_partitions))
 
 
-def hub_ids(edges: DataFrame, threshold: int, cap: int = 50_000) -> list[int]:
-    """Driver-side list of vertex ids whose undirected degree exceeds
-    threshold (capped — hub sets are tiny by definition)."""
-    rows = (
-        degrees(edges)
-        .filter(F.col("deg") > threshold)
-        .orderBy(F.col("deg").desc())
-        .limit(cap)
-        .collect()
-    )
-    return [r.id for r in rows]
-
-
 def hub_split_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    hubs: list[int],
-    small_hint: str = "shuffle_hash",
+    big: DataFrame, small: DataFrame, key: str, hubs: list[int]
 ) -> DataFrame:
     """Inner equi-join big ⨝ small on `key` where `small` is unique per
     key and `big` is power-law-skewed on it: rows whose key is a hub join
@@ -94,13 +71,17 @@ def hub_split_join(
 
     This is the structural fix for stragglers AQE can't split (e.g. the
     per-superstep state×edges gather): one vertex with degree ~|E|/6
-    otherwise pins a whole stage on a single task."""
+    otherwise pins a whole stage on a single task.
+
+    The shuffle join is hinted SHUFFLE_HASH (hash the unique-per-key
+    `small`, sort neither side). Hinted joins are exempt from AQE's skew
+    splitting — which is why the hubs are split off here."""
     if not hubs:
-        return big.join(small.hint(small_hint), key)
+        return big.join(small.hint("shuffle_hash"), key)
     is_hub = F.col(key).isin(hubs)
     small_hub = small.filter(F.col(key).isin(hubs))
     j_hub = big.filter(is_hub).join(F.broadcast(small_hub), key)
-    j_rest = big.filter(~is_hub).join(small.hint(small_hint), key)
+    j_rest = big.filter(~is_hub).join(small.hint("shuffle_hash"), key)
     return j_rest.unionByName(j_hub)
 
 
@@ -132,67 +113,13 @@ def presplit_join(
     small: DataFrame,
     key: str,
     hubs: list[int],
-    small_hint: str = "shuffle_hash",
 ) -> DataFrame:
-    """The per-superstep join over a hub_presplit pair: shuffle join for
-    the rest (reuses the cached hash partitioning), broadcast of the
-    small side's hub slice for the round-robin hub partitions."""
-    j = rest.join(small.hint(small_hint), key)
+    """The per-superstep join over a hub_presplit pair: SHUFFLE_HASH join
+    for the rest (reuses the cached hash partitioning; the per-superstep
+    state is the unique-per-key build side), broadcast of the small
+    side's hub slice for the round-robin hub partitions."""
+    j = rest.join(small.hint("shuffle_hash"), key)
     if hub is not None:
         small_hub = small.filter(F.col(key).isin(hubs))
         j = j.unionByName(hub.join(F.broadcast(small_hub), key))
     return j
-
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    n_salts: int = 16,
-    salt_source: str | None = None,
-) -> DataFrame:
-    """Equi-join where `big` is heavily skewed on `key`: big rows get a
-    deterministic salt (hash of salt_source, or a round-robin over a
-    monotonic id), `small` is exploded across all salts, and the join key
-    becomes (key, salt) — fanning one hot key over n_salts tasks.
-
-    Use when AQE skew splitting can't kick in. `small` must be the
-    unique-per-key side (state tables); its size multiplies by n_salts.
-    """
-    if salt_source is None:
-        big_s = big.withColumn(
-            "_salt", F.pmod(F.monotonically_increasing_id(), F.lit(n_salts))
-        )
-    else:
-        big_s = big.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col(salt_source)), F.lit(n_salts))
-        )
-    small_s = small.withColumn(
-        "_salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
-    )
-    return big_s.join(small_s, [key, "_salt"]).drop("_salt")
-
-
-def two_phase_agg(
-    df: DataFrame,
-    key: str,
-    value: str,
-    agg: str = "min",
-    n_salts: int = 16,
-) -> DataFrame:
-    """Explicit two-phase (salted) aggregation for associative aggs when a
-    single reduce key is too hot even after map-side combine — or to make
-    the pre-shuffle reduction explicit and measurable.
-
-    Phase 1: groupBy(key, salt).agg → at most n_salts rows per key.
-    Phase 2: groupBy(key).agg over those.
-    """
-    fn = {"min": F.min, "max": F.max, "sum": F.sum, "count": F.count}[agg]
-    p1 = (
-        df.withColumn("_salt", F.pmod(F.xxhash64(F.col(value)), F.lit(n_salts)))
-        .groupBy(key, "_salt")
-        .agg(fn(value).alias("_partial"))
-    )
-    if agg == "count":
-        return p1.groupBy(key).agg(F.sum("_partial").alias(value))
-    return p1.groupBy(key).agg(fn("_partial").alias(value))

@@ -30,10 +30,6 @@ def tokens(text: Column) -> Column:
     return F.filter(F.split(text, " "), lambda t: t != "")
 
 
-def token_count(df: DataFrame, text_col: str = "text") -> Column:
-    return F.size(tokens(F.col(text_col)))
-
-
 def with_token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Adds n_tokens, n_chars2, avg_token_len — the basic length stats."""
     t = tokens(F.col(text_col))

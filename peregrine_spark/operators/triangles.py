@@ -4,14 +4,16 @@ The reference counts triangles by degree-desc renumbering + the symmetry
 condition u<v<w + sorted-adjacency intersection
 (/root/reference/core/Graph.hh:1062-1073, core/PatternMatching.hh:1116-1217).
 The Spark restatement: degree-ordered orientation turns the graph into a
-DAG with O(sqrt(E)) out-degrees; triangles = oriented wedges (u→v, u→w with
-v ≺ w in the (deg,id) order) that close with an oriented edge v→w.
+DAG with O(sqrt(E)) out-degrees; each oriented edge (u,v) closes exactly
+|N+(u) ∩ N+(v)| triangles (the edge-iterator algorithm).
 
-Physical plan: two shuffles (wedge self-join on src, closing join on
-(v, w)), each a plain equi-join Catalyst can hash/sort-merge and AQE can
-skew-split — no Python, no materialized match list (the count aggregates
-map-side, like the reference's Counter never materializing matches,
-core/PatternMatching.hh:1413).
+Physical plan (csr._edge_adjacency_pairs): per-vertex sorted forward
+runs attach to both ends of every oriented edge — map-side broadcast
+joins under csr.BROADCAST_MAX_EDGES, hub-split shuffle joins above it —
+and JVM array_intersect does the set intersection inside codegen. No
+Python, no wedge set through a shuffle; the count aggregates map-side,
+like the reference's Counter never materializing matches
+(core/PatternMatching.hh:1413).
 """
 
 from __future__ import annotations
@@ -19,37 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from peregrine_spark.operators.graph import orient
-
-
-def oriented_wedges(fwd: DataFrame) -> DataFrame:
-    """(u, v, w) with oriented edges u→v and u→w and v ≺ w in (deg, id)
-    order. The carried ddeg columns supply ≺ without another join."""
-    a = fwd.select(
-        F.col("src").alias("u"), F.col("dst").alias("v"), F.col("ddeg").alias("_vd")
-    )
-    b = fwd.select(
-        F.col("src").alias("u"), F.col("dst").alias("w"), F.col("ddeg").alias("_wd")
-    )
-    return (
-        a.join(b, "u")
-        .filter(
-            (F.col("_vd") < F.col("_wd"))
-            | ((F.col("_vd") == F.col("_wd")) & (F.col("v") < F.col("w")))
-        )
-        .select("u", "v", "w")
-    )
-
-
-def triangles_wedge(edges: DataFrame) -> DataFrame:
-    """Wedge-join triangle enumeration: (u, v, w), each exactly once,
-    u ≺ v ≺ w in (deg, id) order. Kept as the reference plan; on dense
-    graphs the adjacency edge-iterator below is ~3× faster because it
-    never materializes the wedge set through a shuffle."""
-    fwd = orient(edges)
-    wedges = oriented_wedges(fwd)
-    closing = fwd.select(F.col("src").alias("v"), F.col("dst").alias("w"))
-    return wedges.join(closing, ["v", "w"], "left_semi").select("u", "v", "w")
+from peregrine_spark.operators.csr import _edge_adjacency_pairs
 
 
 def triangles(edges: DataFrame) -> DataFrame:
@@ -59,8 +31,6 @@ def triangles(edges: DataFrame) -> DataFrame:
     pack forward-adjacency arrays, then for each oriented base edge (u,v)
     emit N+(u) ∩ N+(v). Intermediates stay bounded by true triangle
     output size instead of wedge count."""
-    from peregrine_spark.operators.csr import _edge_adjacency_pairs
-
     pairs = _edge_adjacency_pairs(edges)
     return pairs.select(
         F.col("src").alias("u"),
@@ -72,10 +42,21 @@ def triangles(edges: DataFrame) -> DataFrame:
 def triangle_count(edges: DataFrame) -> DataFrame:
     """Single-row DataFrame (n_triangles: long). Adjacency edge-iterator
     plan: sum of |N+(u) ∩ N+(v)| over oriented edges — no explode, the
-    count never materializes."""
-    from peregrine_spark.operators.csr import triangles_via_adjacency
-
-    return triangles_via_adjacency(edges)
+    count never materializes. EAGER: runs the aggregation and drops the
+    set-up caches before returning — a lazy result would have to keep
+    can/deg/fwd cached for as long as the caller holds it."""
+    caches: list[DataFrame] = []
+    row = (
+        _edge_adjacency_pairs(edges, caches=caches)
+        .select(F.size(F.array_intersect("adj_u", "adj_v")).alias("c"))
+        .agg(F.coalesce(F.sum("c"), F.lit(0)).cast("long").alias("n_triangles"))
+        .first()
+    )
+    for df in caches:
+        df.unpersist()
+    return edges.sparkSession.createDataFrame(
+        [(int(row["n_triangles"]),)], "n_triangles long"
+    )
 
 
 def triangles_per_vertex(edges: DataFrame) -> DataFrame:

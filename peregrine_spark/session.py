@@ -49,7 +49,7 @@ def get_spark(
     ``shuffle_partitions``, else ``$SPARK_GRAFT_SHUFFLE``, else 2 × the
     session's ``defaultParallelism``. AQE is on: it coalesces small
     shuffle partitions and splits skewed ones at runtime — the safety net
-    under our explicit salting.
+    under our explicit hub splitting.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))

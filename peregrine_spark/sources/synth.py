@@ -5,7 +5,7 @@ repositories ``(repo, path, commit, lang, content)``. The link graph is
 encoded INSIDE ``content`` as include-style reference lines; ingest
 (sources/ingest.py) parses them back out. Reference targets follow a seeded
 zipf(a≈2.0) over file ranks, so the derived graph is power-law-skewed with
-genuine hub files — the skew the salting layer exists for.
+genuine hub files — the skew the hub-split joins exist for.
 
 Mirrors the reference's ingest-roundtrip test strategy
 (/root/reference/core/integrationtests/DataConverter_test.hh:7-94): the

@@ -16,7 +16,7 @@ TWO_TRI_BRIDGE = np.array(
     [(1, 2), (2, 3), (1, 3), (4, 5), (5, 6), (4, 6), (3, 4)], dtype=np.int64
 )
 
-# hub 0 + 50 leaves — 0 triangles, exercises the skew/salting path
+# hub 0 + 50 leaves — 0 triangles, exercises the skew/hub-split path
 STAR_HUB = np.array([(0, i) for i in range(1, 51)], dtype=np.int64)
 
 # 3 components: path of 5 (10..14), triangle (20,21,22), edge (30,31)
@@ -37,6 +37,19 @@ def to_spark_edges(spark, pairs):
     return spark.createDataFrame(
         [(int(a), int(b)) for a, b in pairs], "src long, dst long"
     )
+
+
+def triangle_set(pairs) -> set[tuple[int, int, int]]:
+    """Every triangle of the graph as a sorted (a, b, c), by brute force
+    over all vertex triples."""
+    adj = {(int(a), int(b)) for a, b in pairs}
+    adj |= {(b, a) for a, b in adj}
+    ids = sorted({v for e in adj for v in e})
+    return {
+        t
+        for t in itertools.combinations(ids, 3)
+        if (t[0], t[1]) in adj and (t[1], t[2]) in adj and (t[0], t[2]) in adj
+    }
 
 
 def random_graph(n: int, n_draws: int, seed: int) -> list[tuple[int, int]]:

@@ -1,74 +1,26 @@
-"""CSR/Arrow intersection kernels and skew helpers produce identical
-results to the join-based plan and the NumPy oracle."""
+"""Frontier-intersection set-up and skew helpers: sorted adjacency runs,
+the hub-split join, the forced hub-split shuffle route of triangles and
+cliques, and CC over a mega-hub — each against the plain join or the
+NumPy oracle."""
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from peregrine_spark import reference as ref
-from peregrine_spark.operators import skew
-from peregrine_spark.operators.csr import (
-    adjacency,
-    triangles_csr_arrow,
-    triangles_via_adjacency,
-)
+from peregrine_spark.operators import csr, skew
 from peregrine_spark.operators.graph import orient, undirected
 from peregrine_spark.operators.iterative import connected_components
-from peregrine_spark.sources import ingest as ing
+from peregrine_spark.operators.patterns import clique_count
+from peregrine_spark.operators.triangles import triangle_count, triangles
+from peregrine_spark.plans.patterns import SmallGraph
 from tests import golden
-
-
-@pytest.mark.parametrize("name", ["k6", "two_tri_bridge", "star_hub", "disconnected"])
-def test_adjacency_variants_golden(spark, name):
-    pairs = golden.ALL[name]
-    e = golden.to_spark_edges(spark, pairs)
-    want = ref.triangle_count(pairs)
-    assert triangles_via_adjacency(e).collect()[0].n_triangles == want
-    assert triangles_csr_arrow(e).collect()[0].n_triangles == want
-
-
-def test_csr_arrow_tiny_ingested(spark, tiny_repo_files):
-    e = ing.extract_edges(tiny_repo_files)
-    pairs = [(r.src, r.dst) for r in e.collect()]
-    want = ref.triangle_count(pairs)
-    assert triangles_via_adjacency(e).collect()[0].n_triangles == want
-    assert triangles_csr_arrow(e).collect()[0].n_triangles == want
 
 
 def test_adjacency_runs_sorted(spark):
     e = golden.to_spark_edges(spark, golden.K6)
-    rows = adjacency(orient(e)).collect()
+    rows = csr.adjacency(orient(e)).collect()
     for r in rows:
         assert list(r.adj) == sorted(r.adj)
-
-
-def test_hub_detection(spark):
-    e = golden.to_spark_edges(spark, golden.STAR_HUB)
-    h = skew.hubs(e, threshold=10).collect()
-    assert len(h) == 1 and h[0].id == 0 and h[0].deg == 50
-
-
-def test_salted_join_matches_plain(spark):
-    e = undirected(golden.to_spark_edges(spark, golden.STAR_HUB))
-    state = e.select(F.col("src").alias("id")).distinct().select(
-        "id", (F.col("id") * 10).alias("val")
-    )
-    plain = e.join(state.withColumnRenamed("id", "src"), "src").select("src", "dst", "val")
-    salted = skew.salted_join(
-        e, state.withColumnRenamed("id", "src"), "src", n_salts=4, salt_source="dst"
-    ).select("src", "dst", "val")
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-
-
-def test_two_phase_min_matches_plain(spark):
-    e = undirected(golden.to_spark_edges(spark, golden.DISCONNECTED))
-    msgs = e.select(F.col("dst").alias("id"), F.col("src").alias("comp"))
-    plain = {r.id: r.comp for r in msgs.groupBy("id").agg(F.min("comp").alias("comp")).collect()}
-    two = {
-        r.id: r.comp
-        for r in skew.two_phase_agg(msgs, "id", "comp", "min", n_salts=3).collect()
-    }
-    assert plain == two
 
 
 def test_hub_split_join_matches_plain(spark):
@@ -81,6 +33,24 @@ def test_hub_split_join_matches_plain(spark):
     plain = e.join(state, "src").select("src", "dst", "val")
     split = skew.hub_split_join(e, state, "src", hubs).select("src", "dst", "val")
     assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, split.collect()))
+
+
+@pytest.mark.parametrize("name", ["k6", "two_tri_bridge", "star_hub", "disconnected"])
+def test_hub_split_shuffle_route_golden(spark, monkeypatch, name):
+    """Above csr.BROADCAST_MAX_EDGES, triangles and cliques attach adjacency
+    runs through hub-split shuffle joins. Force that route with a 0 bound,
+    and a hub threshold of 1 so hub_keys finds real hubs (star_hub's
+    centre, K6's later vertices) and the isin() hub branch runs too."""
+    monkeypatch.setattr(csr, "BROADCAST_MAX_EDGES", 0)
+    monkeypatch.setattr(skew, "auto_hub_threshold", lambda n_rows: 1)
+    pairs = golden.ALL[name]
+    e = golden.to_spark_edges(spark, pairs)
+    assert triangle_count(e).first()["n_triangles"] == ref.triangle_count(pairs)
+    rows = triangles(e).collect()
+    assert len(rows) == ref.triangle_count(pairs)
+    assert {tuple(sorted(r)) for r in rows} == golden.triangle_set(pairs)
+    want4 = ref.pattern_count(pairs, SmallGraph.clique(4))
+    assert clique_count(e, 4).first()["n_cliques"] == want4
 
 
 def test_cc_on_hub_graph(spark):

@@ -83,8 +83,8 @@ def test_malformed_refs_tolerated(spark):
 
 
 def test_skewed_degree_distribution():
-    """zipf targets must produce genuine hubs (skew the salting layer
-    needs): max in-degree far above the mean."""
+    """zipf targets must produce genuine hubs (skew the hub-split joins
+    handle): max in-degree far above the mean."""
     pairs = synth_truth_pairs(5000, seed=42)
     _, cnt = np.unique(pairs[:, 1], return_counts=True)
     assert cnt.max() > 20 * cnt.mean()

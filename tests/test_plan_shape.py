@@ -1,0 +1,161 @@
+"""Executed physical-plan shapes of the hot operators, pinned.
+
+Every action an operator runs is one SQL execution, and Spark's SQL status
+store keeps each execution's final (post-AQE) physical plan text even with
+the UI off. For each operator these tests count, over all executions it
+starts, the shuffle exchanges, the joins by strategy and any Python
+nodes, and compare against the counts of the shipped plans — so a plan
+regression (a lost broadcast, an extra shuffle, a Python UDF on the hot
+path) fails here instead of hiding in an explain dump.
+
+Only each plan's top-level tree counts: AQE reprints the initial plan
+after the final one, and a cached input reprints its whole plan under
+every InMemoryRelation.
+"""
+
+import re
+from collections import Counter
+
+import pytest
+
+from peregrine_spark.operators import motifs
+from peregrine_spark.operators.graph import degrees
+from peregrine_spark.operators.labels import (
+    discover_star_labels,
+    discover_star_labels_3,
+    mni_star2_supports,
+)
+from peregrine_spark.operators.triangles import triangle_count
+from peregrine_spark.sources.testdata import copurchase_edges, part_labels
+
+SF = "/root/testdata/sf0.001"
+JOINS = ("BroadcastHashJoin", "ShuffledHashJoin", "SortMergeJoin")
+PYTHON = ("BatchEvalPython", "ArrowEvalPython", "MapInArrow", "MapInPandas")
+# a tree line: branch marks, optional codegen star, node name, "(id)"
+_NODE = re.compile(r"^[\s:+\-*]*([A-Za-z]\w*)[^()]*\((\d+)\)")
+
+
+def _top_level_nodes(plan: str) -> list[str]:
+    """Node names of the top-level final plan in a formatted plan text.
+
+    Operator ids number everything under an InMemoryRelation (k) with the
+    ids k+1 .. r, r being the id of the cached plan's root on the next
+    line; those ranges are dropped. The top-level AQE initial plan starts
+    at the one unindented "+- == Initial Plan ==" header."""
+    nodes, nested, after_imr = [], [], None
+    for line in plan.split("\n\n")[0].splitlines():
+        if line.startswith("+- == Initial Plan =="):
+            break
+        m = _NODE.match(line)
+        if not m:
+            continue
+        name, op_id = m.group(1), int(m.group(2))
+        if after_imr is not None:
+            nested.append((after_imr, op_id))
+        after_imr = op_id if name == "InMemoryRelation" else None
+        nodes.append((name, op_id))
+    return [n for n, i in nodes if not any(lo < i <= hi for lo, hi in nested)]
+
+
+def plan_shape(spark, action) -> dict[str, int]:
+    """Run `action`; return {node: count} over the top-level final plans of
+    the SQL executions it started, plus "executions". Zero counts are
+    left out."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        lst = store.executionsList()
+        return [lst.apply(i) for i in range(lst.size())]
+
+    # by id, not list position: spark.sql.ui.retainedExecutions caps the list
+    last = max((x.executionId() for x in executions()), default=-1)
+    action()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    new = [x for x in executions() if x.executionId() > last]
+    seen = Counter()
+    for x in new:
+        seen.update(_top_level_nodes(x.physicalPlanDescription()))
+    shape = {"executions": len(new), "Exchange": seen["Exchange"]}
+    shape.update({j: seen[j] for j in JOINS})
+    shape["python"] = sum(seen[p] for p in PYTHON)
+    return {k: v for k, v in shape.items() if v}
+
+
+def test_copurchase_edges_shape(spark):
+    # before the fixture below caches the same plan: a cache hit would
+    # reduce this to an in-memory scan
+    got = plan_shape(spark, lambda: copurchase_edges(spark, SF).collect())
+    assert got == {"executions": 1, "Exchange": 2}
+
+
+@pytest.fixture(scope="module")
+def copurchase(spark):
+    edges = copurchase_edges(spark, SF).cache()
+    labels = part_labels(spark, SF).cache()
+    edges.count()
+    labels.count()
+    yield edges, labels
+    edges.unpersist()
+    labels.unpersist()
+
+
+def test_triangle_count_shape(spark, copurchase):
+    edges, _ = copurchase
+    got = plan_shape(spark, lambda: triangle_count(edges).collect())
+    assert got == {"executions": 3, "Exchange": 2, "BroadcastHashJoin": 2}
+
+
+def test_degrees_shape(spark, copurchase):
+    edges, _ = copurchase
+    got = plan_shape(spark, lambda: degrees(edges).collect())
+    assert got == {"executions": 1, "Exchange": 3}
+
+
+# cycle4_count's three routes, forced as in test_motifs_sinks: full wedge
+# enumeration (the default here), broadcast + intersect C-term (id
+# packing bound failed), hub-split shuffle (broadcast bound 0)
+CYCLE4_ROUTES = {
+    "full_enum": ({}, {"executions": 4, "Exchange": 6}),
+    "broadcast": (
+        {"PACK_MAX_ID": 0},
+        {"executions": 4, "Exchange": 4, "BroadcastHashJoin": 3},
+    ),
+    "hub_split": (
+        {"BROADCAST_MAX_EDGES": 0},
+        {"executions": 4, "Exchange": 6, "ShuffledHashJoin": 2},
+    ),
+}
+
+
+@pytest.mark.parametrize("route", list(CYCLE4_ROUTES))
+def test_cycle4_count_shape(spark, copurchase, monkeypatch, route):
+    edges, _ = copurchase
+    force, want = CYCLE4_ROUTES[route]
+    for name, value in force.items():
+        monkeypatch.setattr(motifs, name, value)
+    got = plan_shape(spark, lambda: motifs.cycle4_count(edges).collect())
+    assert got == want
+
+
+LABEL_OPS = {
+    "star2_labels": (
+        discover_star_labels,
+        {"executions": 4, "Exchange": 3, "BroadcastHashJoin": 2},
+    ),
+    "star3_labels": (
+        discover_star_labels_3,
+        {"executions": 4, "Exchange": 3, "BroadcastHashJoin": 5},
+    ),
+    "mni_star2_supports": (
+        mni_star2_supports,
+        {"executions": 5, "Exchange": 6, "BroadcastHashJoin": 2},
+    ),
+}
+
+
+@pytest.mark.parametrize("op", list(LABEL_OPS))
+def test_label_operator_shape(spark, copurchase, op):
+    edges, labels = copurchase
+    fn, want = LABEL_OPS[op]
+    got = plan_shape(spark, lambda: fn(edges, labels).collect())
+    assert got == want

@@ -24,13 +24,11 @@ def test_golden_counts(spark, name):
 
 
 @pytest.mark.parametrize("name", ["k6", "two_tri_bridge", "disconnected"])
-def test_wedge_plan_agrees_with_adjacency_plan(spark, name):
-    from peregrine_spark.operators.triangles import triangles_wedge
-
-    e = golden.to_spark_edges(spark, golden.ALL[name])
-    a = {tuple(r) for r in triangles(e).collect()}
-    b = {tuple(r) for r in triangles_wedge(e).collect()}
-    assert a == b
+def test_triangle_set_matches_brute_force(spark, name):
+    pairs = golden.ALL[name]
+    e = golden.to_spark_edges(spark, pairs)
+    got = {tuple(sorted(r)) for r in triangles(e).collect()}
+    assert got == golden.triangle_set(pairs)
 
 
 def test_each_triangle_once_k6(spark):
