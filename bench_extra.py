@@ -5,7 +5,8 @@ Modes:
   python bench_extra.py control            # ~5-10 s pure-compute host-health control
   python bench_extra.py groups10           # phase isolation for motifs5_groups10_mod4
   python bench_extra.py suite [k]          # min-of-k timed run of the 11 bench queries
-                                           # (same methodology as bench.py, one JSON/run)
+                                           # (same methodology as bench.py, one JSON/run;
+                                           # "cpu_s" holds each query's process-tree CPU)
 
 Plan shapes are pinned by tests/test_plan_shape.py, not by explain dumps.
 
@@ -33,6 +34,30 @@ def timed(fn) -> float:
     t0 = time.perf_counter()
     fn()
     return round(time.perf_counter() - t0, 3)
+
+
+def tree_cpu_s() -> float:
+    """CPU seconds used so far by this process and its descendants (the
+    JVM and any Python workers), from /proc: user + system time of each
+    live process plus what it collected from the children it reaped.
+    Host steal inflates wall time, not this."""
+    me = os.getpid()
+    parent, ticks = {}, {}
+    for p in filter(str.isdigit, os.listdir("/proc")):
+        try:
+            with open(f"/proc/{p}/stat") as f:
+                st = f.read().rsplit(")", 1)[1].split()
+        except OSError:  # exited while listed
+            continue
+        parent[int(p)] = int(st[1])
+        ticks[int(p)] = sum(int(x) for x in st[11:15])  # utime stime cutime cstime
+    total = 0
+    for pid, n in ticks.items():
+        q = pid
+        while q != me and q in parent and parent[q] != q:
+            q = parent[q]
+        total += n if q == me else 0
+    return total / os.sysconf("SC_CLK_TCK")
 
 
 def control(spark) -> float:
@@ -124,11 +149,13 @@ def main() -> None:
         from peregrine_spark.operators.triangles import triangle_count
 
         timings: dict[str, float] = {}
+        cpu: dict[str, float] = {}
 
         def t(name, fn):
-            t0 = time.perf_counter()
+            c0, t0 = tree_cpu_s(), time.perf_counter()
             out = fn()
             timings[name] = round(time.perf_counter() - t0, 3)
+            cpu[name] = round(tree_cpu_s() - c0, 2)
             return out
 
         t("triangle_count", lambda: triangle_count(edges).collect())
@@ -172,7 +199,7 @@ def main() -> None:
         t("motifs5_groups10_mod4", lambda: sum(_groups10().values()))
         e4.unpersist()
         timings["_control"] = control(spark)
-        print(json.dumps(timings))
+        print(json.dumps({**timings, "cpu_s": cpu}))
         return
 
     raise SystemExit(f"unknown mode {mode}")

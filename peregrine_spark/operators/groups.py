@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from peregrine_spark.operators.arith import falling_exact
 from peregrine_spark.operators.graph import undirected
 from peregrine_spark.plans.patterns import SmallGraph
+from peregrine_spark.session import local_frame
 
 _DEC = "decimal(38,0)"
 
@@ -802,6 +803,4 @@ def group_count(
     mult = math.prod(math.factorial(len(members)) for members, _ in groups)
     aut = pattern.aut_order_regular()
     n = int(row["_tot"]) * mult // (aut * L)
-    return edges.sparkSession.createDataFrame(
-        [(n,)], "n_matches long"
-    )
+    return local_frame(edges.sparkSession, [(n,)], "n_matches long")

@@ -13,6 +13,7 @@ from peregrine_spark.operators.motifs import mni_support
 from peregrine_spark.operators.patterns import match_pattern
 from peregrine_spark.plans.generators import extend_by_edge
 from peregrine_spark.plans.patterns import SmallGraph
+from peregrine_spark.session import local_frame
 
 
 # label tables up to this many rows (≈ |V|) attach via map-side
@@ -163,7 +164,7 @@ def discover_star_labels(
     if small:
         rows = out.collect()
         hist.unpersist()
-        return edges.sparkSession.createDataFrame(rows, out.schema)
+        return local_frame(edges.sparkSession, rows, out.schema)
     return out
 
 
@@ -226,7 +227,7 @@ def discover_star_labels_3(
     if small:
         rows = out.collect()
         hist.unpersist()
-        return edges.sparkSession.createDataFrame(rows, out.schema)
+        return local_frame(edges.sparkSession, rows, out.schema)
     return out
 
 
@@ -438,8 +439,10 @@ def mni_star2_supports(
                 dl = min(dom[(cl, l1)][l2], dom[(cl, l2)][l1])
             out_rows.append((cl, l1, l2, min(dc, dl)))
         lt = labels.schema["label"].dataType.simpleString()
-        return edges.sparkSession.createDataFrame(
-            out_rows, f"center_label {lt}, l1 {lt}, l2 {lt}, support long"
+        return local_frame(
+            edges.sparkSession,
+            out_rows,
+            f"center_label {lt}, l1 {lt}, l2 {lt}, support long",
         )
     pos = sums.select(
         "cl",
@@ -614,7 +617,7 @@ def mni_star3_supports(
         rows = out.collect()
         for df in (lv, hc, qual):
             df.unpersist()
-        return edges.sparkSession.createDataFrame(rows, out.schema)
+        return local_frame(edges.sparkSession, rows, out.schema)
     return out
 
 

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from peregrine_spark.operators.patterns import match_pattern
 from peregrine_spark.plans.patterns import SmallGraph
 from peregrine_spark.reference import pattern_count
+from peregrine_spark.session import local_frame
 
 
 def all_motifs(k: int) -> dict[str, SmallGraph]:
@@ -189,11 +190,11 @@ def motif_counts(
         edges.unpersist()
     if not vertex_induced:
         rows = [(n, e_counts[n]) for n in names]
-        return spark.createDataFrame(rows, "motif string, count long")
+        return local_frame(spark, rows, "motif string, count long")
 
     v_counts = _to_vertex_induced(cat, e_counts)
     rows = [(n, v_counts[n]) for n in names]
-    return spark.createDataFrame(rows, "motif string, count long")
+    return local_frame(spark, rows, "motif string, count long")
 
 
 def _to_vertex_induced(
@@ -347,9 +348,7 @@ def cycle4_count(edges: DataFrame) -> DataFrame:
         )
         for df in _caches:
             df.unpersist()
-        return edges.sparkSession.createDataFrame(
-            [(int(row["n_cycles"]),)], "n_cycles long"
-        )
+        return local_frame(edges.sparkSession, [(int(row["n_cycles"]),)], "n_cycles long")
     adj = adj.cache()
     if small:
         # A-wedges map-side: all unordered pairs within each out-run
@@ -441,9 +440,7 @@ def cycle4_count(edges: DataFrame) -> DataFrame:
         ).first()
         for df in [adj, pairs, *_caches]:
             df.unpersist()
-    return edges.sparkSession.createDataFrame(
-        [(int(row["n_cycles"]),)], "n_cycles long"
-    )
+    return local_frame(edges.sparkSession, [(int(row["n_cycles"]),)], "n_cycles long")
 
 
 def motif_counts_k4(
@@ -575,7 +572,7 @@ def motif_counts_k4(
     cat = all_motifs(4)
     out = _to_vertex_induced(cat, e_counts) if vertex_induced else e_counts
     rows = [(n, out[n]) for n in cat]
-    return spark.createDataFrame(rows, "motif string, count long")
+    return local_frame(spark, rows, "motif string, count long")
 
 
 def star_count(edges: DataFrame, k: int) -> DataFrame:

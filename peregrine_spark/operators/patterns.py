@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from peregrine_spark.operators.graph import orient, undirected
 from peregrine_spark.plans.patterns import SmallGraph
+from peregrine_spark.session import local_frame
 
 
 def _vcol(p: int) -> str:
@@ -518,6 +519,4 @@ def clique_count(edges: DataFrame, k: int) -> DataFrame:
     ).first()
     for df in _caches:
         df.unpersist()
-    return edges.sparkSession.createDataFrame(
-        [(int(row["n_cliques"]),)], "n_cliques long"
-    )
+    return local_frame(edges.sparkSession, [(int(row["n_cliques"]),)], "n_cliques long")

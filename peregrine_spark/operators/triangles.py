@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from peregrine_spark.operators.csr import _edge_adjacency_pairs
+from peregrine_spark.session import local_frame
 
 
 def triangles(edges: DataFrame) -> DataFrame:
@@ -54,8 +55,8 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     )
     for df in caches:
         df.unpersist()
-    return edges.sparkSession.createDataFrame(
-        [(int(row["n_triangles"]),)], "n_triangles long"
+    return local_frame(
+        edges.sparkSession, [(int(row["n_triangles"]),)], "n_triangles long"
     )
 
 

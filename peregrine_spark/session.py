@@ -5,9 +5,13 @@ spark-submit conf; the partitioning strategy (explicit repartition on graph
 keys, AQE for skew) is what actually carries to a 1000-executor cluster.
 
 Defaults fit the host they run on: ``local[<usable cores>]``, a driver
-heap of at most half the host's memory, and 2 × ``defaultParallelism``
+heap of at most half the host's memory, 2 × ``defaultParallelism``
 shuffle partitions (the width ``labels.py``, ``motifs.py`` and the tests
-already use).
+already use), and a local driver JVM with two JIT compiler threads and
+the parallel collector (``LOCAL_JAVA_OPTIONS``).
+
+``local_frame`` is how operators hand back results they computed on the
+driver.
 """
 
 from __future__ import annotations
@@ -15,9 +19,29 @@ from __future__ import annotations
 import os
 import re
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 MAX_DRIVER_MEM_MB = 16 * 1024
+
+# The local driver JVM shares the host's cores with the task slots. By
+# default HotSpot sizes its JIT pool by core count (3 threads on 4 cores)
+# and picks G1, whose concurrent threads add to it; at the sizes we run,
+# compilation alone was about half of a query's CPU. 2 compiler threads is
+# the tiered minimum (one C1, one C2), and the parallel collector has no
+# concurrent phase. Cluster masters keep the JVM defaults.
+# (flag, pattern of a caller's flag that already decides the same thing)
+LOCAL_JAVA_OPTIONS = (
+    ("-XX:+UseParallelGC", r"-XX:\+Use\w+GC\b"),
+    ("-XX:CICompilerCount=2", r"-XX:CICompilerCount="),
+)
+# Where a caller's own JVM flags for the driver can come from, besides
+# spark.driver.extraJavaOptions.
+_JAVA_OPTION_ENV = (
+    "JAVA_TOOL_OPTIONS", "JDK_JAVA_OPTIONS", "_JAVA_OPTIONS", "SPARK_SUBMIT_OPTS"
+)
 
 
 def _default_driver_mem() -> str:
@@ -36,6 +60,39 @@ def _local_cores(master: str) -> int | None:
     return len(os.sched_getaffinity(0)) if m[1] == "*" else int(m[1] or 1)
 
 
+def _local_java_options(extra_conf: dict[str, str]) -> str:
+    """The LOCAL_JAVA_OPTIONS flags that the caller's own JVM flags do
+    not already decide, for ``spark.driver.defaultJavaOptions``. A
+    caller's flag must win. Spark puts that conf ahead of
+    ``spark.driver.extraJavaOptions``, so a flag there would win anyway;
+    but the JVM reads JAVA_TOOL_OPTIONS and JDK_JAVA_OPTIONS before the
+    command line, so ours would override those, and a second collector
+    flag anywhere aborts JVM start ("Multiple garbage collectors
+    selected")."""
+    theirs = " ".join(
+        [os.environ.get(k, "") for k in _JAVA_OPTION_ENV]
+        + [extra_conf.get("spark.driver.extraJavaOptions", "")]
+    )
+    return " ".join(
+        flag for flag, decided in LOCAL_JAVA_OPTIONS if not re.search(decided, theirs)
+    )
+
+
+def local_frame(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
+    """A DataFrame over rows already on the driver (tuples in schema
+    order), built from an Arrow table: Spark plans it as a LocalRelation,
+    so reading it runs no Spark job and starts no Python worker (a
+    createDataFrame over a list plans a scan of a Python RDD)."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows], f.type) for i, f in enumerate(arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "peregrine_spark",
@@ -47,9 +104,11 @@ def get_spark(
     master defaults to ``local[$SPARK_GRAFT_CPUS]``, else to the number of
     cores this process may run on. ``spark.sql.shuffle.partitions`` is
     ``shuffle_partitions``, else ``$SPARK_GRAFT_SHUFFLE``, else 2 × the
-    session's ``defaultParallelism``. AQE is on: it coalesces small
-    shuffle partitions and splits skewed ones at runtime — the safety net
-    under our explicit hub splitting.
+    session's ``defaultParallelism``. A local master's driver JVM gets
+    ``LOCAL_JAVA_OPTIONS`` as ``spark.driver.defaultJavaOptions`` (see
+    ``_local_java_options``). AQE is on: it coalesces small shuffle
+    partitions and splits skewed ones at runtime — the safety net under
+    our explicit hub splitting.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
@@ -90,6 +149,8 @@ def get_spark(
         builder = builder.config("spark.local.dir", local_dir)
     if shuffle_partitions is not None:
         builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    if cores and (java_options := _local_java_options(extra_conf or {})):
+        builder = builder.config("spark.driver.defaultJavaOptions", java_options)
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)

@@ -6,7 +6,8 @@ the UI off. For each operator these tests count, over all executions it
 starts, the shuffle exchanges, the joins by strategy and any Python
 nodes, and compare against the counts of the shipped plans — so a plan
 regression (a lost broadcast, an extra shuffle, a Python UDF on the hot
-path) fails here instead of hiding in an explain dump.
+path, a result frame read back through Python workers) fails here
+instead of hiding in an explain dump.
 
 Only each plan's top-level tree counts: AQE reprints the initial plan
 after the final one, and a cached input reprints its whole plan under
@@ -17,6 +18,7 @@ import re
 from collections import Counter
 
 import pytest
+from pyspark.sql import functions as F
 
 from peregrine_spark.operators import motifs
 from peregrine_spark.operators.graph import degrees
@@ -30,9 +32,17 @@ from peregrine_spark.sources.testdata import copurchase_edges, part_labels
 
 SF = "/root/testdata/sf0.001"
 JOINS = ("BroadcastHashJoin", "ShuffledHashJoin", "SortMergeJoin")
-PYTHON = ("BatchEvalPython", "ArrowEvalPython", "MapInArrow", "MapInPandas")
-# a tree line: branch marks, optional codegen star, node name, "(id)"
-_NODE = re.compile(r"^[\s:+\-*]*([A-Za-z]\w*)[^()]*\((\d+)\)")
+# Python UDF nodes, and the scan of a DataFrame made from a Python list
+# (createDataFrame over rows plans a Python RDD: reading it starts Python
+# workers). None of these operators checkpoints, the other source of an
+# ExistingRDD scan.
+PYTHON = (
+    "BatchEvalPython", "ArrowEvalPython", "MapInArrow", "MapInPandas",
+    "Scan ExistingRDD",
+)
+# a tree line: branch marks, optional codegen star, node name (a scan
+# named with its source), "(id)"
+_NODE = re.compile(r"^[\s:+\-*]*((?:Scan )?[A-Za-z]\w*)[^()]*\((\d+)\)")
 
 
 def _top_level_nodes(plan: str) -> list[str]:
@@ -81,6 +91,20 @@ def plan_shape(spark, action) -> dict[str, int]:
     return {k: v for k, v in shape.items() if v}
 
 
+def jobs_started(spark, action) -> int:
+    """Run `action`; return how many Spark jobs it started."""
+    sc = spark.sparkContext._jsc.sc()
+
+    def job_ids():
+        lst = sc.statusStore().jobsList(None)
+        return [lst.apply(i).jobId() for i in range(lst.size())]
+
+    last = max(job_ids(), default=-1)
+    action()
+    sc.listenerBus().waitUntilEmpty()
+    return sum(1 for j in job_ids() if j > last)
+
+
 def test_copurchase_edges_shape(spark):
     # before the fixture below caches the same plan: a cache hit would
     # reduce this to an in-memory scan
@@ -103,6 +127,13 @@ def test_triangle_count_shape(spark, copurchase):
     edges, _ = copurchase
     got = plan_shape(spark, lambda: triangle_count(edges).collect())
     assert got == {"executions": 3, "Exchange": 2, "BroadcastHashJoin": 2}
+
+
+def test_triangle_count_result_is_local(spark, copurchase):
+    # the count is computed eagerly; reading its one-row result runs no job
+    edges, _ = copurchase
+    result = triangle_count(edges)
+    assert jobs_started(spark, result.collect) == 0
 
 
 def test_degrees_shape(spark, copurchase):
@@ -159,3 +190,14 @@ def test_label_operator_shape(spark, copurchase, op):
     fn, want = LABEL_OPS[op]
     got = plan_shape(spark, lambda: fn(edges, labels).collect())
     assert got == want
+
+
+def test_star_labels_empty_result(spark, copurchase):
+    # one edge: no vertex has two neighbours, so no 2-star; the empty
+    # result keeps the schema of a non-empty one
+    edges, labels = copurchase
+    src, dst = edges.first()
+    one_edge = edges.where((F.col("src") == src) & (F.col("dst") == dst)).limit(1)
+    got = discover_star_labels(one_edge, labels)
+    assert got.collect() == []
+    assert got.schema == discover_star_labels(edges, labels).schema

@@ -2,8 +2,10 @@
 session is built with explicit overrides): local[<usable cores>], a
 driver heap within half the host's memory, 2 × defaultParallelism
 shuffle partitions unless ``shuffle_partitions=`` or
-``SPARK_GRAFT_SHUFFLE`` says otherwise — and a checkpointed PageRank
-that starts no Python worker."""
+``SPARK_GRAFT_SHUFFLE`` says otherwise, a driver JVM with the parallel
+collector and two JIT compiler threads unless the caller's own JVM flags
+say otherwise — and a checkpointed PageRank and the eager counting
+operators, results collected, that start no Python worker."""
 
 import json
 import os
@@ -12,10 +14,36 @@ import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-CHILD = r"""
-import json, os, sys, tempfile
+JVM_FLAGS = r"""
+import json, os, sys
 from peregrine_spark.session import get_spark
+
+def jvm_flags(spark):
+    # collector (its MXBean names) and JIT pool size of the driver JVM
+    mf = spark._jvm.java.lang.management.ManagementFactory
+    beans = mf.getGarbageCollectorMXBeans()
+    hotspot = mf.getPlatformMXBean(
+        spark._jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    return {
+        "gc": sorted(beans.get(i).getName() for i in range(beans.size())),
+        "compilers": int(hotspot.getVMOption("CICompilerCount").getValue()),
+    }
+"""
+
+OVERRIDE_CHILD = JVM_FLAGS + r"""
+spark = get_spark(app_name="jvm-overrides", extra_conf=json.loads(sys.argv[1]))
+out = jvm_flags(spark)
+spark.stop()
+print("RESULT " + json.dumps(out))
+"""
+
+CHILD = JVM_FLAGS + r"""
+import tempfile
 from peregrine_spark.operators.iterative import pagerank
+from peregrine_spark.operators.labels import discover_star_labels
+from peregrine_spark.operators.motifs import cycle4_count
+from peregrine_spark.operators.triangles import triangle_count
 
 def width(spark):
     return int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -44,6 +72,7 @@ def python_children(pid):
 spark = get_spark(app_name="session-defaults")
 sc = spark.sparkContext
 out = {
+    **jvm_flags(spark),
     "master": sc.master,
     "parallelism": sc.defaultParallelism,
     "driver_memory": sc.getConf().get("spark.driver.memory"),
@@ -64,6 +93,10 @@ d = tempfile.mkdtemp()
 pagerank(spark, edges, tol=1e-9, max_iter=1, checkpoint_dir=d)
 res = pagerank(spark, edges, tol=1e-9, max_iter=2, checkpoint_dir=d, resume=True)
 out["supersteps"] = res.supersteps
+labels = spark.sql("SELECT id, id % 2 AS label FROM range(1, 6)")
+out["triangles"] = triangle_count(edges).collect()[0][0]
+out["cycles"] = cycle4_count(edges).collect()[0][0]
+out["star2_rows"] = len(discover_star_labels(edges, labels).collect())
 jvm = spark._jvm.java.lang.ProcessHandle.current().pid()
 out["python_workers"] = python_children(jvm)
 spark.stop()
@@ -71,20 +104,33 @@ print("RESULT " + json.dumps(out))
 """
 
 
-def test_host_fit_defaults_and_overrides():
+PARALLEL_GC = ["PS MarkSweep", "PS Scavenge"]
+
+
+def run_child(code, *args, **env_set):
+    """Run `code` in a fresh Python (so a fresh JVM) without this
+    project's env overrides or any caller JVM flags; return its RESULT."""
     env = {
         k: v
         for k, v in os.environ.items()
-        if k not in ("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SHUFFLE", "SPARK_GRAFT_DRIVER_MEM")
+        if k not in (
+            "SPARK_GRAFT_CPUS", "SPARK_GRAFT_SHUFFLE", "SPARK_GRAFT_DRIVER_MEM",
+            "JAVA_TOOL_OPTIONS", "JDK_JAVA_OPTIONS", "_JAVA_OPTIONS",
+        )
     }
     env["PYTHONPATH"] = ROOT + os.pathsep + env.get("PYTHONPATH", "")
+    env.update(env_set)
     proc = subprocess.run(
-        [sys.executable, "-c", CHILD],
+        [sys.executable, "-c", code, *args],
         cwd=ROOT, env=env, capture_output=True, text=True, timeout=600,
     )
     lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("RESULT ")]
     assert proc.returncode == 0 and lines, proc.stderr[-3000:]
-    out = json.loads(lines[-1][len("RESULT "):])
+    return json.loads(lines[-1][len("RESULT "):])
+
+
+def test_host_fit_defaults_and_overrides():
+    out = run_child(CHILD)
 
     cores = len(os.sched_getaffinity(0))
     assert out["master"] == f"local[{cores}]"
@@ -100,5 +146,24 @@ def test_host_fit_defaults_and_overrides():
     assert out["arg_over_env"] == 3
     assert out["restored"] == 2 * cores
 
+    assert out["gc"] == PARALLEL_GC
+    assert out["compilers"] == 2
+
     assert out["supersteps"] == 2
+    assert (out["triangles"], out["cycles"]) == (1, 0)
+    assert out["star2_rows"] > 0
     assert out["python_workers"] == []
+
+
+def test_caller_collector_wins():
+    # a second collector flag would abort JVM start
+    out = run_child(OVERRIDE_CHILD, "{}", JAVA_TOOL_OPTIONS="-XX:+UseG1GC")
+    assert out["gc"] == ["G1 Old Generation", "G1 Young Generation"]
+    assert out["compilers"] == 2
+
+
+def test_caller_compiler_count_wins():
+    conf = {"spark.driver.extraJavaOptions": "-XX:CICompilerCount=3"}
+    out = run_child(OVERRIDE_CHILD, json.dumps(conf))
+    assert out["gc"] == PARALLEL_GC
+    assert out["compilers"] == 3
