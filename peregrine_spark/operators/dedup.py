@@ -197,17 +197,19 @@ def jaccard_verify(
     shingle-hash sets (the adversarial-check stage after LSH recall).
 
     The candidate set is usually tiny next to the corpus, so the
-    shingled table is first cut down by a broadcast semi-join on the
-    candidate ids — at corpus scale the heavy shingle arrays of
-    non-candidate docs never enter the pair joins' shuffles (guide
-    §3.2: reduce the big side before shuffling it; inner joins make the
-    prefilter exact)."""
+    shingled table is first cut down by a semi-join on the candidate ids
+    — at corpus scale the heavy shingle arrays of non-candidate docs
+    never enter the pair joins' shuffles (guide §3.2: reduce the big
+    side before shuffling it; inner joins make the prefilter exact).
+    The semi-join is not hinted: AQE broadcasts the id set when its
+    measured size is under ``autoBroadcastJoinThreshold`` and shuffles
+    it otherwise, since a candidate set can grow with the corpus."""
     cand_ids = (
         pairs.select(F.col("a").alias(id_col))
         .union(pairs.select(F.col("b").alias(id_col)))
         .distinct()
     )
-    sh = shingled.join(F.broadcast(cand_ids), id_col, "left_semi")
+    sh = shingled.join(cand_ids, id_col, "left_semi")
     sa = sh.select(F.col(id_col).alias("a"), F.col("shingle_hashes").alias("sa"))
     sb = sh.select(F.col(id_col).alias("b"), F.col("shingle_hashes").alias("sb"))
     j = (

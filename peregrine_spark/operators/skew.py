@@ -98,7 +98,11 @@ def hub_presplit(
     partition, making the map-side join a single task. Measured on the
     23M-edge zipf graph: that one task ran 7-9.5 s per superstep against
     a 0.25 s stage median (straggler ratio 34x) and pinned PageRank's
-    32-core utilization at 26%."""
+    32-core utilization at 26%.
+
+    Both sides name n_part: the session lets AQE coalesce cached plans,
+    but never a user-numbered repartition, so the rest side keeps the
+    hash partitioning the gather join reuses."""
     if not hubs:
         return edges.repartition(n_part, key).cache(), None
     is_hub = F.col(key).isin(hubs)

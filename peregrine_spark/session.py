@@ -8,7 +8,8 @@ Defaults fit the host they run on: ``local[<usable cores>]``, a driver
 heap of at most half the host's memory, 2 × ``defaultParallelism``
 shuffle partitions (the width ``labels.py``, ``motifs.py`` and the tests
 already use), and a local driver JVM with two JIT compiler threads and
-the parallel collector (``LOCAL_JAVA_OPTIONS``).
+the parallel collector (``LOCAL_JAVA_OPTIONS``). Cached intermediates
+are as wide as their data: AQE may coalesce a cached plan's output.
 
 ``local_frame`` is how operators hand back results they computed on the
 driver.
@@ -107,8 +108,8 @@ def get_spark(
     session's ``defaultParallelism``. A local master's driver JVM gets
     ``LOCAL_JAVA_OPTIONS`` as ``spark.driver.defaultJavaOptions`` (see
     ``_local_java_options``). AQE is on: it coalesces small shuffle
-    partitions and splits skewed ones at runtime — the safety net under
-    our explicit hub splitting.
+    partitions, cached plans' included, and splits skewed ones at
+    runtime — the safety net under our explicit hub splitting.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
@@ -126,6 +127,12 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # let AQE coalesce the output of cached plans too: a cache of a
+        # few KB keeps one partition instead of the shuffle width, so each
+        # scan of it runs one task, not a full task wave. A user-numbered
+        # repartition(n, key) is never coalesced, so the co-partitioned
+        # superstep caches (skew.hub_presplit) keep their width.
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")

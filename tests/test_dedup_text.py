@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from peregrine_spark.operators import dedup as D
 from peregrine_spark.operators import similarity as S
 from peregrine_spark.operators import text as TX
+from tests.test_plan_shape import plan_shape
 
 
 @pytest.fixture(scope="module")
@@ -48,6 +49,27 @@ def test_minhash_lsh_finds_near_dups(spark, docs):
     assert got[(1, 2)] == 1.0  # exact dup found with jaccard 1
     assert (1, 3) in got and 0.5 <= got[(1, 3)] < 1.0
     assert not any({a, b} & {4, 5, 6} for a, b in got)  # no false positives
+
+
+def test_jaccard_verify_prefilter_obeys_broadcast_threshold(spark, docs):
+    # the candidate-id semi-join carries no broadcast hint: with automatic
+    # broadcasts off, no join of the pipeline broadcasts, and the answers
+    # are the same as with them on
+    def run():
+        return sorted(D.minhash_dedup_pairs(docs, k_shingle=3, threshold=0.5).collect())
+
+    want = run()
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        got = []
+        shape = plan_shape(spark, lambda: got.extend(run()))
+    finally:
+        spark.conf.set(key, old)
+    assert "BroadcastHashJoin" not in shape
+    assert got == want
+    assert (want[0].a, want[0].b, want[0].jaccard) == (1, 2, 1.0)
 
 
 def test_minhash_is_deterministic(spark, docs):

@@ -12,15 +12,20 @@ instead of hiding in an explain dump.
 Only each plan's top-level tree counts: AQE reprints the initial plan
 after the final one, and a cached input reprints its whole plan under
 every InMemoryRelation.
+
+Cached intermediates are as wide as their data (the session lets AQE
+coalesce cached plans): a cache that fits one partition already meets a
+following aggregation's or join's distribution, so it adds no Exchange.
 """
 
 import re
 from collections import Counter
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from peregrine_spark.operators import motifs
+from peregrine_spark.operators import iterative, motifs, skew
 from peregrine_spark.operators.graph import degrees
 from peregrine_spark.operators.labels import (
     discover_star_labels,
@@ -29,6 +34,7 @@ from peregrine_spark.operators.labels import (
 )
 from peregrine_spark.operators.triangles import triangle_count
 from peregrine_spark.sources.testdata import copurchase_edges, part_labels
+from tests import golden
 
 SF = "/root/testdata/sf0.001"
 JOINS = ("BroadcastHashJoin", "ShuffledHashJoin", "SortMergeJoin")
@@ -45,8 +51,9 @@ PYTHON = (
 _NODE = re.compile(r"^[\s:+\-*]*((?:Scan )?[A-Za-z]\w*)[^()]*\((\d+)\)")
 
 
-def _top_level_nodes(plan: str) -> list[str]:
-    """Node names of the top-level final plan in a formatted plan text.
+def _top_level_nodes(plan: str) -> list[tuple[str, int, str]]:
+    """(name, depth, line) of each node of the top-level final plan in a
+    formatted plan text; depth is the column of the node's branch mark.
 
     Operator ids number everything under an InMemoryRelation (k) with the
     ids k+1 .. r, r being the id of the cached plan's root on the next
@@ -63,14 +70,32 @@ def _top_level_nodes(plan: str) -> list[str]:
         if after_imr is not None:
             nested.append((after_imr, op_id))
         after_imr = op_id if name == "InMemoryRelation" else None
-        nodes.append((name, op_id))
-    return [n for n, i in nodes if not any(lo < i <= hi for lo, hi in nested)]
+        nodes.append((name, op_id, line.find("- "), line))
+    return [
+        (n, depth, line)
+        for n, i, depth, line in nodes
+        if not any(lo < i <= hi for lo, hi in nested)
+    ]
 
 
-def plan_shape(spark, action) -> dict[str, int]:
-    """Run `action`; return {node: count} over the top-level final plans of
-    the SQL executions it started, plus "executions". Zero counts are
-    left out."""
+def _join_sides(plan: str, join: str) -> list[list[str]]:
+    """Node names of each child subtree (left first) of the first
+    top-level node whose line contains `join`."""
+    nodes = _top_level_nodes(plan)
+    at = next(k for k, (_, _, line) in enumerate(nodes) if join in line)
+    depth, sides = nodes[at][1], []
+    for name, d, _ in nodes[at + 1:]:
+        if d <= depth:
+            break
+        if d == depth + 3:
+            sides.append([])
+        sides[-1].append(name)
+    return sides
+
+
+def executed_plans(spark, action) -> list[str]:
+    """Run `action`; return the final plan texts of the SQL executions it
+    started."""
     store = spark._jsparkSession.sharedState().statusStore()
 
     def executions():
@@ -81,28 +106,45 @@ def plan_shape(spark, action) -> dict[str, int]:
     last = max((x.executionId() for x in executions()), default=-1)
     action()
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    new = [x for x in executions() if x.executionId() > last]
-    seen = Counter()
-    for x in new:
-        seen.update(_top_level_nodes(x.physicalPlanDescription()))
-    shape = {"executions": len(new), "Exchange": seen["Exchange"]}
+    return [
+        x.physicalPlanDescription() for x in executions() if x.executionId() > last
+    ]
+
+
+def plan_shape(spark, action) -> dict[str, int]:
+    """Run `action`; return {node: count} over the top-level final plans of
+    the SQL executions it started, plus "executions". Zero counts are
+    left out."""
+    plans = executed_plans(spark, action)
+    seen = Counter(n for p in plans for n, _, _ in _top_level_nodes(p))
+    shape = {"executions": len(plans), "Exchange": seen["Exchange"]}
     shape.update({j: seen[j] for j in JOINS})
     shape["python"] = sum(seen[p] for p in PYTHON)
     return {k: v for k, v in shape.items() if v}
 
 
-def jobs_started(spark, action) -> int:
-    """Run `action`; return how many Spark jobs it started."""
-    sc = spark.sparkContext._jsc.sc()
+def _seq(seq) -> list:
+    """A Scala Seq over py4j as a list."""
+    return [seq.apply(i) for i in range(seq.size())]
 
-    def job_ids():
-        lst = sc.statusStore().jobsList(None)
-        return [lst.apply(i).jobId() for i in range(lst.size())]
 
-    last = max(job_ids(), default=-1)
+def started(spark, action) -> dict[str, int]:
+    """Run `action`; return how many Spark jobs it started and how many
+    tasks ran in their completed stages, from the status store."""
+    store = spark.sparkContext._jsc.sc().statusStore()
+
+    def stage_ids(jobs):
+        return {s for j in jobs for s in _seq(j.stageIds())}
+
+    before = _seq(store.jobsList(None))
+    last_job = max((j.jobId() for j in before), default=-1)
+    last_stage = max(stage_ids(before), default=-1)
     action()
-    sc.listenerBus().waitUntilEmpty()
-    return sum(1 for j in job_ids() if j > last)
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    new = [j for j in _seq(store.jobsList(None)) if j.jobId() > last_job]
+    stages = [store.lastStageAttempt(s) for s in stage_ids(new) if s > last_stage]
+    done = [s for s in stages if s.status().toString() == "COMPLETE"]
+    return {"jobs": len(new), "tasks": sum(s.numTasks() for s in done)}
 
 
 def test_copurchase_edges_shape(spark):
@@ -126,14 +168,28 @@ def copurchase(spark):
 def test_triangle_count_shape(spark, copurchase):
     edges, _ = copurchase
     got = plan_shape(spark, lambda: triangle_count(edges).collect())
-    assert got == {"executions": 3, "Exchange": 2, "BroadcastHashJoin": 2}
+    assert got == {"executions": 3, "BroadcastHashJoin": 2}
 
 
 def test_triangle_count_result_is_local(spark, copurchase):
     # the count is computed eagerly; reading its one-row result runs no job
     edges, _ = copurchase
     result = triangle_count(edges)
-    assert jobs_started(spark, result.collect) == 0
+    assert started(spark, result.collect)["jobs"] == 0
+
+
+# Tasks that collecting triangle_count runs on the cached sf0.001
+# co-purchase graph at 8 shuffle partitions, summed over its completed
+# stages (16 jobs). It was 138 (18 jobs) while every cached intermediate
+# kept the shuffle width; a cache as wide as its data is scanned by one
+# task, not a task wave.
+TRIANGLE_COUNT_TASKS = 17
+
+
+def test_triangle_count_tasks(spark, copurchase):
+    edges, _ = copurchase
+    got = started(spark, lambda: triangle_count(edges).collect())
+    assert got["tasks"] <= TRIANGLE_COUNT_TASKS
 
 
 def test_degrees_shape(spark, copurchase):
@@ -146,10 +202,10 @@ def test_degrees_shape(spark, copurchase):
 # enumeration (the default here), broadcast + intersect C-term (id
 # packing bound failed), hub-split shuffle (broadcast bound 0)
 CYCLE4_ROUTES = {
-    "full_enum": ({}, {"executions": 4, "Exchange": 6}),
+    "full_enum": ({}, {"executions": 4, "Exchange": 4}),
     "broadcast": (
         {"PACK_MAX_ID": 0},
-        {"executions": 4, "Exchange": 4, "BroadcastHashJoin": 3},
+        {"executions": 4, "Exchange": 2, "BroadcastHashJoin": 3},
     ),
     "hub_split": (
         {"BROADCAST_MAX_EDGES": 0},
@@ -171,11 +227,11 @@ def test_cycle4_count_shape(spark, copurchase, monkeypatch, route):
 LABEL_OPS = {
     "star2_labels": (
         discover_star_labels,
-        {"executions": 4, "Exchange": 3, "BroadcastHashJoin": 2},
+        {"executions": 4, "Exchange": 2, "BroadcastHashJoin": 2},
     ),
     "star3_labels": (
         discover_star_labels_3,
-        {"executions": 4, "Exchange": 3, "BroadcastHashJoin": 5},
+        {"executions": 4, "Exchange": 2, "BroadcastHashJoin": 5},
     ),
     "mni_star2_supports": (
         mni_star2_supports,
@@ -201,3 +257,39 @@ def test_star_labels_empty_result(spark, copurchase):
     got = discover_star_labels(one_edge, labels)
     assert got.collect() == []
     assert got.schema == discover_star_labels(edges, labels).schema
+
+
+@pytest.mark.parametrize("hubs", [False, True], ids=["no_hubs", "hubs"])
+@pytest.mark.parametrize("algo", ["pagerank", "connected_components"])
+def test_superstep_gather_shape(spark, monkeypatch, algo, hubs):
+    # The gather joins the cached edge side of hub_presplit (hash
+    # partitioned by src into n_part partitions) with the state. A
+    # user-numbered repartition is never coalesced, so the cache keeps
+    # n_part partitions and only the state side shuffles.
+    calls, widths = [], []
+
+    def presplit_join(rest, hub, small, key, hub_list):
+        # from the second superstep on, the caches are filled
+        if calls:
+            widths.append([d.rdd.getNumPartitions() for d in (rest, hub) if d is not None])
+        calls.append(hub is not None)
+        return skew.presplit_join(rest, hub, small, key, hub_list)
+
+    monkeypatch.setattr(iterative, "presplit_join", presplit_join)
+    if hubs:
+        monkeypatch.setattr(iterative, "auto_hub_threshold", lambda n_rows: 1)
+    pairs = np.asarray(golden.TWO_TRI_BRIDGE)
+    e = golden.to_spark_edges(spark, np.concatenate([pairs, pairs[:, ::-1]]))
+    run = getattr(iterative, algo)
+    plans = executed_plans(spark, lambda: run(spark, e, max_iter=2))
+    gather = "ShuffledHashJoin Inner"
+    gathers = [
+        p for p in plans if any(gather in line for _, _, line in _top_level_nodes(p))
+    ]
+    assert len(gathers) == 2 and calls == [hubs, hubs]
+    for plan in gathers:
+        edge_side, state_side = _join_sides(plan, gather)
+        assert "InMemoryTableScan" in edge_side and "Exchange" not in edge_side
+        assert state_side.count("Exchange") == 1
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert widths == [[n_part] * (2 if hubs else 1)]

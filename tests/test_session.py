@@ -4,8 +4,9 @@ driver heap within half the host's memory, 2 × defaultParallelism
 shuffle partitions unless ``shuffle_partitions=`` or
 ``SPARK_GRAFT_SHUFFLE`` says otherwise, a driver JVM with the parallel
 collector and two JIT compiler threads unless the caller's own JVM flags
-say otherwise — and a checkpointed PageRank and the eager counting
-operators, results collected, that start no Python worker."""
+say otherwise, AQE coalescing of cached plans unless the caller turns it
+off — and a checkpointed PageRank and the eager counting operators,
+results collected, that start no Python worker."""
 
 import json
 import os
@@ -14,7 +15,7 @@ import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-JVM_FLAGS = r"""
+PROBES = r"""
 import json, os, sys
 from peregrine_spark.session import get_spark
 
@@ -29,16 +30,30 @@ def jvm_flags(spark):
         "gc": sorted(beans.get(i).getName() for i in range(beans.size())),
         "compilers": int(hotspot.getVMOption("CICompilerCount").getValue()),
     }
+
+def cache_scan(spark):
+    # shuffle width, and the tasks that a scan of a cached tiny aggregation
+    # runs
+    from tests.test_plan_shape import started
+
+    agg = spark.range(1000).selectExpr("id % 10 AS k").groupBy("k").count().cache()
+    agg.count()
+    tasks = started(spark, agg.collect)["tasks"]
+    agg.unpersist()
+    return {
+        "width": int(spark.conf.get("spark.sql.shuffle.partitions")),
+        "cache_scan_tasks": tasks,
+    }
 """
 
-OVERRIDE_CHILD = JVM_FLAGS + r"""
+OVERRIDE_CHILD = PROBES + r"""
 spark = get_spark(app_name="jvm-overrides", extra_conf=json.loads(sys.argv[1]))
-out = jvm_flags(spark)
+out = {**jvm_flags(spark), **cache_scan(spark)}
 spark.stop()
 print("RESULT " + json.dumps(out))
 """
 
-CHILD = JVM_FLAGS + r"""
+CHILD = PROBES + r"""
 import tempfile
 from peregrine_spark.operators.iterative import pagerank
 from peregrine_spark.operators.labels import discover_star_labels
@@ -73,6 +88,7 @@ spark = get_spark(app_name="session-defaults")
 sc = spark.sparkContext
 out = {
     **jvm_flags(spark),
+    **cache_scan(spark),
     "master": sc.master,
     "parallelism": sc.defaultParallelism,
     "driver_memory": sc.getConf().get("spark.driver.memory"),
@@ -149,6 +165,11 @@ def test_host_fit_defaults_and_overrides():
     assert out["gc"] == PARALLEL_GC
     assert out["compilers"] == 2
 
+    # AQE coalesces cached plans: a scan of a cache of a few rows runs
+    # fewer tasks than the shuffle width
+    assert out["width"] == 2 * cores
+    assert out["cache_scan_tasks"] < out["width"]
+
     assert out["supersteps"] == 2
     assert (out["triangles"], out["cycles"]) == (1, 0)
     assert out["star2_rows"] > 0
@@ -167,3 +188,9 @@ def test_caller_compiler_count_wins():
     out = run_child(OVERRIDE_CHILD, json.dumps(conf))
     assert out["gc"] == PARALLEL_GC
     assert out["compilers"] == 3
+
+
+def test_caller_keeps_cached_width():
+    conf = {"spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "false"}
+    out = run_child(OVERRIDE_CHILD, json.dumps(conf))
+    assert out["cache_scan_tasks"] == out["width"]
