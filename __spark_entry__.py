@@ -332,10 +332,8 @@ def _motifs_ei_by_mod(
     sequential loop."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from peregrine_spark.operators.groups import (
-        GroupCountContext,
-        group_count_many,
-    )
+    from peregrine_spark.operators.graph import GraphContext
+    from peregrine_spark.operators.groups import group_count_many
     from peregrine_spark.operators.motifs import all_motifs
     from peregrine_spark.operators.patterns import clique_count
 
@@ -349,12 +347,12 @@ def _motifs_ei_by_mod(
         e = full.filter((F.col("src") + F.col("dst")) % m == 0).cache()
         out: dict[str, int] = {}
         plannable = {n: cat[n] for n in names if n != clique}
-        if plannable:
-            ctx = GroupCountContext(e)
-            out.update(group_count_many(e, plannable, ctx))
-            ctx.unpersist()
-        if clique in names:
-            out[clique] = clique_count(e, k).first()["n_cliques"]
+        # the clique count reads the context's canonical set and degree table
+        with GraphContext(e) as ctx:
+            if plannable:
+                out.update(group_count_many(e, plannable, ctx))
+            if clique in names:
+                out[clique] = clique_count(e, k).first()["n_cliques"]
         e.unpersist()
         return out
 
@@ -421,10 +419,8 @@ M5_DENSE10 = [
 
 
 def _q_motifs5_ei_dense10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from peregrine_spark.operators.groups import (
-        GroupCountContext,
-        group_count_many,
-    )
+    from peregrine_spark.operators.graph import GraphContext
+    from peregrine_spark.operators.groups import group_count_many
     from peregrine_spark.operators.motifs import all_motifs
     from peregrine_spark.operators.patterns import clique_count
 
@@ -432,18 +428,18 @@ def _q_motifs5_ei_dense10(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cat = all_motifs(5)
     e = TD.copurchase_edges(spark, sf_dir).cache()
-    ctx = GroupCountContext(e)
     plannable = {
         n: cat[n]
         for n in M5_DENSE10
         if len(cat[n].edges) < len(cat[n].vertices) * (len(cat[n].vertices) - 1) // 2
     }
-    # K5 runs concurrently with the fused group action (guide §2.6)
-    with ThreadPoolExecutor(max_workers=1) as pool:
+    # K5 runs concurrently with the fused group action (guide §2.6), in
+    # its own context, which reads this one's canonical set and degree table
+    with GraphContext(e) as ctx, ThreadPoolExecutor(max_workers=1) as pool:
         f_k5 = pool.submit(lambda: clique_count(e, 5).first()["n_cliques"])
         counts = group_count_many(e, plannable, ctx)
         counts["m5_020"] = f_k5.result()
-    ctx.unpersist()
+    e.unpersist()
     return spark.createDataFrame(
         [(n, int(counts[n])) for n in M5_DENSE10], "motif string, n long"
     )

@@ -93,10 +93,8 @@ def main() -> None:
         # phase isolation for the motifs5_groups10_mod4 bench entry:
         # context stats, fused group action, clique5 — same structure as
         # the frozen bench.py's _groups10
-        from peregrine_spark.operators.groups import (
-            GroupCountContext,
-            group_count_many,
-        )
+        from peregrine_spark.operators.graph import GraphContext, adjacency
+        from peregrine_spark.operators.groups import group_count_many
         from peregrine_spark.operators.motifs import all_motifs
         from peregrine_spark.operators.patterns import clique_count
 
@@ -110,22 +108,23 @@ def main() -> None:
         sc = spark.sparkContext
 
         sc.setJobDescription("groups10: ctx stats")
-        ctx = GroupCountContext(e4)
-        out["ctx_stats"] = timed(lambda: ctx._ensure_stats())
-        out["array_mode"] = ctx.array_mode()
-        sc.setJobDescription("groups10: adj table build")
-        out["adj_build"] = timed(lambda: ctx.adj_table().count())
-        sc.setJobDescription("groups10: fused group action")
-        out["group_action"] = timed(
-            lambda: group_count_many(
-                e4, {n: cat5[n] for n in dense10 if n != "m5_020"}, ctx
+        with GraphContext(e4) as ctx:
+            out["ctx_stats"] = timed(lambda: ctx.n_vertices)
+            out["array_mode"] = ctx.array_mode()
+            sc.setJobDescription("groups10: adj table build")
+            out["adj_build"] = timed(
+                lambda: ctx.cache(adjacency(ctx.und)).count()
             )
-        )
-        sc.setJobDescription("groups10: clique5")
-        out["clique5"] = timed(
-            lambda: clique_count(e4, 5).first()["n_cliques"]
-        )
-        ctx.unpersist()
+            sc.setJobDescription("groups10: fused group action")
+            out["group_action"] = timed(
+                lambda: group_count_many(
+                    e4, {n: cat5[n] for n in dense10 if n != "m5_020"}, ctx
+                )
+            )
+            sc.setJobDescription("groups10: clique5")
+            out["clique5"] = timed(
+                lambda: clique_count(e4, 5).first()["n_cliques"]
+            )
         e4.unpersist()
         out["_control"] = control(spark)
         print(json.dumps(out))
@@ -172,10 +171,8 @@ def main() -> None:
         t("star3_labels", lambda: discover_star_labels_3(edges, lab).count())
         t("mni_star2_supports", lambda: mni_star2_supports(edges, lab).count())
 
-        from peregrine_spark.operators.groups import (
-            GroupCountContext,
-            group_count_many,
-        )
+        from peregrine_spark.operators.graph import GraphContext
+        from peregrine_spark.operators.groups import group_count_many
 
         dense10 = [
             "m5_000", "m5_001", "m5_003", "m5_004", "m5_007",
@@ -188,12 +185,11 @@ def main() -> None:
         def _groups10():
             from peregrine_spark.operators.patterns import clique_count
 
-            ctx = GroupCountContext(e4)
-            out = group_count_many(
-                e4, {n: cat5[n] for n in dense10 if n != "m5_020"}, ctx
-            )
-            out["m5_020"] = clique_count(e4, 5).first()["n_cliques"]
-            ctx.unpersist()
+            with GraphContext(e4) as ctx:
+                out = group_count_many(
+                    e4, {n: cat5[n] for n in dense10 if n != "m5_020"}, ctx
+                )
+                out["m5_020"] = clique_count(e4, 5).first()["n_cliques"]
             return out
 
         t("motifs5_groups10_mod4", lambda: sum(_groups10().values()))

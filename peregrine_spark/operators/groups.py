@@ -33,212 +33,27 @@ shuffles its output before the final partial aggregation.
 
 from __future__ import annotations
 
+import contextlib
 import itertools
 import math
-import weakref
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from peregrine_spark.operators.arith import falling_exact
-from peregrine_spark.operators.graph import undirected
+from peregrine_spark.operators.graph import GraphContext, adjacency
 from peregrine_spark.plans.patterns import SmallGraph
 from peregrine_spark.session import local_frame
 
 _DEC = "decimal(38,0)"
 
-# codegree-ROW bound under which the codegree table is explicitly
-# broadcast (8M rows ≈ 250MB-1GB as a hash relation — the 64M bound we
-# shipped first OOMed an 8g driver on a 9.5k-edge zipf graph whose hub
-# alone yields ~2.5e7 pairs; above it the flow-side shuffle join is
-# unavoidable and AQE picks the strategy). The row estimate is
-# min(Σ d(d−1), |V|²): wedges overcount heavily once a hub's
-# neighbourhood saturates the vertex set.
-BROADCAST_WEDGE_LIMIT = 8_000_000
-# vertex bound for broadcasting the degree table (orient() precedent)
-BROADCAST_VERTEX_LIMIT = 20_000_000
-# undirected-closure row bound for broadcasting edge-membership lookups
-BROADCAST_UND_LIMIT = 8_000_000
+# bench.py, unchanged across rounds for comparability, imports this name
+# and calls .unpersist() on it
+GroupCountContext = GraphContext
 
 
 def _vcol(p: int) -> str:
     return f"v{p}"
-
-
-# Live contexts by the IDENTITY of their edges DataFrame, so sibling
-# operators called on the SAME input within a context's lifetime (e.g.
-# the clique class of a catalog gate, which runs right after
-# group_count_many on one cached subgraph) can reuse its canonical
-# closure / degree table / stats instead of rebuilding them. Entries are
-# scope-bound: registered at construction, dropped by unpersist() (and
-# by GC via the weakrefs) — nothing outlives the caller's context, so
-# there is no cross-query or cross-run state.
-_LIVE_CONTEXTS: dict[int, tuple] = {}
-
-
-def live_context_for(edges: DataFrame) -> "GroupCountContext | None":
-    """The live GroupCountContext built on EXACTLY this DataFrame object,
-    if one exists (identity check guards against id() reuse)."""
-    # prune dead entries: a DataFrame or context collected without an
-    # unpersist() (its id may already belong to a new object)
-    for key, (eref, cref) in list(_LIVE_CONTEXTS.items()):
-        if eref() is None or cref() is None:
-            del _LIVE_CONTEXTS[key]
-    ent = _LIVE_CONTEXTS.get(id(edges))
-    if ent is None or ent[0]() is not edges:
-        return None
-    return ent[1]()
-
-
-class GroupCountContext:
-    """Shared per-graph state for group counting: the undirected closure,
-    the degree table, driver-side size stats, and the (lazily built)
-    codegree table. motif_counts shares ONE context across a whole
-    catalog, so degrees/codegrees are computed once, not per class."""
-
-    def __init__(self, edges: DataFrame):
-        self.und = undirected(edges).cache()
-        self.deg = (
-            self.und.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("_deg"))
-            .cache()
-        )
-        self._stats: tuple[int, int, int, int] | None = None
-        self._codeg: DataFrame | None = None
-        self._adj: DataFrame | None = None
-        self._caches: list[DataFrame] = [self.und, self.deg]
-        self._edges_key = id(edges)
-        try:
-            _LIVE_CONTEXTS[self._edges_key] = (
-                weakref.ref(edges), weakref.ref(self)
-            )
-        except TypeError:  # non-weakrefable input (e.g. a test stub)
-            self._edges_key = None
-
-    def _ensure_stats(self) -> tuple[int, int, int, int]:
-        # LAZY: the one stats action runs on first use, not at context
-        # construction — building a context (e.g. inside match_pattern's
-        # plan-build) costs nothing until a count actually executes
-        if self._stats is None:
-            row = self.deg.agg(
-                F.count(F.lit(1)).alias("nv"),
-                F.coalesce(
-                    F.sum(F.col("_deg").cast("long") * (F.col("_deg") - 1)),
-                    F.lit(0).cast("long"),
-                ).alias("wedges"),
-                F.coalesce(F.max("_deg"), F.lit(0)).alias("md"),
-                F.coalesce(F.sum("_deg"), F.lit(0).cast("long")).alias("su"),
-            ).first()
-            self._stats = (
-                int(row["nv"]), int(row["wedges"]), int(row["md"]), int(row["su"])
-            )
-        return self._stats
-
-    @property
-    def n_vertices(self) -> int:
-        return self._ensure_stats()[0]
-
-    @property
-    def n_wedges(self) -> int:
-        """Ordered wedge pairs = Σ d(d−1)."""
-        return self._ensure_stats()[1]
-
-    @property
-    def max_deg(self) -> int:
-        return self._ensure_stats()[2]
-
-    @max_deg.setter
-    def max_deg(self, v: int) -> None:
-        # override slot: lets callers/tests force the decimal path by
-        # pretending the degree bound is huge
-        s = list(self._ensure_stats())
-        s[2] = int(v)
-        self._stats = tuple(s)
-
-    @property
-    def n_und(self) -> int:
-        """Undirected closure rows = 2|E|."""
-        return self._ensure_stats()[3]
-
-    def track(self, df: DataFrame) -> DataFrame:
-        """Register an externally-built cached DataFrame so unpersist()
-        covers it (e.g. a _ShapeFlow's cached core enumeration)."""
-        self._caches.append(df)
-        return df
-
-    def deg_table(self) -> DataFrame:
-        d = self.deg
-        if self.n_vertices <= BROADCAST_VERTEX_LIMIT:
-            d = F.broadcast(d)
-        return d
-
-    def codeg_table(self) -> DataFrame:
-        """Ordered-pair codegrees (x, y, _codeg), x ≠ y — Σ d(d−1) rows.
-        A zipf mega-hub makes this Θ(deg_hub²); classes that need it
-        inherit that bound exactly as the reference's candidate-array
-        intersections do."""
-        if self._codeg is None:
-            a = self.und.select(F.col("dst").alias("_x"), F.col("src").alias("_w"))
-            b = self.und.select(F.col("dst").alias("_y"), F.col("src").alias("_w"))
-            cd = (
-                a.join(b, "_w")
-                .filter(F.col("_x") != F.col("_y"))
-                .groupBy("_x", "_y")
-                .agg(F.count(F.lit(1)).alias("_codeg"))
-                .cache()
-            )
-            self._codeg = cd
-            self._caches.append(cd)
-        cd = self._codeg
-        est_rows = min(self.n_wedges, self.n_vertices * self.n_vertices)
-        if est_rows <= BROADCAST_WEDGE_LIMIT:
-            cd = F.broadcast(cd)
-        return cd
-
-    def und_dim(self) -> DataFrame:
-        """The undirected closure as a join dimension (flag lookups) —
-        broadcast when small enough that shuffling the big flow against
-        it would be absurd."""
-        u = self.und
-        if self.n_und <= BROADCAST_UND_LIMIT:
-            u = F.broadcast(u)
-        return u
-
-    def adj_table(self) -> DataFrame:
-        """(id, adj): full undirected adjacency array per vertex (order
-        unspecified — only size/intersect/contains read it). Built and
-        cached on first use; the array-mode flow attaches it via
-        broadcast joins."""
-        if self._adj is None:
-            adj = self.und.groupBy(F.col("src").alias("id")).agg(
-                F.collect_list("dst").alias("adj")
-            ).cache()
-            self._adj = adj
-            self._caches.append(adj)
-        return self._adj
-
-    def array_mode(self) -> bool:
-        """Candidate counts via broadcast adjacency-array intersections:
-        ONE whole-stage-codegen pipeline per core flow — no codegree
-        table (Σ d(d−1) rows, rebuilt-broadcast per shape: the round-6
-        profile showed ~8 × 2 s zero-CPU broadcast builds), no |NU| ≥ 3
-        tagged fan-out shuffle (290 MB + a 100-CPU-s groupBy at sf0.1
-        mod-4), no membership-flag joins (array_contains on an attached
-        run). Gated on the closure broadcasting AND a sane max degree —
-        a mega-hub's array would be copied into every core row that
-        matches it, which is where the shuffle plans win."""
-        return (
-            self.n_und <= BROADCAST_UND_LIMIT and self.max_deg <= 100_000
-        )
-
-    def unpersist(self) -> None:
-        # drop the registry entry only while it is ours: a later context
-        # on the same edges DataFrame overwrote it and is still live
-        ent = _LIVE_CONTEXTS.get(self._edges_key)
-        if ent is not None and ent[1]() is self:
-            del _LIVE_CONTEXTS[self._edges_key]
-        for df in self._caches:
-            df.unpersist()
 
 
 def plan_profitable(plan: tuple, t_tail: int = 0) -> bool:
@@ -327,7 +142,7 @@ class _ShapeFlow:
     broadcast dimensions when small — and runs one aggregation for every
     registered pattern."""
 
-    def __init__(self, ctx: GroupCountContext, core: list[int], sub: SmallGraph):
+    def __init__(self, ctx: GraphContext, core: list[int], sub: SmallGraph):
         self.ctx = ctx
         self.core = core  # representative core matching order
         self.sub = sub  # core-induced subgraph (same for every member)
@@ -506,7 +321,8 @@ class _ShapeFlow:
             # via a broadcast join; every candidate count and membership
             # flag is then a map-side array expression — the whole flow
             # is one codegen pipeline into the final aggregation
-            adjt = ctx.adj_table()
+            # cached: every attached vertex builds a broadcast from it
+            adjt = ctx.cache(adjacency(und))
             needed = sorted(
                 {q for nu in self.raw_of for q in nu}
                 | {a for (a, _) in self.flag_of}
@@ -545,7 +361,7 @@ class _ShapeFlow:
             (nu for nu in self.raw_of if len(nu) >= 3), key=sorted
         )
         if fan_nus:
-            core_cached = ctx.track(self.core_df.cache())
+            core_cached = ctx.cache(self.core_df)
             flow = core_cached
             # ALL fan-out candidate counts in ONE tagged union -> ONE
             # groupBy shuffle -> ONE join back (a per-NU join chain would
@@ -596,8 +412,8 @@ class _ShapeFlow:
             qlist = sorted(nu)
             if len(nu) == 1:
                 dt = ctx.deg_table().select(
-                    F.col("src").alias(_vcol(qlist[0])),
-                    F.col("_deg").alias(self.raw_of[nu]),
+                    F.col("id").alias(_vcol(qlist[0])),
+                    F.col("deg").alias(self.raw_of[nu]),
                 )
                 flow = flow.join(dt, _vcol(qlist[0]))
             elif len(nu) == 2:
@@ -725,79 +541,72 @@ def _core_subgraph(pattern: SmallGraph, core: list[int]) -> SmallGraph:
 def group_count_many(
     edges: DataFrame,
     patterns: dict[str, SmallGraph],
-    ctx: GroupCountContext | None = None,
+    ctx: GraphContext | None = None,
 ) -> dict[str, int]:
     """Fused group counting for a catalog: patterns sharing a core shape
     share ONE enumerated core flow and deduped count columns — the whole
     21-class k=5 catalog runs as ~5 aggregations instead of 21 join
     chains (k=6: ~11 instead of 112). Returns {name: count}."""
-    own_ctx = ctx is None
-    if ctx is None:
-        ctx = GroupCountContext(edges)
     shapes: dict[str, _ShapeFlow] = {}
     meta: dict[str, tuple[str, int, int]] = {}  # name -> (shape key, mult, aut)
-    for name, g in patterns.items():
-        plan = g.group_count_plan()
-        if plan is None:
-            raise ValueError(f"{name}: no group-count plan")
-        core, groups = plan
-        sub = _core_subgraph(g, core)
-        key = sub.canonical_form()
-        if key not in shapes:
-            shapes[key] = _ShapeFlow(ctx, core, sub)
-            f = {p: p for p in core}
-        else:
-            f = _core_shape_map(core, sub, shapes[key].core, shapes[key].sub)
-            assert f is not None, (name, core)
-        mapped = [
-            (members, frozenset(f[q] for q in nset)) for members, nset in groups
-        ]
-        shapes[key].add_pattern(name, mapped)
-        mult = math.prod(math.factorial(len(members)) for members, _ in groups)
-        meta[name] = (key, mult, g.aut_order_regular())
-    out: dict[str, int] = {}
-    try:
+    with _scope(edges, ctx) as ctx:
+        for name, g in patterns.items():
+            plan = g.group_count_plan()
+            if plan is None:
+                raise ValueError(f"{name}: no group-count plan")
+            core, groups = plan
+            sub = _core_subgraph(g, core)
+            key = sub.canonical_form()
+            if key not in shapes:
+                shapes[key] = _ShapeFlow(ctx, core, sub)
+                f = {p: p for p in core}
+            else:
+                f = _core_shape_map(core, sub, shapes[key].core, shapes[key].sub)
+                assert f is not None, (name, core)
+            mapped = [
+                (members, frozenset(f[q] for q in nset)) for members, nset in groups
+            ]
+            shapes[key].add_pattern(name, mapped)
+            mult = math.prod(math.factorial(len(members)) for members, _ in groups)
+            meta[name] = (key, mult, g.aut_order_regular())
         totals = _totals_many(shapes)
-        for name, (tot, L) in totals.items():
-            _, mult, aut = meta[name]
-            out[name] = int(tot) * mult // (aut * L)
-    finally:
-        if own_ctx:
-            ctx.unpersist()
+    out: dict[str, int] = {}
+    for name, (tot, L) in totals.items():
+        _, mult, aut = meta[name]
+        out[name] = int(tot) * mult // (aut * L)
     return out
+
+
+def _scope(edges: DataFrame, ctx: GraphContext | None):
+    """The caller's context, or a new one released on exit."""
+    return contextlib.nullcontext(ctx) if ctx is not None else GraphContext(edges)
 
 
 def group_count(
     edges: DataFrame,
     pattern: SmallGraph,
     plan: tuple | None = None,
-    ctx: GroupCountContext | None = None,
+    ctx: GraphContext | None = None,
 ) -> DataFrame:
     """Count occurrences of an unlabelled anti-free `pattern` via core
     enumeration + group counting. Single row (n_matches,). EAGER: the
     one aggregation runs here, the ordered-pick / |Aut| / lcm division
     happens in exact driver-side Python ints (a Spark decimal division
-    would be typed decimal(38,6), capping the total at ~10^32), and an
-    internally-created context is unpersisted before returning — the
-    result is a 1-row local DataFrame."""
+    would be typed decimal(38,6), capping the total at ~10^32), and a
+    context it opened itself is released before returning — the result
+    is a 1-row local DataFrame."""
     if plan is None:
         plan = pattern.group_count_plan()
     if plan is None:
         raise ValueError("pattern has no group-count plan (labels/antis/no core)")
     core, groups = plan
-    own_ctx = ctx is None
-    if ctx is None:
-        ctx = GroupCountContext(edges)
-    try:
+    with _scope(edges, ctx) as ctx:
         sf = _ShapeFlow(ctx, core, _core_subgraph(pattern, core))
         sf.add_pattern("p", groups)
         rowval, L = sf._rowval(groups, sf._use_long())
         row = sf._build_flow().select(rowval.cast(_DEC).alias("_c")).agg(
             F.coalesce(F.sum("_c"), F.lit(0).cast(_DEC)).alias("_tot")
         ).first()
-    finally:
-        if own_ctx:
-            ctx.unpersist()
     # ordered within-group picks (× Π t_g!) and unbroken enumeration
     # (÷ |Aut| and the lcm scale) — exact in Python ints
     mult = math.prod(math.factorial(len(members)) for members, _ in groups)

@@ -18,32 +18,29 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from peregrine_spark.operators.graph import undirected
-from peregrine_spark.operators.skew import (
-    auto_hub_threshold,
-    hub_presplit,
-    presplit_join,
-)
+from peregrine_spark.operators import skew
+from peregrine_spark.operators.graph import GraphContext
+from peregrine_spark.operators.skew import hub_presplit, presplit_join
 from peregrine_spark.plans.superstep import SuperstepDriver, SuperstepResult
 
 
-HUB_CAP = 2048  # hub keys embedded as isin() literals (see skew.hub_keys)
-
-
-def _hub_keys(deg: DataFrame, col: str, max_deg: int, n_rows: int) -> list[int]:
-    """Ids whose degree column exceeds the hub threshold for n_rows, hottest
-    first. The setup aggregation already knows the max degree, so the
-    collect job runs only when some vertex is actually a hub."""
-    thr = auto_hub_threshold(n_rows)
-    if max_deg <= thr:
-        return []
-    return [
-        r["id"]
-        for r in deg.filter(F.col(col) > thr)
-        .orderBy(F.col(col).desc())
-        .limit(HUB_CAP)
-        .collect()
-    ]
+def _gather_sides(
+    edges: DataFrame, hubs: list[int], chained: bool, cache
+) -> tuple[DataFrame, DataFrame | None]:
+    """The static edge side of every superstep's gather join, pre-split
+    by the gather key ONCE: the cached hash partitioning matches the
+    per-superstep join requirement, so only the (|V|-sized) state side
+    shuffles each superstep. Hub edges go to their own ROUND-ROBIN cache
+    (see hub_presplit). Chained supersteps (checkpoint_interval > 1) get
+    one plain partitioning instead: the hub split references the state
+    twice per superstep, so the unmaterialized plan tree would grow 2^k;
+    their unhinted gather join leaves hubs to AQE's skew-join splitting.
+    `cache` caches a frame until the caller releases it."""
+    n_part = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    if chained:
+        return cache(edges.repartition(n_part, "src")), None
+    rest, hub = hub_presplit(edges, "src", hubs, n_part)
+    return cache(rest), (cache(hub) if hub is not None else None)
 
 
 # --------------------------------------------------------------------------
@@ -58,29 +55,18 @@ def pagerank(
     max_iter: int = 100,
     checkpoint_dir: str | None = None,
     resume: bool = True,
-    num_partitions: int | None = None,
     checkpoint_interval: int = 1,
     input_fingerprint: str | None = None,
-    skew_mode: str = "hub_split",
 ) -> SuperstepResult:
     """Directed PageRank with uniform dangling redistribution; converges
     when max|Δrank| < tol. State schema: (id, rank, out_deg).
 
     r_{t+1} = (1-d)/N + d * (Σ_in r_t/outdeg + dangling_mass/N)
 
-    skew_mode: "hub_split" (default) broadcasts hub slices of the state —
-    best when each superstep materializes (the state subtree is a cheap
-    scan). "aqe" uses a plain unhinted join and lets AQE's skew-join
-    splitting handle hubs — required when CHAINING supersteps without
-    materialization (checkpoint_interval > 1): hub_split references the
-    state twice per superstep, so the unmaterialized plan tree would grow
-    2^k.
+    Hub sources join a broadcast slice of the state when each superstep
+    materializes; chained supersteps (checkpoint_interval > 1 on a
+    dangling-free graph) leave hubs to AQE (see _gather_sides).
     """
-    # Pre-partition the static edge side by the gather key ONCE: the
-    # cached hash partitioning matches the per-superstep join requirement,
-    # so only the (|V|-sized) state side shuffles each superstep. Hub
-    # edges are split into their own ROUND-ROBIN cache (see hub_presplit).
-    n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     edges = edges.select("src", "dst")
     if vertices is None:
         # ONE groupBy over both edge ends: every end is a vertex and its
@@ -122,19 +108,16 @@ def pagerank(
     # dangling mass needs a per-superstep scalar; only dangling-free
     # graphs can chain supersteps without materialization.
     interval = 1 if has_dangling else checkpoint_interval
-    if interval > 1 and skew_mode == "hub_split":
-        # chained supersteps: hub_split references the state twice per
-        # step → 2^k unmaterialized plan tree. Force the AQE path.
-        skew_mode = "aqe"
+    chained = interval > 1
     # Hub detection (once, static): sources whose edge multiplicity would
     # pin the gather join on a single task take the broadcast path.
     # src multiplicity in `edges` IS out_deg, so the hub keys come from a
     # scan of the cached vstatic — no extra full-edge groupBy job.
-    hubs = _hub_keys(vstatic, "out_deg", int(srow["max_deg"]), int(srow["n_e"]))
-    if skew_mode == "hub_split":
-        e_rest, e_hub = hub_presplit(edges, "src", hubs, n_part)
-    else:
-        e_rest, e_hub = edges.repartition(n_part, "src").cache(), None
+    hubs = [] if chained else skew.hub_keys(
+        vstatic, "id", "out_deg",
+        skew.auto_hub_threshold(int(srow["n_e"])), int(srow["max_deg"]),
+    )
+    e_rest, e_hub = _gather_sides(edges, hubs, chained, DataFrame.cache)
 
     def init() -> DataFrame:
         return vstatic.select("id", F.lit(1.0 / n).alias("rank"), "out_deg")
@@ -175,9 +158,9 @@ def pagerank(
             (F.col("rank") / F.col("out_deg")).alias("w"),
         )
         gathered = (
-            presplit_join(e_rest, e_hub, src_state, "src", hubs)
-            if skew_mode == "hub_split"
-            else e_rest.join(src_state, "src")
+            e_rest.join(src_state, "src")
+            if chained
+            else presplit_join(e_rest, e_hub, src_state, "src", hubs)
         )
         contrib = (
             gathered.select(F.col("dst").alias("id"), "w")
@@ -186,10 +169,12 @@ def pagerank(
         )
         base = (1.0 - damping) / n + damping * dm / n
         new_rank = F.lit(base) + F.lit(damping) * F.coalesce("c", F.lit(0.0))
-        # join the STATE (carries the old rank) rather than vstatic: the
-        # localCheckpointed state keeps its hash(id) partitioning, so the
-        # join cost is identical — and the old rank rides along for the
-        # per-row delta
+        # join the STATE (carries the old rank, for the per-row delta)
+        # rather than vstatic. The executed plan shuffles the
+        # materialized state on id before this join — the scan of a
+        # checkpointed state reports no partitioning — and the gather
+        # above shuffles it again on src: two |V|-row exchanges of the
+        # state per superstep
         out_cols = ["id", new_rank.alias("rank"), "out_deg"]
         if carry_delta:
             out_cols.append(F.abs(new_rank - F.col("rank")).alias("_delta"))
@@ -240,47 +225,21 @@ def pagerank(
     return res
 
 
-def _closure_setup(
-    spark: SparkSession,
-    edges: DataFrame,
-    vertices: DataFrame | None,
-    num_partitions: int | None,
-    skew_mode: str,
-) -> tuple[DataFrame, list[int], DataFrame, DataFrame | None, list[DataFrame]]:
-    """The static side of CC and LP over the undirected closure:
-    (vertex ids, hub keys, rest edges, hub edges, caches to release).
-
-    The closure is cached ONCE: the degree pass, the rest-split and the
-    hub-split all scan it. If the CALLER already cached an identical plan
-    (bench.py caches undirected(edges) for pagerank), cache() is a no-op
-    and their cache is not ours to release. One |V|-row degree pass gives
-    the vertex set, and one aggregation over it the edge count (src
-    multiplicity in the closure == degree) and the max degree, which rules
-    the hub collect job out on hub-free graphs."""
-    n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    und = undirected(edges)
-    und_ours = not (und.storageLevel.useMemory or und.storageLevel.useDisk)
-    und = und.cache()
-    degt = und.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).alias("_deg")
-    ).cache()
-    caches = [degt] + ([und] if und_ours else [])
+def _closure_sides(
+    ctx: GraphContext, vertices: DataFrame | None, chained: bool
+) -> tuple[DataFrame, list[int], DataFrame, DataFrame | None]:
+    """The static side of CC and LP over the context's cached closure:
+    (vertex ids, hub keys, rest edges, hub edges), all released with the
+    context. The degree table is the vertex set unless the caller passes
+    one (isolated vertices); its max degree rules the hub collect job out
+    on hub-free graphs."""
     if vertices is None:
-        vstatic = degt.select("id")
+        vstatic = ctx.deg.select("id")
     else:
-        vstatic = vertices.select("id").cache()
-        caches.append(vstatic)
-    row = degt.agg(
-        F.coalesce(F.sum("_deg"), F.lit(0).cast("long")).alias("n_und"),
-        F.coalesce(F.max("_deg"), F.lit(0).cast("long")).alias("max_deg"),
-    ).first()
-    hubs = _hub_keys(degt, "_deg", int(row["max_deg"]), int(row["n_und"]))
-    if skew_mode == "hub_split":
-        u_rest, u_hub = hub_presplit(und, "src", hubs, n_part)
-    else:
-        u_rest, u_hub = und.repartition(n_part, "src").cache(), None
-    caches += [u_rest] + ([u_hub] if u_hub is not None else [])
-    return vstatic, hubs, u_rest, u_hub, caches
+        vstatic = ctx.cache(vertices.select("id"))
+    hubs = [] if chained else ctx.closure_hubs()
+    u_rest, u_hub = _gather_sides(ctx.und, hubs, chained, ctx.cache)
+    return vstatic, hubs, u_rest, u_hub
 
 
 # --------------------------------------------------------------------------
@@ -293,10 +252,8 @@ def connected_components(
     max_iter: int = 100,
     checkpoint_dir: str | None = None,
     resume: bool = True,
-    num_partitions: int | None = None,
     checkpoint_interval: int = 1,
     input_fingerprint: str | None = None,
-    skew_mode: str = "hub_split",
 ) -> SuperstepResult:
     """Hash-min components: comp(v) = min vertex id reachable; synchronous
     min-propagation to fixpoint. State: (id, comp) — exact integers.
@@ -304,17 +261,7 @@ def connected_components(
     Converges in O(diameter) supersteps. (Large-diameter graphs would want
     the large-/small-star pointer-doubling variant; link graphs are
     small-diameter so hash-min's strictly-bounded shuffle wins.)
-
-    skew_mode as in pagerank; chained supersteps (checkpoint_interval > 1)
-    force "aqe" — hub_split references the state twice per step, growing
-    the unmaterialized plan tree 2^k.
     """
-    if checkpoint_interval > 1 and skew_mode == "hub_split":
-        skew_mode = "aqe"
-    vstatic, hubs, u_rest, u_hub, caches = _closure_setup(
-        spark, edges, vertices, num_partitions, skew_mode
-    )
-
     # interval == 1 (default): carry a per-row changed flag so the delta
     # is a narrow agg over the new state, not an old ⨝ new join. For
     # hash-min this is exact at any boundary (zero changes in the LAST
@@ -322,47 +269,56 @@ def connected_components(
     # intervals keep the boundary-join delta so reported deltas stay
     # boundary-to-boundary.
     carry_delta = checkpoint_interval == 1
+    chained = checkpoint_interval > 1
+    with GraphContext(edges) as ctx:
+        vstatic, hubs, u_rest, u_hub = _closure_sides(ctx, vertices, chained)
 
-    def init() -> DataFrame:
-        return vstatic.select("id", F.col("id").alias("comp"))
+        def init() -> DataFrame:
+            return vstatic.select("id", F.col("id").alias("comp"))
 
-    def step(state: DataFrame, _k: int) -> DataFrame:
-        src_state = state.select(F.col("id").alias("src"), "comp")
-        gathered = (
-            presplit_join(u_rest, u_hub, src_state, "src", hubs)
-            if skew_mode == "hub_split"
-            else u_rest.join(src_state, "src")
-        )
-        msgs = (
-            gathered.select(F.col("dst").alias("id"), "comp")
-            .groupBy("id")
-            .agg(F.min("comp").alias("mincomp"))
-        )
-        new_comp = F.least("comp", F.coalesce("mincomp", "comp"))
-        out_cols = ["id", new_comp.alias("comp")]
-        if carry_delta:
-            out_cols.append((new_comp != F.col("comp")).cast("long").alias("_chg"))
-        return state.join(msgs.hint("shuffle_hash"), "id", "left").select(*out_cols)
-
-    def delta(old: DataFrame, new: DataFrame) -> float:
-        if carry_delta:
-            return float(
-                new.agg(F.coalesce(F.sum("_chg"), F.lit(0).cast("long"))).first()[0]
+        def step(state: DataFrame, _k: int) -> DataFrame:
+            src_state = state.select(F.col("id").alias("src"), "comp")
+            gathered = (
+                u_rest.join(src_state, "src")
+                if chained
+                else presplit_join(u_rest, u_hub, src_state, "src", hubs)
             )
-        return float(
-            old.select("id", F.col("comp").alias("c0"))
-            .join(new.select("id", F.col("comp").alias("c1")), "id")
-            .filter(F.col("c0") != F.col("c1"))
-            .count()
-        )
+            msgs = (
+                gathered.select(F.col("dst").alias("id"), "comp")
+                .groupBy("id")
+                .agg(F.min("comp").alias("mincomp"))
+            )
+            new_comp = F.least("comp", F.coalesce("mincomp", "comp"))
+            out_cols = ["id", new_comp.alias("comp")]
+            if carry_delta:
+                out_cols.append(
+                    (new_comp != F.col("comp")).cast("long").alias("_chg")
+                )
+            # the state side shuffles on id here as well (see pagerank)
+            return state.join(msgs.hint("shuffle_hash"), "id", "left").select(
+                *out_cols
+            )
 
-    driver = SuperstepDriver(
-        spark, "cc", checkpoint_dir, max_iter=max_iter, tol=0.5,
-        materialize_every=checkpoint_interval, input_fingerprint=input_fingerprint,
-    )
-    res = driver.run(init, step, delta, resume=resume)
-    for df in caches:
-        df.unpersist()
+        def delta(old: DataFrame, new: DataFrame) -> float:
+            if carry_delta:
+                return float(
+                    new.agg(
+                        F.coalesce(F.sum("_chg"), F.lit(0).cast("long"))
+                    ).first()[0]
+                )
+            return float(
+                old.select("id", F.col("comp").alias("c0"))
+                .join(new.select("id", F.col("comp").alias("c1")), "id")
+                .filter(F.col("c0") != F.col("c1"))
+                .count()
+            )
+
+        driver = SuperstepDriver(
+            spark, "cc", checkpoint_dir, max_iter=max_iter, tol=0.5,
+            materialize_every=checkpoint_interval,
+            input_fingerprint=input_fingerprint,
+        )
+        res = driver.run(init, step, delta, resume=resume)
     if carry_delta:
         res.state = res.state.select("id", "comp")
     return res
@@ -378,65 +334,59 @@ def label_propagation(
     n_iter: int = 10,
     checkpoint_dir: str | None = None,
     resume: bool = True,
-    num_partitions: int | None = None,
     checkpoint_interval: int = 1,
     input_fingerprint: str | None = None,
-    skew_mode: str = "hub_split",
 ) -> SuperstepResult:
     """Synchronous label propagation, exactly n_iter supersteps,
     deterministic: label(v) ← most frequent neighbour label, ties →
     smallest label; isolated vertices keep their own. Labels init to id.
     (Async LP is order-dependent — synchronous + min-tiebreak is the
     reproducible semantic our oracle and tests pin down.)
-
-    skew_mode as in pagerank; chained supersteps (checkpoint_interval > 1)
-    force "aqe" to avoid the 2^k hub_split plan-tree blowup.
     """
-    if checkpoint_interval > 1 and skew_mode == "hub_split":
-        skew_mode = "aqe"
-    vstatic, hubs, u_rest, u_hub, caches = _closure_setup(
-        spark, edges, vertices, num_partitions, skew_mode
-    )
+    chained = checkpoint_interval > 1
+    with GraphContext(edges) as ctx:
+        vstatic, hubs, u_rest, u_hub = _closure_sides(ctx, vertices, chained)
 
-    def init() -> DataFrame:
-        return vstatic.select("id", F.col("id").alias("label"))
+        def init() -> DataFrame:
+            return vstatic.select("id", F.col("id").alias("label"))
 
-    def step(state: DataFrame, _k: int) -> DataFrame:
-        src_state = state.select(F.col("id").alias("src"), "label")
-        gathered = (
-            presplit_join(u_rest, u_hub, src_state, "src", hubs)
-            if skew_mode == "hub_split"
-            else u_rest.join(src_state, "src")
-        )
-        cnt = (
-            gathered.select(F.col("dst").alias("id"), "label")
-            .groupBy("id", "label")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        # argmax by (count, -label): a hash aggregation instead of a
-        # window row_number (saves a per-superstep sort stage); the
-        # negated label makes lexicographic struct-max pick the SMALLEST
-        # label on count ties — labels are non-negative vertex ids
-        best = (
-            cnt.groupBy("id")
-            .agg(
-                F.max(
-                    F.struct(
-                        F.col("n"), (-F.col("label")).alias("_negl"), F.col("label")
-                    )
-                ).alias("_b")
+        def step(state: DataFrame, _k: int) -> DataFrame:
+            src_state = state.select(F.col("id").alias("src"), "label")
+            gathered = (
+                u_rest.join(src_state, "src")
+                if chained
+                else presplit_join(u_rest, u_hub, src_state, "src", hubs)
             )
-            .select("id", F.col("_b.label").alias("newlabel"))
-        )
-        return state.join(best.hint("shuffle_hash"), "id", "left").select(
-            "id", F.coalesce("newlabel", "label").alias("label")
-        )
+            cnt = (
+                gathered.select(F.col("dst").alias("id"), "label")
+                .groupBy("id", "label")
+                .agg(F.count(F.lit(1)).alias("n"))
+            )
+            # argmax by (count, -label): a hash aggregation instead of a
+            # window row_number (saves a per-superstep sort stage); the
+            # negated label makes lexicographic struct-max pick the
+            # SMALLEST label on count ties — labels are non-negative ids
+            best = (
+                cnt.groupBy("id")
+                .agg(
+                    F.max(
+                        F.struct(
+                            F.col("n"),
+                            (-F.col("label")).alias("_negl"),
+                            F.col("label"),
+                        )
+                    ).alias("_b")
+                )
+                .select("id", F.col("_b.label").alias("newlabel"))
+            )
+            # the state side shuffles on id here as well (see pagerank)
+            return state.join(best.hint("shuffle_hash"), "id", "left").select(
+                "id", F.coalesce("newlabel", "label").alias("label")
+            )
 
-    driver = SuperstepDriver(
-        spark, "lp", checkpoint_dir, max_iter=n_iter, tol=None,
-        materialize_every=checkpoint_interval, input_fingerprint=input_fingerprint,
-    )
-    res = driver.run(init, step, None, resume=resume)
-    for df in caches:
-        df.unpersist()
-    return res
+        driver = SuperstepDriver(
+            spark, "lp", checkpoint_dir, max_iter=n_iter, tol=None,
+            materialize_every=checkpoint_interval,
+            input_fingerprint=input_fingerprint,
+        )
+        return driver.run(init, step, None, resume=resume)

@@ -74,7 +74,9 @@ def _leaf_label_hist(
     # quarter of the generic hub threshold: downstream star joins fan
     # each adjacency row ×L (label pairs), so a center at a fraction of
     # the usual hub bar already dominates a task
-    hubs = hub_keys(und, "dst", max(16_384, auto_hub_threshold(und.count()) // 4))
+    in_deg = und.groupBy("dst").agg(F.count(F.lit(1)).alias("n"))
+    thr = max(16_384, auto_hub_threshold(und.count()) // 4)
+    hubs = hub_keys(in_deg, "dst", "n", thr)
     lv = (
         hub_split_join(und, ll, "dst", hubs)
         .select(F.col("src").alias("c"), F.col("dst").alias("v"), "vl")

@@ -21,7 +21,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from peregrine_spark.operators.graph import GraphContext, adjacency
 from peregrine_spark.operators.patterns import match_pattern
+from peregrine_spark.operators.skew import hub_split_join
 from peregrine_spark.plans.patterns import SmallGraph
 from peregrine_spark.reference import pattern_count
 from peregrine_spark.session import local_frame
@@ -54,26 +56,6 @@ def all_motifs(k: int) -> dict[str, SmallGraph]:
         width = {5: 3, 6: 3, 7: 3, 8: 4, 9: 6}[k]
         return {f"m{k}_{i:0{width}d}": g for i, g in enumerate(cat)}
     raise ValueError("motif catalogs implemented for k in {3, ..., 9}")
-
-
-# Whole-adjacency broadcast bound: single source of truth in
-# operators/csr.py (shared by triangles, cliques and cycle4; orient()'s
-# ≤20M-VERTEX degree bound in graph.py is a separate statistic).
-from peregrine_spark.operators.csr import BROADCAST_MAX_EDGES  # noqa: E402
-
-# cycle4 route-1 packs a vertex pair into one signed 64-bit key
-# (x · 2³² + y); ids must lie strictly inside (−2³¹, 2³¹) for the key to
-# neither overflow under ANSI nor collide. Module-level so tests can
-# force the fallback.
-PACK_MAX_ID = 1 << 31
-
-# route-1 wedge budget: total wedges Σ C(deg,2) is exactly the row count
-# of the one packed-key shuffle (8 B/row ⇒ ~8 GB at the cap). A zipf
-# mega-hub's Σ C(deg,2) is 10¹³⁺, so skewed graphs land on the
-# intersect/hub-split routes just as the old orientation-based in-skew
-# guard sent them (routing is a perf heuristic only — every route is
-# exact and golden-tested).
-WEDGE_ENUM_MAX = 1_000_000_000
 
 
 def _as_complement_anti(pattern: SmallGraph) -> SmallGraph:
@@ -109,7 +91,7 @@ def motif_counts(
     - cliques → the oriented-DAG frontier intersection (clique_count);
     - everything with a non-trivial group plan → the generalized B5
       group counter (operators/groups.py) through match_pattern's auto
-      policy, sharing ONE GroupCountContext so degrees/codegrees are
+      policy, sharing ONE GraphContext so degrees/codegrees are
       computed once for the whole catalog — only minimum-vertex-cover
       cores are enumerated, groups are counted;
     - the residue (single non-core vertex with ≥3 core neighbours, e.g.
@@ -137,14 +119,10 @@ def motif_counts(
         # (5 shapes for k=5, 11 for k=6) instead of one join chain per
         # class — the per-class Spark overhead (planning + tiny stages)
         # otherwise dominates the whole catalog
-        from peregrine_spark.operators.groups import (
-            GroupCountContext,
-            group_count_many,
-        )
-
         from concurrent.futures import ThreadPoolExecutor
 
-        ctx = GroupCountContext(edges)
+        from peregrine_spark.operators.groups import group_count_many
+
         plannable: dict[str, SmallGraph] = {}
         residue: list[str] = []
         cliques: list[tuple[str, int]] = []
@@ -159,8 +137,12 @@ def motif_counts(
                 residue.append(name)
         # clique classes run CONCURRENTLY with the fused group action
         # (independent jobs back-fill each other's straggler tails,
-        # guide §2.6); results land in catalog order below
-        with ThreadPoolExecutor(max_workers=max(1, len(cliques))) as pool:
+        # guide §2.6); results land in catalog order below. Each clique
+        # count opens its own context, which reads this one's canonical
+        # set and degree table.
+        with GraphContext(edges) as ctx, ThreadPoolExecutor(
+            max_workers=max(1, len(cliques))
+        ) as pool:
             futs = [
                 (name, pool.submit(
                     lambda nv=nv: clique_count(edges, nv).first()["n_cliques"]
@@ -174,7 +156,6 @@ def motif_counts(
                 ).first()["n_matches"]
             for name, f in futs:
                 e_counts[name] = f.result()
-        ctx.unpersist()
     else:
         counts_df = reduce(
             DataFrame.unionByName,
@@ -233,14 +214,14 @@ def cycle4_count(edges: DataFrame) -> DataFrame:
     With codeg = AB + Cw:  2·C4 = Σ C(AB,2) + Σ AB·Cw + Σ C(A,2).
 
     Physical routing (round-6 rework; round-5/6 profiles in BENCH.md /
-    OPTIMIZATION_r06.md): three routes, picked from one degree-stats
-    pass.
+    OPTIMIZATION_r06.md): three routes, picked from the GraphContext's
+    one stats aggregation (GraphContext.cycle4_full_enum).
 
     1. FULL WEDGE ENUMERATION (small unskewed graphs:
-       |E| ≤ broadcast_max_edges, |ids| < 2³¹, total wedges Σ C(deg,2) ≤
+       |E| ≤ BROADCAST_MAX_EDGES, |ids| < 2³¹, total wedges Σ C(deg,2) ≤
        WEDGE_ENUM_MAX): A ∪ B ∪ C at a center is ALL unordered pairs of
        its neighbours, so one sorted full-neighbourhood run per vertex
-       (built straight from the canonical set — no orientation) feeds a
+       (built straight from the cached closure — no orientation) feeds a
        codegen posexplode + slice + explode that emits each packed
        64-bit pair key exactly once; one groupBy(count),
        2·C4 = Σ C(codeg, 2). The round-5 plan's C-term (two broadcast
@@ -256,37 +237,16 @@ def cycle4_count(edges: DataFrame) -> DataFrame:
     3. HUB-SPLIT SHUFFLE (|E| above the broadcast bound): as 2 but with
        shuffle joins and hub splitting — the mega-hub's in-degree lives
        on the dst side of every one of those joins."""
-    from peregrine_spark.operators.csr import _oriented_adjacency
-    from peregrine_spark.operators.skew import hub_split_join
+    with GraphContext(edges) as ctx:
+        n = _cycle4(ctx)
+    return local_frame(edges.sparkSession, [(n,)], "n_cycles long")
 
-    _caches: list[DataFrame] = []
-    fwd, adj, hubs, n_edges, small, deg, can = _oriented_adjacency(
-        edges, caches=_caches, broadcast_max_edges=BROADCAST_MAX_EDGES
-    )
-    if small:
-        # one aggregation over the CACHED degree table picks route 1 vs
-        # 2 and validates the id packing — orientation-free (route 1
-        # enumerates ALL neighbour pairs, so only the total wedge count
-        # and the id bounds matter; fwd/adj stay lazy and route 1 never
-        # pays the orient joins at all)
-        st = deg.agg(
-            F.coalesce(
-                F.sum(F.expr("cast(deg as bigint) * (deg - 1) DIV 2")),
-                F.lit(0),
-            ).alias("wedges"),
-            F.min("id").alias("min_id"),
-            F.max("id").alias("max_id"),
-        ).first()
-        full_enum = (
-            st["max_id"] is not None
-            and -PACK_MAX_ID < int(st["min_id"])
-            and int(st["max_id"]) < PACK_MAX_ID
-            and int(st["wedges"]) <= WEDGE_ENUM_MAX
-        )
-    else:
-        full_enum = False
-    if full_enum:
-        sc = edges.sparkSession.sparkContext
+
+def _cycle4(ctx: GraphContext) -> int:
+    """cycle4_count's routes over a live context; EAGER, so the context's
+    caches (and the route-3 pair cache) serve every action."""
+    sc = ctx.und.sparkSession.sparkContext
+    if ctx.cycle4_full_enum():
         # The A/B/C split exists to AVOID enumerating hub wedges on
         # skewed graphs; under route 1's no-skew guard every wedge is
         # enumerable, and A ∪ B ∪ C at a center c is simply ALL
@@ -300,12 +260,7 @@ def cycle4_count(edges: DataFrame) -> DataFrame:
         # count in expression-walk evaluations, and the union of two
         # generator branches recomputed the whole run-build subtree per
         # branch (no runtime exchange reuse across union branches).
-        nbr = can.select("src", F.col("dst").alias("nb")).union(
-            can.select(F.col("dst").alias("src"), F.col("src").alias("nb"))
-        )
-        runs = nbr.groupBy(F.col("src").alias("id")).agg(
-            F.sort_array(F.collect_list("nb")).alias("adj")
-        )
+        runs = adjacency(ctx.und)
         # |V| rows feed a Σ C(deg,2)-row explode: round-robin them over
         # the cores FIRST or AQE coalesces the tiny input to a handful
         # of partitions and the generators run nearly serially
@@ -331,7 +286,7 @@ def cycle4_count(edges: DataFrame) -> DataFrame:
         # the groupBy then needs no second exchange and no map-side
         # partial pass (121M wedges → 66M groups: partial agg reduced
         # almost nothing and built the hash tables twice)
-        n_wedges = int(st["wedges"])
+        n_wedges = ctx.n_wedges // 2
         n_agg = max(
             2 * sc.defaultParallelism, min(2048, n_wedges // 2_000_000)
         )
@@ -346,10 +301,10 @@ def cycle4_count(edges: DataFrame) -> DataFrame:
             )
             .first()
         )
-        for df in _caches:
-            df.unpersist()
-        return local_frame(edges.sparkSession, [(int(row["n_cycles"]),)], "n_cycles long")
-    adj = adj.cache()
+        return int(row["n_cycles"])
+    fwd, adj = ctx.fwd, ctx.adj
+    small = ctx.adj_broadcast()
+    hubs = [] if small else ctx.dag_hubs()
     if small:
         # A-wedges map-side: all unordered pairs within each out-run
         aw = adj.select(
@@ -415,10 +370,8 @@ def cycle4_count(edges: DataFrame) -> DataFrame:
             )
             .first()
         )
-        for df in [adj, *_caches]:
-            df.unpersist()
     else:
-        pairs = pairs.cache()
+        pairs = ctx.cache(pairs)
         t13 = pairs.agg(
             F.coalesce(
                 F.sum(F.expr("nab * (nab - 1) DIV 2 + na * (na - 1) DIV 2")),
@@ -433,14 +386,12 @@ def cycle4_count(edges: DataFrame) -> DataFrame:
         t2 = with_ay.select(
             (F.col("nab") * F.size(F.array_intersect("ax", "ay"))).alias("v")
         ).agg(F.coalesce(F.sum("v"), F.lit(0).cast("long")).alias("s2"))
-        # EAGER: run the two aggregations, then drop this plan's caches
-        # (adj, pairs) — the lazy form leaked both for the session lifetime
         row = t13.crossJoin(t2).select(
             F.expr("(s13 + s2) DIV 2").cast("long").alias("n_cycles")
         ).first()
-        for df in [adj, pairs, *_caches]:
-            df.unpersist()
-    return local_frame(edges.sparkSession, [(int(row["n_cycles"]),)], "n_cycles long")
+    return int(row["n_cycles"])
+
+
 
 
 def motif_counts_k4(
@@ -470,96 +421,95 @@ def motif_counts_k4(
     otherwise cost."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from peregrine_spark.operators.graph import canonical, degrees
     from peregrine_spark.operators.patterns import clique_count
     from peregrine_spark.operators.triangles import triangles
 
-    can = canonical(edges).cache()
-    deg = degrees(can).cache()
-    tri = triangles(can).cache()
-    # materialize the three shared caches up front (one action each, in
-    # dependency order) so the concurrent terms below never race to fill
-    # the same cache
-    deg.count()
-    n_tri = tri.count()
+    with GraphContext(edges) as ctx:
+        can, deg = ctx.can, ctx.deg
+        # Cache the DAG and its runs under this context: triangles(),
+        # clique_count() and cycle4_count() on the same edges open their
+        # own contexts, which read this one's caches. Fill them up front
+        # so the concurrent terms below never race to fill the same
+        # cache: the stats fill the canonical set and degree table, the
+        # triangle count the DAG, its runs and the triangle list.
+        ctx.adj
+        tri = ctx.cache(triangles(edges))
+        n_tri = tri.count()
 
-    def term_star4() -> int:
-        # stars: reuse the exact-binomial single-value aggregator
-        return int(star_count(can, 3).collect()[0]["n_matches"])
+        def term_star4() -> int:
+            # stars: the exact-binomial single-value aggregator
+            return int(_star_sum(deg, 3).first()["n_matches"])
 
-    def term_mid() -> int:
-        # middle-edge extension counts
-        dsrc = deg.select(F.col("id").alias("src"), F.col("deg").alias("_du"))
-        ddst = deg.select(F.col("id").alias("dst"), F.col("deg").alias("_dv"))
-        return int(
-            can.join(F.broadcast(dsrc), "src")
-            .join(F.broadcast(ddst), "dst")
-            .agg(
-                F.sum(
-                    (F.col("_du") - 1).cast("long") * (F.col("_dv") - 1)
-                ).alias("s")
-            )
-            .collect()[0]["s"]
-            or 0
-        )
-
-    def term_tailed() -> int:
-        # per-vertex triangle participation → tailed triangles
-        ends = (
-            tri.select(F.col("u").alias("id"))
-            .union(tri.select(F.col("v").alias("id")))
-            .union(tri.select(F.col("w").alias("id")))
-        )
-        t_v = ends.groupBy("id").agg(F.count(F.lit(1)).alias("t"))
-        return int(
-            t_v.join(F.broadcast(deg), "id")
-            .agg(F.sum(F.col("t") * (F.col("deg") - 2)).alias("s"))
-            .collect()[0]["s"]
-            or 0
-        )
-
-    def term_diamond() -> int:
-        # per-edge triangle counts → diamonds (triangle pairs per edge)
-        tri_edges = tri.select(
-            F.explode(
-                F.array(
-                    F.struct(F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b")),
-                    F.struct(F.least("u", "w").alias("a"), F.greatest("u", "w").alias("b")),
-                    F.struct(F.least("v", "w").alias("a"), F.greatest("v", "w").alias("b")),
+        def term_mid() -> int:
+            # middle-edge extension counts
+            dsrc = deg.select(F.col("id").alias("src"), F.col("deg").alias("_du"))
+            ddst = deg.select(F.col("id").alias("dst"), F.col("deg").alias("_dv"))
+            return int(
+                can.join(F.broadcast(dsrc), "src")
+                .join(F.broadcast(ddst), "dst")
+                .agg(
+                    F.sum(
+                        (F.col("_du") - 1).cast("long") * (F.col("_dv") - 1)
+                    ).alias("s")
                 )
-            ).alias("e")
-        ).select("e.a", "e.b")
-        t_e = tri_edges.groupBy("a", "b").agg(F.count(F.lit(1)).alias("t"))
-        return int(
-            t_e.agg(
-                # integer DIV: '/' is double division, exact below 2^53
-                F.sum(F.expr("t * (t - 1) DIV 2")).alias("s")
-            ).collect()[0]["s"]
-            or 0
-        )
+                .collect()[0]["s"]
+                or 0
+            )
 
-    def term_cycle4() -> int:
-        # 4-cycles via packed wedge keys (never Σ deg² hub fan-out)
-        return int(cycle4_count(can).collect()[0]["n_cycles"])
+        def term_tailed() -> int:
+            # per-vertex triangle participation → tailed triangles
+            ends = (
+                tri.select(F.col("u").alias("id"))
+                .union(tri.select(F.col("v").alias("id")))
+                .union(tri.select(F.col("w").alias("id")))
+            )
+            t_v = ends.groupBy("id").agg(F.count(F.lit(1)).alias("t"))
+            return int(
+                t_v.join(F.broadcast(deg), "id")
+                .agg(F.sum(F.col("t") * (F.col("deg") - 2)).alias("s"))
+                .collect()[0]["s"]
+                or 0
+            )
 
-    def term_clique4() -> int:
-        return int(clique_count(can, 4).first()["n_cliques"])
+        def term_diamond() -> int:
+            # per-edge triangle counts → diamonds (triangle pairs per edge)
+            tri_edges = tri.select(
+                F.explode(
+                    F.array(
+                        F.struct(F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b")),
+                        F.struct(F.least("u", "w").alias("a"), F.greatest("u", "w").alias("b")),
+                        F.struct(F.least("v", "w").alias("a"), F.greatest("v", "w").alias("b")),
+                    )
+                ).alias("e")
+            ).select("e.a", "e.b")
+            t_e = tri_edges.groupBy("a", "b").agg(F.count(F.lit(1)).alias("t"))
+            return int(
+                t_e.agg(
+                    # integer DIV: '/' is double division, exact below 2^53
+                    F.sum(F.expr("t * (t - 1) DIV 2")).alias("s")
+                ).collect()[0]["s"]
+                or 0
+            )
 
-    # the six terms are independent single-value aggregations over the
-    # shared (materialized) caches — run them as concurrent Spark jobs
-    # so each job's straggler tail back-fills with the next one's tasks
-    # (guide §2.6; sequentially they were ~10 driver-latency-bound jobs)
-    terms = [
-        term_star4, term_mid, term_tailed,
-        term_diamond, term_cycle4, term_clique4,
-    ]
-    with ThreadPoolExecutor(max_workers=len(terms)) as pool:
-        e_star4, mid, e_tailed, e_diamond, e_cycle4, e_clique4 = [
-            f.result() for f in [pool.submit(t) for t in terms]
+        def term_cycle4() -> int:
+            # 4-cycles via packed wedge keys (never Σ deg² hub fan-out)
+            return int(cycle4_count(edges).collect()[0]["n_cycles"])
+
+        def term_clique4() -> int:
+            return int(clique_count(edges, 4).first()["n_cliques"])
+
+        # the six terms are independent single-value aggregations over the
+        # shared (materialized) caches — run them as concurrent Spark jobs
+        # so each job's straggler tail back-fills with the next one's tasks
+        # (guide §2.6; sequentially they were ~10 driver-latency-bound jobs)
+        terms = [
+            term_star4, term_mid, term_tailed,
+            term_diamond, term_cycle4, term_clique4,
         ]
-
-    for df in (can, deg, tri):  # all terms above are collected; drop caches
-        df.unpersist()
+        with ThreadPoolExecutor(max_workers=len(terms)) as pool:
+            e_star4, mid, e_tailed, e_diamond, e_cycle4, e_clique4 = [
+                f.result() for f in [pool.submit(t) for t in terms]
+            ]
 
     e_counts = {
         "path4": int(mid) - 3 * n_tri,
@@ -580,15 +530,20 @@ def star_count(edges: DataFrame, k: int) -> DataFrame:
     binomial counting shortcut (D3, core/PatternMatching.hh:129-147,
     1788-1826) for the single-order-group case. One groupBy + one agg;
     never enumerates a single star. Single row (n_matches,)."""
-    from peregrine_spark.operators.arith import sum_binom_exact
     from peregrine_spark.operators.graph import degrees
 
-    deg = degrees(edges)
-    # exact integer arithmetic in decimal(38,0): raw falling factorials
-    # summed per-row (full 10^(37/k) per-degree budget — a mega-hub is
-    # fine to deg ≈ 2.5e7 at k=5), ONE exact ÷ k! on the aggregated
-    # total (the DuckDB oracle mirrors this with HUGEINT // k!); raises
-    # rather than silently NULL-overflowing past the int64 result range.
+    return _star_sum(degrees(edges), k)
+
+
+def _star_sum(deg: DataFrame, k: int) -> DataFrame:
+    """Σ_v C(deg(v), k) over an (id, deg) table, as one row (n_matches,).
+    Exact integer arithmetic in decimal(38,0): raw falling factorials
+    summed per-row (full 10^(37/k) per-degree budget — a mega-hub is fine
+    to deg ≈ 2.5e7 at k=5), ONE exact ÷ k! on the aggregated total (the
+    DuckDB oracle mirrors this with HUGEINT // k!); raises rather than
+    silently NULL-overflowing past the int64 result range."""
+    from peregrine_spark.operators.arith import sum_binom_exact
+
     return deg.agg(
         sum_binom_exact(F.col("deg"), k).cast("long").alias("n_matches")
     )

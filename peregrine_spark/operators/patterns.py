@@ -20,7 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from peregrine_spark.operators.graph import orient, undirected
+from peregrine_spark.operators.graph import GraphContext, undirected
+from peregrine_spark.operators.skew import hub_split_join
 from peregrine_spark.plans.patterns import SmallGraph
 from peregrine_spark.session import local_frame
 
@@ -125,7 +126,9 @@ def match_pattern(
     fanning out Θ(Σ deg²) wedge rows. Counts are invariant (any strict
     total order picks exactly one representative per occurrence);
     WHICH data vertex lands at each automorphic position changes, so
-    enumerated/grouped outputs default to plain id order."""
+    enumerated/grouped outputs default to plain id order. A
+    degree-ordered count runs eagerly inside a GraphContext; every other
+    result is lazy and leaves nothing cached."""
     pattern.validate_anti_vertices()
     pv = pattern.regular_vertices()
     antis = pattern.anti_vertices()
@@ -193,22 +196,18 @@ def match_pattern(
             count_only and group_by_label_of is None and ordered_ext
         )
 
-    if degree_order:
-        # struct(deg, id) keys: lexicographic struct comparison IS the
-        # (deg, id) total order, and the original id rides along.
-        # Canonicalize + compute degrees ONCE, shared by the orientation
-        # and the matcher's own key mapping (one fewer degree shuffle and
-        # one fewer deg.count() job per pattern query).
-        from peregrine_spark.operators.graph import canonical
-
-        can = canonical(edges).cache()
-        ends = can.select(F.col("src").alias("id")).union(
-            can.select(F.col("dst").alias("id"))
-        )
-        deg_df = ends.groupBy("id").agg(F.count(F.lit(1)).alias("deg")).cache()
-        o = orient(
-            can, deg=deg_df, n_vertices=deg_df.count(), assume_canonical=True
-        )
+    chain = (
+        pattern, labels, count_only, known_labels, group_by_label_of,
+        conds, order, prefix, t_tail,
+    )
+    if not degree_order:
+        return _join_chain(*chain, und=undirected(edges), fwd=None, deg_df=None)
+    # struct(deg, id) keys: lexicographic struct comparison IS the
+    # (deg, id) total order, and the original id rides along. The
+    # orientation and the matcher's own key mapping share the context's
+    # degree table.
+    with GraphContext(edges) as ctx:
+        o = ctx.oriented()
         fwd = o.select(
             F.struct(F.col("sdeg").alias("deg"), F.col("src").alias("id")).alias("src"),
             F.struct(F.col("ddeg").alias("deg"), F.col("dst").alias("id")).alias("dst"),
@@ -216,10 +215,36 @@ def match_pattern(
         und = fwd.union(
             fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-    else:
-        fwd = None
-        und = undirected(edges)
-        deg_df = None
+        out = _join_chain(*chain, und=und, fwd=fwd, deg_df=ctx.deg)
+        if not count_only or group_by_label_of is not None:
+            # lazy: reads the input again once the context has released
+            # its caches
+            return out
+        # a count runs here, while the context's caches are live
+        n = int(out.first()["n_matches"])
+    return local_frame(edges.sparkSession, [(n,)], "n_matches long")
+
+
+def _join_chain(
+    pattern: SmallGraph,
+    labels: DataFrame | None,
+    count_only: bool,
+    known_labels: set[int],
+    group_by_label_of: int | None,
+    conds: set[tuple[int, int]],
+    order: list[int],
+    prefix: list[int],
+    t_tail: int,
+    und: DataFrame,
+    fwd: DataFrame | None,
+    deg_df: DataFrame | None,
+) -> DataFrame:
+    """match_pattern's join chain over the undirected table `und`; with
+    degree order, `fwd` is the oriented table and `deg_df` the (id, deg)
+    table, and vertex keys are (deg, id) structs."""
+    pv = pattern.regular_vertices()
+    antis = pattern.anti_vertices()
+    degree_order = fwd is not None
 
     def keyed_ids(id_df: DataFrame, colname: str) -> DataFrame:
         """Map a one-column (id) table into the matcher's key space."""
@@ -466,57 +491,41 @@ def clique_count(edges: DataFrame, k: int) -> DataFrame:
     Every dst-side adjacency join goes through hub_split_join: a zipf
     mega-hub's DAG in-degree can approach |E|, and its frontier
     multiplicity the (k-1)-clique count — either would pin a whole stage
-    on one task, the straggler the triangle path already defuses."""
+    on one task, the straggler the triangle path already defuses.
+
+    EAGER: the count runs inside the context, which then releases its
+    caches (inside an enclosing context on the same edges, it reads that
+    context's canonical set and degree table instead of building them)."""
     if k < 3:
         raise ValueError("k ≥ 3")
-    from peregrine_spark.operators.csr import (
-        BROADCAST_MAX_EDGES,
-        _oriented_adjacency,
-    )
-    from peregrine_spark.operators.skew import hub_split_join
+    with GraphContext(edges) as ctx:
+        fwd, adj = ctx.fwd, ctx.adj
+        small = ctx.adj_broadcast()
+        hubs = [] if small else ctx.dag_hubs()
 
-    _caches: list[DataFrame] = []
-    fwd, adj, hubs, _, small, _, _ = _oriented_adjacency(
-        edges, caches=_caches, broadcast_max_edges=BROADCAST_MAX_EDGES
-    )
-    if small:
-        # the chain attaches adj k-1 times (a_u, a_v, one a_w per
-        # extension) — cache it so every broadcast build after the
-        # first reads the materialized result instead of re-running
-        # the adjacency groupBy (the differently-aliased builds are
-        # not guaranteed runtime exchange reuse)
-        adj = adj.cache()
-        _caches.append(adj)
+        def attach(df: DataFrame, key: str, acol: str) -> DataFrame:
+            """Adjacency attachment: map-side broadcast join when the
+            whole adjacency fits (no frontier row ever crosses an
+            exchange), hub-split shuffle join otherwise."""
+            a = adj.select(F.col("id").alias(key), F.col("adj").alias(acol))
+            if small:
+                return df.join(F.broadcast(a), key)
+            return hub_split_join(df, a, key, hubs)
 
-    def attach(df: DataFrame, key: str, acol: str) -> DataFrame:
-        """Adjacency attachment: map-side broadcast join when the whole
-        adjacency fits (|E| ≤ broadcast bound — no frontier row ever
-        crosses an exchange), hub-split shuffle join otherwise."""
-        a = adj.select(F.col("id").alias(key), F.col("adj").alias(acol))
-        if small:
-            return df.join(F.broadcast(a), key)
-        return hub_split_join(df, a, key, hubs)
-
-    # frontier after matching the base edge (v1≺v2): candidates for v3..
-    with_u = fwd.join(
-        F.broadcast(adj.select(F.col("id").alias("src"), F.col("adj").alias("a_u")))
-        if small
-        else adj.select(F.col("id").alias("src"), F.col("adj").alias("a_u")),
-        "src",
-    )
-    front = attach(with_u, "dst", "a_v").select(
-        F.array_intersect("a_u", "a_v").alias("cand")
-    )
-    for _ in range(k - 3):
-        exploded = front.select(F.explode("cand").alias("w"), "cand")
-        front = attach(exploded, "w", "a_w").select(
-            F.array_intersect("cand", "a_w").alias("cand")
+        # frontier after matching the base edge (v1≺v2): candidates for v3..
+        a_u = adj.select(F.col("id").alias("src"), F.col("adj").alias("a_u"))
+        with_u = fwd.join(F.broadcast(a_u) if small else a_u, "src")
+        front = attach(with_u, "dst", "a_v").select(
+            F.array_intersect("a_u", "a_v").alias("cand")
         )
-    # EAGER: single-row count; run it and drop the context caches (the
-    # lazy form leaked can/deg/fwd per call for the session lifetime)
-    row = front.agg(
-        F.coalesce(F.sum(F.size("cand")), F.lit(0)).cast("long").alias("n_cliques")
-    ).first()
-    for df in _caches:
-        df.unpersist()
+        for _ in range(k - 3):
+            exploded = front.select(F.explode("cand").alias("w"), "cand")
+            front = attach(exploded, "w", "a_w").select(
+                F.array_intersect("cand", "a_w").alias("cand")
+            )
+        row = front.agg(
+            F.coalesce(F.sum(F.size("cand")), F.lit(0))
+            .cast("long")
+            .alias("n_cliques")
+        ).first()
     return local_frame(edges.sparkSession, [(int(row["n_cliques"]),)], "n_cliques long")

@@ -23,10 +23,19 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def hub_keys(df: DataFrame, key: str, threshold: int) -> list[int]:
-    """Driver-side list of join-key values whose row multiplicity in `df`
-    exceeds threshold — the keys that would single-handedly fill a shuffle
-    partition. Power-law graphs have only a handful.
+def hub_keys(
+    counts: DataFrame,
+    key: str,
+    col: str,
+    threshold: int,
+    max_count: int | None = None,
+) -> list[int]:
+    """Driver-side list of the keys of a count table (key, col) whose
+    count exceeds threshold — the keys that would single-handedly fill a
+    shuffle partition. Power-law graphs have only a handful. max_count, if
+    given, is a known upper bound on the counts (a max degree from earlier
+    statistics): when it is within the threshold no key can pass, and the
+    collect job is skipped.
 
     At most 2,048 keys, hottest first. The cap bounds PLAN size, not
     correctness: hub_split_join embeds the list as `isin(...)` literals,
@@ -35,11 +44,11 @@ def hub_keys(df: DataFrame, key: str, threshold: int) -> list[int]:
     the broadcast of the hub slice). Keys past the cap simply stay on the
     shuffle path — at worst a hot task, never a wrong result. Raise only
     alongside a plan-size check."""
+    if max_count is not None and max_count <= threshold:
+        return []
     rows = (
-        df.groupBy(key)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > threshold)
-        .orderBy(F.col("n").desc())
+        counts.filter(F.col(col) > threshold)
+        .orderBy(F.col(col).desc())
         .limit(2048)
         .collect()
     )
@@ -100,14 +109,15 @@ def hub_presplit(
     a 0.25 s stage median (straggler ratio 34x) and pinned PageRank's
     32-core utilization at 26%.
 
-    Both sides name n_part: the session lets AQE coalesce cached plans,
-    but never a user-numbered repartition, so the rest side keeps the
-    hash partitioning the gather join reuses."""
+    The caller caches both sides; every superstep scans them. Both name
+    n_part: the session lets AQE coalesce cached plans, but never a
+    user-numbered repartition, so the cached rest side keeps the hash
+    partitioning the gather join reuses."""
     if not hubs:
-        return edges.repartition(n_part, key).cache(), None
+        return edges.repartition(n_part, key), None
     is_hub = F.col(key).isin(hubs)
-    rest = edges.filter(~is_hub).repartition(n_part, key).cache()
-    hub = edges.filter(is_hub).repartition(n_part).cache()
+    rest = edges.filter(~is_hub).repartition(n_part, key)
+    hub = edges.filter(is_hub).repartition(n_part)
     return rest, hub
 
 

@@ -7,12 +7,12 @@ The Spark restatement: degree-ordered orientation turns the graph into a
 DAG with O(sqrt(E)) out-degrees; each oriented edge (u,v) closes exactly
 |N+(u) ∩ N+(v)| triangles (the edge-iterator algorithm).
 
-Physical plan (csr._edge_adjacency_pairs): per-vertex sorted forward
-runs attach to both ends of every oriented edge — map-side broadcast
-joins under csr.BROADCAST_MAX_EDGES, hub-split shuffle joins above it —
-and JVM array_intersect does the set intersection inside codegen. No
-Python, no wedge set through a shuffle; the count aggregates map-side,
-like the reference's Counter never materializing matches
+Physical plan (_edge_adjacency_pairs): per-vertex sorted forward runs
+attach to both ends of every oriented edge — map-side broadcast joins
+under graph.BROADCAST_MAX_EDGES, hub-split shuffle joins above it — and
+JVM array_intersect does the set intersection inside codegen. No Python,
+no wedge set through a shuffle; the count aggregates map-side, like the
+reference's Counter never materializing matches
 (core/PatternMatching.hh:1413).
 """
 
@@ -21,8 +21,31 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from peregrine_spark.operators.csr import _edge_adjacency_pairs
+from peregrine_spark.operators.graph import GraphContext
+from peregrine_spark.operators.skew import hub_split_join
 from peregrine_spark.session import local_frame
+
+
+def _edge_adjacency_pairs(ctx: GraphContext) -> DataFrame:
+    """Per oriented edge (u,v): both endpoints' forward adjacency runs.
+
+    When the whole adjacency broadcasts, both attachments are map-side
+    broadcast hash joins — the |E| rows carrying ~O(sqrt E)-element
+    arrays never cross an exchange (guide §2.4: a broadcast join replaces
+    the shuffle of the large side; round-6 profile: the two
+    array-carrying shuffles were most of triangle_count wall at sf0.1).
+
+    Fallback above the bound: the src join is skew-safe (oriented
+    out-degree ≤ O(sqrt E)); the dst join is NOT — a mega-hub's in-degree
+    can approach |E|, pinning one task — so hub dsts take the broadcast
+    path (their adjacency runs are tiny: a high-degree vertex has few
+    higher-degree neighbours)."""
+    fwd, adj = ctx.fwd, ctx.adj
+    a_u = adj.select(F.col("id").alias("src"), F.col("adj").alias("adj_u"))
+    a_v = adj.select(F.col("id").alias("dst"), F.col("adj").alias("adj_v"))
+    if ctx.adj_broadcast():
+        return fwd.join(F.broadcast(a_u), "src").join(F.broadcast(a_v), "dst")
+    return hub_split_join(fwd.join(a_u, "src"), a_v, "dst", ctx.dag_hubs())
 
 
 def triangles(edges: DataFrame) -> DataFrame:
@@ -31,30 +54,31 @@ def triangles(edges: DataFrame) -> DataFrame:
     of the reference's set_intersection core, core/PatternMatching.hh:1116):
     pack forward-adjacency arrays, then for each oriented base edge (u,v)
     emit N+(u) ∩ N+(v). Intermediates stay bounded by true triangle
-    output size instead of wedge count."""
-    pairs = _edge_adjacency_pairs(edges)
-    return pairs.select(
-        F.col("src").alias("u"),
-        F.col("dst").alias("v"),
-        F.explode(F.array_intersect("adj_u", "adj_v")).alias("w"),
-    )
+    output size instead of wedge count.
+
+    Lazy: the context's caches are released before returning, so the
+    plan reads the input again when it runs (inside an enclosing
+    GraphContext on the same edges, it reads that context's caches)."""
+    with GraphContext(edges) as ctx:
+        return _edge_adjacency_pairs(ctx).select(
+            F.col("src").alias("u"),
+            F.col("dst").alias("v"),
+            F.explode(F.array_intersect("adj_u", "adj_v")).alias("w"),
+        )
 
 
 def triangle_count(edges: DataFrame) -> DataFrame:
     """Single-row DataFrame (n_triangles: long). Adjacency edge-iterator
     plan: sum of |N+(u) ∩ N+(v)| over oriented edges — no explode, the
-    count never materializes. EAGER: runs the aggregation and drops the
-    set-up caches before returning — a lazy result would have to keep
-    can/deg/fwd cached for as long as the caller holds it."""
-    caches: list[DataFrame] = []
-    row = (
-        _edge_adjacency_pairs(edges, caches=caches)
-        .select(F.size(F.array_intersect("adj_u", "adj_v")).alias("c"))
-        .agg(F.coalesce(F.sum("c"), F.lit(0)).cast("long").alias("n_triangles"))
-        .first()
-    )
-    for df in caches:
-        df.unpersist()
+    count never materializes. EAGER: runs the aggregation inside the
+    context, so its caches are read and then released."""
+    with GraphContext(edges) as ctx:
+        row = (
+            _edge_adjacency_pairs(ctx)
+            .select(F.size(F.array_intersect("adj_u", "adj_v")).alias("c"))
+            .agg(F.coalesce(F.sum("c"), F.lit(0)).cast("long").alias("n_triangles"))
+            .first()
+        )
     return local_frame(
         edges.sparkSession, [(int(row["n_triangles"]),)], "n_triangles long"
     )

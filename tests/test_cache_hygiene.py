@@ -1,15 +1,24 @@
 """Cache hygiene: no counting operator may leave a cached DataFrame
 persisted after its action completes (round-4 verdict item 6). A leaked
 cache is invisible in a short test run but accumulates executor storage
-for the lifetime of a long analysis driver session."""
+for the lifetime of a long analysis driver session.
+
+GraphContext owns the per-graph caches. A context opened inside another
+one's lifetime on the same edges reads the outer caches through Spark's
+cache manager (plans match, not objects) and releases only its own."""
 
 import pytest
 
 from tests import golden
+from tests.test_plan_shape import started
 
 
 def _persistent_ids(spark) -> set:
     return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
+
+def _cached(df) -> bool:
+    return df.storageLevel.useMemory or df.storageLevel.useDisk
 
 
 @pytest.fixture()
@@ -18,7 +27,8 @@ def dense_edges(spark):
 
 
 def test_counting_ops_release_caches(spark, dense_edges):
-    from peregrine_spark.operators.groups import GroupCountContext, group_count
+    from peregrine_spark.operators.graph import orient
+    from peregrine_spark.operators.groups import group_count
     from peregrine_spark.operators.motifs import (
         all_motifs,
         cycle4_count,
@@ -26,27 +36,46 @@ def test_counting_ops_release_caches(spark, dense_edges):
         star_count,
     )
     from peregrine_spark.operators.patterns import clique_count, match_pattern
+    from peregrine_spark.operators.triangles import triangles, triangles_per_vertex
+    from peregrine_spark.plans.patterns import SmallGraph
 
-    before = _persistent_ids(spark)
-
-    # closed-form k=4 family (caches canonical/deg/tri internally)
-    motif_counts(spark, dense_edges, 4, vertex_induced=True).collect()
-    # oriented-DAG 4-cycle plan (caches adj + wedge-class pairs)
-    cycle4_count(dense_edges).collect()
-    # frontier clique path
-    clique_count(dense_edges, 4).collect()
-    # star shortcut
-    star_count(dense_edges, 3).collect()
-    # group counter with an INTERNALLY-created context (the leaky path
-    # flagged in round-4 advice: ctx + _ShapeFlow.core_cached)
+    e = dense_edges
     chair = all_motifs(5)["m5_004"]
-    if chair.group_count_plan() is not None:
-        group_count(dense_edges, chair).collect()
-    # generic matcher route through match_pattern's auto policy
-    match_pattern(dense_edges, all_motifs(4)["tailed_triangle"]).collect()
-
-    leaked = _persistent_ids(spark) - before
-    assert not leaked, f"persistent RDDs leaked by counting ops: {leaked}"
+    assert chair.group_count_plan() is not None
+    cases = {
+        # closed-form k=4 family (caches the canonical set, the DAG and
+        # the triangle list, and runs six terms from a thread pool)
+        "motif_counts_k4": lambda: motif_counts(spark, e, 4, vertex_induced=True),
+        # oriented-DAG 4-cycle plan
+        "cycle4_count": lambda: cycle4_count(e),
+        # frontier clique path
+        "clique_count": lambda: clique_count(e, 4),
+        # star shortcut
+        "star_count": lambda: star_count(e, 3),
+        # group counter with an internally-created context
+        "group_count": lambda: group_count(e, chair),
+        # generic matcher route through match_pattern's auto policy
+        "match_pattern_tailed": lambda: match_pattern(
+            e, all_motifs(4)["tailed_triangle"]
+        ),
+        # lazy results: nothing may stay cached for as long as the
+        # caller holds them
+        "triangles": lambda: triangles(e),
+        "triangles_per_vertex": lambda: triangles_per_vertex(e),
+        "orient": lambda: orient(e),
+        # degree-ordered join chain
+        "match_pattern_clique4": lambda: match_pattern(e, SmallGraph.clique(4)),
+    }
+    leaks = {}
+    for name, op in cases.items():
+        before = _persistent_ids(spark)
+        op().collect()
+        leaked = _persistent_ids(spark) - before
+        if leaked:
+            leaks[name] = leaked
+        # with a shared plan, one case's leak would hide the next one's
+        spark.catalog.clearCache()
+    assert not leaks, f"persistent RDDs leaked by counting ops: {leaks}"
 
 
 def test_motif_catalog_k5_releases_caches(spark, dense_edges):
@@ -58,68 +87,63 @@ def test_motif_catalog_k5_releases_caches(spark, dense_edges):
     assert not leaked, f"persistent RDDs leaked by k=5 catalog: {leaked}"
 
 
-def test_live_context_registry_reuse_and_cleanup(spark, dense_edges):
-    """The live-context registry (round-6 continuation): a clique count
-    on the SAME DataFrame object as a live GroupCountContext reuses its
-    closure/degree tables (identical result), the registry entry dies
-    with unpersist(), and nothing stays cached afterwards."""
-    from peregrine_spark.operators.groups import (
-        GroupCountContext,
-        live_context_for,
-    )
+def test_clique_count_reads_live_context(spark, dense_edges):
+    """Inside a live context on the same edges, clique_count gives the
+    same count with fewer jobs, and runs neither the canonical distinct
+    nor the degree groupBy: its own context finds the canonical set and
+    the degree table cached, so only its stats aggregation, the DAG runs
+    and the count shuffle (at least two fewer shuffle-writing stages than
+    outside a context)."""
+    from peregrine_spark.operators.graph import GraphContext
     from peregrine_spark.operators.patterns import clique_count
 
+    e = dense_edges
     before = _persistent_ids(spark)
-    baseline = clique_count(dense_edges, 4).first()["n_cliques"]
-
-    ctx = GroupCountContext(dense_edges)
-    assert live_context_for(dense_edges) is ctx
-    # a DIFFERENT DataFrame with the same data must NOT hit the entry
-    other = dense_edges.select("src", "dst")
-    assert live_context_for(other) is None
-
-    with_ctx = clique_count(dense_edges, 4).first()["n_cliques"]
-    assert with_ctx == baseline
-
-    ctx.unpersist()
-    assert live_context_for(dense_edges) is None
-    after_ctx = clique_count(dense_edges, 4).first()["n_cliques"]
-    assert after_ctx == baseline
-
-    leaked = _persistent_ids(spark) - before
-    assert not leaked, f"persistent RDDs leaked by registry reuse: {leaked}"
-
-
-def test_live_context_registry_two_contexts_same_edges(spark, dense_edges):
-    """Two contexts over the SAME edges DataFrame: the later registration
-    owns the entry, and unpersisting the earlier context leaves it in
-    place. An entry whose context was collected without unpersist() is
-    pruned on the next lookup."""
-    import gc
-
-    from peregrine_spark.operators import groups
-    from peregrine_spark.operators.groups import (
-        GroupCountContext,
-        live_context_for,
+    result = {}
+    outside = started(
+        spark, lambda: result.update(out=clique_count(e, 4).first()[0])
     )
+    with GraphContext(e) as ctx:
+        ctx.n_vertices  # fills the canonical-set and degree caches
+        inside = started(
+            spark, lambda: result.update(ins=clique_count(e, 4).first()[0])
+        )
+        assert _cached(ctx.can) and _cached(ctx.deg)
+    assert result["ins"] == result["out"]
+    assert inside["jobs"] < outside["jobs"]
+    assert inside["shuffle_stages"] <= outside["shuffle_stages"] - 2
+    assert _persistent_ids(spark) == before
+
+
+def test_nested_contexts_release_only_their_own(spark, dense_edges):
+    """Exiting an inner context on the same edges leaves the outer one's
+    caches persisted; after both exit, nothing persists."""
+    from peregrine_spark.operators.graph import GraphContext
+
+    e = dense_edges
+    before = _persistent_ids(spark)
+    with GraphContext(e) as outer:
+        outer.n_vertices
+        base = _persistent_ids(spark) - before
+        assert base  # the canonical set and the degree table
+        with GraphContext(e) as inner:
+            # the canonical set and degree plans are the outer context's
+            assert inner._caches == []
+            inner.adj.count()  # the DAG and its runs are the inner's own
+            assert len(inner._caches) == 2
+        assert _cached(outer.can) and _cached(outer.deg)
+        assert _persistent_ids(spark) - before == base
+    assert _persistent_ids(spark) == before
+
+
+def test_context_released_when_body_raises(spark, dense_edges):
+    from peregrine_spark.operators.graph import GraphContext
 
     before = _persistent_ids(spark)
-    first = GroupCountContext(dense_edges)
-    second = GroupCountContext(dense_edges)
-    assert live_context_for(dense_edges) is second
-    first.unpersist()
-    assert live_context_for(dense_edges) is second
-    second.unpersist()
-    assert live_context_for(dense_edges) is None
-
-    dropped = GroupCountContext(dense_edges)
-    caches = list(dropped._caches)
-    del dropped
-    gc.collect()
-    assert live_context_for(dense_edges) is None
-    assert id(dense_edges) not in groups._LIVE_CONTEXTS
-    for df in caches:
-        df.unpersist()
-
-    leaked = _persistent_ids(spark) - before
-    assert not leaked, f"persistent RDDs leaked: {leaked}"
+    with pytest.raises(RuntimeError):
+        with GraphContext(dense_edges) as ctx:
+            ctx.adj.count()
+            assert _persistent_ids(spark) - before
+            raise RuntimeError("body failed")
+    assert not _cached(ctx.can) and not _cached(ctx.deg)
+    assert _persistent_ids(spark) == before

@@ -7,8 +7,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from peregrine_spark import reference as ref
-from peregrine_spark.operators import csr, skew
-from peregrine_spark.operators.graph import orient, undirected
+from peregrine_spark.operators import graph, skew
+from peregrine_spark.operators.graph import adjacency, orient, undirected
 from peregrine_spark.operators.iterative import connected_components
 from peregrine_spark.operators.patterns import clique_count
 from peregrine_spark.operators.triangles import triangle_count, triangles
@@ -18,7 +18,7 @@ from tests import golden
 
 def test_adjacency_runs_sorted(spark):
     e = golden.to_spark_edges(spark, golden.K6)
-    rows = csr.adjacency(orient(e)).collect()
+    rows = adjacency(orient(e)).collect()
     for r in rows:
         assert list(r.adj) == sorted(r.adj)
 
@@ -28,7 +28,8 @@ def test_hub_split_join_matches_plain(spark):
     state = e.select(F.col("src")).distinct().select(
         "src", (F.col("src") * 7).alias("val")
     )
-    hubs = skew.hub_keys(e, "src", threshold=10)
+    counts = e.groupBy("src").agg(F.count(F.lit(1)).alias("n"))
+    hubs = skew.hub_keys(counts, "src", "n", threshold=10)
     assert hubs == [0]  # the star hub
     plain = e.join(state, "src").select("src", "dst", "val")
     split = skew.hub_split_join(e, state, "src", hubs).select("src", "dst", "val")
@@ -37,11 +38,11 @@ def test_hub_split_join_matches_plain(spark):
 
 @pytest.mark.parametrize("name", ["k6", "two_tri_bridge", "star_hub", "disconnected"])
 def test_hub_split_shuffle_route_golden(spark, monkeypatch, name):
-    """Above csr.BROADCAST_MAX_EDGES, triangles and cliques attach adjacency
+    """Above graph.BROADCAST_MAX_EDGES, triangles and cliques attach adjacency
     runs through hub-split shuffle joins. Force that route with a 0 bound,
     and a hub threshold of 1 so hub_keys finds real hubs (star_hub's
     centre, K6's later vertices) and the isin() hub branch runs too."""
-    monkeypatch.setattr(csr, "BROADCAST_MAX_EDGES", 0)
+    monkeypatch.setattr(graph, "BROADCAST_MAX_EDGES", 0)
     monkeypatch.setattr(skew, "auto_hub_threshold", lambda n_rows: 1)
     pairs = golden.ALL[name]
     e = golden.to_spark_edges(spark, pairs)

@@ -120,20 +120,20 @@ def test_cycle4_count_oriented_vs_oracle(spark):
         }
     )
     cases.append(np.array(rand_pairs, dtype=np.int64))
-    from peregrine_spark.operators import motifs as motifs_mod
+    from peregrine_spark.operators import graph as graph_mod
 
     # All three physical routes: full wedge enumeration (route 1, the
     # small-graph default), broadcast + intersect C-term (route 2,
     # forced by failing the pair-packing id bound), and the hub-split
     # shuffle fallback (route 3, forced via a 0 broadcast bound)
     for bound, pack in (
-        (motifs_mod.BROADCAST_MAX_EDGES, motifs_mod.PACK_MAX_ID),
-        (motifs_mod.BROADCAST_MAX_EDGES, 0),
-        (0, motifs_mod.PACK_MAX_ID),
+        (graph_mod.BROADCAST_MAX_EDGES, graph_mod.PACK_MAX_ID),
+        (graph_mod.BROADCAST_MAX_EDGES, 0),
+        (0, graph_mod.PACK_MAX_ID),
     ):
-        old, oldp = motifs_mod.BROADCAST_MAX_EDGES, motifs_mod.PACK_MAX_ID
-        motifs_mod.BROADCAST_MAX_EDGES = bound
-        motifs_mod.PACK_MAX_ID = pack
+        old, oldp = graph_mod.BROADCAST_MAX_EDGES, graph_mod.PACK_MAX_ID
+        graph_mod.BROADCAST_MAX_EDGES = bound
+        graph_mod.PACK_MAX_ID = pack
         try:
             for pairs in cases:
                 e = golden.to_spark_edges(spark, pairs)
@@ -141,8 +141,8 @@ def test_cycle4_count_oriented_vs_oracle(spark):
                 want = ref.pattern_count(pairs, SmallGraph.cycle(4))
                 assert got == want, (bound, pack, len(pairs), got, want)
         finally:
-            motifs_mod.BROADCAST_MAX_EDGES = old
-            motifs_mod.PACK_MAX_ID = oldp
+            graph_mod.BROADCAST_MAX_EDGES = old
+            graph_mod.PACK_MAX_ID = oldp
 
 
 def test_cycle4_count_ids_below_int32(spark):

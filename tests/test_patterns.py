@@ -447,12 +447,13 @@ def test_group_count_all_k5_classes(spark):
     the 21 k=5 isomorphism classes counted via core enumeration + group
     candidate-size arithmetic must equal the NumPy brute-force oracle on
     a dense-ish golden graph — no class falls back to enumeration here."""
-    from peregrine_spark.operators.groups import GroupCountContext, group_count
+    from peregrine_spark.operators.graph import GraphContext
+    from peregrine_spark.operators.groups import group_count
     from peregrine_spark.plans.generators import all_connected
 
     pairs = golden.random_graph(12, 40, seed=7)
     e = golden.to_spark_edges(spark, pairs)
-    ctx = GroupCountContext(e)
+    ctx = GraphContext(e)
     for i, g in enumerate(all_connected(5)):
         plan = g.group_count_plan()
         assert plan is not None, i
@@ -467,12 +468,13 @@ def test_group_count_shuffle_flow(spark):
     membership-flag joins), forced by failing array mode's max-degree
     gate, must match the NumPy oracle — small graphs now default to the
     broadcast adjacency-array flow, so this pins the big-graph plan."""
-    from peregrine_spark.operators.groups import GroupCountContext, group_count
+    from peregrine_spark.operators.graph import GraphContext
+    from peregrine_spark.operators.groups import group_count
     from peregrine_spark.plans.generators import all_connected
 
     pairs = golden.random_graph(12, 40, seed=11)
     e = golden.to_spark_edges(spark, pairs)
-    ctx = GroupCountContext(e)
+    ctx = GraphContext(e)
     ctx.max_deg = 200_000  # fails the array-mode degree gate
     assert not ctx.array_mode()
     for i, g in enumerate(all_connected(5)):
@@ -488,12 +490,13 @@ def test_group_count_k6_structure_sample(spark):
     """k=6 classes sampled to cover every (core size, #groups, t-multiset,
     max |∪N|) structure the catalog contains (the full 112-class sweep is
     the motifs6 gate's job) — group_count vs the NumPy oracle."""
-    from peregrine_spark.operators.groups import GroupCountContext, group_count
+    from peregrine_spark.operators.graph import GraphContext
+    from peregrine_spark.operators.groups import group_count
     from peregrine_spark.plans.generators import all_connected
 
     pairs = golden.random_graph(11, 46, seed=11)
     e = golden.to_spark_edges(spark, pairs)
-    ctx = GroupCountContext(e)
+    ctx = GraphContext(e)
     seen_structs = set()
     checked = 0
     for i, g in enumerate(all_connected(6)):
@@ -534,12 +537,13 @@ def test_group_count_decimal_mode(spark):
     """Force the decimal(38,0) row-arithmetic path (the 64-bit-mode bound
     check fails when ctx.max_deg is huge) and check group counts still
     equal the NumPy oracle — covers the budgeted product guard."""
-    from peregrine_spark.operators.groups import GroupCountContext, group_count
+    from peregrine_spark.operators.graph import GraphContext
+    from peregrine_spark.operators.groups import group_count
     from peregrine_spark.plans.generators import all_connected
 
     pairs = golden.random_graph(12, 40, seed=7)
     e = golden.to_spark_edges(spark, pairs)
-    ctx = GroupCountContext(e)
+    ctx = GraphContext(e)
     ctx.max_deg = 10**12  # long-mode bound fails -> decimal path
     assert not ctx.und.rdd.isEmpty()
     cat = all_connected(5)
@@ -554,12 +558,13 @@ def test_group_count_k7_structure_sample(spark):
     max |∪N|) structure in the catalog (852 plannable classes, 0 residue)
     — group_count vs the NumPy oracle. The full catalog is the motifs7
     gate's job."""
-    from peregrine_spark.operators.groups import GroupCountContext, group_count
+    from peregrine_spark.operators.graph import GraphContext
+    from peregrine_spark.operators.groups import group_count
     from peregrine_spark.plans.generators import all_connected
 
     pairs = golden.random_graph(11, 40, seed=17)
     e = golden.to_spark_edges(spark, pairs)
-    ctx = GroupCountContext(e)
+    ctx = GraphContext(e)
     seen_structs = set()
     checked = 0
     for i, g in enumerate(all_connected(7)):
@@ -590,12 +595,13 @@ def test_group_count_k8_structure_sample(spark):
     max |∪N|) structure from the catalog head — group_count vs the NumPy
     oracle on a 10-vertex graph. Full-catalog evidence is the motifs8
     gate (9 classes incl. K8, value-hash vs generated DuckDB SQL)."""
-    from peregrine_spark.operators.groups import GroupCountContext, group_count
+    from peregrine_spark.operators.graph import GraphContext
+    from peregrine_spark.operators.groups import group_count
     from peregrine_spark.plans.generators import all_connected
 
     pairs = golden.random_graph(10, 32, seed=23)
     e = golden.to_spark_edges(spark, pairs)
-    ctx = GroupCountContext(e)
+    ctx = GraphContext(e)
     seen_structs = set()
     checked = 0
     for i, g in enumerate(all_connected(8)[:220]):

@@ -79,12 +79,13 @@ def main() -> None:
     )
     pr_step_median = step_walls[len(step_walls) // 2] if step_walls else None
 
-    # PageRank, all K supersteps chained into one job (AQE skew handling:
-    # hub_split would double the unmaterialized state subtree per step)
+    # PageRank, all K supersteps chained into one job (hubs left to AQE's
+    # skew-join splitting: the hub split would double the unmaterialized
+    # state subtree per step)
     t0 = time.perf_counter()
     pagerank(
         spark, und, tol=None, max_iter=PR_STEPS, resume=False,
-        checkpoint_interval=PR_STEPS, skew_mode="aqe",
+        checkpoint_interval=PR_STEPS,
     )
     pr_chained_wall = time.perf_counter() - t0
 
