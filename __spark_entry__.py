@@ -436,6 +436,7 @@ def _q_motifs5_ei_dense10(spark: SparkSession, sf_dir: str) -> DataFrame:
     # K5 runs concurrently with the fused group action (guide §2.6), in
     # its own context, which reads this one's canonical set and degree table
     with GraphContext(e) as ctx, ThreadPoolExecutor(max_workers=1) as pool:
+        ctx.n_vertices  # fill the shared caches before the thread reads them
         f_k5 = pool.submit(lambda: clique_count(e, 5).first()["n_cliques"])
         counts = group_count_many(e, plannable, ctx)
         counts["m5_020"] = f_k5.result()

@@ -15,13 +15,23 @@ AQE skew-join handles the state×edges side.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from peregrine_spark.operators import skew
 from peregrine_spark.operators.graph import GraphContext
 from peregrine_spark.operators.skew import hub_presplit, presplit_join
 from peregrine_spark.plans.superstep import SuperstepDriver, SuperstepResult
+
+# label propagation's argmax key n·2⁶⁴ + (2⁶³−1−label) stays below 10³⁸,
+# the decimal(38,0) bound, while every count n is below this
+LP_MAX_COUNT = 1 << 62
+_DEC = "decimal(38,0)"
+
+
+def _dec(v: int) -> Column:
+    """An exact decimal(38,0) literal (a Python int above 2⁶³ is none)."""
+    return F.lit(str(v)).cast(_DEC)
 
 
 def _gather_sides(
@@ -102,11 +112,10 @@ def pagerank(
     if n == 0:
         vstatic.unpersist()
         return SuperstepResult(vstatic.select("id", F.lit(0.0).alias("rank")), 0, True)
-    # Dangling vertices can't appear in an undirected closure; detecting
-    # their absence once saves a full scalar job EVERY superstep.
-    has_dangling = int(srow["n_dangling"]) > 0
-    # dangling mass needs a per-superstep scalar; only dangling-free
+    # Dangling vertices can't appear in an undirected closure. The
+    # dangling mass is a per-superstep scalar, so only dangling-free
     # graphs can chain supersteps without materialization.
+    has_dangling = int(srow["n_dangling"]) > 0
     interval = 1 if has_dangling else checkpoint_interval
     chained = interval > 1
     # Hub detection (once, static): sources whose edge multiplicity would
@@ -119,36 +128,21 @@ def pagerank(
     )
     e_rest, e_hub = _gather_sides(edges, hubs, chained, DataFrame.cache)
 
+    # each rank's share of the dangling mass (0 on a dangling-free graph)
+    dangling_rank = F.when(F.col("out_deg") == 0, F.col("rank")).otherwise(0.0)
+    # the dangling mass of the state the next step reads: observed while
+    # the previous state materialized, known without a job for the initial
+    # state, and aggregated over a resumed state once
+    dm_cell = {"dm": None if has_dangling else 0.0}
+
     def init() -> DataFrame:
+        dm_cell["dm"] = int(srow["n_dangling"]) / n  # every rank is 1/n
         return vstatic.select("id", F.lit(1.0 / n).alias("rank"), "out_deg")
 
-    # Dangling mass for the CURRENT state. When a convergence check runs,
-    # the delta job below piggybacks next step's dangling mass onto the
-    # same |V|-sized aggregation, so each superstep costs ONE scalar job,
-    # not two. Fixed-K runs (tol=None) compute it standalone.
-    dm_cell = {"dm": None}
-
-    def _dangling(state: DataFrame) -> float:
-        if not has_dangling:
-            return 0.0
-        return (
-            state.agg(
-                F.sum(F.when(F.col("out_deg") == 0, F.col("rank")).otherwise(0.0))
-            ).collect()[0][0]
-            or 0.0
-        )
-
-    # interval == 1 (the default): the new state carries |Δrank| per row
-    # (_delta), so each convergence check is a narrow aggregation over
-    # the just-materialized state instead of an old ⨝ new join — one
-    # fewer |V|-sized shuffle join job per superstep. Chained intervals
-    # compare boundary states (a different quantity), so they keep the
-    # join-based delta.
-    carry_delta = tol is not None and interval == 1
-
     def step(state: DataFrame, _k: int) -> DataFrame:
-        dm = dm_cell["dm"] if dm_cell["dm"] is not None else _dangling(state)
-        dm_cell["dm"] = None
+        if dm_cell["dm"] is None:
+            dm_cell["dm"] = state.agg(F.sum(dangling_rank)).first()[0] or 0.0
+        dm = dm_cell["dm"]
         # Gather: hub sources join a broadcast slice of the state (their
         # millions of edge rows never shuffle); the rest shuffle-hash —
         # a per-superstep broadcast of the FULL state would be rebuilt
@@ -169,59 +163,37 @@ def pagerank(
         )
         base = (1.0 - damping) / n + damping * dm / n
         new_rank = F.lit(base) + F.lit(damping) * F.coalesce("c", F.lit(0.0))
-        # join the STATE (carries the old rank, for the per-row delta)
-        # rather than vstatic. The executed plan shuffles the
-        # materialized state on id before this join — the scan of a
-        # checkpointed state reports no partitioning — and the gather
-        # above shuffles it again on src: two |V|-row exchanges of the
-        # state per superstep
-        out_cols = ["id", new_rank.alias("rank"), "out_deg"]
-        if carry_delta:
-            out_cols.append(F.abs(new_rank - F.col("rank")).alias("_delta"))
+        # join the STATE (carries the old rank, for the delta) rather than
+        # vstatic. The rank at the last materialized state rides through a
+        # chained interval as _r0, so the observed delta is max|r_k − r_b|
+        # on every path. The executed plan shuffles the materialized
+        # state on id before this join — the scan of a checkpointed state
+        # reports no partitioning — and the gather above shuffles it again
+        # on src: two |V|-row exchanges of the state per superstep
+        r0 = "_r0" if "_r0" in state.columns else "rank"
         return state.join(contrib.hint("shuffle_hash"), "id", "left").select(
-            *out_cols
+            "id", new_rank.alias("rank"), "out_deg", F.col(r0).alias("_r0")
         )
 
-    def delta(old: DataFrame, new: DataFrame) -> float:
-        if carry_delta:
-            row = new.agg(
-                F.max("_delta").alias("d"),
-                F.sum(
-                    F.when(F.col("out_deg") == 0, F.col("rank")).otherwise(0.0)
-                ).alias("dm"),
-            ).collect()[0]
-        else:
-            row = (
-                old.select("id", F.col("rank").alias("r0"))
-                .join(
-                    new.select("id", F.col("rank").alias("r1"), "out_deg"), "id"
-                )
-                .agg(
-                    F.max(F.abs(F.col("r1") - F.col("r0"))).alias("d"),
-                    F.sum(
-                        F.when(F.col("out_deg") == 0, F.col("r1")).otherwise(0.0)
-                    ).alias("dm"),
-                )
-                .collect()[0]
-            )
-        dm_cell["dm"] = row["dm"] or 0.0
-        return row["d"]
+    def delta(seen: dict) -> float:
+        dm_cell["dm"] = seen["dm"] or 0.0
+        return seen["delta"]
 
     driver = SuperstepDriver(
         spark, "pagerank", checkpoint_dir, max_iter=max_iter, tol=tol,
         materialize_every=interval, input_fingerprint=input_fingerprint,
     )
-    # tol=None means fixed-iteration semantics — skip the per-superstep
-    # delta job entirely.
-    res = driver.run(init, step, delta if tol is not None else None, resume=resume)
+    observed = [
+        F.max(F.abs(F.col("rank") - F.col("_r0"))).alias("delta"),
+        F.sum(dangling_rank).alias("dm"),
+    ]
+    res = driver.run(init, step, observed, delta, resume=resume)
     # the result state is materialized (localCheckpoint/parquet) — the
     # static caches are no longer reachable from it; holding them would
     # leak executor storage for the session lifetime (measured: leaked
     # caches from earlier bench queries inflated later ones' walls)
     for df in [vstatic, e_rest] + ([e_hub] if e_hub is not None else []):
         df.unpersist()
-    if carry_delta:
-        res.state = res.state.select("id", "rank", "out_deg")
     return res
 
 
@@ -262,13 +234,6 @@ def connected_components(
     the large-/small-star pointer-doubling variant; link graphs are
     small-diameter so hash-min's strictly-bounded shuffle wins.)
     """
-    # interval == 1 (default): carry a per-row changed flag so the delta
-    # is a narrow agg over the new state, not an old ⨝ new join. For
-    # hash-min this is exact at any boundary (zero changes in the LAST
-    # superstep already implies the global fixpoint), but chained
-    # intervals keep the boundary-join delta so reported deltas stay
-    # boundary-to-boundary.
-    carry_delta = checkpoint_interval == 1
     chained = checkpoint_interval > 1
     with GraphContext(edges) as ctx:
         vstatic, hubs, u_rest, u_hub = _closure_sides(ctx, vertices, chained)
@@ -289,28 +254,13 @@ def connected_components(
                 .agg(F.min("comp").alias("mincomp"))
             )
             new_comp = F.least("comp", F.coalesce("mincomp", "comp"))
-            out_cols = ["id", new_comp.alias("comp")]
-            if carry_delta:
-                out_cols.append(
-                    (new_comp != F.col("comp")).cast("long").alias("_chg")
-                )
-            # the state side shuffles on id here as well (see pagerank)
+            # the component at the last materialized state rides through a
+            # chained interval as _c0: the delta counts the vertices that
+            # changed since then. The state side shuffles on id here as
+            # well (see pagerank)
+            c0 = "_c0" if "_c0" in state.columns else "comp"
             return state.join(msgs.hint("shuffle_hash"), "id", "left").select(
-                *out_cols
-            )
-
-        def delta(old: DataFrame, new: DataFrame) -> float:
-            if carry_delta:
-                return float(
-                    new.agg(
-                        F.coalesce(F.sum("_chg"), F.lit(0).cast("long"))
-                    ).first()[0]
-                )
-            return float(
-                old.select("id", F.col("comp").alias("c0"))
-                .join(new.select("id", F.col("comp").alias("c1")), "id")
-                .filter(F.col("c0") != F.col("c1"))
-                .count()
+                "id", new_comp.alias("comp"), F.col(c0).alias("_c0")
             )
 
         driver = SuperstepDriver(
@@ -318,10 +268,13 @@ def connected_components(
             materialize_every=checkpoint_interval,
             input_fingerprint=input_fingerprint,
         )
-        res = driver.run(init, step, delta, resume=resume)
-    if carry_delta:
-        res.state = res.state.select("id", "comp")
-    return res
+        changed = (F.col("comp") != F.col("_c0")).cast("long")
+        return driver.run(
+            init, step,
+            [F.coalesce(F.sum(changed), F.lit(0).cast("long")).alias("changed")],
+            lambda seen: float(seen["changed"]),
+            resume=resume,
+        )
 
 
 # --------------------------------------------------------------------------
@@ -345,6 +298,12 @@ def label_propagation(
     """
     chained = checkpoint_interval > 1
     with GraphContext(edges) as ctx:
+        # a vertex's count for one label is at most its closure degree
+        if ctx.max_deg >= LP_MAX_COUNT:
+            raise ValueError(
+                f"label_propagation: max degree {ctx.max_deg} overflows the "
+                f"packed argmax key (counts must stay below {LP_MAX_COUNT})"
+            )
         vstatic, hubs, u_rest, u_hub = _closure_sides(ctx, vertices, chained)
 
         def init() -> DataFrame:
@@ -362,22 +321,18 @@ def label_propagation(
                 .groupBy("id", "label")
                 .agg(F.count(F.lit(1)).alias("n"))
             )
-            # argmax by (count, -label): a hash aggregation instead of a
-            # window row_number (saves a per-superstep sort stage); the
-            # negated label makes lexicographic struct-max pick the
-            # SMALLEST label on count ties — labels are non-negative ids
-            best = (
-                cnt.groupBy("id")
-                .agg(
-                    F.max(
-                        F.struct(
-                            F.col("n"),
-                            (-F.col("label")).alias("_negl"),
-                            F.col("label"),
-                        )
-                    ).alias("_b")
-                )
-                .select("id", F.col("_b.label").alias("newlabel"))
+            # argmax by (count, smallest label) as ONE decimal key,
+            # n·2⁶⁴ + (2⁶³−1−label): a max over a decimal is a hash
+            # aggregation (a struct max plans a sort), and any signed
+            # label maps into the low 64 bits in reverse order
+            key = F.col("n").cast(_DEC) * _dec(1 << 64) + (
+                _dec((1 << 63) - 1) - F.col("label").cast(_DEC)
+            )
+            best = cnt.groupBy("id").agg(F.max(key).alias("_k")).select(
+                "id",
+                (_dec((1 << 63) - 1) - F.col("_k") % _dec(1 << 64))
+                .cast("long")
+                .alias("newlabel"),
             )
             # the state side shuffles on id here as well (see pagerank)
             return state.join(best.hint("shuffle_hash"), "id", "left").select(
@@ -389,4 +344,4 @@ def label_propagation(
             materialize_every=checkpoint_interval,
             input_fingerprint=input_fingerprint,
         )
-        return driver.run(init, step, None, resume=resume)
+        return driver.run(init, step, resume=resume)

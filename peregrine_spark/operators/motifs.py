@@ -143,6 +143,9 @@ def motif_counts(
         with GraphContext(edges) as ctx, ThreadPoolExecutor(
             max_workers=max(1, len(cliques))
         ) as pool:
+            # the stats job fills the canonical-set and degree caches once;
+            # threads started on empty caches compute the same partitions
+            ctx.n_vertices
             futs = [
                 (name, pool.submit(
                     lambda nv=nv: clique_count(edges, nv).first()["n_cliques"]

@@ -3,25 +3,35 @@
 The Spark analog of the reference's per-pattern barrier loop
 (/root/reference/core/Peregrine.hh:1131-1150: reset task counter, release
 workers, wait at the barrier): here each superstep is one bounded-shuffle
-Spark job over the state DataFrame, and the "barrier" is the state
+Spark action over the state DataFrame, and the "barrier" is the state
 materialization between supersteps.
 
 Why materialize every superstep (SURVEY.md §7 hard parts):
 - iterative DataFrame plans grow without bound → write state to parquet and
   read it back, which truncates lineage AND is the resume snapshot — the
   cost pays twice.
-- per-partition lineage metrics (algo, superstep, partition_id, rows,
-  checksum, delta, wall_ms) are appended to a metrics table per superstep,
-  so a resumed run can prove it continued from exactly the state it wrote.
-  The rows are already on the driver, so the driver writes them itself:
-  one parquet file per superstep under ``<dir>/metrics/`` (pyarrow), with
-  no Spark job and no Python worker. The checkpoint dir must therefore be
-  visible to the driver, as ``_latest.json`` already requires.
+- the materializing action is the superstep's ONLY action. Every value
+  the driver reads after it — the algorithm's observed columns (its
+  convergence delta, PageRank's next dangling mass) and, with a
+  checkpoint dir, the lineage — is a ``pyspark.sql.Observation`` on that
+  action, computed by the tasks that write the state: no job re-reads
+  the state it just wrote. Columns named ``_*`` (a boundary value carried
+  through a chained interval) can be observed but are not written.
+- the lineage is one row per superstep for the whole state (algo,
+  superstep, partition_id -1, rows = |V|, checksum = Σ xxhash64 over the
+  written columns, delta, wall_ms), appended to a metrics table so a
+  resumed run can prove it continued from exactly the state it wrote.
+  The checksum is an order-insensitive sum, so it does not depend on how
+  the state is split into tasks or files. The driver writes the row
+  itself: one parquet file per superstep under ``<dir>/metrics/``
+  (pyarrow), with no Spark job and no Python worker. The checkpoint dir
+  must therefore be visible to the driver, as ``_latest.json`` already
+  requires.
 - the state is read back (and resumed) with its known schema, so no
   schema-inference job runs per superstep.
 
 With no checkpoint dir (tests/bench), ``localCheckpoint`` truncates lineage
-in memory and metrics stay driver-side only.
+in memory, observed columns are read the same way and no lineage is kept.
 """
 
 from __future__ import annotations
@@ -31,12 +41,12 @@ import json
 import os
 import time
 import uuid
-from collections.abc import Callable
+from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -67,26 +77,6 @@ class SuperstepResult:
     metrics: list[dict] = field(default_factory=list)
 
 
-def _partition_lineage(state: DataFrame) -> list[dict]:
-    """Per-partition (rows, checksum) — checksum is an order-insensitive
-    sum of row hashes, so it is stable under within-partition reordering."""
-    rows = (
-        state.withColumn("__pid", F.spark_partition_id())
-        .groupBy("__pid")
-        .agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.sum(
-                F.xxhash64(*[c for c in state.columns]).cast("decimal(38,0)")
-            ).alias("checksum"),
-        )
-        .collect()
-    )
-    return [
-        {"partition_id": r["__pid"], "rows": r["rows"], "checksum": str(r["checksum"])}
-        for r in rows
-    ]
-
-
 class SuperstepDriver:
     def __init__(
         self,
@@ -95,28 +85,24 @@ class SuperstepDriver:
         checkpoint_dir: str | None = None,
         max_iter: int = 100,
         tol: float | None = None,
-        metrics_lineage: bool | None = None,
         materialize_every: int = 1,
         input_fingerprint: str | None = None,
     ):
         # materialize_every > 1 chains that many supersteps into ONE Spark
         # job (no barrier, no state write between them) — per-superstep
         # fixed overhead (scheduling, checkpoint, planning) amortizes by
-        # the same factor. Convergence (delta_fn) is then checked only at
+        # the same factor. Convergence is then checked only at
         # materialization boundaries: valid for monotone algorithms (CC —
         # extra supersteps past fixpoint are no-ops) and for PageRank
         # (max|Δ| over an interval is a stricter criterion). Resume
         # granularity becomes the boundary, not the superstep.
-        # Lineage checksums are part of the checkpoint contract; without a
-        # checkpoint dir they'd be a pure extra pass per superstep.
-        if metrics_lineage is None:
-            metrics_lineage = checkpoint_dir is not None
+        # The lineage is kept exactly when there is a checkpoint dir: it is
+        # part of the checkpoint contract.
         self.spark = spark
         self.algo = algo
         self.dir = checkpoint_dir
         self.max_iter = max_iter
         self.tol = tol
-        self.metrics_lineage = metrics_lineage
         self.materialize_every = max(1, materialize_every)
         # identifies the input dataset (e.g. its path); a resume refuses to
         # continue a checkpoint written for a different algo or input
@@ -164,28 +150,49 @@ class SuperstepDriver:
         reader = self.spark.read
         return (reader.schema(schema) if schema else reader).parquet(path)
 
-    def _materialize(self, state: DataFrame, k: int) -> DataFrame:
+    def _materialize(
+        self, state: DataFrame, k: int, observed: Sequence[Column] = ()
+    ) -> tuple[DataFrame, dict]:
+        """Write (or locally checkpoint) the state's public columns in ONE
+        action that also computes `observed` and, with a checkpoint dir,
+        the lineage (rows, checksum); returns the materialized state and
+        the observed row."""
+        cols = [c for c in state.columns if not c.startswith("_")]
+        metrics = list(observed)
+        if self.dir:
+            dec = "decimal(38,0)"
+            metrics += [
+                F.count(F.lit(1)).alias("rows"),
+                F.coalesce(
+                    F.sum(F.xxhash64(*cols).cast(dec)), F.lit(0).cast(dec)
+                ).alias("checksum"),
+            ]
+        obs = Observation() if metrics else None
+        if obs is not None:
+            state = state.observe(obs, *metrics)
+        state = state.select(*cols)
         if self.dir:
             path = self._state_path(k)
             state.write.mode("overwrite").parquet(path)
-            return self._read_state(path, state.schema)
-        chk = state.localCheckpoint(eager=True)
-        return chk
+            out = self._read_state(path, state.schema)
+        else:
+            out = state.localCheckpoint(eager=True)
+        return out, (obs.get if obs is not None else {})
 
-    def _record(self, k: int, state: DataFrame, delta: float | None, wall_ms: float):
-        parts = _partition_lineage(state) if self.metrics_lineage else []
-        recs = [
-            {
-                "algo": self.algo,
-                "superstep": k,
-                "delta": delta,
-                "wall_ms": wall_ms,
-                **p,
-            }
-            for p in (parts or [{"partition_id": -1, "rows": -1, "checksum": ""}])
-        ]
+    def _record(
+        self, k: int, seen: dict, delta: float | None, wall_ms: float
+    ) -> dict:
+        rec = {
+            "algo": self.algo,
+            "superstep": k,
+            "partition_id": -1,
+            "rows": seen.get("rows", -1),
+            "checksum": str(seen["checksum"]) if "checksum" in seen else "",
+            "delta": delta,
+            "wall_ms": wall_ms,
+        }
         if self.dir:
-            self._write_metrics(k, recs)
+            self._write_metrics(k, rec)
             with open(os.path.join(self.dir, LATEST_FILE), "w") as f:
                 json.dump(
                     {
@@ -195,15 +202,15 @@ class SuperstepDriver:
                     },
                     f,
                 )
-        return recs
+        return rec
 
-    def _write_metrics(self, k: int, recs: list[dict]) -> None:
-        """Append one superstep's rows to <dir>/metrics/ as one parquet
+    def _write_metrics(self, k: int, rec: dict) -> None:
+        """Append one superstep's row to <dir>/metrics/ as one parquet
         file, written under a hidden name and renamed into place so a
         reader never sees a partial file."""
         mdir = os.path.join(self.dir, "metrics")
         os.makedirs(mdir, exist_ok=True)
-        table = pa.Table.from_pylist(recs, schema=METRICS_SCHEMA)
+        table = pa.Table.from_pylist([rec], schema=METRICS_SCHEMA)
         name = f"superstep-{k:06d}-{uuid.uuid4().hex}.parquet"
         tmp = os.path.join(mdir, "." + name)
         pq.write_table(table, tmp)
@@ -213,13 +220,16 @@ class SuperstepDriver:
         self,
         init_state: Callable[[], DataFrame] | DataFrame,
         step_fn: Callable[[DataFrame, int], DataFrame],
-        delta_fn: Callable[[DataFrame, DataFrame], float] | None = None,
+        observed: Sequence[Column] = (),
+        delta: Callable[[dict], float] | None = None,
         resume: bool = True,
     ) -> SuperstepResult:
-        """Iterate ``state ← step_fn(state, k)`` until ``delta_fn`` falls
-        below tol or max_iter supersteps ran. ``delta_fn(old, new)``
-        returns a driver scalar; None disables the convergence check
-        (fixed-iteration semantics, e.g. label propagation).
+        """Iterate ``state ← step_fn(state, k)`` until the delta falls
+        below tol or max_iter supersteps ran. ``observed`` are aggregate
+        columns over a stepped state, computed while it materializes;
+        ``delta`` maps their row to the superstep's delta. No ``delta``
+        means no convergence check (fixed-iteration semantics, e.g. label
+        propagation).
 
         resume=True + an existing checkpoint dir continues from the last
         written superstep (mid-iteration resume per the north rule).
@@ -230,8 +240,8 @@ class SuperstepDriver:
             start_k, state = resumed
         else:
             state = init_state() if callable(init_state) else init_state
-            state = self._materialize(state, 0)
-            self._record(0, state, None, 0.0)
+            state, seen = self._materialize(state, 0)
+            self._record(0, seen, None, 0.0)
 
         deltas: list[float] = []
         all_metrics: list[dict] = []
@@ -244,16 +254,16 @@ class SuperstepDriver:
             state = step_fn(state, k)
             if k % self.materialize_every != 0 and k < self.max_iter:
                 continue  # chain the next superstep into the same plan
-            state = self._materialize(state, k)
-            delta = delta_fn(boundary_state, state) if delta_fn else None
+            state, seen = self._materialize(state, k, observed)
+            d = delta(seen) if delta else None
             wall_ms = (time.time() - t0) * 1000.0
             boundary_state.unpersist() if self.dir is None else None
-            all_metrics.extend(self._record(k, state, delta, wall_ms))
+            all_metrics.append(self._record(k, seen, d, wall_ms))
             boundary_state = state
             t0 = time.time()
-            if delta is not None:
-                deltas.append(delta)
-                if self.tol is not None and delta < self.tol:
+            if d is not None:
+                deltas.append(d)
+                if self.tol is not None and d < self.tol:
                     converged = True
                     break
         return SuperstepResult(boundary_state, k, converged, deltas, all_metrics)

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from peregrine_spark import reference as ref
+from peregrine_spark.operators import iterative
 from peregrine_spark.operators.iterative import (
     connected_components,
     label_propagation,
@@ -143,20 +144,26 @@ def test_pagerank_resume_allclose(spark, tmp_path):
 
 
 def test_lineage_metrics_written(spark, tmp_path):
+    """Each superstep's lineage row, observed while its state was
+    written, equals the row count and Σ xxhash64 of that state's files
+    read back."""
     e = golden.to_spark_edges(spark, golden.DISCONNECTED)
     d = str(tmp_path / "ccm")
-    connected_components(spark, e, checkpoint_dir=d)
+    res = connected_components(spark, e, checkpoint_dir=d)
     m = spark.read.parquet(f"{d}/metrics")
     cols = set(m.columns)
     assert {"algo", "superstep", "partition_id", "rows", "checksum", "delta", "wall_ms"} <= cols
-    # every superstep accounted for, row counts per superstep sum to |V|
-    per_step = {
-        r.superstep: r.total
-        for r in m.groupBy("superstep").agg(
-            __import__("pyspark.sql.functions", fromlist=["sum"]).sum("rows").alias("total")
-        ).collect()
-    }
-    assert all(v == 10 for v in per_step.values())
+    recs = {r.superstep: r for r in m.collect()}
+    assert sorted(recs) == list(range(res.supersteps + 1))
+    for k, rec in recs.items():
+        state = spark.read.parquet(f"{d}/state/step={k}")
+        assert state.columns == ["id", "comp"]
+        got = state.agg(
+            F.count(F.lit(1)).alias("rows"),
+            F.sum(F.xxhash64(*state.columns).cast("decimal(38,0)")).alias("ck"),
+        ).first()
+        assert (rec.partition_id, rec.rows) == (-1, 10)
+        assert (rec.rows, rec.checksum) == (got.rows, str(got.ck))
 
 
 METRICS_TYPES = {
@@ -179,8 +186,8 @@ def _rows_per_superstep(m) -> dict[int, int]:
 
 def test_pagerank_checkpoint_metrics_table(spark, tmp_path):
     """A checkpointed PageRank, written then resumed, leaves a metrics/
-    table with the checkpoint format's column types, one set of
-    per-partition rows per superstep summing to |V|."""
+    table with the checkpoint format's column types and one whole-state
+    lineage row per superstep, whose rows are |V|."""
     pairs = both_dirs(golden.TWO_TRI_BRIDGE)
     e = golden.to_spark_edges(spark, pairs)
     d = str(tmp_path / "prm")
@@ -232,45 +239,117 @@ def _jobs_in_group(spark, group: str, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-# Spark jobs of one 2-superstep checkpointed PageRank on the golden graph
-# at 8 shuffle partitions (adaptive execution runs each shuffle stage as
-# a job of its own). It was 34 while the metrics rows went through
-# createDataFrame + a parquet write, every read-back inferred its schema
-# and the vertex setup took three shuffles, and 25 while every cache kept
-# the shuffle width (a coalesced one-partition vertex cache already
-# satisfies the setup aggregation's distribution, so that stage is gone).
-# Change it only together with the plan change that explains the new
+# Spark jobs of one 2-superstep checkpointed run on the golden graph at 8
+# shuffle partitions (adaptive execution runs each shuffle stage as a job
+# of its own). Each superstep runs one action, its state write: the delta,
+# PageRank's dangling mass and the lineage row are observed metrics of
+# that write. Before, the delta aggregation (2 jobs per superstep) and the
+# per-partition lineage (2 jobs per written state, the initial one too)
+# re-read every written state: PageRank 24, CC 27, LP 25 (no delta).
+# PageRank was 34 while the metrics rows went through createDataFrame + a
+# parquet write, every read-back inferred its schema and the vertex setup
+# took three shuffles, and 25 while every cache kept the shuffle width.
+# Change these only together with the plan change that explains the new
 # number.
-PAGERANK_CHECKPOINT_JOBS = 24
+PAGERANK_CHECKPOINT_JOBS = 14
+CC_CHECKPOINT_JOBS = 17
+LP_CHECKPOINT_JOBS = 19
 
 
-def test_pagerank_checkpoint_job_count(spark, tmp_path):
+def _checkpoint_jobs(spark, tmp_path, algo: str, run) -> int:
     pairs = both_dirs(golden.TWO_TRI_BRIDGE)
     e = golden.to_spark_edges(spark, pairs)
     e.cache().count()
-    d = str(tmp_path / "prjobs")
-    n = _jobs_in_group(
-        spark,
-        "test-pagerank-jobs",
-        lambda: pagerank(spark, e, tol=1e-12, max_iter=2, checkpoint_dir=d),
-    )
+    d = str(tmp_path / "jobs")
+    n = _jobs_in_group(spark, f"test-{algo}-jobs", lambda: run(e, d))
     e.unpersist()
+    return n
+
+
+def test_pagerank_checkpoint_job_count(spark, tmp_path):
+    n = _checkpoint_jobs(
+        spark, tmp_path, "pagerank",
+        lambda e, d: pagerank(spark, e, tol=1e-12, max_iter=2, checkpoint_dir=d),
+    )
     assert n == PAGERANK_CHECKPOINT_JOBS
+
+
+def test_cc_checkpoint_job_count(spark, tmp_path):
+    n = _checkpoint_jobs(
+        spark, tmp_path, "cc",
+        lambda e, d: connected_components(spark, e, max_iter=2, checkpoint_dir=d),
+    )
+    assert n == CC_CHECKPOINT_JOBS
+
+
+def test_lp_checkpoint_job_count(spark, tmp_path):
+    n = _checkpoint_jobs(
+        spark, tmp_path, "lp",
+        lambda e, d: label_propagation(spark, e, n_iter=2, checkpoint_dir=d),
+    )
+    assert n == LP_CHECKPOINT_JOBS
+
+
+def test_pagerank_fixed_k_dangling_vs_oracle(spark, tmp_path):
+    """Fixed-K PageRank on a graph with dangling vertices: the dangling
+    mass comes from the setup row, then from each write's observation —
+    and, resumed from a checkpoint, from one aggregation."""
+    pairs = DIRECTED_DANGLING
+    e = golden.to_spark_edges(spark, pairs)
+    want = ref.pagerank(pairs, n_iter=5)
+    got = pr_dict(pagerank(spark, e, tol=None, max_iter=5))
+    assert set(got) == set(want)
+    assert max(abs(got[k] - want[k]) for k in want) < 1e-12
+    d = str(tmp_path / "prd")
+    pagerank(spark, e, tol=None, max_iter=2, checkpoint_dir=d)
+    resumed = pr_dict(pagerank(spark, e, tol=None, max_iter=5, checkpoint_dir=d))
+    assert max(abs(resumed[k] - want[k]) for k in want) < 1e-12
+
+
+def test_lp_signed_extreme_labels_vs_oracle(spark):
+    """The packed argmax key takes any signed 64-bit label, the extremes
+    included, and still breaks count ties toward the smallest label."""
+    ids = {1: -(1 << 63), 2: (1 << 63) - 1, 3: -1, 4: 0, 5: 7, 6: -(1 << 62)}
+    pairs = np.array(
+        [(ids[a], ids[b]) for a, b in golden.TWO_TRI_BRIDGE], dtype=np.int64
+    )
+    e = golden.to_spark_edges(spark, pairs)
+    for n_iter in (1, 3):
+        res = label_propagation(spark, e, n_iter=n_iter)
+        assert comp_dict(res, "label") == ref.label_propagation(pairs, n_iter=n_iter)
+
+
+def test_lp_count_bound_raises_before_supersteps(spark, monkeypatch):
+    """A degree at or above the packed key's count bound is refused with
+    a clear error before any superstep runs."""
+    monkeypatch.setattr(iterative, "LP_MAX_COUNT", 3)  # star_hub's hub: 50
+    e = golden.to_spark_edges(spark, golden.ALL["star_hub"])
+    with pytest.raises(ValueError, match="packed argmax key"):
+        label_propagation(spark, e, n_iter=2)
 
 
 def test_checkpoint_interval_equivalence(spark):
     """Chaining supersteps (materialize_every>1) must not change results:
-    CC exactly; PageRank to float-noise."""
+    CC exactly; PageRank to float-noise, with one delta per boundary."""
     e = golden.to_spark_edges(spark, golden.DISCONNECTED)
     a = connected_components(spark, e, checkpoint_interval=1)
     b = connected_components(spark, e, checkpoint_interval=3)
     assert comp_dict(a) == comp_dict(b)
 
-    pe = golden.to_spark_edges(spark, both_dirs(golden.TWO_TRI_BRIDGE))
+    pairs = both_dirs(golden.TWO_TRI_BRIDGE)
+    pe = golden.to_spark_edges(spark, pairs)
     p1 = pagerank(spark, pe, tol=None, max_iter=6, checkpoint_interval=1, resume=False)
     p3 = pagerank(spark, pe, tol=None, max_iter=6, checkpoint_interval=3, resume=False)
     d1, d3 = pr_dict(p1), pr_dict(p3)
     assert max(abs(d1[k] - d3[k]) for k in d1) < 1e-12
+    # chained deltas compare boundary states: max|r3 − r0|, max|r6 − r3|
+    r3, r6 = ref.pagerank(pairs, n_iter=3), ref.pagerank(pairs, n_iter=6)
+    want = [
+        max(abs(r3[k] - 1.0 / len(r3)) for k in r3),
+        max(abs(r6[k] - r3[k]) for k in r3),
+    ]
+    assert len(p3.deltas) == 2 and len(p1.deltas) == 6
+    assert max(abs(a - b) for a, b in zip(p3.deltas, want)) < 1e-12
 
 
 def test_cc_isolated_vertices(spark):

@@ -311,3 +311,23 @@ def test_superstep_gather_shape(spark, monkeypatch, algo, hubs):
         assert state_side.count("Exchange") == 1
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     assert widths == [[n_part] * (2 if hubs else 1)]
+
+
+def test_lp_superstep_hash_aggregates(spark):
+    # LP's argmax is a max over one packed decimal key per vertex, which
+    # hash-aggregates; a max over a struct planned SortAggregate over a
+    # Sort of the message counts in every superstep
+    pairs = np.asarray(golden.TWO_TRI_BRIDGE)
+    e = golden.to_spark_edges(spark, np.concatenate([pairs, pairs[:, ::-1]]))
+    plans = executed_plans(
+        spark, lambda: iterative.label_propagation(spark, e, n_iter=2)
+    )
+    steps = [
+        [n for n, _, _ in _top_level_nodes(p)]
+        for p in plans
+        if "ShuffledHashJoin Inner" in p
+    ]
+    assert len(steps) == 2
+    for names in steps:
+        assert "SortAggregate" not in names and "Sort" not in names
+        assert names.count("HashAggregate") >= 2
