@@ -22,22 +22,6 @@ from pyspark.sql import functions as F
 _P = (1 << 31) - 1
 
 
-def exact_duplicates(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """(hash, n_docs, doc_ids): groups of byte-identical documents.
-    sha2-256 — collision-safe at any corpus size."""
-    h = df.select(F.col(id_col).alias("id"), F.sha2(F.col(text_col), 256).alias("hash"))
-    return (
-        h.groupBy("hash")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sort_array(F.collect_list("id")).alias("doc_ids"),
-        )
-        .filter(F.col("n_docs") > 1)
-    )
-
-
 def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Keep one representative (min id) per identical text."""
     w_hash = df.withColumn("_h", F.sha2(F.col(text_col), 256))

@@ -1,14 +1,25 @@
 """Labelled-pattern operators: label discovery (reference C9,
 /root/reference/core/PatternMatching.hh:1219-1284) and the FSM driver loop
 (apps/fsm.cc:94-111): match → MNI support filter → extend → repeat.
+
+The labelled star operators (2-/3-star discovery and MNI support) read
+the adjacency from a `graph.GraphContext`, as the reference's matchers
+read `labels[]` from the one `DataGraph` that holds the adjacency
+(core/DataGraph.hh:89-98). Each builds the labelled closure and the
+per-center label histogram over the context's closure, caches what its
+plan reads more than once in the context, collects its dimension-sized
+result and returns it as a local frame: the context releases the caches
+on exit.
 """
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from peregrine_spark.operators.graph import undirected
+from peregrine_spark.operators.graph import GraphContext, undirected
 from peregrine_spark.operators.motifs import mni_support
 from peregrine_spark.operators.patterns import match_pattern
 from peregrine_spark.plans.generators import extend_by_edge
@@ -16,89 +27,67 @@ from peregrine_spark.plans.patterns import SmallGraph
 from peregrine_spark.session import local_frame
 
 
-# label tables up to this many rows (≈ |V|) attach via map-side
-# broadcast joins — the same 20M-vertex order as orient()'s degree
-# broadcast. Past it, the shuffle path with explicit hub splitting and
-# a balancing repartition takes over (a 100-TB graph's label table is a
-# vertex-sized fact table, not a dimension).
-BROADCAST_LABELS_LIMIT = 20_000_000
+def _label_dim(labels: DataFrame) -> Callable[[DataFrame], DataFrame]:
+    """The hint for joins against a label-sized side: `F.broadcast` when
+    Catalyst's size estimate of the label table is within the session's
+    spark.sql.autoBroadcastJoinThreshold, else no hint (a shuffle join
+    that AQE's skew-join splitting may fan out). The estimate is optimizer
+    statistics — the file size of a parquet scan — so the check starts no
+    Spark job. A table Catalyst cannot size (a createDataFrame over a
+    Python list scans an RDD) gets no hint, as Spark's own planner would
+    not broadcast it either."""
+    jss = labels.sparkSession._jsparkSession
+    limit = jss.sessionState().conf().autoBroadcastJoinThreshold()
+    size = labels._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return F.broadcast if size <= limit else (lambda df: df)
 
 
 def _leaf_label_hist(
-    edges: DataFrame, labels: DataFrame, caches: list[DataFrame] | None = None
-) -> tuple[DataFrame, DataFrame, list[int], bool]:
-    """(hist, lv, hubs, small): the labelled undirected adjacency
-    lv(c, v, vl) and the per-center leaf-label histogram hist(c, ll, cnt)
-    over it — Σ deg rows through ONE label join + ONE groupBy, never a
+    ctx: GraphContext, labels: DataFrame, dim: Callable[[DataFrame], DataFrame]
+) -> tuple[DataFrame, DataFrame]:
+    """(hist, lv): the labelled closure lv(c, v, vl) over the context's
+    closure and the per-center leaf-label histogram hist(c, ll, cnt) over
+    it — Σ deg rows through ONE label join + ONE groupBy, never a
     C(deg, k) wedge fan-out. All star-shaped discovery/support tables
     derive from these by binomial arithmetic (the reference's order-group
     counting trick, D3, core/PatternMatching.hh:1788-1826, applied to
-    label multiplicities).
+    label multiplicities). The hist groupBy is map-side combinable, so
+    even a mega-hub's Σ deg rows collapse before its one shuffle.
 
-    small=True (labels table ≤ BROADCAST_LABELS_LIMIT rows): the label
-    join is a map-side broadcast — no repartition, no hub-detection
-    actions, and hist/lv come back uncached. The hist groupBy is map-side
-    combinable, so even a mega-hub's Σ deg rows collapse before its one
-    shuffle. Every caller then scope-caches what its plan reads more than
-    once (hist, or lv and the center-labelled hist), collects its
-    dimension-sized result and drops those caches before returning:
-    runtime exchange reuse does NOT dedupe the repeated subtrees (see
-    discover_star_labels).
-
-    small=False fallback: the previous shuffle path — balancing
-    round-robin repartition (a mega-hub's edges arrive CLUSTERED in the
-    source layout; measured 30×-median straggler on the 23M-edge zipf
-    profile), hub keys detected once, hub rows of the label join take
-    the broadcast path.
-
-    `caches`: optional list the fallback's .cache()d DataFrames are
-    appended to, so a long-lived driver (fsm runs this per level) can
-    unpersist them once its action completes."""
-    from peregrine_spark.operators.skew import auto_hub_threshold, hub_keys, hub_split_join
-
+    Both come back uncached: each caller caches what its plan reads more
+    than once — runtime exchange reuse does NOT dedupe the repeated
+    subtrees (see discover_star_labels)."""
     ll = labels.select(F.col("id").alias("dst"), F.col("label").alias("vl"))
-    if labels.count() <= BROADCAST_LABELS_LIMIT:
-        und = undirected(edges)
-        lv = und.join(F.broadcast(ll), "dst").select(
-            F.col("src").alias("c"), F.col("dst").alias("v"), "vl"
-        )
-        hist = lv.groupBy("c", F.col("vl").alias("ll")).agg(
-            F.count(F.lit(1)).alias("cnt")
-        )
-        return hist, lv, [], True
-    und = undirected(edges).repartition(
-        edges.sparkSession.sparkContext.defaultParallelism * 2
-    ).cache()
-    if caches is not None:
-        caches.append(und)
-    # quarter of the generic hub threshold: downstream star joins fan
-    # each adjacency row ×L (label pairs), so a center at a fraction of
-    # the usual hub bar already dominates a task
-    in_deg = und.groupBy("dst").agg(F.count(F.lit(1)).alias("n"))
-    thr = max(16_384, auto_hub_threshold(und.count()) // 4)
-    hubs = hub_keys(in_deg, "dst", "n", thr)
-    lv = (
-        hub_split_join(und, ll, "dst", hubs)
-        .select(F.col("src").alias("c"), F.col("dst").alias("v"), "vl")
-        .cache()
+    lv = ctx.und.join(dim(ll), "dst").select(
+        F.col("src").alias("c"), F.col("dst").alias("v"), "vl"
     )
-    if caches is not None:
-        caches.append(lv)
     hist = lv.groupBy("c", F.col("vl").alias("ll")).agg(
         F.count(F.lit(1)).alias("cnt")
     )
-    return hist, lv, hubs, False
+    return hist, lv
 
 
 def _center_labelled(
-    hist: DataFrame, labels: DataFrame, small: bool = False
+    hist: DataFrame, labels: DataFrame, dim: Callable[[DataFrame], DataFrame]
 ) -> DataFrame:
     """hist + the center's own label (cl). Keyed on c: per-center row
     count is bounded by the number of distinct labels, so this join has
-    no degree skew by construction. Broadcast when the label table is a
-    dimension (small=True) — map-side, no exchange."""
+    no degree skew by construction."""
     lc = labels.select(F.col("id").alias("c"), F.col("label").alias("cl"))
-    return hist.join(F.broadcast(lc) if small else lc, "c")
+    return hist.join(dim(lc), "c")
+
+
+def _label_state(
+    ctx: GraphContext, labels: DataFrame
+) -> tuple[DataFrame, DataFrame, Callable[[DataFrame], DataFrame]]:
+    """(lv, hc, dim) for the MNI star supports: the labelled closure and
+    the center-labelled histogram, both cached in `ctx` (the first action
+    over hc fills both). fsm fills them once for its two star threads."""
+    dim = _label_dim(labels)
+    hist, lv = _leaf_label_hist(ctx, labels, dim)
+    lv = ctx.cache(lv)
+    hc = ctx.cache(_center_labelled(hist, labels, dim))
+    return lv, hc, dim
 
 
 def discover_edge_labels(edges: DataFrame, labels: DataFrame) -> DataFrame:
@@ -121,9 +110,7 @@ def discover_edge_labels(edges: DataFrame, labels: DataFrame) -> DataFrame:
     )
 
 
-def discover_star_labels(
-    edges: DataFrame, labels: DataFrame, caches: list[DataFrame] | None = None
-) -> DataFrame:
+def discover_star_labels(edges: DataFrame, labels: DataFrame) -> DataFrame:
     """(center_label, l1, l2, n) for 2-stars with leaf labels in canonical
     (sorted) order — the reference's 2-star discovery with the PROCESS-
     macro label canonicalization (core/PatternMatching.hh:83-106).
@@ -133,46 +120,36 @@ def discover_star_labels(
     n = cnt(l1)·cnt(l2) for l1 < l2, C(cnt, 2) for l1 = l2. The histogram
     self-join is keyed on the center with ≤ |labels| rows per key, so the
     zipf mega-hub costs C(L, 2) rows instead of C(deg, 2) ≈ 10¹²."""
-    hist, _, _, small = _leaf_label_hist(edges, labels, caches)
-    hist = hist.cache()
-    if small:
-        # EAGER small path: the heavy chain (closure distinct → broadcast
-        # label join → histogram groupBy) runs exactly ONCE into a scoped
-        # cache; the ≤ L³-row result is collected and returned as a local
-        # DataFrame, and the cache is dropped before returning — no
-        # leaked storage, no per-branch recompute (runtime exchange
-        # reuse did NOT dedupe the six hist subtrees: measured 5 → 13 s)
-        hist.count()
-    elif caches is not None:
-        caches.append(hist)
-    h1 = hist.select("c", F.col("ll").alias("l1"), F.col("cnt").alias("n1"))
-    h2 = hist.select("c", F.col("ll").alias("l2"), F.col("cnt").alias("n2"))
-    diff = (
-        h1.join(h2, "c")
-        .filter(F.col("l1") < F.col("l2"))
-        .select("c", "l1", "l2", (F.col("n1") * F.col("n2")).alias("term"))
-    )
-    same = hist.filter(F.col("cnt") >= 2).select(
-        "c",
-        F.col("ll").alias("l1"),
-        F.col("ll").alias("l2"),
-        F.expr("cnt * (cnt - 1) DIV 2").alias("term"),
-    )
-    out = (
-        _center_labelled(diff.unionByName(same), labels, small)
-        .groupBy(F.col("cl").alias("center_label"), "l1", "l2")
-        .agg(F.sum("term").alias("n"))
-    )
-    if small:
+    with GraphContext(edges) as ctx:
+        dim = _label_dim(labels)
+        hist, _ = _leaf_label_hist(ctx, labels, dim)
+        # the heavy chain (closure → label join → histogram groupBy) runs
+        # exactly ONCE into the context's cache; runtime exchange reuse did
+        # NOT dedupe the hist subtrees (measured 5 → 13 s)
+        ctx.cache(hist).count()
+        h1 = hist.select("c", F.col("ll").alias("l1"), F.col("cnt").alias("n1"))
+        h2 = hist.select("c", F.col("ll").alias("l2"), F.col("cnt").alias("n2"))
+        diff = (
+            h1.join(h2, "c")
+            .filter(F.col("l1") < F.col("l2"))
+            .select("c", "l1", "l2", (F.col("n1") * F.col("n2")).alias("term"))
+        )
+        same = hist.filter(F.col("cnt") >= 2).select(
+            "c",
+            F.col("ll").alias("l1"),
+            F.col("ll").alias("l2"),
+            F.expr("cnt * (cnt - 1) DIV 2").alias("term"),
+        )
+        out = (
+            _center_labelled(diff.unionByName(same), labels, dim)
+            .groupBy(F.col("cl").alias("center_label"), "l1", "l2")
+            .agg(F.sum("term").alias("n"))
+        )
         rows = out.collect()
-        hist.unpersist()
-        return local_frame(edges.sparkSession, rows, out.schema)
-    return out
+    return local_frame(edges.sparkSession, rows, out.schema)
 
 
-def discover_star_labels_3(
-    edges: DataFrame, labels: DataFrame, caches: list[DataFrame] | None = None
-) -> DataFrame:
+def discover_star_labels_3(edges: DataFrame, labels: DataFrame) -> DataFrame:
     """(center_label, l1, l2, l3, n) for 3-stars with leaf labels in
     canonical (sorted) order — the reference's 3-star DISCOVER_LABELS
     expansion (core/PatternMatching.hh:1219-1284), which seeds 3-FSM.
@@ -184,53 +161,48 @@ def discover_star_labels_3(
         l1 < l2 = l3 : n1·C(n2, 2)       l1 = l2 = l3 : C(n1, 3)
     Histogram self-joins are keyed on the center with ≤ |labels| rows per
     key — the zipf mega-hub costs C(L+2, 3) rows instead of C(deg, 3)."""
-    hist, _, _, small = _leaf_label_hist(edges, labels, caches)
-    hist = hist.cache()
-    if small:
-        # EAGER small path — see discover_star_labels (here the triple
-        # expansion references hist SIX times)
-        hist.count()
-    elif caches is not None:
-        caches.append(hist)
-    h1 = hist.select("c", F.col("ll").alias("l1"), F.col("cnt").alias("n1"))
-    h2 = hist.select("c", F.col("ll").alias("l2"), F.col("cnt").alias("n2"))
-    h3 = hist.select("c", F.col("ll").alias("l3"), F.col("cnt").alias("n3"))
-    distinct3 = (
-        h1.join(h2, "c")
-        .filter(F.col("l1") < F.col("l2"))
-        .join(h3, "c")
-        .filter(F.col("l2") < F.col("l3"))
-        .select(
-            "c", "l1", "l2", "l3",
-            (F.col("n1") * F.col("n2") * F.col("n3")).alias("term"),
+    with GraphContext(edges) as ctx:
+        dim = _label_dim(labels)
+        hist, _ = _leaf_label_hist(ctx, labels, dim)
+        # see discover_star_labels (here the triple expansion references
+        # hist SIX times)
+        ctx.cache(hist).count()
+        h1 = hist.select("c", F.col("ll").alias("l1"), F.col("cnt").alias("n1"))
+        h2 = hist.select("c", F.col("ll").alias("l2"), F.col("cnt").alias("n2"))
+        h3 = hist.select("c", F.col("ll").alias("l3"), F.col("cnt").alias("n3"))
+        distinct3 = (
+            h1.join(h2, "c")
+            .filter(F.col("l1") < F.col("l2"))
+            .join(h3, "c")
+            .filter(F.col("l2") < F.col("l3"))
+            .select(
+                "c", "l1", "l2", "l3",
+                (F.col("n1") * F.col("n2") * F.col("n3")).alias("term"),
+            )
         )
-    )
-    # one ordered label pair (la < lb) serves both pair-position cases
-    pair = h1.join(h3, "c").filter(F.col("l1") < F.col("l3"))
-    pair_first = pair.filter(F.col("n1") >= 2).select(
-        "c", "l1", F.col("l1").alias("l2"), "l3",
-        (F.expr("n1 * (n1 - 1) DIV 2") * F.col("n3")).alias("term"),
-    )
-    pair_last = pair.filter(F.col("n3") >= 2).select(
-        "c", "l1", F.col("l3").alias("l2"), "l3",
-        (F.col("n1") * F.expr("n3 * (n3 - 1) DIV 2")).alias("term"),
-    )
-    triple = hist.filter(F.col("cnt") >= 3).select(
-        "c",
-        F.col("ll").alias("l1"), F.col("ll").alias("l2"), F.col("ll").alias("l3"),
-        F.expr("cnt * (cnt - 1) * (cnt - 2) DIV 6").alias("term"),
-    )
-    terms = distinct3.unionByName(pair_first).unionByName(pair_last).unionByName(triple)
-    out = (
-        _center_labelled(terms, labels, small)
-        .groupBy(F.col("cl").alias("center_label"), "l1", "l2", "l3")
-        .agg(F.sum("term").alias("n"))
-    )
-    if small:
+        # one ordered label pair (la < lb) serves both pair-position cases
+        pair = h1.join(h3, "c").filter(F.col("l1") < F.col("l3"))
+        pair_first = pair.filter(F.col("n1") >= 2).select(
+            "c", "l1", F.col("l1").alias("l2"), "l3",
+            (F.expr("n1 * (n1 - 1) DIV 2") * F.col("n3")).alias("term"),
+        )
+        pair_last = pair.filter(F.col("n3") >= 2).select(
+            "c", "l1", F.col("l3").alias("l2"), "l3",
+            (F.col("n1") * F.expr("n3 * (n3 - 1) DIV 2")).alias("term"),
+        )
+        triple = hist.filter(F.col("cnt") >= 3).select(
+            "c",
+            F.col("ll").alias("l1"), F.col("ll").alias("l2"), F.col("ll").alias("l3"),
+            F.expr("cnt * (cnt - 1) * (cnt - 2) DIV 6").alias("term"),
+        )
+        terms = distinct3.unionByName(pair_first).unionByName(pair_last).unionByName(triple)
+        out = (
+            _center_labelled(terms, labels, dim)
+            .groupBy(F.col("cl").alias("center_label"), "l1", "l2", "l3")
+            .agg(F.sum("term").alias("n"))
+        )
         rows = out.collect()
-        hist.unpersist()
-        return local_frame(edges.sparkSession, rows, out.schema)
-    return out
+    return local_frame(edges.sparkSession, rows, out.schema)
 
 
 def mni_edge_supports(edges: DataFrame, labels: DataFrame) -> DataFrame:
@@ -272,14 +244,11 @@ def mni_edge_supports(edges: DataFrame, labels: DataFrame) -> DataFrame:
     return diff.unionByName(same)
 
 
-def mni_star2_supports(
-    edges: DataFrame, labels: DataFrame, caches: list[DataFrame] | None = None
-) -> DataFrame:
+def mni_star2_supports(edges: DataFrame, labels: DataFrame) -> DataFrame:
     """(center_label, l1, l2, support): exact MNI support of every
     labelled 2-star pattern (leaf labels sorted) — the FSM level-2 support
-    table, fully distributed. Orbits: {center} always its own; the two
-    leaves form ONE orbit iff l1 = l2 (domain = union of both positions),
-    else two.
+    table. Orbits: {center} always its own; the two leaves form ONE orbit
+    iff l1 = l2 (domain = union of both positions), else two.
 
     Never materializes a wedge, and leaf domains never fan out over
     patterns (a naive (adjacency x patterns-per-center) join costs xL per
@@ -291,8 +260,8 @@ def mni_star2_supports(
         two masks (labels with cnt ≥ 1 / cnt ≥ 2), each stored as
         ⌈L/64⌉ long columns (one per 64-label CHUNK of the label space —
         label domains beyond 64 just widen the row, the plan shape is
-        unchanged); ONE Σ deg-row join of the adjacency against them
-        (hub centers broadcast); per leaf occurrence, the per-chunk mask
+        unchanged); ONE Σ deg-row join of the labelled closure against
+        them; per leaf occurrence, the per-chunk mask
         of "other labels this center can supply" is
         (m1 & ~bit(vl)) | (m2 & bit(vl)) — the l1 = l2 merged orbit
         needs a SECOND same-label leaf, hence m2; bit_or-reduce to one
@@ -301,187 +270,128 @@ def mni_star2_supports(
         conditional sums per (center_label, leaf_label) group yield every
         pattern's domain size in one pass. No join output exceeds its
         input: everything is bounded by Σ deg rows + |V|·L mask rows.
+    The ≤ L³-row center table and the ≤ L²-row domain sums are collected
+    and finished on the driver (the all-Spark tail was ~10 extra
+    sub-second stages on ≤ 625-row data — stage latency, not work).
     """
-    from peregrine_spark.operators.skew import hub_split_join
+    with GraphContext(edges) as ctx:
+        # lv feeds both the histogram chain and the leaf gather, hc four
+        # subtrees; the centers collect below fills both caches
+        lv, hc, dim = _label_state(ctx, labels)
+        h1 = hc.select("c", "cl", F.col("ll").alias("l1"))
+        h2 = hc.select("c", F.col("ll").alias("l2"))
+        qual_diff = (
+            h1.join(h2, "c")
+            .filter(F.col("l1") < F.col("l2"))
+            .select("c", "cl", "l1", "l2")
+        )
+        qual_same = hc.filter(F.col("cnt") >= 2).select(
+            "c", "cl", F.col("ll").alias("l1"), F.col("ll").alias("l2")
+        )
+        qual = qual_diff.unionByName(qual_same)  # (pattern, center), distinct
+        centers = qual.groupBy("cl", "l1", "l2").agg(
+            F.count(F.lit(1)).alias("_dc")
+        )
 
-    hist, lv, hubs, small = _leaf_label_hist(edges, labels, caches)
-    if small:
-        # EAGER small path: lv feeds both the histogram chain and the
-        # leaf gather, hc four subtrees — scope-cache both; the first
-        # collect below materializes them, the ≤ L²/L³-row tails are
-        # finished DRIVER-side, and the caches are dropped before
-        # returning (the all-Spark tail was ~10 extra sub-second stages
-        # on ≤ 625-row data — stage latency, not work; guide §1.2)
-        lv = lv.cache()
-    hc = _center_labelled(hist, labels, small).cache()
-    if not small and caches is not None:
-        caches.append(hc)
-    h1 = hc.select("c", "cl", F.col("ll").alias("l1"))
-    h2 = hc.select("c", F.col("ll").alias("l2"))
-    qual_diff = (
-        h1.join(h2, "c")
-        .filter(F.col("l1") < F.col("l2"))
-        .select("c", "cl", "l1", "l2")
-    )
-    qual_same = hc.filter(F.col("cnt") >= 2).select(
-        "c", "cl", F.col("ll").alias("l1"), F.col("ll").alias("l2")
-    )
-    qual = qual_diff.unionByName(qual_same)  # (pattern, center), distinct
-    centers = qual.groupBy("cl", "l1", "l2").agg(
-        F.count(F.lit(1)).alias("_dc")
-    )
-
-    if small:
-        # the label table is a dimension: its distinct values are a
-        # SUPERSET of the leaf labels actually occurring — extra labels
-        # only add zero-domain rows that die in the final inner join
-        # against `centers`, and reading them from the table avoids an
-        # extra full pass over the und→lv→hist chain
+        # the label table's distinct values are a SUPERSET of the leaf
+        # labels actually occurring — extra labels only add zero-domain
+        # rows that no center row looks up, and reading them from the
+        # table avoids an extra full pass over the closure → lv → hist
+        # chain
         lab_vals = sorted(
             r["label"] for r in labels.select("label").distinct().collect()
         )
-    else:
-        lab_vals = sorted(r.ll for r in hist.select("ll").distinct().collect())
-    bit = {l: i for i, l in enumerate(lab_vals)}
-    n_chunks = (len(lab_vals) + 63) // 64
-    # label → (chunk index, bit-within-chunk value): labels beyond 64 land
-    # in further 64-bit mask columns — same gather, wider rows
-    cmap = F.create_map(*[F.lit(x) for l in lab_vals for x in (l, bit[l] // 64)])
+        bit = {l: i for i, l in enumerate(lab_vals)}
+        n_chunks = (len(lab_vals) + 63) // 64
+        # label → (chunk index, bit-within-chunk value): labels beyond 64
+        # land in further 64-bit mask columns — same gather, wider rows
+        cmap = F.create_map(*[F.lit(x) for l in lab_vals for x in (l, bit[l] // 64)])
 
-    def _sbit(k: int) -> int:
-        """k-th bit as a SIGNED 64-bit literal (bit 63 = Long.MIN_VALUE —
-        a plain 1 << 63 overflows the long literal)."""
-        v = 1 << k
-        return v - (1 << 64) if v >= 1 << 63 else v
+        def _sbit(k: int) -> int:
+            """k-th bit as a SIGNED 64-bit literal (bit 63 = Long.MIN_VALUE
+            — a plain 1 << 63 overflows the long literal)."""
+            v = 1 << k
+            return v - (1 << 64) if v >= 1 << 63 else v
 
-    pmap = F.create_map(
-        *[F.lit(x) for l in lab_vals for x in (l, _sbit(bit[l] % 64))]
-    )
+        pmap = F.create_map(
+            *[F.lit(x) for l in lab_vals for x in (l, _sbit(bit[l] % 64))]
+        )
 
-    def chunk_bit(label_col, ci: int):
-        """Bit value of `label_col` inside chunk ci (0 when it lives in
-        another chunk)."""
-        return (
-            F.when(
-                F.element_at(cmap, label_col) == ci, F.element_at(pmap, label_col)
+        def chunk_bit(label_col, ci: int):
+            """Bit value of `label_col` inside chunk ci (0 when it lives in
+            another chunk)."""
+            return (
+                F.when(
+                    F.element_at(cmap, label_col) == ci, F.element_at(pmap, label_col)
+                )
+                .otherwise(0)
+                .cast("long")
             )
-            .otherwise(0)
-            .cast("long")
+
+        masks = hc.groupBy("c", "cl").agg(
+            *[
+                F.bit_or(chunk_bit(F.col("ll"), ci)).alias(f"m1_{ci}")
+                for ci in range(n_chunks)
+            ],
+            *[
+                F.bit_or(
+                    F.when(F.col("cnt") >= 2, chunk_bit(F.col("ll"), ci))
+                    .otherwise(F.lit(0).cast("long"))
+                ).alias(f"m2_{ci}")
+                for ci in range(n_chunks)
+            ],
         )
 
-    masks = hc.groupBy("c", "cl").agg(
-        *[
-            F.bit_or(chunk_bit(F.col("ll"), ci)).alias(f"m1_{ci}")
-            for ci in range(n_chunks)
-        ],
-        *[
-            F.bit_or(
-                F.when(F.col("cnt") >= 2, chunk_bit(F.col("ll"), ci))
-                .otherwise(F.lit(0).cast("long"))
-            ).alias(f"m2_{ci}")
-            for ci in range(n_chunks)
-        ],
-    )
+        def avail(ci: int):
+            vbit = chunk_bit(F.col("vl"), ci)
+            return (F.col(f"m1_{ci}").bitwiseAND(F.bitwise_not(vbit))).bitwiseOR(
+                F.col(f"m2_{ci}").bitwiseAND(vbit)
+            )
 
-    def avail(ci: int):
-        vbit = chunk_bit(F.col("vl"), ci)
-        return (F.col(f"m1_{ci}").bitwiseAND(F.bitwise_not(vbit))).bitwiseOR(
-            F.col(f"m2_{ci}").bitwiseAND(vbit)
+        # masks is one narrow row per (center, center-label) — |V| rows of
+        # 2·⌈L/64⌉ longs, label-table sized: under the label table's hint
+        # the Σ deg-row gather join runs map-side (no shuffle of lv), and
+        # the bit_or groupBy that follows is map-side combinable anyway
+        vm = (
+            lv.join(dim(masks), "c")
+            .select(
+                "v", "vl", "cl",
+                *[avail(ci).alias(f"_av{ci}") for ci in range(n_chunks)],
+            )
+            .groupBy("v", "vl", "cl")
+            .agg(*[F.bit_or(f"_av{ci}").alias(f"_m{ci}") for ci in range(n_chunks)])
         )
-
-    # masks is one narrow row per (center, center-label) — |V| rows of
-    # 2·⌈L/64⌉ longs. When |V| is dimension-sized, BROADCAST it: the
-    # Σ deg-row gather join runs map-side (no shuffle of lv, no hub
-    # logic), and the bit_or groupBy that follows is map-side combinable
-    # anyway.
-    gather = (
-        lv.join(F.broadcast(masks), "c")
-        if small
-        else hub_split_join(lv, masks, "c", hubs)
-    )
-    vm = (
-        gather
-        .select(
-            "v", "vl", "cl", *[avail(ci).alias(f"_av{ci}") for ci in range(n_chunks)]
+        sums = vm.groupBy("cl", F.col("vl").alias("_lp")).agg(
+            *[
+                F.sum(
+                    (
+                        F.col(f"_m{bit[lo] // 64}").bitwiseAND(
+                            F.lit(_sbit(bit[lo] % 64))
+                        )
+                        != 0
+                    ).cast("long")
+                ).alias(f"_b{bit[lo]}")
+                for lo in lab_vals
+            ]
         )
-        .groupBy("v", "vl", "cl")
-        .agg(*[F.bit_or(f"_av{ci}").alias(f"_m{ci}") for ci in range(n_chunks)])
-    )
-    sums = vm.groupBy("cl", F.col("vl").alias("_lp")).agg(
-        *[
-            F.sum(
-                (
-                    F.col(f"_m{bit[lo] // 64}").bitwiseAND(
-                        F.lit(_sbit(bit[lo] % 64))
-                    )
-                    != 0
-                ).cast("long")
-            ).alias(f"_b{bit[lo]}")
-            for lo in lab_vals
-        ]
-    )
-    if small:
-        # finish on the driver: centers is ≤ L³ rows, sums ≤ L² rows —
-        # the remaining explode/filter/join algebra is exact integer
-        # arithmetic on dimension-sized tables. The centers collect runs
-        # first and materializes the lv/hc caches for the sums collect.
         center_rows = centers.collect()
         dom = {
             (r["cl"], r["_lp"]): {lo: int(r[f"_b{bit[lo]}"]) for lo in lab_vals}
             for r in sums.collect()
         }
-        lv.unpersist()
-        hc.unpersist()
-        out_rows = []
-        for r in center_rows:
-            cl, l1, l2, dc = r["cl"], r["l1"], r["l2"], int(r["_dc"])
-            if l1 == l2:
-                dl = dom[(cl, l1)][l1]
-            else:
-                dl = min(dom[(cl, l1)][l2], dom[(cl, l2)][l1])
-            out_rows.append((cl, l1, l2, min(dc, dl)))
-        lt = labels.schema["label"].dataType.simpleString()
-        return local_frame(
-            edges.sparkSession,
-            out_rows,
-            f"center_label {lt}, l1 {lt}, l2 {lt}, support long",
-        )
-    pos = sums.select(
-        "cl",
-        "_lp",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(lo).alias("_lo"), F.col(f"_b{bit[lo]}").alias("_d")
-                    )
-                    for lo in lab_vals
-                ]
-            )
-        ).alias("x"),
-    ).select("cl", "_lp", F.col("x._lo").alias("_lo"), F.col("x._d").alias("_d"))
-    d1 = pos.filter(F.col("_lp") < F.col("_lo")).select(
-        "cl", F.col("_lp").alias("l1"), F.col("_lo").alias("l2"),
-        F.col("_d").alias("_d1"),
-    )
-    d2 = pos.filter(F.col("_lp") > F.col("_lo")).select(
-        "cl", F.col("_lo").alias("l1"), F.col("_lp").alias("l2"),
-        F.col("_d").alias("_d2"),
-    )
-    diff_doms = d1.join(d2, ["cl", "l1", "l2"]).select(
-        "cl", "l1", "l2", F.least("_d1", "_d2").alias("_dl")
-    )
-    same_doms = pos.filter(F.col("_lp") == F.col("_lo")).select(
-        "cl", F.col("_lp").alias("l1"), F.col("_lp").alias("l2"),
-        F.col("_d").alias("_dl"),
-    )
-    doms = diff_doms.unionByName(same_doms)
-    return (
-        centers.join(doms, ["cl", "l1", "l2"])
-        .select(
-            F.col("cl").alias("center_label"), "l1", "l2",
-            F.least("_dc", "_dl").alias("support"),
-        )
+    out_rows = []
+    for r in center_rows:
+        cl, l1, l2, dc = r["cl"], r["l1"], r["l2"], int(r["_dc"])
+        if l1 == l2:
+            dl = dom[(cl, l1)][l1]
+        else:
+            dl = min(dom[(cl, l1)][l2], dom[(cl, l2)][l1])
+        out_rows.append((cl, l1, l2, min(dc, dl)))
+    lt = labels.schema["label"].dataType.simpleString()
+    return local_frame(
+        edges.sparkSession,
+        out_rows,
+        f"center_label {lt}, l1 {lt}, l2 {lt}, support long",
     )
 
 
@@ -528,99 +438,80 @@ def mni_triangle_supports(edges: DataFrame, labels: DataFrame) -> DataFrame:
     )
 
 
-def mni_star3_supports(
-    edges: DataFrame, labels: DataFrame, caches: list[DataFrame] | None = None
-) -> DataFrame:
+def mni_star3_supports(edges: DataFrame, labels: DataFrame) -> DataFrame:
     """(center_label, l1, l2, l3, support): exact MNI support of every
     labelled 3-star (leaf labels sorted) — the FSM level-3 star slice,
-    one distributed job for all labellings. Centers qualify through the
-    per-center label HISTOGRAM (multiset-binomial style joins bounded by
-    L³ per center, never C(deg, 3) wedge rows); leaf domains join the
-    labelled adjacency against the per-center qualifying-multiset table
-    (hub centers broadcast). Unlike the 2-star bitmask gather, the key
-    space here is the C(L+2, 3) leaf multisets — the Σ deg-row leaf join
-    fans ×(qualifying multisets per center), bounded by label-domain
-    size, not degree."""
-    hist, lv, hubs, small = _leaf_label_hist(edges, labels, caches)
-    if small:
-        # EAGER small path: scope-cache lv (hist chain + leaf gather)
-        # and hc (four qualifying-multiset subtrees), collect, unpersist
-        lv = lv.cache()
-    hc = _center_labelled(hist, labels, small)
-    if small:
-        hc = hc.cache()
+    one result for all labellings. Centers qualify through the per-center
+    label HISTOGRAM (multiset-binomial style joins bounded by L³ per
+    center, never C(deg, 3) wedge rows); leaf domains join the labelled
+    closure against the per-center qualifying-multiset table. Unlike the
+    2-star bitmask gather, the key space here is the C(L+2, 3) leaf
+    multisets — the Σ deg-row leaf join fans ×(qualifying multisets per
+    center), bounded by label-domain size, not degree."""
+    with GraphContext(edges) as ctx:
+        # lv feeds the histogram chain and the leaf gather, hc the four
+        # qualifying-multiset subtrees
+        lv, hc, _ = _label_state(ctx, labels)
         hc.count()
-    h1 = hc.select(
-        "c", "cl", F.col("ll").alias("k1"), F.col("cnt").alias("n1")
-    )
-    h2 = hc.select("c", F.col("ll").alias("k2"), F.col("cnt").alias("n2"))
-    h3 = hc.select("c", F.col("ll").alias("k3"))
-    distinct3 = (
-        h1.join(h2, "c")
-        .filter(F.col("k1") < F.col("k2"))
-        .join(h3, "c")
-        .filter(F.col("k2") < F.col("k3"))
-        .select("c", "cl", "k1", "k2", "k3")
-    )
-    pair_first = (
-        h1.filter(F.col("n1") >= 2)
-        .join(h3, "c")
-        .filter(F.col("k1") < F.col("k3"))
-        .select("c", "cl", "k1", F.col("k1").alias("k2"), "k3")
-    )
-    pair_last = (
-        h1.join(h2, "c")
-        .filter((F.col("k1") < F.col("k2")) & (F.col("n2") >= 2))
-        .select("c", "cl", "k1", "k2", F.col("k2").alias("k3"))
-    )
-    triple = h1.filter(F.col("n1") >= 3).select(
-        "c", "cl", "k1", F.col("k1").alias("k2"), F.col("k1").alias("k3")
-    )
-    qual = (
-        distinct3.unionByName(pair_first)
-        .unionByName(pair_last)
-        .unionByName(triple)
-        .cache()
-    )
-    if caches is not None:
-        caches.append(qual)
-    centers = qual.groupBy("cl", "k1", "k2", "k3").agg(
-        F.count(F.lit(1)).alias("_dc")
-    )
-    from peregrine_spark.operators.skew import hub_split_join
-
-    # small path: qual (per-center multiset lists) is too wide to
-    # broadcast, so the gather stays a shuffle join — UNHINTED, so AQE's
-    # skew-join splitting can fan a hot center (hinted SHUFFLE_HASH
-    # joins are exempt from AQE splitting)
-    gathered = (
-        lv.join(qual, "c") if small else hub_split_join(lv, qual, "c", hubs)
-    )
-    leaf = gathered.filter(
-        (F.col("vl") == F.col("k1"))
-        | (F.col("vl") == F.col("k2"))
-        | (F.col("vl") == F.col("k3"))
-    )
-    doms = leaf.groupBy("cl", "k1", "k2", "k3").agg(
-        F.least(
-            F.count_distinct(F.when(F.col("vl") == F.col("k1"), F.col("v"))),
-            F.count_distinct(F.when(F.col("vl") == F.col("k2"), F.col("v"))),
-            F.count_distinct(F.when(F.col("vl") == F.col("k3"), F.col("v"))),
-        ).alias("_dl")
-    )
-    out = centers.join(doms, ["cl", "k1", "k2", "k3"]).select(
-        F.col("cl").alias("center_label"),
-        F.col("k1").alias("l1"),
-        F.col("k2").alias("l2"),
-        F.col("k3").alias("l3"),
-        F.least("_dc", "_dl").cast("long").alias("support"),
-    )
-    if small:
+        h1 = hc.select(
+            "c", "cl", F.col("ll").alias("k1"), F.col("cnt").alias("n1")
+        )
+        h2 = hc.select("c", F.col("ll").alias("k2"), F.col("cnt").alias("n2"))
+        h3 = hc.select("c", F.col("ll").alias("k3"))
+        distinct3 = (
+            h1.join(h2, "c")
+            .filter(F.col("k1") < F.col("k2"))
+            .join(h3, "c")
+            .filter(F.col("k2") < F.col("k3"))
+            .select("c", "cl", "k1", "k2", "k3")
+        )
+        pair_first = (
+            h1.filter(F.col("n1") >= 2)
+            .join(h3, "c")
+            .filter(F.col("k1") < F.col("k3"))
+            .select("c", "cl", "k1", F.col("k1").alias("k2"), "k3")
+        )
+        pair_last = (
+            h1.join(h2, "c")
+            .filter((F.col("k1") < F.col("k2")) & (F.col("n2") >= 2))
+            .select("c", "cl", "k1", "k2", F.col("k2").alias("k3"))
+        )
+        triple = h1.filter(F.col("n1") >= 3).select(
+            "c", "cl", "k1", F.col("k1").alias("k2"), F.col("k1").alias("k3")
+        )
+        qual = ctx.cache(
+            distinct3.unionByName(pair_first)
+            .unionByName(pair_last)
+            .unionByName(triple)
+        )
+        centers = qual.groupBy("cl", "k1", "k2", "k3").agg(
+            F.count(F.lit(1)).alias("_dc")
+        )
+        # qual (per-center multiset lists) is too wide to broadcast, so
+        # the gather is a shuffle join — UNHINTED, so AQE's skew-join
+        # splitting can fan a hot center (hinted SHUFFLE_HASH joins are
+        # exempt from AQE splitting)
+        leaf = lv.join(qual, "c").filter(
+            (F.col("vl") == F.col("k1"))
+            | (F.col("vl") == F.col("k2"))
+            | (F.col("vl") == F.col("k3"))
+        )
+        doms = leaf.groupBy("cl", "k1", "k2", "k3").agg(
+            F.least(
+                F.count_distinct(F.when(F.col("vl") == F.col("k1"), F.col("v"))),
+                F.count_distinct(F.when(F.col("vl") == F.col("k2"), F.col("v"))),
+                F.count_distinct(F.when(F.col("vl") == F.col("k3"), F.col("v"))),
+            ).alias("_dl")
+        )
+        out = centers.join(doms, ["cl", "k1", "k2", "k3"]).select(
+            F.col("cl").alias("center_label"),
+            F.col("k1").alias("l1"),
+            F.col("k2").alias("l2"),
+            F.col("k3").alias("l3"),
+            F.least("_dc", "_dl").cast("long").alias("support"),
+        )
         rows = out.collect()
-        for df in (lv, hc, qual):
-            df.unpersist()
-        return local_frame(edges.sparkSession, rows, out.schema)
-    return out
+    return local_frame(edges.sparkSession, rows, out.schema)
 
 
 def mni_path4_supports(edges: DataFrame, labels: DataFrame) -> DataFrame:
@@ -699,8 +590,9 @@ def fsm(
     candidate-generation + filter loop. Levels ≥ 4 run pattern-at-a-time
     match jobs (ONE Spark job per pattern — all orbit domains in a
     single aggregation), matching the reference's pattern-granularity
-    execution. Each level's intermediate caches are unpersisted once its
-    support table is collected.
+    execution. Levels 1-3 share one GraphContext: its canonical edge set,
+    labelled closure and center-labelled histogram are filled once before
+    the shape tables start, and released once they are collected.
 
     `strategy` selects the candidate-growth rule past level 3
     (PatternGenerator::extend's two modes, core/PatternGenerator.cc:79):
@@ -719,14 +611,15 @@ def fsm(
     # rare all-infrequent-edges case computes tables it then discards.
     from concurrent.futures import ThreadPoolExecutor
 
-    caches: list[DataFrame] = []
-    caches3: list[DataFrame] = []
-    with ThreadPoolExecutor(max_workers=5) as pool:
+    with GraphContext(edges) as ctx, ThreadPoolExecutor(max_workers=5) as pool:
+        if max_edges >= 2:
+            # the star threads' own contexts read these caches and own
+            # none; threads started on empty caches would compute the
+            # same partitions twice
+            _label_state(ctx, labels)[1].count()
         f_edge = pool.submit(lambda: mni_edge_supports(edges, labels).collect())
         f_star2 = (
-            pool.submit(
-                lambda: mni_star2_supports(edges, labels, caches=caches).collect()
-            )
+            pool.submit(lambda: mni_star2_supports(edges, labels).collect())
             if max_edges >= 2
             else None
         )
@@ -735,7 +628,7 @@ def fsm(
                 lambda: mni_triangle_supports(edges, labels).collect()
             )
             f_star3 = pool.submit(
-                lambda: mni_star3_supports(edges, labels, caches=caches3).collect()
+                lambda: mni_star3_supports(edges, labels).collect()
             )
             f_path4 = pool.submit(
                 lambda: mni_path4_supports(edges, labels).collect()
@@ -745,8 +638,6 @@ def fsm(
         tri_rows = f_tri.result() if max_edges >= 3 else []
         star3_rows = f_star3.result() if max_edges >= 3 else []
         path4_rows = f_path4.result() if max_edges >= 3 else []
-    for df in caches + caches3:
-        df.unpersist()
     label_pool = sorted({r.l1 for r in edge_rows} | {r.l2 for r in edge_rows})
 
     frequent: list[tuple[SmallGraph, int]] = []

@@ -552,13 +552,6 @@ def _star_sum(deg: DataFrame, k: int) -> DataFrame:
     )
 
 
-def pattern_exists(edges: DataFrame, pattern: SmallGraph, labels=None) -> bool:
-    """Existence query (reference C7 short-circuit,
-    apps/existence-query.cc): Spark stops tasks once limit(1) is met."""
-    m = match_pattern(edges, pattern, labels=labels, count_only=False)
-    return len(m.limit(1).collect()) > 0
-
-
 def mni_support(matches: DataFrame, pattern: SmallGraph) -> int:
     """Minimum-image-based (MNI) support of a pattern given its
     materialized matches (columns v<i>): for each automorphism orbit, the

@@ -140,17 +140,3 @@ def extract_features(media: DataFrame, fake: bool = True) -> DataFrame:
         "payload",
     )
     return prepped.mapInPandas(kernel, FEATURE_SCHEMA)
-
-
-def frame_sample_plan(media: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling *plan*: expands (media_id, frame_idx) rows for
-    frames 0, n, 2n, ... based on a frame-count metadata key — the Spark
-    side of a frame sampler (decode stubbed as above). Demonstrates the
-    explode-based fan-out pattern that keeps frame work partition-parallel."""
-    n_frames = F.coalesce(
-        F.element_at(F.col("meta"), "n_frames").cast("int"), F.lit(30)
-    )
-    idxs = F.sequence(F.lit(0), n_frames - 1, F.lit(every_n))
-    return media.filter(F.col("kind") == "video").select(
-        "media_id", F.explode(idxs).alias("frame_idx")
-    )

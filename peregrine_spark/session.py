@@ -145,10 +145,8 @@ def get_spark(
     # Shuffle/spill files on tmpfs when available (overridable via
     # SPARK_GRAFT_LOCAL_DIR): this box's /tmp is a spinning-rust ext4 —
     # a real cluster gives every executor fast local spill disks, which
-    # is what spark-submit's own spark.local.dir would point at. The
-    # scaling-bench protocol (tools/_scaling_worker.py) already ran this
-    # way; it makes the shuffle write cost I/O-realistic, not a
-    # local-only trick.
+    # is what spark-submit's own spark.local.dir would point at; it makes
+    # the shuffle write cost I/O-realistic, not a local-only trick.
     local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
     if local_dir is None and os.path.isdir("/dev/shm"):
         local_dir = "/dev/shm/spark-local"

@@ -9,7 +9,7 @@ genuine hub files — the skew the hub-split joins exist for.
 
 Mirrors the reference's ingest-roundtrip test strategy
 (/root/reference/core/integrationtests/DataConverter_test.hh:7-94): the
-generator also returns the ground-truth edge list so tests can verify the
+generator (`_gen`) also returns the ground-truth edge list so tests can verify the
 whole parse→graph pipeline without trusting the code under test.
 
 All generation is seeded; no external data. Scales (FIXTURES.md):
@@ -106,11 +106,6 @@ def _gen(
 
 def synth_repo_files(n_files: int, seed: int = 42, **kw) -> pd.DataFrame:
     return _gen(n_files, seed, **kw)[0]
-
-
-def synth_truth_pairs(n_files: int, seed: int = 42, **kw) -> np.ndarray:
-    """Ground-truth (src_idx, dst_idx) reference pairs (with duplicates)."""
-    return _gen(n_files, seed, **kw)[1]
 
 
 def write_repo_files(out_path: str, n_files: int, seed: int = 42, **kw) -> str:

@@ -1,7 +1,6 @@
 """Structured Streaming surface.
 
 The reference is batch-only (SURVEY.md §2.F: no watermarks/windows/state),
-so this layer is deliberately thin: incremental catalog ingest (new
-repo_files partitions → edge deltas) and windowed event-graph degree
-counts — the streaming entry points a production catalog feed would need.
+so this layer is deliberately thin: windowed event-graph degree counts
+(ingest.py) and stateful exact dedup (dedup.py).
 """

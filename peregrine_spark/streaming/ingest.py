@@ -1,60 +1,11 @@
-"""Streaming ingest: incremental repo_files → edge deltas, and windowed
-degree counts over the events stream.
-
-The batch extractors (sources/ingest.py) are pure narrow expressions, so
-they apply unchanged to streaming DataFrames — same code path, exactly-once
-via checkpointLocation. Aggregations use watermarks so state is bounded.
+"""Windowed degree counts over the events stream — the streaming analog
+of the degree operator. Aggregations use watermarks so state is bounded.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from peregrine_spark.sources.ingest import extract_edges, vertex_map
-
-REPO_FILES_SCHEMA = T.StructType(
-    [
-        T.StructField("repo", T.StringType(), False),
-        T.StructField("path", T.StringType(), False),
-        T.StructField("commit", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-        T.StructField("content", T.StringType(), True),
-    ]
-)
-
-
-def stream_repo_files(spark: SparkSession, input_dir: str) -> DataFrame:
-    """File-source stream over a directory of repo_files parquet drops —
-    the incremental-catalog feed (new files appear as new parquet parts)."""
-    return spark.readStream.schema(REPO_FILES_SCHEMA).parquet(input_dir)
-
-
-def stream_edges(files_stream: DataFrame) -> DataFrame:
-    """Edge deltas from the streaming catalog. Dedupe is per-micro-batch
-    only (global distinct needs state; downstream sinks dedupe on merge —
-    same contract as any append-log edge table)."""
-    return extract_edges(files_stream, dedupe=False)
-
-
-def stream_vertex_map(files_stream: DataFrame) -> DataFrame:
-    return vertex_map(files_stream)
-
-
-def write_edge_log(
-    edges_stream: DataFrame, out_dir: str, checkpoint_dir: str, trigger_once: bool = True
-):
-    """Append edge deltas to a parquet log, exactly-once via checkpoint."""
-    w = (
-        edges_stream.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if trigger_once:
-        w = w.trigger(availableNow=True)
-    return w.start()
 
 
 def windowed_event_degrees(

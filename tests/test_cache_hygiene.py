@@ -29,6 +29,13 @@ def dense_edges(spark):
 def test_counting_ops_release_caches(spark, dense_edges):
     from peregrine_spark.operators.graph import orient
     from peregrine_spark.operators.groups import group_count
+    from peregrine_spark.operators.labels import (
+        discover_star_labels,
+        discover_star_labels_3,
+        fsm,
+        mni_star2_supports,
+        mni_star3_supports,
+    )
     from peregrine_spark.operators.motifs import (
         all_motifs,
         cycle4_count,
@@ -40,6 +47,9 @@ def test_counting_ops_release_caches(spark, dense_edges):
     from peregrine_spark.plans.patterns import SmallGraph
 
     e = dense_edges
+    labels = spark.createDataFrame(
+        [(v, v % 3) for v in range(12)], "id long, label int"
+    )
     chair = all_motifs(5)["m5_004"]
     assert chair.group_count_plan() is not None
     cases = {
@@ -65,11 +75,20 @@ def test_counting_ops_release_caches(spark, dense_edges):
         "orient": lambda: orient(e),
         # degree-ordered join chain
         "match_pattern_clique4": lambda: match_pattern(e, SmallGraph.clique(4)),
+        # labelled stars: the histogram caches live in the operator's
+        # context; fsm fills the shared ones in its own context
+        "star2_labels": lambda: discover_star_labels(e, labels),
+        "star3_labels": lambda: discover_star_labels_3(e, labels),
+        "mni_star2_supports": lambda: mni_star2_supports(e, labels),
+        "mni_star3_supports": lambda: mni_star3_supports(e, labels),
+        "fsm": lambda: fsm(spark, e, labels, min_support=2, max_edges=3),
     }
     leaks = {}
     for name, op in cases.items():
         before = _persistent_ids(spark)
-        op().collect()
+        result = op()
+        if not isinstance(result, list):  # fsm returns its patterns
+            result.collect()
         leaked = _persistent_ids(spark) - before
         if leaked:
             leaks[name] = leaked

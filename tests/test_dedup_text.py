@@ -27,9 +27,6 @@ def docs(spark):
 
 
 def test_exact_duplicates(spark, docs):
-    groups = D.exact_duplicates(docs).collect()
-    assert len(groups) == 1
-    assert groups[0].doc_ids == [1, 2]
     kept = D.dedup_exact(docs)
     assert kept.count() == 5
     assert {r.doc_id for r in kept.collect()} == {1, 3, 4, 5, 6}

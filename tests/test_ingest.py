@@ -8,7 +8,7 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from peregrine_spark.sources import ingest as ing
-from peregrine_spark.sources.synth import synth_repo_files, synth_truth_pairs
+from peregrine_spark.sources.synth import _gen, synth_repo_files
 
 
 def test_synth_deterministic():
@@ -44,7 +44,7 @@ def test_edges_match_ground_truth(spark, tiny_repo_files):
     """Parsed edges == the generator's ground-truth pairs (self-loops
     dropped, deduped), mapped through the same vertex hash."""
     pdf = synth_repo_files(200, seed=42)
-    pairs = synth_truth_pairs(200, seed=42)
+    pairs = _gen(200, 42)[1]
     # ground truth via Spark's own xxhash64 on the (repo, path) table
     key_df = spark.createDataFrame(pdf[["repo", "path"]])
     id_rows = key_df.select(
@@ -85,6 +85,6 @@ def test_malformed_refs_tolerated(spark):
 def test_skewed_degree_distribution():
     """zipf targets must produce genuine hubs (skew the hub-split joins
     handle): max in-degree far above the mean."""
-    pairs = synth_truth_pairs(5000, seed=42)
+    pairs = _gen(5000, 42)[1]
     _, cnt = np.unique(pairs[:, 1], return_counts=True)
     assert cnt.max() > 20 * cnt.mean()

@@ -1,6 +1,7 @@
 """Pattern generators (all-connected enumeration, graph6, FSM extension),
 label discovery, closed-form star counts, and the FSM driver."""
 
+import contextlib
 import math
 
 import pytest
@@ -16,6 +17,7 @@ from peregrine_spark.operators.motifs import star_count
 from peregrine_spark.operators.patterns import match_pattern
 from peregrine_spark.plans.generators import all_connected, decode_graph6, extend_by_edge
 from peregrine_spark.plans.patterns import SmallGraph
+from peregrine_spark.session import local_frame
 from tests import golden
 
 
@@ -533,3 +535,125 @@ def test_fsm_vertex_strategy_level4(spark):
     for p, s in deep[:4]:
         m = match_pattern(e, p, labels=labels, count_only=False)
         assert mni_support(m, p) == s
+
+
+# ---- the label joins' two plans: broadcast (the label table fits the
+# session's autoBroadcastJoinThreshold) and unhinted shuffle joins
+
+
+@contextlib.contextmanager
+def _no_broadcast(spark):
+    """Run the body with size-based broadcasting off: the label joins
+    take their unhinted route."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def _hub_graph(spark):
+    """Hub 0 with 50 leaves, every third leaf pair chorded (triangles
+    through the hub); labels alternate 0/1."""
+    pairs = [(0, i) for i in range(1, 51)] + [(i, i + 1) for i in range(1, 50, 3)]
+    lab = {v: v % 2 for v in range(51)}
+    e = golden.to_spark_edges(spark, pairs)
+    return pairs, lab, e, _sized_labels(spark, lab)
+
+
+def _sized_labels(spark, lab: dict):
+    """A label table Catalyst can size (a local relation), so the
+    default route broadcasts it; a createDataFrame over a list has no
+    size estimate and would take the unhinted route already."""
+    return local_frame(spark, list(lab.items()), "id long, label int")
+
+
+def _star_label_tables(e, labels) -> dict:
+    from peregrine_spark.operators.labels import (
+        discover_star_labels_3,
+        mni_star2_supports,
+        mni_star3_supports,
+    )
+
+    return {
+        "star2": sorted(discover_star_labels(e, labels).collect()),
+        "star3": sorted(discover_star_labels_3(e, labels).collect()),
+        "mni_star2": sorted(mni_star2_supports(e, labels).collect()),
+        "mni_star3": sorted(mni_star3_supports(e, labels).collect()),
+    }
+
+
+def _fsm3(spark, e, labels) -> list:
+    return sorted(
+        (p.canonical_form(), s)
+        for p, s in fsm(spark, e, labels, min_support=2, max_edges=3)
+    )
+
+
+@pytest.mark.parametrize("graph", ["two_tri_bridge", "hub"])
+def test_star_label_ops_unhinted_route_matches_default(spark, graph):
+    from tests.test_plan_shape import plan_shape
+
+    if graph == "hub":
+        _, _, e, labels = _hub_graph(spark)
+    else:
+        glab = {1: 7, 2: 7, 3: 5, 4: 5, 5: 9, 6: 3}
+        e = golden.to_spark_edges(spark, golden.TWO_TRI_BRIDGE)
+        labels = _sized_labels(spark, glab)
+    default, forced = {}, {}
+    shape = plan_shape(spark, lambda: default.update(_star_label_tables(e, labels)))
+    assert "BroadcastHashJoin" in shape
+    default_fsm = _fsm3(spark, e, labels)
+    assert all(default.values()) and default_fsm
+    with _no_broadcast(spark):
+        shape = plan_shape(spark, lambda: forced.update(_star_label_tables(e, labels)))
+        forced_fsm = _fsm3(spark, e, labels)
+    # the route really is forced: no label join is broadcast
+    assert "BroadcastHashJoin" not in shape and "SortMergeJoin" in shape
+    assert forced == default
+    assert forced_fsm == default_fsm
+
+
+def test_star_label_ops_unhinted_route_vs_match_based(spark):
+    """On the hub graph with broadcasting off: star discovery counts equal
+    a brute-force enumeration of every 2- and 3-star, the MNI star
+    supports equal the match-based mni_support, and fsm reports those
+    supports for its frequent stars."""
+    import itertools
+    from collections import Counter, defaultdict
+
+    from peregrine_spark.operators.motifs import mni_support
+
+    pairs, lab, e, labels = _hub_graph(spark)
+    adj = defaultdict(set)
+    for a, b in pairs:
+        adj[a].add(b)
+        adj[b].add(a)
+    want2, want3 = Counter(), Counter()
+    for c, nb in adj.items():
+        for k, want in ((2, want2), (3, want3)):
+            for leaves in itertools.combinations(nb, k):
+                want[(lab[c], *sorted(lab[v] for v in leaves))] += 1
+
+    with _no_broadcast(spark):
+        got = _star_label_tables(e, labels)
+        fsm_rows = _fsm3(spark, e, labels)
+        assert {tuple(r[:-1]): r.n for r in got["star2"]} == want2
+        assert {tuple(r[:-1]): r.n for r in got["star3"]} == want3
+        supports = {}
+        for table in ("mni_star2", "mni_star3"):
+            for r in got[table]:
+                leaves = r[1:-1]
+                p = SmallGraph(
+                    edges=[(1, i) for i in range(2, len(leaves) + 2)],
+                    labels={1: r.center_label, **dict(zip(range(2, 5), leaves))},
+                )
+                m = match_pattern(e, p, labels=labels, count_only=False)
+                assert mni_support(m, p) == r.support, (p.labels, r.support)
+                supports[p.canonical_form()] = r.support
+    frequent_stars = [(k, s) for k, s in fsm_rows if k in supports]
+    assert frequent_stars
+    assert all(supports[k] == s for k, s in frequent_stars)
+    assert {k for k, s in supports.items() if s >= 2} == {k for k, _ in frequent_stars}

@@ -1,8 +1,6 @@
-"""Motif counting (edge- and vertex-induced), existence queries, MNI
-support, and output sinks."""
+"""Motif counting (edge- and vertex-induced) and MNI support."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from peregrine_spark import reference as ref
 from peregrine_spark.operators.motifs import (
@@ -11,12 +9,9 @@ from peregrine_spark.operators.motifs import (
     mni_support,
     motif_counts,
     num_mappings,
-    pattern_exists,
 )
 from peregrine_spark.operators.patterns import match_pattern
 from peregrine_spark.plans.patterns import SmallGraph
-from peregrine_spark.sources import ingest as ing
-from peregrine_spark.sources.sinks import remap_to_origin, write_matches_csv
 from tests import golden
 
 
@@ -48,33 +43,11 @@ def test_edge_induced_motifs_k6(spark):
     assert vi == {"path3": 0, "triangle": 20}  # K6 has no induced path3
 
 
-def test_existence_short_circuit(spark):
-    e = golden.to_spark_edges(spark, golden.TWO_TRI_BRIDGE)
-    assert pattern_exists(e, SmallGraph.clique(3))
-    assert not pattern_exists(e, SmallGraph.clique(4))
-
-
 def test_mni_support(spark):
     e = golden.to_spark_edges(spark, golden.STAR_HUB)
     m = match_pattern(e, SmallGraph.star(2), count_only=False)  # 2-star
     # hub position domain = {0}; leaf-pair orbit domain = all 50 leaves
     assert mni_support(m, SmallGraph.star(2)) == 1
-
-
-def test_sinks_roundtrip_and_remap(spark, tiny_repo_files, tmp_path):
-    e = ing.extract_edges(tiny_repo_files)
-    vm = ing.vertex_map(tiny_repo_files)
-    tri = match_pattern(e, SmallGraph.clique(3), count_only=False)
-    out = str(tmp_path / "tri_csv")
-    write_matches_csv(tri, out)
-    back = spark.read.option("header", "true").csv(out)
-    assert back.count() == tri.count()
-    remapped = remap_to_origin(tri, vm)
-    row = remapped.first()
-    if row is not None:
-        assert "/" in row["v1_origin"]
-        n_null = remapped.filter(F.col("v1_origin").isNull()).count()
-        assert n_null == 0
 
 
 @pytest.mark.parametrize("gname", ["k6", "two_tri_bridge", "disconnected", "star_hub"])

@@ -28,12 +28,15 @@ from pyspark.sql import functions as F
 
 from peregrine_spark.operators import graph, iterative, motifs, skew
 from peregrine_spark.operators.graph import degrees
+from peregrine_spark.operators import labels as label_ops
 from peregrine_spark.operators.labels import (
     discover_star_labels,
     discover_star_labels_3,
     mni_star2_supports,
+    mni_star3_supports,
 )
 from peregrine_spark.operators.triangles import triangle_count
+from peregrine_spark.session import local_frame
 from peregrine_spark.sources.testdata import copurchase_edges, part_labels
 from tests import golden
 
@@ -242,18 +245,25 @@ def test_cycle4_count_shape(spark, copurchase, monkeypatch, route):
     assert got == want
 
 
+# Each labelled star operator runs its cache fill and its collects; the
+# label joins are broadcast (the sf0.001 part labels are far below the
+# session's autoBroadcastJoinThreshold). Choosing that route runs no job.
 LABEL_OPS = {
     "star2_labels": (
         discover_star_labels,
-        {"executions": 4, "Exchange": 2, "BroadcastHashJoin": 2},
+        {"executions": 3, "Exchange": 1, "BroadcastHashJoin": 2},
     ),
     "star3_labels": (
         discover_star_labels_3,
-        {"executions": 4, "Exchange": 2, "BroadcastHashJoin": 5},
+        {"executions": 3, "Exchange": 1, "BroadcastHashJoin": 5},
     ),
     "mni_star2_supports": (
         mni_star2_supports,
-        {"executions": 5, "Exchange": 6, "BroadcastHashJoin": 2},
+        {"executions": 4, "Exchange": 5, "BroadcastHashJoin": 2},
+    ),
+    "mni_star3_supports": (
+        mni_star3_supports,
+        {"executions": 3, "Exchange": 3, "BroadcastHashJoin": 2},
     ),
 }
 
@@ -264,6 +274,31 @@ def test_label_operator_shape(spark, copurchase, op):
     fn, want = LABEL_OPS[op]
     got = plan_shape(spark, lambda: fn(edges, labels).collect())
     assert got == want
+
+
+def test_label_route_check_starts_no_job(spark, copurchase):
+    # the check reads Catalyst's size estimate of the label table: a
+    # parquet scan, a cached table and a local one plan no job and
+    # broadcast; a Python-list table has no size estimate, so no hint
+    _, cached = copurchase
+    tables = [
+        part_labels(spark, SF),
+        cached,
+        local_frame(spark, [(1, 0), (2, 1)], "id long, label int"),
+        spark.createDataFrame([(1, 0), (2, 1)], "id long, label int"),
+    ]
+    hints = []
+    for labels in tables:
+        got = started(spark, lambda: hints.append(label_ops._label_dim(labels)))
+        assert got["jobs"] == 0
+    assert [h is F.broadcast for h in hints] == [True, True, True, False]
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        assert label_ops._label_dim(tables[0]) is not F.broadcast
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_star_labels_empty_result(spark, copurchase):

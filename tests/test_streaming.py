@@ -1,44 +1,9 @@
-"""Streaming ingest: edge deltas through a file-source stream equal the
-batch extraction; windowed event degrees aggregate with watermarks."""
+"""Streaming: windowed event degrees aggregate with watermarks, and
+stateful exact dedup across micro-batches."""
 
 from pyspark.sql import functions as F
 
-from peregrine_spark.sources.ingest import extract_edges
-from peregrine_spark.sources.synth import synth_repo_files
-from peregrine_spark.streaming.ingest import (
-    stream_edges,
-    stream_repo_files,
-    windowed_event_degrees,
-    write_edge_log,
-)
-
-
-def test_stream_edges_equal_batch(spark, tmp_path):
-    pdf = synth_repo_files(100, seed=42)
-    src = str(tmp_path / "in")
-    spark.createDataFrame(pdf).coalesce(2).write.parquet(src)
-
-    stream = stream_edges(stream_repo_files(spark, src))
-    assert stream.isStreaming
-    out, chk = str(tmp_path / "out"), str(tmp_path / "chk")
-    q = write_edge_log(stream, out, chk, trigger_once=True)
-    q.awaitTermination(120)
-
-    got = {(r.src, r.dst) for r in spark.read.parquet(out).collect()}
-    want = {
-        (r.src, r.dst)
-        for r in extract_edges(spark.createDataFrame(pdf), dedupe=False).collect()
-    }
-    assert got == want
-
-    # exactly-once: restarting with the same checkpoint adds nothing
-    q2 = write_edge_log(
-        stream_edges(stream_repo_files(spark, src)), out, chk, trigger_once=True
-    )
-    q2.awaitTermination(120)
-    assert spark.read.parquet(out).count() == len(
-        extract_edges(spark.createDataFrame(pdf), dedupe=False).collect()
-    )
+from peregrine_spark.streaming.ingest import windowed_event_degrees
 
 
 def test_windowed_event_degrees(spark, tmp_path):

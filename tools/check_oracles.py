@@ -37,7 +37,7 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = get_spark(master="local[8]", app_name="oracle-check")
+    spark = get_spark(app_name="oracle-check")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
