@@ -7,7 +7,7 @@ and add --num-executors):
     spark-submit --master local[32] \
         --py-files dist/peregrine_spark.zip \
         jobs/linkgraph_job.py \
-        --input data/scaling_repo_files_2000000_8.parquet \
+        --input /path/to/repo_files.parquet \
         --algo pagerank --tol 1e-6 \
         --checkpoint-dir /tmp/pr_ckpt --output /tmp/pr_out
 

@@ -307,9 +307,3 @@ class GraphContext:
         counts = self.fwd.groupBy("dst").agg(F.count(F.lit(1)).alias("n"))
         thr = skew.auto_hub_threshold(self.n_edges)
         return skew.hub_keys(counts, "dst", "n", thr, self.max_deg)
-
-    def closure_hubs(self) -> list[int]:
-        """Vertex ids whose closure rows would pin one task of the
-        superstep gather join (CC, LP)."""
-        thr = skew.auto_hub_threshold(self.n_und)
-        return skew.hub_keys(self.deg, "id", "deg", thr, self.max_deg)

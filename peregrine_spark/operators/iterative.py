@@ -10,17 +10,20 @@ Skew note: the scatter ``groupBy(dst)`` partially aggregates map-side
 row per map partition before the shuffle — the same effect as the
 reference's work-stealing over hub-adjacent tasks
 (/root/reference/core/Peregrine.hh:94-102), without explicit salting.
-AQE skew-join handles the state×edges side.
+The state×edges gather is a hinted SHUFFLE_HASH join over a cached edge
+side, which AQE's skew-join cannot split: hub sources are split off
+instead and join a broadcast slice of the state (_split_gather).
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from peregrine_spark.operators import skew
 from peregrine_spark.operators.graph import GraphContext
-from peregrine_spark.operators.skew import hub_presplit, presplit_join
 from peregrine_spark.plans.superstep import SuperstepDriver, SuperstepResult
 
 # label propagation's argmax key n·2⁶⁴ + (2⁶³−1−label) stays below 10³⁸,
@@ -34,23 +37,45 @@ def _dec(v: int) -> Column:
     return F.lit(str(v)).cast(_DEC)
 
 
-def _gather_sides(
-    edges: DataFrame, hubs: list[int], chained: bool, cache
-) -> tuple[DataFrame, DataFrame | None]:
-    """The static edge side of every superstep's gather join, pre-split
-    by the gather key ONCE: the cached hash partitioning matches the
-    per-superstep join requirement, so only the (|V|-sized) state side
-    shuffles each superstep. Hub edges go to their own ROUND-ROBIN cache
-    (see hub_presplit). Chained supersteps (checkpoint_interval > 1) get
-    one plain partitioning instead: the hub split references the state
-    twice per superstep, so the unmaterialized plan tree would grow 2^k;
-    their unhinted gather join leaves hubs to AQE's skew-join splitting.
-    `cache` caches a frame until the caller releases it."""
+def _split_gather(
+    edges: DataFrame,
+    deg: DataFrame,
+    deg_col: str,
+    n_rows: int,
+    max_deg: int,
+    cache: Callable[[DataFrame], DataFrame],
+) -> Callable[[DataFrame], DataFrame]:
+    """The per-superstep gather ``edges ⨝ src_state`` on src, over a
+    static edge side split ONCE and cached with `cache` (the caller
+    releases it):
+
+    - hubs are the ids of the degree table `deg` (id, deg_col) hotter
+      than auto_hub_threshold(n_rows); `max_deg` rules the collect job
+      out on hub-free graphs. Hub edges are cached ROUND-ROBIN across
+      n_part partitions and join a BROADCAST slice of the state, so
+      their rows never shuffle. Any placement is correct for a map-side
+      join, but partitioning them by key puts a mega-hub in one task:
+      on the 23M-edge zipf graph that task ran 7-9.5 s per superstep
+      against a 0.25 s stage median.
+    - the rest is cached hash-partitioned by src into n_part partitions,
+      which the SHUFFLE_HASH join reuses: only the (|V|-sized) state
+      side shuffles. The session lets AQE coalesce cached plans, but
+      never a user-numbered repartition, so the cache keeps its width."""
     n_part = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    if chained:
-        return cache(edges.repartition(n_part, "src")), None
-    rest, hub = hub_presplit(edges, "src", hubs, n_part)
-    return cache(rest), (cache(hub) if hub is not None else None)
+    hubs = skew.hub_keys(
+        deg, "id", deg_col, skew.auto_hub_threshold(n_rows), max_deg
+    )
+    is_hub = F.col("src").isin(hubs)
+    rest = cache((edges.filter(~is_hub) if hubs else edges).repartition(n_part, "src"))
+    hub = cache(edges.filter(is_hub).repartition(n_part)) if hubs else None
+
+    def gather(src_state: DataFrame) -> DataFrame:
+        j = rest.join(src_state.hint("shuffle_hash"), "src")
+        if hub is not None:
+            j = j.unionByName(hub.join(F.broadcast(src_state.filter(is_hub)), "src"))
+        return j
+
+    return gather
 
 
 # --------------------------------------------------------------------------
@@ -65,17 +90,12 @@ def pagerank(
     max_iter: int = 100,
     checkpoint_dir: str | None = None,
     resume: bool = True,
-    checkpoint_interval: int = 1,
     input_fingerprint: str | None = None,
 ) -> SuperstepResult:
     """Directed PageRank with uniform dangling redistribution; converges
     when max|Δrank| < tol. State schema: (id, rank, out_deg).
 
     r_{t+1} = (1-d)/N + d * (Σ_in r_t/outdeg + dangling_mass/N)
-
-    Hub sources join a broadcast slice of the state when each superstep
-    materializes; chained supersteps (checkpoint_interval > 1 on a
-    dangling-free graph) leave hubs to AQE (see _gather_sides).
     """
     edges = edges.select("src", "dst")
     if vertices is None:
@@ -97,7 +117,12 @@ def pagerank(
             .join(out_deg, "id", "left")
             .select("id", F.coalesce("out_deg", F.lit(0)).alias("out_deg"))
         )
-    vstatic = vstatic.cache()
+    caches = [vstatic.cache()]
+
+    def cache(df: DataFrame) -> DataFrame:
+        caches.append(df.cache())
+        return df
+
     # ONE setup aggregation over the cached |V| table replaces three
     # separate jobs (vstatic.count, the dangling limit(1) probe, and
     # edges.count for the hub threshold — Σ out_deg IS the edge count);
@@ -112,28 +137,18 @@ def pagerank(
     if n == 0:
         vstatic.unpersist()
         return SuperstepResult(vstatic.select("id", F.lit(0.0).alias("rank")), 0, True)
-    # Dangling vertices can't appear in an undirected closure. The
-    # dangling mass is a per-superstep scalar, so only dangling-free
-    # graphs can chain supersteps without materialization.
-    has_dangling = int(srow["n_dangling"]) > 0
-    interval = 1 if has_dangling else checkpoint_interval
-    chained = interval > 1
-    # Hub detection (once, static): sources whose edge multiplicity would
-    # pin the gather join on a single task take the broadcast path.
     # src multiplicity in `edges` IS out_deg, so the hub keys come from a
-    # scan of the cached vstatic — no extra full-edge groupBy job.
-    hubs = [] if chained else skew.hub_keys(
-        vstatic, "id", "out_deg",
-        skew.auto_hub_threshold(int(srow["n_e"])), int(srow["max_deg"]),
+    # scan of the cached vstatic — no extra full-edge groupBy job
+    gather = _split_gather(
+        edges, vstatic, "out_deg", int(srow["n_e"]), int(srow["max_deg"]), cache
     )
-    e_rest, e_hub = _gather_sides(edges, hubs, chained, DataFrame.cache)
 
     # each rank's share of the dangling mass (0 on a dangling-free graph)
     dangling_rank = F.when(F.col("out_deg") == 0, F.col("rank")).otherwise(0.0)
     # the dangling mass of the state the next step reads: observed while
     # the previous state materialized, known without a job for the initial
     # state, and aggregated over a resumed state once
-    dm_cell = {"dm": None if has_dangling else 0.0}
+    dm_cell = {"dm": None if int(srow["n_dangling"]) > 0 else 0.0}
 
     def init() -> DataFrame:
         dm_cell["dm"] = int(srow["n_dangling"]) / n  # every rank is 1/n
@@ -143,36 +158,29 @@ def pagerank(
         if dm_cell["dm"] is None:
             dm_cell["dm"] = state.agg(F.sum(dangling_rank)).first()[0] or 0.0
         dm = dm_cell["dm"]
-        # Gather: hub sources join a broadcast slice of the state (their
-        # millions of edge rows never shuffle); the rest shuffle-hash —
-        # a per-superstep broadcast of the FULL state would be rebuilt
+        # Gather: only hub sources see a broadcast state slice — a
+        # per-superstep broadcast of the FULL state would be rebuilt
         # driver-side each time (measured 20-40% of superstep wall).
         src_state = state.filter(F.col("out_deg") > 0).select(
             F.col("id").alias("src"),
             (F.col("rank") / F.col("out_deg")).alias("w"),
         )
-        gathered = (
-            e_rest.join(src_state, "src")
-            if chained
-            else presplit_join(e_rest, e_hub, src_state, "src", hubs)
-        )
         contrib = (
-            gathered.select(F.col("dst").alias("id"), "w")
+            gather(src_state)
+            .select(F.col("dst").alias("id"), "w")
             .groupBy("id")
             .agg(F.sum("w").alias("c"))
         )
         base = (1.0 - damping) / n + damping * dm / n
         new_rank = F.lit(base) + F.lit(damping) * F.coalesce("c", F.lit(0.0))
-        # join the STATE (carries the old rank, for the delta) rather than
-        # vstatic. The rank at the last materialized state rides through a
-        # chained interval as _r0, so the observed delta is max|r_k − r_b|
-        # on every path. The executed plan shuffles the materialized
-        # state on id before this join — the scan of a checkpointed state
-        # reports no partitioning — and the gather above shuffles it again
-        # on src: two |V|-row exchanges of the state per superstep
-        r0 = "_r0" if "_r0" in state.columns else "rank"
+        # join the STATE rather than vstatic: its old rank rides along as
+        # _r0, so the observed delta is max|r_k − r_{k−1}|. The executed
+        # plan shuffles the materialized state on id before this join —
+        # the scan of a checkpointed state reports no partitioning — and
+        # the gather above shuffles it again on src: two |V|-row
+        # exchanges of the state per superstep
         return state.join(contrib.hint("shuffle_hash"), "id", "left").select(
-            "id", new_rank.alias("rank"), "out_deg", F.col(r0).alias("_r0")
+            "id", new_rank.alias("rank"), "out_deg", F.col("rank").alias("_r0")
         )
 
     def delta(seen: dict) -> float:
@@ -181,7 +189,7 @@ def pagerank(
 
     driver = SuperstepDriver(
         spark, "pagerank", checkpoint_dir, max_iter=max_iter, tol=tol,
-        materialize_every=interval, input_fingerprint=input_fingerprint,
+        input_fingerprint=input_fingerprint,
     )
     observed = [
         F.max(F.abs(F.col("rank") - F.col("_r0"))).alias("delta"),
@@ -192,26 +200,9 @@ def pagerank(
     # static caches are no longer reachable from it; holding them would
     # leak executor storage for the session lifetime (measured: leaked
     # caches from earlier bench queries inflated later ones' walls)
-    for df in [vstatic, e_rest] + ([e_hub] if e_hub is not None else []):
+    for df in caches:
         df.unpersist()
     return res
-
-
-def _closure_sides(
-    ctx: GraphContext, vertices: DataFrame | None, chained: bool
-) -> tuple[DataFrame, list[int], DataFrame, DataFrame | None]:
-    """The static side of CC and LP over the context's cached closure:
-    (vertex ids, hub keys, rest edges, hub edges), all released with the
-    context. The degree table is the vertex set unless the caller passes
-    one (isolated vertices); its max degree rules the hub collect job out
-    on hub-free graphs."""
-    if vertices is None:
-        vstatic = ctx.deg.select("id")
-    else:
-        vstatic = ctx.cache(vertices.select("id"))
-    hubs = [] if chained else ctx.closure_hubs()
-    u_rest, u_hub = _gather_sides(ctx.und, hubs, chained, ctx.cache)
-    return vstatic, hubs, u_rest, u_hub
 
 
 # --------------------------------------------------------------------------
@@ -224,7 +215,6 @@ def connected_components(
     max_iter: int = 100,
     checkpoint_dir: str | None = None,
     resume: bool = True,
-    checkpoint_interval: int = 1,
     input_fingerprint: str | None = None,
 ) -> SuperstepResult:
     """Hash-min components: comp(v) = min vertex id reachable; synchronous
@@ -234,38 +224,35 @@ def connected_components(
     the large-/small-star pointer-doubling variant; link graphs are
     small-diameter so hash-min's strictly-bounded shuffle wins.)
     """
-    chained = checkpoint_interval > 1
     with GraphContext(edges) as ctx:
-        vstatic, hubs, u_rest, u_hub = _closure_sides(ctx, vertices, chained)
+        # the vertex ids are the degree table's unless the caller passes
+        # a vertex set (isolated vertices)
+        ids = ctx.deg if vertices is None else ctx.cache(vertices.select("id"))
+        gather = _split_gather(
+            ctx.und, ctx.deg, "deg", ctx.n_und, ctx.max_deg, ctx.cache
+        )
 
         def init() -> DataFrame:
-            return vstatic.select("id", F.col("id").alias("comp"))
+            return ids.select("id", F.col("id").alias("comp"))
 
         def step(state: DataFrame, _k: int) -> DataFrame:
             src_state = state.select(F.col("id").alias("src"), "comp")
-            gathered = (
-                u_rest.join(src_state, "src")
-                if chained
-                else presplit_join(u_rest, u_hub, src_state, "src", hubs)
-            )
             msgs = (
-                gathered.select(F.col("dst").alias("id"), "comp")
+                gather(src_state)
+                .select(F.col("dst").alias("id"), "comp")
                 .groupBy("id")
                 .agg(F.min("comp").alias("mincomp"))
             )
             new_comp = F.least("comp", F.coalesce("mincomp", "comp"))
-            # the component at the last materialized state rides through a
-            # chained interval as _c0: the delta counts the vertices that
-            # changed since then. The state side shuffles on id here as
+            # the old component rides along as _c0: the delta counts the
+            # vertices that changed. The state side shuffles on id here as
             # well (see pagerank)
-            c0 = "_c0" if "_c0" in state.columns else "comp"
             return state.join(msgs.hint("shuffle_hash"), "id", "left").select(
-                "id", new_comp.alias("comp"), F.col(c0).alias("_c0")
+                "id", new_comp.alias("comp"), F.col("comp").alias("_c0")
             )
 
         driver = SuperstepDriver(
             spark, "cc", checkpoint_dir, max_iter=max_iter, tol=0.5,
-            materialize_every=checkpoint_interval,
             input_fingerprint=input_fingerprint,
         )
         changed = (F.col("comp") != F.col("_c0")).cast("long")
@@ -287,7 +274,6 @@ def label_propagation(
     n_iter: int = 10,
     checkpoint_dir: str | None = None,
     resume: bool = True,
-    checkpoint_interval: int = 1,
     input_fingerprint: str | None = None,
 ) -> SuperstepResult:
     """Synchronous label propagation, exactly n_iter supersteps,
@@ -296,7 +282,6 @@ def label_propagation(
     (Async LP is order-dependent — synchronous + min-tiebreak is the
     reproducible semantic our oracle and tests pin down.)
     """
-    chained = checkpoint_interval > 1
     with GraphContext(edges) as ctx:
         # a vertex's count for one label is at most its closure degree
         if ctx.max_deg >= LP_MAX_COUNT:
@@ -304,20 +289,19 @@ def label_propagation(
                 f"label_propagation: max degree {ctx.max_deg} overflows the "
                 f"packed argmax key (counts must stay below {LP_MAX_COUNT})"
             )
-        vstatic, hubs, u_rest, u_hub = _closure_sides(ctx, vertices, chained)
+        ids = ctx.deg if vertices is None else ctx.cache(vertices.select("id"))
+        gather = _split_gather(
+            ctx.und, ctx.deg, "deg", ctx.n_und, ctx.max_deg, ctx.cache
+        )
 
         def init() -> DataFrame:
-            return vstatic.select("id", F.col("id").alias("label"))
+            return ids.select("id", F.col("id").alias("label"))
 
         def step(state: DataFrame, _k: int) -> DataFrame:
             src_state = state.select(F.col("id").alias("src"), "label")
-            gathered = (
-                u_rest.join(src_state, "src")
-                if chained
-                else presplit_join(u_rest, u_hub, src_state, "src", hubs)
-            )
             cnt = (
-                gathered.select(F.col("dst").alias("id"), "label")
+                gather(src_state)
+                .select(F.col("dst").alias("id"), "label")
                 .groupBy("id", "label")
                 .agg(F.count(F.lit(1)).alias("n"))
             )
@@ -341,7 +325,6 @@ def label_propagation(
 
         driver = SuperstepDriver(
             spark, "lp", checkpoint_dir, max_iter=n_iter, tol=None,
-            materialize_every=checkpoint_interval,
             input_fingerprint=input_fingerprint,
         )
         return driver.run(init, step, resume=resume)

@@ -11,10 +11,11 @@ tasks are partition-granular, so we defuse skew structurally instead
   split there.
 - JOIN skew is the real risk: state ⨝ edges on src puts all of a hub's
   closure rows in one task. AQE's skew-join splitting handles unhinted
-  joins at runtime; hub_split_join / hub_presplit are the explicit
-  structural fix where AQE can't (hinted SHUFFLE_HASH joins, cached
-  sides): the few hub keys, found by hub_keys, join against a BROADCAST
-  slice of the small side while everything else takes the shuffle join.
+  joins at runtime; hub_split_join (and the superstep gather,
+  iterative._split_gather) are the explicit structural fix where AQE
+  can't (hinted SHUFFLE_HASH joins, cached sides): the few hub keys,
+  found by hub_keys, join against a BROADCAST slice of the small side
+  while everything else takes the shuffle join.
 """
 
 from __future__ import annotations
@@ -92,48 +93,3 @@ def hub_split_join(
     j_hub = big.filter(is_hub).join(F.broadcast(small_hub), key)
     j_rest = big.filter(~is_hub).join(small.hint("shuffle_hash"), key)
     return j_rest.unionByName(j_hub)
-
-
-def hub_presplit(
-    edges: DataFrame, key: str, hubs: list[int], n_part: int
-) -> tuple[DataFrame, DataFrame | None]:
-    """Pre-split a STATIC skewed table for repeated (per-superstep) joins:
-    the non-hub side hash-partitioned on the join key (exchange reuse
-    across supersteps), the hub side ROUND-ROBIN across n_part partitions.
-
-    Why round-robin: the hub side only ever joins against a BROADCAST
-    state slice (map-side), so any placement is correct — but partitioning
-    it BY KEY would put a mega-hub's millions of rows into one cached
-    partition, making the map-side join a single task. Measured on the
-    23M-edge zipf graph: that one task ran 7-9.5 s per superstep against
-    a 0.25 s stage median (straggler ratio 34x) and pinned PageRank's
-    32-core utilization at 26%.
-
-    The caller caches both sides; every superstep scans them. Both name
-    n_part: the session lets AQE coalesce cached plans, but never a
-    user-numbered repartition, so the cached rest side keeps the hash
-    partitioning the gather join reuses."""
-    if not hubs:
-        return edges.repartition(n_part, key), None
-    is_hub = F.col(key).isin(hubs)
-    rest = edges.filter(~is_hub).repartition(n_part, key)
-    hub = edges.filter(is_hub).repartition(n_part)
-    return rest, hub
-
-
-def presplit_join(
-    rest: DataFrame,
-    hub: DataFrame | None,
-    small: DataFrame,
-    key: str,
-    hubs: list[int],
-) -> DataFrame:
-    """The per-superstep join over a hub_presplit pair: SHUFFLE_HASH join
-    for the rest (reuses the cached hash partitioning; the per-superstep
-    state is the unique-per-key build side), broadcast of the small
-    side's hub slice for the round-robin hub partitions."""
-    j = rest.join(small.hint("shuffle_hash"), key)
-    if hub is not None:
-        small_hub = small.filter(F.col(key).isin(hubs))
-        j = j.unionByName(hub.join(F.broadcast(small_hub), key))
-    return j

@@ -15,8 +15,8 @@ Why materialize every superstep (SURVEY.md §7 hard parts):
   convergence delta, PageRank's next dangling mass) and, with a
   checkpoint dir, the lineage — is a ``pyspark.sql.Observation`` on that
   action, computed by the tasks that write the state: no job re-reads
-  the state it just wrote. Columns named ``_*`` (a boundary value carried
-  through a chained interval) can be observed but are not written.
+  the state it just wrote. Columns named ``_*`` (the previous value a
+  delta compares against) can be observed but are not written.
 - the lineage is one row per superstep for the whole state (algo,
   superstep, partition_id -1, rows = |V|, checksum = Σ xxhash64 over the
   written columns, delta, wall_ms), appended to a metrics table so a
@@ -85,17 +85,8 @@ class SuperstepDriver:
         checkpoint_dir: str | None = None,
         max_iter: int = 100,
         tol: float | None = None,
-        materialize_every: int = 1,
         input_fingerprint: str | None = None,
     ):
-        # materialize_every > 1 chains that many supersteps into ONE Spark
-        # job (no barrier, no state write between them) — per-superstep
-        # fixed overhead (scheduling, checkpoint, planning) amortizes by
-        # the same factor. Convergence is then checked only at
-        # materialization boundaries: valid for monotone algorithms (CC —
-        # extra supersteps past fixpoint are no-ops) and for PageRank
-        # (max|Δ| over an interval is a stricter criterion). Resume
-        # granularity becomes the boundary, not the superstep.
         # The lineage is kept exactly when there is a checkpoint dir: it is
         # part of the checkpoint contract.
         self.spark = spark
@@ -103,7 +94,6 @@ class SuperstepDriver:
         self.dir = checkpoint_dir
         self.max_iter = max_iter
         self.tol = tol
-        self.materialize_every = max(1, materialize_every)
         # identifies the input dataset (e.g. its path); a resume refuses to
         # continue a checkpoint written for a different algo or input
         self.input_fingerprint = input_fingerprint
@@ -218,7 +208,7 @@ class SuperstepDriver:
 
     def run(
         self,
-        init_state: Callable[[], DataFrame] | DataFrame,
+        init_state: Callable[[], DataFrame],
         step_fn: Callable[[DataFrame, int], DataFrame],
         observed: Sequence[Column] = (),
         delta: Callable[[dict], float] | None = None,
@@ -239,31 +229,27 @@ class SuperstepDriver:
         if resumed is not None:
             start_k, state = resumed
         else:
-            state = init_state() if callable(init_state) else init_state
-            state, seen = self._materialize(state, 0)
+            state, seen = self._materialize(init_state(), 0)
             self._record(0, seen, None, 0.0)
 
         deltas: list[float] = []
         all_metrics: list[dict] = []
         converged = False
         k = start_k
-        boundary_state = state  # last materialized state
         t0 = time.time()
         while k < self.max_iter:
             k += 1
-            state = step_fn(state, k)
-            if k % self.materialize_every != 0 and k < self.max_iter:
-                continue  # chain the next superstep into the same plan
-            state, seen = self._materialize(state, k, observed)
+            prev = state
+            state, seen = self._materialize(step_fn(prev, k), k, observed)
             d = delta(seen) if delta else None
             wall_ms = (time.time() - t0) * 1000.0
-            boundary_state.unpersist() if self.dir is None else None
+            if self.dir is None:
+                prev.unpersist()
             all_metrics.append(self._record(k, seen, d, wall_ms))
-            boundary_state = state
             t0 = time.time()
             if d is not None:
                 deltas.append(d)
                 if self.tol is not None and d < self.tol:
                     converged = True
                     break
-        return SuperstepResult(boundary_state, k, converged, deltas, all_metrics)
+        return SuperstepResult(state, k, converged, deltas, all_metrics)

@@ -131,7 +131,7 @@ def get_spark(
         # few KB keeps one partition instead of the shuffle width, so each
         # scan of it runs one task, not a full task wave. A user-numbered
         # repartition(n, key) is never coalesced, so the co-partitioned
-        # superstep caches (skew.hub_presplit) keep their width.
+        # superstep caches (iterative._split_gather) keep their width.
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -293,17 +293,28 @@ def test_lp_checkpoint_job_count(spark, tmp_path):
 def test_pagerank_fixed_k_dangling_vs_oracle(spark, tmp_path):
     """Fixed-K PageRank on a graph with dangling vertices: the dangling
     mass comes from the setup row, then from each write's observation —
-    and, resumed from a checkpoint, from one aggregation."""
+    and, resumed from a checkpoint, from one aggregation. Every superstep
+    yields one delta, max|r_k − r_{k−1}|, resumed ones included."""
     pairs = DIRECTED_DANGLING
     e = golden.to_spark_edges(spark, pairs)
-    want = ref.pagerank(pairs, n_iter=5)
-    got = pr_dict(pagerank(spark, e, tol=None, max_iter=5))
+    ranks = [ref.pagerank(pairs, n_iter=k) for k in range(6)]
+    want = ranks[5]
+    want_deltas = [
+        max(abs(ranks[k][v] - ranks[k - 1][v]) for v in want) for k in range(1, 6)
+    ]
+    res = pagerank(spark, e, tol=None, max_iter=5)
+    got = pr_dict(res)
     assert set(got) == set(want)
     assert max(abs(got[k] - want[k]) for k in want) < 1e-12
+    assert len(res.deltas) == 5
+    assert max(abs(a - b) for a, b in zip(res.deltas, want_deltas)) < 1e-12
     d = str(tmp_path / "prd")
     pagerank(spark, e, tol=None, max_iter=2, checkpoint_dir=d)
-    resumed = pr_dict(pagerank(spark, e, tol=None, max_iter=5, checkpoint_dir=d))
+    res = pagerank(spark, e, tol=None, max_iter=5, checkpoint_dir=d)
+    resumed = pr_dict(res)
     assert max(abs(resumed[k] - want[k]) for k in want) < 1e-12
+    assert len(res.deltas) == 3
+    assert max(abs(a - b) for a, b in zip(res.deltas, want_deltas[2:])) < 1e-12
 
 
 def test_lp_signed_extreme_labels_vs_oracle(spark):
@@ -326,30 +337,6 @@ def test_lp_count_bound_raises_before_supersteps(spark, monkeypatch):
     e = golden.to_spark_edges(spark, golden.ALL["star_hub"])
     with pytest.raises(ValueError, match="packed argmax key"):
         label_propagation(spark, e, n_iter=2)
-
-
-def test_checkpoint_interval_equivalence(spark):
-    """Chaining supersteps (materialize_every>1) must not change results:
-    CC exactly; PageRank to float-noise, with one delta per boundary."""
-    e = golden.to_spark_edges(spark, golden.DISCONNECTED)
-    a = connected_components(spark, e, checkpoint_interval=1)
-    b = connected_components(spark, e, checkpoint_interval=3)
-    assert comp_dict(a) == comp_dict(b)
-
-    pairs = both_dirs(golden.TWO_TRI_BRIDGE)
-    pe = golden.to_spark_edges(spark, pairs)
-    p1 = pagerank(spark, pe, tol=None, max_iter=6, checkpoint_interval=1, resume=False)
-    p3 = pagerank(spark, pe, tol=None, max_iter=6, checkpoint_interval=3, resume=False)
-    d1, d3 = pr_dict(p1), pr_dict(p3)
-    assert max(abs(d1[k] - d3[k]) for k in d1) < 1e-12
-    # chained deltas compare boundary states: max|r3 − r0|, max|r6 − r3|
-    r3, r6 = ref.pagerank(pairs, n_iter=3), ref.pagerank(pairs, n_iter=6)
-    want = [
-        max(abs(r3[k] - 1.0 / len(r3)) for k in r3),
-        max(abs(r6[k] - r3[k]) for k in r3),
-    ]
-    assert len(p3.deltas) == 2 and len(p1.deltas) == 6
-    assert max(abs(a - b) for a, b in zip(p3.deltas, want)) < 1e-12
 
 
 def test_cc_isolated_vertices(spark):

@@ -58,8 +58,8 @@ def test_star_hub_closed_form_value(spark):
 def labelled_graph(spark):
     # two triangles + bridge; labels: {1,2,3}→0, {4,5,6}→1
     e = golden.to_spark_edges(spark, golden.TWO_TRI_BRIDGE)
-    labels = spark.createDataFrame(
-        [(v, 0 if v <= 3 else 1) for v in range(1, 7)], "id long, label int"
+    labels = local_frame(
+        spark, [(v, 0 if v <= 3 else 1) for v in range(1, 7)], "id long, label int"
     )
     return e, labels
 
@@ -146,7 +146,7 @@ def test_mni_star2_supports_vs_match_based(spark):
     pairs = golden.TWO_TRI_BRIDGE
     glab = {1: 7, 2: 7, 3: 5, 4: 5, 5: 9, 6: 3}
     e = golden.to_spark_edges(spark, pairs)
-    labels = spark.createDataFrame(list(glab.items()), "id long, label int")
+    labels = local_frame(spark, list(glab.items()), "id long, label int")
     got = {
         (r.center_label, r.l1, r.l2): r.support
         for r in mni_star2_supports(e, labels).collect()
@@ -207,7 +207,7 @@ def test_mni_star2_supports_many_labels(spark):
         want[key] = min(doms)
 
     e = spark.createDataFrame(pairs, "src long, dst long")
-    labels = spark.createDataFrame(list(lab.items()), "id long, label int")
+    labels = local_frame(spark, list(lab.items()), "id long, label int")
     got = {
         (r.center_label, r.l1, r.l2): r.support
         for r in mni_star2_supports(e, labels).collect()
@@ -237,7 +237,7 @@ def test_mni_level3_shape_tables_vs_match_based(spark):
     pairs = [p for p in pairs if p[0] != p[1]]
     lab = {v: v % 4 for v in range(n)}
     e = spark.createDataFrame(pairs, "src long, dst long")
-    labels = spark.createDataFrame(list(lab.items()), "id long, label int")
+    labels = local_frame(spark, list(lab.items()), "id long, label int")
 
     checks = []
     for r in mni_triangle_supports(e, labels).collect():
@@ -517,9 +517,7 @@ def test_fsm_vertex_strategy_level4(spark):
     pairs = [(1, 2), (1, 3), (2, 3), (1, 4),
              (5, 6), (5, 7), (6, 7), (5, 8)]
     e = golden.to_spark_edges(spark, pairs)
-    labels = spark.createDataFrame(
-        [(v, 0) for v in range(1, 9)], "id long, label int"
-    )
+    labels = local_frame(spark, [(v, 0) for v in range(1, 9)], "id long, label int")
     out_v = fsm(spark, e, labels, min_support=2, max_edges=4,
                 strategy="vertex")
     deep = [(p, s) for p, s in out_v if len(p.edges) >= 4]

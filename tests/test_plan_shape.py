@@ -26,8 +26,10 @@ import pytest
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
+from peregrine_spark import reference as ref
 from peregrine_spark.operators import graph, iterative, motifs, skew
-from peregrine_spark.operators.graph import degrees
+from peregrine_spark.operators.graph import GraphContext, degrees
+from peregrine_spark.operators.groups import group_count
 from peregrine_spark.operators import labels as label_ops
 from peregrine_spark.operators.labels import (
     discover_star_labels,
@@ -36,6 +38,7 @@ from peregrine_spark.operators.labels import (
     mni_star3_supports,
 )
 from peregrine_spark.operators.triangles import triangle_count
+from peregrine_spark.plans.patterns import SmallGraph
 from peregrine_spark.session import local_frame
 from peregrine_spark.sources.testdata import copurchase_edges, part_labels
 from tests import golden
@@ -245,6 +248,38 @@ def test_cycle4_count_shape(spark, copurchase, monkeypatch, route):
     assert got == want
 
 
+# Group counting of one pattern whose three groups attach to 3, 2 and 1
+# core vertices (a triangle core), in array mode (the default on this
+# graph) and in shuffle mode, forced as in test_patterns by failing array
+# mode's max-degree gate. Both modes count the same matches.
+GROUP_PATTERN = SmallGraph(
+    edges=[(1, 2), (1, 3), (2, 3), (1, 4), (2, 4), (3, 4), (1, 5), (2, 5), (1, 6)]
+)
+GROUP_MATCHES = 33_126_711_675
+GROUP_MODES = {
+    "array": (None, {"executions": 2, "Exchange": 1, "BroadcastHashJoin": 5}),
+    "shuffle": (200_000, {"executions": 2, "Exchange": 3, "BroadcastHashJoin": 6}),
+}
+
+
+@pytest.mark.parametrize("mode", list(GROUP_MODES))
+def test_group_count_shape(spark, copurchase, mode):
+    edges, _ = copurchase
+    max_deg, want = GROUP_MODES[mode]
+    rows = []
+    with GraphContext(edges) as ctx:
+        # the context's statistics job runs here, outside the count
+        if max_deg is not None:
+            ctx.max_deg = max_deg
+        assert ctx.array_mode() == (mode == "array")
+        got = plan_shape(
+            spark,
+            lambda: rows.extend(group_count(edges, GROUP_PATTERN, ctx=ctx).collect()),
+        )
+    assert got == want
+    assert rows[0]["n_matches"] == GROUP_MATCHES
+
+
 # Each labelled star operator runs its cache fill and its collects; the
 # label joins are broadcast (the sf0.001 part labels are far below the
 # session's autoBroadcastJoinThreshold). Choosing that route runs no job.
@@ -313,28 +348,50 @@ def test_star_labels_empty_result(spark, copurchase):
 
 
 @pytest.mark.parametrize("hubs", [False, True], ids=["no_hubs", "hubs"])
-@pytest.mark.parametrize("algo", ["pagerank", "connected_components"])
+@pytest.mark.parametrize(
+    "algo", ["pagerank", "connected_components", "label_propagation"]
+)
 def test_superstep_gather_shape(spark, monkeypatch, algo, hubs):
-    # The gather joins the cached edge side of hub_presplit (hash
-    # partitioned by src into n_part partitions) with the state. A
-    # user-numbered repartition is never coalesced, so the cache keeps
-    # n_part partitions and only the state side shuffles.
+    # The gather joins the edge side _split_gather cached (the rest hash
+    # partitioned by src into n_part partitions, hub edges round-robin)
+    # with the state. A user-numbered repartition is never coalesced, so
+    # the caches keep n_part partitions and only the state side shuffles.
+    # A hub threshold of 1 makes every vertex of degree > 1 a hub; the
+    # states equal the NumPy oracle's either way.
     calls, widths = [], []
+    split_gather = iterative._split_gather
 
-    def presplit_join(rest, hub, small, key, hub_list):
-        # from the second superstep on, the caches are filled
-        if calls:
-            widths.append([d.rdd.getNumPartitions() for d in (rest, hub) if d is not None])
-        calls.append(hub is not None)
-        return skew.presplit_join(rest, hub, small, key, hub_list)
+    def recording_split_gather(*args):
+        *args, cache = args
+        cached = []
+        gather = split_gather(*args, lambda df: cached.append(df) or cache(df))
 
-    monkeypatch.setattr(iterative, "presplit_join", presplit_join)
+        def recording_gather(src_state):
+            # from the second superstep on, the caches are filled
+            if calls:
+                widths.append([d.rdd.getNumPartitions() for d in cached])
+            calls.append(len(cached) == 2)
+            return gather(src_state)
+
+        return recording_gather
+
+    monkeypatch.setattr(iterative, "_split_gather", recording_split_gather)
     if hubs:
         monkeypatch.setattr(skew, "auto_hub_threshold", lambda n_rows: 1)
     pairs = np.asarray(golden.TWO_TRI_BRIDGE)
-    e = golden.to_spark_edges(spark, np.concatenate([pairs, pairs[:, ::-1]]))
+    pairs = np.concatenate([pairs, pairs[:, ::-1]])
+    e = golden.to_spark_edges(spark, pairs)
     run = getattr(iterative, algo)
-    plans = executed_plans(spark, lambda: run(spark, e, max_iter=2))
+    steps = {"n_iter": 2} if algo == "label_propagation" else {"max_iter": 2}
+    if algo == "pagerank":
+        steps["tol"] = None
+    res = []
+    plans = executed_plans(spark, lambda: res.append(run(spark, e, **steps)))
+    col = {"pagerank": "rank", "connected_components": "comp"}.get(algo, "label")
+    got = {r["id"]: r[col] for r in res[0].state.collect()}
+    want = getattr(ref, algo)(pairs, n_iter=2)
+    assert set(got) == set(want)
+    assert max(abs(got[k] - want[k]) for k in want) < 1e-12
     gather = "ShuffledHashJoin Inner"
     gathers = [
         p for p in plans if any(gather in line for _, _, line in _top_level_nodes(p))
