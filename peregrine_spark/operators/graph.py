@@ -36,9 +36,9 @@ from peregrine_spark.operators import skew
 # time.
 #
 # Whole-adjacency broadcast (triangles, cliques, cycle4): Σ out-run
-# lengths = |E| ids ≈ 160 MB raw at the cap. Below it, adjacency attaches
-# via map-side broadcast joins (no array-carrying shuffle, no hub
-# detection); above it, plans fall back to hub-split shuffle joins.
+# lengths = |E| ids ≈ 160 MB raw at the cap. Below it, GraphContext.attach_adj
+# attaches runs via map-side broadcast joins (no array-carrying shuffle,
+# no hub detection); above it, via hub-split shuffle joins.
 BROADCAST_MAX_EDGES = 20_000_000
 # degree-table broadcast (orient's joins, group counting's |NU| = 1
 # lookups): |V| rows of (id, deg)
@@ -64,8 +64,8 @@ PACK_MAX_ID = 1 << 31
 # cycle4 route-1 wedge budget: total wedges Σ C(deg,2) is exactly the row
 # count of the one packed-key shuffle (8 B/row ⇒ ~8 GB at the cap). A
 # zipf mega-hub's Σ C(deg,2) is 10¹³⁺, so skewed graphs land on the
-# intersect/hub-split routes (routing is a perf heuristic only — every
-# route is exact and golden-tested).
+# intersect route (routing is a perf heuristic only — both routes are
+# exact and golden-tested).
 WEDGE_ENUM_MAX = 1_000_000_000
 
 
@@ -263,6 +263,36 @@ class GraphContext:
         est_rows = min(self.n_wedges, self.n_vertices * self.n_vertices)
         return F.broadcast(cd) if est_rows <= BROADCAST_WEDGE_LIMIT else cd
 
+    def attach_adj(
+        self, df: DataFrame, key: str, col: str, how: str = "inner"
+    ) -> DataFrame:
+        """`df` with the forward run (`adj`) of the vertex in its `key`
+        column attached as `col` — the one way frontier-intersection plans
+        read adjacency. `how` is "inner" or "left" (a row whose vertex has
+        no forward run gets a null `col`).
+
+        When the whole adjacency broadcasts, the attach is a map-side
+        broadcast hash join: rows carrying ~O(sqrt E)-element arrays never
+        cross an exchange (round-6 profile: the two array-carrying
+        shuffles were most of triangle_count's wall at sf0.1). Above the
+        bound it is a hub-split shuffle join: a mega-hub's DAG in-degree
+        can approach |E| and would pin one task of the shuffle, so the
+        hub keys (dag_hubs) join a broadcast slice of the runs instead —
+        their runs are tiny, a high-degree vertex has few higher-degree
+        neighbours."""
+        runs = self.adj.select(F.col("id").alias(key), F.col("adj").alias(col))
+        if self.adj_broadcast():
+            return df.join(F.broadcast(runs), key, how)
+        return skew.hub_split_join(df, runs, key, self.dag_hubs, how)
+
+    def edge_runs(self) -> DataFrame:
+        """(src, dst, adj_u, adj_v): every DAG edge u→v with both
+        endpoints' forward runs — the base-edge frontier of the triangle
+        and clique plans."""
+        return self.attach_adj(
+            self.attach_adj(self.fwd, "src", "adj_u"), "dst", "adj_v"
+        )
+
     # -- route decisions -------------------------------------------------
     def adj_broadcast(self) -> bool:
         """Attach forward-adjacency runs by map-side broadcast joins."""
@@ -301,9 +331,10 @@ class GraphContext:
             and self.n_wedges // 2 <= WEDGE_ENUM_MAX
         )
 
+    @cached_property
     def dag_hubs(self) -> list[int]:
         """DAG dst ids whose in-degree would pin one task of a shuffle
-        join (the hub-split fallbacks of triangles, cliques and cycle4)."""
+        join: the keys attach_adj's hub-split route broadcasts."""
         counts = self.fwd.groupBy("dst").agg(F.count(F.lit(1)).alias("n"))
         thr = skew.auto_hub_threshold(self.n_edges)
         return skew.hub_keys(counts, "dst", "n", thr, self.max_deg)

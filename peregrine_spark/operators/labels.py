@@ -276,8 +276,11 @@ def mni_star2_supports(edges: DataFrame, labels: DataFrame) -> DataFrame:
     """
     with GraphContext(edges) as ctx:
         # lv feeds both the histogram chain and the leaf gather, hc four
-        # subtrees; the centers collect below fills both caches
+        # subtrees; fill both caches before the centers collect, whose
+        # stage scans hc three times — over an unfilled cache, two of its
+        # tasks can compute the same block
         lv, hc, dim = _label_state(ctx, labels)
+        hc.count()
         h1 = hc.select("c", "cl", F.col("ll").alias("l1"))
         h2 = hc.select("c", F.col("ll").alias("l2"))
         qual_diff = (

@@ -23,7 +23,6 @@ from pyspark.sql import functions as F
 
 from peregrine_spark.operators.graph import GraphContext, adjacency
 from peregrine_spark.operators.patterns import match_pattern
-from peregrine_spark.operators.skew import hub_split_join
 from peregrine_spark.plans.patterns import SmallGraph
 from peregrine_spark.reference import pattern_count
 from peregrine_spark.session import local_frame
@@ -204,11 +203,11 @@ def cycle4_count(edges: DataFrame) -> DataFrame:
     order η (the same orientation that bounds the triangle/clique paths,
     reference core/Graph.hh:1062-1073):
 
-      A (c η-min):  enumerated via the oriented self-join on src —
+      A (c η-min):  all unordered pairs within each oriented out-run —
                     Σ C(outdeg, 2) rows, outdeg = O(√E), hub outdeg ≈ 0
       B (c η-mid):  per DAG edge a→c, explode c's out-adjacency —
                     Σ indeg·outdeg rows; the hub's huge in-degree
-                    multiplies its ≈0 out-degree, and hub dsts broadcast
+                    multiplies its ≈0 out-degree
       C (c η-max):  NEVER enumerated — for a pair (x, y) it equals
                     |out(x) ∩ out(y)| (array_intersect on the short
                     oriented runs), and pairs of C-wedges reduce back to
@@ -217,7 +216,7 @@ def cycle4_count(edges: DataFrame) -> DataFrame:
     With codeg = AB + Cw:  2·C4 = Σ C(AB,2) + Σ AB·Cw + Σ C(A,2).
 
     Physical routing (round-6 rework; round-5/6 profiles in BENCH.md /
-    OPTIMIZATION_r06.md): three routes, picked from the GraphContext's
+    OPTIMIZATION_r06.md): two routes, picked from the GraphContext's
     one stats aggregation (GraphContext.cycle4_full_enum).
 
     1. FULL WEDGE ENUMERATION (small unskewed graphs:
@@ -233,21 +232,37 @@ def cycle4_count(edges: DataFrame) -> DataFrame:
        per wedge. The wedge budget matters: a zipf mega-hub makes
        Σ C(deg,2) ~10¹³⁺, which is why wedges are otherwise never
        fully enumerated.
-    2. BROADCAST + INTERSECT (small but in-skewed or huge ids): A/B
-       wedges enumerated (hub in-degree × ≈0 out-degree stays bounded),
-       C recovered per pair as |out(x) ∩ out(y)| via broadcast left
-       joins, pairs of C-wedges via the Σ C(A,2) duality.
-    3. HUB-SPLIT SHUFFLE (|E| above the broadcast bound): as 2 but with
-       shuffle joins and hub splitting — the mega-hub's in-degree lives
-       on the dst side of every one of those joins."""
+    2. INTERSECT (skewed, huge or large-id graphs): A-wedges from the
+       same pair generator over the cached out-runs, B-wedges from one
+       adjacency attach on the DAG edges' dst (hub in-degree × ≈0
+       out-degree stays bounded), one groupBy per pair, then C per pair
+       as |out(x) ∩ out(y)| via two left attaches and one fused
+       aggregation; pairs of C-wedges via the Σ C(A,2) duality. The
+       attaches are GraphContext.attach_adj's: map-side broadcast joins
+       under BROADCAST_MAX_EDGES, hub-split shuffle joins above it (the
+       mega-hub's in-degree lives on the key side of every one)."""
     with GraphContext(edges) as ctx:
         n = _cycle4(ctx)
     return local_frame(edges.sparkSession, [(n,)], "n_cycles long")
 
 
+def _run_pairs(runs: DataFrame) -> DataFrame:
+    """(x, y), x < y: every unordered pair of distinct ids within each
+    sorted `adj` run, each exactly once. One codegen posexplode + slice +
+    explode: the slice after position i holds exactly the y > x
+    partners. The first cut generated pairs with transform/filter
+    lambdas — higher-order array functions run INTERPRETED per element
+    (the minhash lesson), ~2× the pair count in expression-walk
+    evaluations."""
+    return runs.select(F.posexplode("adj").alias("i", "x"), "adj").select(
+        F.col("x"),
+        F.explode(F.expr("slice(adj, i + 2, size(adj) - i - 1)")).alias("y"),
+    )
+
+
 def _cycle4(ctx: GraphContext) -> int:
-    """cycle4_count's routes over a live context; EAGER, so the context's
-    caches (and the route-3 pair cache) serve every action."""
+    """cycle4_count's two routes over a live context; EAGER, so the
+    context's caches serve every action."""
     sc = ctx.und.sparkSession.sparkContext
     if ctx.cycle4_full_enum():
         # The A/B/C split exists to AVOID enumerating hub wedges on
@@ -255,14 +270,10 @@ def _cycle4(ctx: GraphContext) -> int:
         # enumerable, and A ∪ B ∪ C at a center c is simply ALL
         # unordered pairs of distinct neighbours of c — so ONE shuffle
         # builds the full sorted neighbour run per vertex (no direction
-        # flags, no conditional collect_lists) and one codegen
-        # posexplode + slice + explode emits each pair exactly once.
-        # The first cut of this route generated pairs with
-        # transform/filter lambdas — higher-order array functions run
-        # INTERPRETED per element (the minhash lesson), ~2× the wedge
-        # count in expression-walk evaluations, and the union of two
-        # generator branches recomputed the whole run-build subtree per
-        # branch (no runtime exchange reuse across union branches).
+        # flags, no conditional collect_lists) and one pair generator
+        # emits each pair exactly once (a union of two generator
+        # branches recomputed the whole run-build subtree per branch:
+        # no runtime exchange reuse across union branches).
         runs = adjacency(ctx.und)
         # |V| rows feed a Σ C(deg,2)-row explode: round-robin them over
         # the cores FIRST or AQE coalesces the tiny input to a handful
@@ -270,19 +281,9 @@ def _cycle4(ctx: GraphContext) -> int:
         # (measured: 91 s vs 13 s at sf0.1)
         runs = runs.repartition(sc.defaultParallelism * 4)
         P = 1 << 32
-        # sorted runs: the slice after position i holds exactly the
-        # y > x partners, so the packed key x·2³² + y is canonical
-        pairs = (
-            runs.select(F.posexplode("adj").alias("i", "x"), "adj")
-            .select(
-                F.col("x"),
-                F.explode(
-                    F.expr("slice(adj, i + 2, size(adj) - i - 1)")
-                ).alias("y"),
-            )
-            .select(
-                (F.col("x").cast("bigint") * F.lit(P) + F.col("y")).alias("k")
-            )
+        # x < y, so the packed key x·2³² + y is canonical
+        pairs = _run_pairs(runs).select(
+            (F.col("x").cast("bigint") * F.lit(P) + F.col("y")).alias("k")
         )
         # explicit repartition ON the key sized from the known wedge
         # count (8 bytes/row, ~16 MB target per task, floor at 2×cores):
@@ -305,36 +306,11 @@ def _cycle4(ctx: GraphContext) -> int:
             .first()
         )
         return int(row["n_cycles"])
-    fwd, adj = ctx.fwd, ctx.adj
-    small = ctx.adj_broadcast()
-    hubs = [] if small else ctx.dag_hubs()
-    if small:
-        # A-wedges map-side: all unordered pairs within each out-run
-        aw = adj.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(adj, (a, i) ->"
-                    " transform(slice(adj, i + 2, size(adj) - i - 1),"
-                    " b -> struct(least(a, b) as x, greatest(a, b) as y))))"
-                )
-            ).alias("p")
-        ).select("p.x", "p.y", F.lit(1).alias("is_a"))
-        bw_joined = fwd.join(
-            F.broadcast(adj.select(F.col("id").alias("dst"), "adj")), "dst"
-        )
-    else:
-        f1 = fwd.select(F.col("src").alias("c"), F.col("dst").alias("x"))
-        f2 = fwd.select(F.col("src").alias("c"), F.col("dst").alias("y"))
-        aw = (
-            f1.join(f2, "c")
-            .filter(F.col("x") < F.col("y"))
-            .select("x", "y", F.lit(1).alias("is_a"))
-        )
-        bw_joined = hub_split_join(
-            fwd, adj.select(F.col("id").alias("dst"), "adj"), "dst", hubs
-        )
+    # A-wedges: all unordered pairs within each sorted out-run
+    aw = _run_pairs(ctx.adj).select("x", "y", F.lit(1).alias("is_a"))
+    # B-wedges a→c→b: per DAG edge, explode the dst's out-run
     bw = (
-        bw_joined
+        ctx.attach_adj(ctx.fwd, "dst", "adj")
         .select(F.col("src").alias("a"), F.explode("adj").alias("b"))
         .select(
             F.least("a", "b").alias("x"),
@@ -347,54 +323,27 @@ def _cycle4(ctx: GraphContext) -> int:
         .groupBy("x", "y")
         .agg(F.count(F.lit(1)).alias("nab"), F.sum("is_a").alias("na"))
     )
-    ax = adj.select(F.col("id").alias("x"), F.col("adj").alias("ax"))
-    ay = adj.select(F.col("id").alias("y"), F.col("adj").alias("ay"))
-    if small:
-        # Cw attaches via broadcast LEFT joins (missing row ⇒ Cw = 0) so
-        # all three terms fuse into one aggregation over the groupBy
-        with_ay = pairs.join(F.broadcast(ax), "x", "left").join(
-            F.broadcast(ay), "y", "left"
+    # Cw attaches by LEFT joins (no run ⇒ Cw = 0; Cw only matters where
+    # AB > 0, its pure pairs are the Σ C(A,2) term), so all three terms
+    # fuse into one aggregation over the groupBy
+    cw = ctx.attach_adj(
+        ctx.attach_adj(pairs, "x", "ax", "left"), "y", "ay", "left"
+    )
+    row = (
+        cw.select(
+            (
+                F.expr("nab * (nab - 1) DIV 2 + na * (na - 1) DIV 2")
+                + F.col("nab")
+                * F.when(
+                    F.col("ax").isNotNull() & F.col("ay").isNotNull(),
+                    F.size(F.array_intersect("ax", "ay")),
+                ).otherwise(F.lit(0))
+            ).alias("v")
         )
-        row = (
-            with_ay.select(
-                (
-                    F.expr("nab * (nab - 1) DIV 2 + na * (na - 1) DIV 2")
-                    + F.col("nab")
-                    * F.when(
-                        F.col("ax").isNotNull() & F.col("ay").isNotNull(),
-                        F.size(F.array_intersect("ax", "ay")),
-                    ).otherwise(F.lit(0))
-                ).alias("v")
-            )
-            .agg(
-                F.expr("coalesce(sum(v), 0L) DIV 2")
-                .cast("long")
-                .alias("n_cycles")
-            )
-            .first()
-        )
-    else:
-        pairs = ctx.cache(pairs)
-        t13 = pairs.agg(
-            F.coalesce(
-                F.sum(F.expr("nab * (nab - 1) DIV 2 + na * (na - 1) DIV 2")),
-                F.lit(0).cast("long"),
-            ).alias("s13")
-        )
-        # Cw only matters where AB > 0 (its pure pairs are the Σ C(A,2)
-        # term); missing adjacency rows mean Cw = 0, so inner joins are
-        # exact
-        with_ax = hub_split_join(pairs, ax, "x", hubs)
-        with_ay = hub_split_join(with_ax, ay, "y", hubs)
-        t2 = with_ay.select(
-            (F.col("nab") * F.size(F.array_intersect("ax", "ay"))).alias("v")
-        ).agg(F.coalesce(F.sum("v"), F.lit(0).cast("long")).alias("s2"))
-        row = t13.crossJoin(t2).select(
-            F.expr("(s13 + s2) DIV 2").cast("long").alias("n_cycles")
-        ).first()
+        .agg(F.expr("coalesce(sum(v), 0L) DIV 2").cast("long").alias("n_cycles"))
+        .first()
+    )
     return int(row["n_cycles"])
-
-
 
 
 def motif_counts_k4(

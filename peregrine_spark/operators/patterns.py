@@ -21,7 +21,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from peregrine_spark.operators.graph import GraphContext, undirected
-from peregrine_spark.operators.skew import hub_split_join
 from peregrine_spark.plans.patterns import SmallGraph
 from peregrine_spark.session import local_frame
 
@@ -488,10 +487,12 @@ def clique_count(edges: DataFrame, k: int) -> DataFrame:
     (n_cliques,). Intermediates bounded by (k-1)-clique count × candidate
     runs; out-degrees in the DAG are O(sqrt E).
 
-    Every dst-side adjacency join goes through hub_split_join: a zipf
+    Every adjacency attach is GraphContext.attach_adj: a map-side
+    broadcast join when the whole adjacency fits (no frontier row ever
+    crosses an exchange), a hub-split shuffle join otherwise — a zipf
     mega-hub's DAG in-degree can approach |E|, and its frontier
-    multiplicity the (k-1)-clique count — either would pin a whole stage
-    on one task, the straggler the triangle path already defuses.
+    multiplicity the (k-1)-clique count; either would pin a whole stage
+    on one task.
 
     EAGER: the count runs inside the context, which then releases its
     caches (inside an enclosing context on the same edges, it reads that
@@ -499,28 +500,13 @@ def clique_count(edges: DataFrame, k: int) -> DataFrame:
     if k < 3:
         raise ValueError("k ≥ 3")
     with GraphContext(edges) as ctx:
-        fwd, adj = ctx.fwd, ctx.adj
-        small = ctx.adj_broadcast()
-        hubs = [] if small else ctx.dag_hubs()
-
-        def attach(df: DataFrame, key: str, acol: str) -> DataFrame:
-            """Adjacency attachment: map-side broadcast join when the
-            whole adjacency fits (no frontier row ever crosses an
-            exchange), hub-split shuffle join otherwise."""
-            a = adj.select(F.col("id").alias(key), F.col("adj").alias(acol))
-            if small:
-                return df.join(F.broadcast(a), key)
-            return hub_split_join(df, a, key, hubs)
-
         # frontier after matching the base edge (v1≺v2): candidates for v3..
-        a_u = adj.select(F.col("id").alias("src"), F.col("adj").alias("a_u"))
-        with_u = fwd.join(F.broadcast(a_u) if small else a_u, "src")
-        front = attach(with_u, "dst", "a_v").select(
-            F.array_intersect("a_u", "a_v").alias("cand")
+        front = ctx.edge_runs().select(
+            F.array_intersect("adj_u", "adj_v").alias("cand")
         )
         for _ in range(k - 3):
             exploded = front.select(F.explode("cand").alias("w"), "cand")
-            front = attach(exploded, "w", "a_w").select(
+            front = ctx.attach_adj(exploded, "w", "a_w").select(
                 F.array_intersect("cand", "a_w").alias("cand")
             )
         row = front.agg(

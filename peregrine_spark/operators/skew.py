@@ -9,13 +9,16 @@ tasks are partition-granular, so we defuse skew structurally instead
 - groupBy aggregations (sum/min/count) already two-phase map-side — a hub
   dst reduces to one row per map partition before the shuffle. Nothing to
   split there.
-- JOIN skew is the real risk: state ⨝ edges on src puts all of a hub's
-  closure rows in one task. AQE's skew-join splitting handles unhinted
-  joins at runtime; hub_split_join (and the superstep gather,
-  iterative._split_gather) are the explicit structural fix where AQE
-  can't (hinted SHUFFLE_HASH joins, cached sides): the few hub keys,
-  found by hub_keys, join against a BROADCAST slice of the small side
-  while everything else takes the shuffle join.
+- JOIN skew is the real risk: a join on a hub key puts all of the hub's
+  rows in one task. AQE's skew-join splitting handles unhinted joins at
+  runtime; where it can't (hinted SHUFFLE_HASH joins, cached sides) the
+  fix is structural: the few hub keys, found by hub_keys, join against a
+  BROADCAST slice of the small side while everything else takes the
+  shuffle join. hub_split_join is that join for the adjacency attaches
+  of graphs too large to broadcast their runs
+  (graph.GraphContext.attach_adj); the superstep gather
+  (iterative._split_gather) pre-splits its cached edge side by the same
+  hub_keys instead.
 """
 
 from __future__ import annotations
@@ -70,26 +73,23 @@ def auto_hub_threshold(n_rows: int, shuffle_partitions: int | None = None) -> in
 
 
 def hub_split_join(
-    big: DataFrame, small: DataFrame, key: str, hubs: list[int]
+    big: DataFrame, small: DataFrame, key: str, hubs: list[int], how: str = "inner"
 ) -> DataFrame:
-    """Inner equi-join big ⨝ small on `key` where `small` is unique per
-    key and `big` is power-law-skewed on it: rows whose key is a hub join
-    against a BROADCAST slice of `small` (map-side — the hub's millions of
-    rows never shuffle), the rest take the normal shuffle join. The union
-    is exactly the plain join because hub and non-hub keys partition the
-    key space.
-
-    This is the structural fix for stragglers AQE can't split (e.g. the
-    per-superstep state×edges gather): one vertex with degree ~|E|/6
-    otherwise pins a whole stage on a single task.
+    """Equi-join big ⨝ small on `key` ("inner" or "left", big on the
+    left) where `small` is unique per key and `big` is power-law-skewed
+    on it: rows whose key is a hub join against a BROADCAST slice of
+    `small` (map-side — the hub's millions of rows never shuffle), the
+    rest take the normal shuffle join. The union is exactly the plain
+    join because the hub test (false for a null key) splits big's rows
+    in two, and each half meets every small row of its keys.
 
     The shuffle join is hinted SHUFFLE_HASH (hash the unique-per-key
     `small`, sort neither side). Hinted joins are exempt from AQE's skew
     splitting — which is why the hubs are split off here."""
     if not hubs:
-        return big.join(small.hint("shuffle_hash"), key)
-    is_hub = F.col(key).isin(hubs)
+        return big.join(small.hint("shuffle_hash"), key, how)
+    is_hub = F.coalesce(F.col(key).isin(hubs), F.lit(False))
     small_hub = small.filter(F.col(key).isin(hubs))
-    j_hub = big.filter(is_hub).join(F.broadcast(small_hub), key)
-    j_rest = big.filter(~is_hub).join(small.hint("shuffle_hash"), key)
+    j_hub = big.filter(is_hub).join(F.broadcast(small_hub), key, how)
+    j_rest = big.filter(~is_hub).join(small.hint("shuffle_hash"), key, how)
     return j_rest.unionByName(j_hub)

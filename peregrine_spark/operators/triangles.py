@@ -7,11 +7,12 @@ The Spark restatement: degree-ordered orientation turns the graph into a
 DAG with O(sqrt(E)) out-degrees; each oriented edge (u,v) closes exactly
 |N+(u) ∩ N+(v)| triangles (the edge-iterator algorithm).
 
-Physical plan (_edge_adjacency_pairs): per-vertex sorted forward runs
-attach to both ends of every oriented edge — map-side broadcast joins
-under graph.BROADCAST_MAX_EDGES, hub-split shuffle joins above it — and
-JVM array_intersect does the set intersection inside codegen. No Python,
-no wedge set through a shuffle; the count aggregates map-side, like the
+Physical plan (GraphContext.edge_runs): per-vertex sorted forward runs
+attach to both ends of every oriented edge through the context's one
+adjacency attach (GraphContext.attach_adj: map-side broadcast joins under
+graph.BROADCAST_MAX_EDGES, hub-split shuffle joins above it), and JVM
+array_intersect does the set intersection inside codegen. No Python, no
+wedge set through a shuffle; the count aggregates map-side, like the
 reference's Counter never materializing matches
 (core/PatternMatching.hh:1413).
 """
@@ -22,30 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from peregrine_spark.operators.graph import GraphContext
-from peregrine_spark.operators.skew import hub_split_join
 from peregrine_spark.session import local_frame
-
-
-def _edge_adjacency_pairs(ctx: GraphContext) -> DataFrame:
-    """Per oriented edge (u,v): both endpoints' forward adjacency runs.
-
-    When the whole adjacency broadcasts, both attachments are map-side
-    broadcast hash joins — the |E| rows carrying ~O(sqrt E)-element
-    arrays never cross an exchange (guide §2.4: a broadcast join replaces
-    the shuffle of the large side; round-6 profile: the two
-    array-carrying shuffles were most of triangle_count wall at sf0.1).
-
-    Fallback above the bound: the src join is skew-safe (oriented
-    out-degree ≤ O(sqrt E)); the dst join is NOT — a mega-hub's in-degree
-    can approach |E|, pinning one task — so hub dsts take the broadcast
-    path (their adjacency runs are tiny: a high-degree vertex has few
-    higher-degree neighbours)."""
-    fwd, adj = ctx.fwd, ctx.adj
-    a_u = adj.select(F.col("id").alias("src"), F.col("adj").alias("adj_u"))
-    a_v = adj.select(F.col("id").alias("dst"), F.col("adj").alias("adj_v"))
-    if ctx.adj_broadcast():
-        return fwd.join(F.broadcast(a_u), "src").join(F.broadcast(a_v), "dst")
-    return hub_split_join(fwd.join(a_u, "src"), a_v, "dst", ctx.dag_hubs())
 
 
 def triangles(edges: DataFrame) -> DataFrame:
@@ -60,7 +38,7 @@ def triangles(edges: DataFrame) -> DataFrame:
     plan reads the input again when it runs (inside an enclosing
     GraphContext on the same edges, it reads that context's caches)."""
     with GraphContext(edges) as ctx:
-        return _edge_adjacency_pairs(ctx).select(
+        return ctx.edge_runs().select(
             F.col("src").alias("u"),
             F.col("dst").alias("v"),
             F.explode(F.array_intersect("adj_u", "adj_v")).alias("w"),
@@ -74,7 +52,7 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     context, so its caches are read and then released."""
     with GraphContext(edges) as ctx:
         row = (
-            _edge_adjacency_pairs(ctx)
+            ctx.edge_runs()
             .select(F.size(F.array_intersect("adj_u", "adj_v")).alias("c"))
             .agg(F.coalesce(F.sum("c"), F.lit(0)).cast("long").alias("n_triangles"))
             .first()

@@ -95,10 +95,10 @@ def test_cycle4_count_oriented_vs_oracle(spark):
     cases.append(np.array(rand_pairs, dtype=np.int64))
     from peregrine_spark.operators import graph as graph_mod
 
-    # All three physical routes: full wedge enumeration (route 1, the
-    # small-graph default), broadcast + intersect C-term (route 2,
-    # forced by failing the pair-packing id bound), and the hub-split
-    # shuffle fallback (route 3, forced via a 0 broadcast bound)
+    # Both physical routes: full wedge enumeration (the small-graph
+    # default), and the intersect route with broadcast adjacency
+    # attaches (forced by failing the pair-packing id bound) or
+    # hub-split shuffle ones (forced via a 0 broadcast bound)
     for bound, pack in (
         (graph_mod.BROADCAST_MAX_EDGES, graph_mod.PACK_MAX_ID),
         (graph_mod.BROADCAST_MAX_EDGES, 0),

@@ -37,6 +37,7 @@ from peregrine_spark.operators.labels import (
     mni_star2_supports,
     mni_star3_supports,
 )
+from peregrine_spark.operators.patterns import clique_count
 from peregrine_spark.operators.triangles import triangle_count
 from peregrine_spark.plans.patterns import SmallGraph
 from peregrine_spark.session import local_frame
@@ -216,15 +217,27 @@ def test_triangle_count_tasks(spark, copurchase):
     assert got["tasks"] <= TRIANGLE_COUNT_TASKS
 
 
+def test_clique_count_shape(spark, copurchase):
+    # both adjacency attaches of the base edge and the one of the 4th
+    # vertex are map-side broadcast joins (the graph is far below
+    # graph.BROADCAST_MAX_EDGES)
+    edges, _ = copurchase
+    got = plan_shape(spark, lambda: clique_count(edges, 4).collect())
+    assert got == {"executions": 3, "BroadcastHashJoin": 3}
+
+
 def test_degrees_shape(spark, copurchase):
     edges, _ = copurchase
     got = plan_shape(spark, lambda: degrees(edges).collect())
     assert got == {"executions": 1, "Exchange": 3}
 
 
-# cycle4_count's three routes, forced as in test_motifs_sinks: full wedge
-# enumeration (the default here), broadcast + intersect C-term (id
-# packing bound failed), hub-split shuffle (broadcast bound 0)
+# cycle4_count's two routes, forced as in test_motifs_sinks: full wedge
+# enumeration (the default here), and the intersect route with broadcast
+# adjacency attaches (id packing bound failed) or hub-split shuffle ones
+# (broadcast bound 0). The shuffle form's exchanges are the pair groupBy,
+# both sides of each of its three shuffle-hash attaches, and the final
+# aggregation's gather.
 CYCLE4_ROUTES = {
     "full_enum": ({}, {"executions": 3, "Exchange": 4}),
     "broadcast": (
@@ -233,7 +246,7 @@ CYCLE4_ROUTES = {
     ),
     "hub_split": (
         {"BROADCAST_MAX_EDGES": 0},
-        {"executions": 3, "Exchange": 5, "ShuffledHashJoin": 2},
+        {"executions": 3, "Exchange": 8, "ShuffledHashJoin": 3},
     ),
 }
 
@@ -294,7 +307,7 @@ LABEL_OPS = {
     ),
     "mni_star2_supports": (
         mni_star2_supports,
-        {"executions": 4, "Exchange": 5, "BroadcastHashJoin": 2},
+        {"executions": 5, "Exchange": 5, "BroadcastHashJoin": 2},
     ),
     "mni_star3_supports": (
         mni_star3_supports,
