@@ -251,16 +251,19 @@ def _q_clique(k: int):
 def _q_motifs4_vi(spark: SparkSession, sf_dir: str) -> DataFrame:
     # closed-form D2-D4 counting (degrees / triangle incidences /
     # codegrees / clique frontier) — never enumerates a 4-vertex set
-    from peregrine_spark.operators.motifs import motif_counts_k4
+    from peregrine_spark.operators.motifs import motif_counts
 
-    out = motif_counts_k4(spark, TD.copurchase_edges(spark, sf_dir))
+    out = motif_counts(
+        spark, TD.copurchase_edges(spark, sf_dir), 4, vertex_induced=True
+    )
     return out.select("motif", F.col("count").alias("n"))
 
 
 def _q_motifs5_vi_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
     # k=5 catalog (21 isomorphism classes) on a deterministically
-    # sparsified copurchase graph — generic-matcher enumeration + D5
-    # conversion vs per-motif join-chain/NOT-EXISTS/|Aut| oracle
+    # sparsified copurchase graph — catalog counting (fused groups +
+    # clique path) + D5 conversion vs per-motif
+    # join-chain/NOT-EXISTS/|Aut| oracle
     from peregrine_spark.operators.motifs import motif_counts
 
     e = TD.copurchase_edges(spark, sf_dir).filter(
@@ -321,21 +324,18 @@ M7_MODS = {
 
 
 def _motifs_ei_by_mod(
-    spark: SparkSession, sf_dir: str, k: int, mods: dict[str, int], clique: str
+    spark: SparkSession, sf_dir: str, k: int, mods: dict[str, int]
 ) -> DataFrame:
     """Shared k≥7 catalog-gate runner: per-class-density sparsified
-    copurchase graph, fused group counting + oriented clique path vs the
-    generated group-algebra oracle. The mod groups are INDEPENDENT
-    subgraphs — they run as concurrent Spark jobs (one thread per mod;
-    each job's straggler tail back-fills with another's tasks), results
-    assembled in catalog order so the output is identical to the old
-    sequential loop."""
+    copurchase graph, counted by motifs.class_counts (fused group
+    counting + oriented clique path) vs the generated group-algebra
+    oracle. The mod groups are INDEPENDENT subgraphs — they run as
+    concurrent Spark jobs (one thread per mod; each job's straggler tail
+    back-fills with another's tasks), results assembled in catalog
+    order."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from peregrine_spark.operators.graph import GraphContext
-    from peregrine_spark.operators.groups import group_count_many
-    from peregrine_spark.operators.motifs import all_motifs
-    from peregrine_spark.operators.patterns import clique_count
+    from peregrine_spark.operators.motifs import all_motifs, class_counts
 
     cat = all_motifs(k)
     full = TD.copurchase_edges(spark, sf_dir)
@@ -345,14 +345,7 @@ def _motifs_ei_by_mod(
 
     def run_mod(m: int, names: list[str]) -> dict[str, int]:
         e = full.filter((F.col("src") + F.col("dst")) % m == 0).cache()
-        out: dict[str, int] = {}
-        plannable = {n: cat[n] for n in names if n != clique}
-        # the clique count reads the context's canonical set and degree table
-        with GraphContext(e) as ctx:
-            if plannable:
-                out.update(group_count_many(e, plannable, ctx))
-            if clique in names:
-                out[clique] = clique_count(e, k).first()["n_cliques"]
+        out = class_counts(e, {n: cat[n] for n in names})
         e.unpersist()
         return out
 
@@ -370,7 +363,7 @@ def _motifs_ei_by_mod(
 
 
 def _q_motifs7_ei(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _motifs_ei_by_mod(spark, sf_dir, 7, M7_MODS, "m7_852")
+    return _motifs_ei_by_mod(spark, sf_dir, 7, M7_MODS)
 
 
 # k=8 cross-section (catalog parity past k=7 — reference ships
@@ -388,7 +381,7 @@ M8_MODS: dict[str, int] = {
 
 
 def _q_motifs8_ei(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _motifs_ei_by_mod(spark, sf_dir, 8, M8_MODS, "m8_11116")
+    return _motifs_ei_by_mod(spark, sf_dir, 8, M8_MODS)
 
 
 # k=9 cross-section (catalog parity: reference ships core/graphs/
@@ -403,7 +396,7 @@ M9_MODS: dict[str, int] = {
 
 
 def _q_motifs9_ei(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _motifs_ei_by_mod(spark, sf_dir, 9, M9_MODS, "m9_261079")
+    return _motifs_ei_by_mod(spark, sf_dir, 9, M9_MODS)
 
 
 # structurally complete k=5 subset for the UNSPARSIFIED gate: star /
@@ -419,27 +412,11 @@ M5_DENSE10 = [
 
 
 def _q_motifs5_ei_dense10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from peregrine_spark.operators.graph import GraphContext
-    from peregrine_spark.operators.groups import group_count_many
-    from peregrine_spark.operators.motifs import all_motifs
-    from peregrine_spark.operators.patterns import clique_count
-
-    from concurrent.futures import ThreadPoolExecutor
+    from peregrine_spark.operators.motifs import all_motifs, class_counts
 
     cat = all_motifs(5)
     e = TD.copurchase_edges(spark, sf_dir).cache()
-    plannable = {
-        n: cat[n]
-        for n in M5_DENSE10
-        if len(cat[n].edges) < len(cat[n].vertices) * (len(cat[n].vertices) - 1) // 2
-    }
-    # K5 runs concurrently with the fused group action (guide §2.6), in
-    # its own context, which reads this one's canonical set and degree table
-    with GraphContext(e) as ctx, ThreadPoolExecutor(max_workers=1) as pool:
-        ctx.n_vertices  # fill the shared caches before the thread reads them
-        f_k5 = pool.submit(lambda: clique_count(e, 5).first()["n_cliques"])
-        counts = group_count_many(e, plannable, ctx)
-        counts["m5_020"] = f_k5.result()
+    counts = class_counts(e, {n: cat[n] for n in M5_DENSE10})
     e.unpersist()
     return spark.createDataFrame(
         [(n, int(counts[n])) for n in M5_DENSE10], "motif string, n long"

@@ -136,7 +136,7 @@ _COLLAPSED_CACHE: dict[tuple[int, ...], dict] = {}
 class _ShapeFlow:
     """Shared per-core-shape counting flow: ONE core enumeration; every
     pattern on the shape REGISTERS its groups (deduped candidate-count
-    columns, correction flags, a row-value expression); totals() then
+    columns, correction flags, a row-value expression); _agg_plan() then
     builds the whole flow once — all |NU| ≥ 3 fan-out counts fused into
     a SINGLE tagged shuffle, degree/codegree/edge-membership lookups as
     broadcast dimensions when small — and runs one aggregation for every
@@ -177,7 +177,7 @@ class _ShapeFlow:
                     if q not in nbrs:
                         core_df = core_df.filter(F.col(_vcol(q)) != F.col(_vcol(p)))
         self.core_df = core_df
-        # registration state (no DataFrame work until totals())
+        # registration state (no DataFrame work until _agg_plan())
         self.raw_of: dict[frozenset, str] = {}
         self.flag_of: dict[tuple[int, int], str] = {}
         self.members: list[tuple[str, list[tuple[list[int], frozenset]]]] = []
@@ -472,16 +472,6 @@ class _ShapeFlow:
         ]
         return named.agg(*aggs), [n for n, _ in rowvals], scales
 
-    def totals(self) -> dict[str, object]:
-        """One action: Σ of every registered pattern's row value.
-        Returns {name: (decimal total, L scale)} — the caller divides by
-        L · |Aut| after multiplying by Π t_g!."""
-        aggd, names, scales = self._agg_plan()
-        row = aggd.first()
-        return {
-            name: (row[f"_r{i}"], scales[name]) for i, name in enumerate(names)
-        }
-
 
 def _totals_many(shapes: dict[str, "_ShapeFlow"]) -> dict[str, object]:
     """Totals for SEVERAL shape flows in ONE Spark action: each shape's
@@ -585,31 +575,14 @@ def _scope(edges: DataFrame, ctx: GraphContext | None):
 def group_count(
     edges: DataFrame,
     pattern: SmallGraph,
-    plan: tuple | None = None,
     ctx: GraphContext | None = None,
 ) -> DataFrame:
     """Count occurrences of an unlabelled anti-free `pattern` via core
-    enumeration + group counting. Single row (n_matches,). EAGER: the
-    one aggregation runs here, the ordered-pick / |Aut| / lcm division
-    happens in exact driver-side Python ints (a Spark decimal division
-    would be typed decimal(38,6), capping the total at ~10^32), and a
-    context it opened itself is released before returning — the result
-    is a 1-row local DataFrame."""
-    if plan is None:
-        plan = pattern.group_count_plan()
-    if plan is None:
-        raise ValueError("pattern has no group-count plan (labels/antis/no core)")
-    core, groups = plan
-    with _scope(edges, ctx) as ctx:
-        sf = _ShapeFlow(ctx, core, _core_subgraph(pattern, core))
-        sf.add_pattern("p", groups)
-        rowval, L = sf._rowval(groups, sf._use_long())
-        row = sf._build_flow().select(rowval.cast(_DEC).alias("_c")).agg(
-            F.coalesce(F.sum("_c"), F.lit(0).cast(_DEC)).alias("_tot")
-        ).first()
-    # ordered within-group picks (× Π t_g!) and unbroken enumeration
-    # (÷ |Aut| and the lcm scale) — exact in Python ints
-    mult = math.prod(math.factorial(len(members)) for members, _ in groups)
-    aut = pattern.aut_order_regular()
-    n = int(row["_tot"]) * mult // (aut * L)
+    enumeration + group counting: group_count_many over the one pattern.
+    Single row (n_matches,). EAGER: the one aggregation runs here, the
+    ordered-pick / |Aut| / lcm division happens in exact driver-side
+    Python ints (a Spark decimal division would be typed decimal(38,6),
+    capping the total at ~10^32), and a context it opened itself is
+    released before returning — the result is a 1-row local DataFrame."""
+    n = group_count_many(edges, {"p": pattern}, ctx)["p"]
     return local_frame(edges.sparkSession, [(n,)], "n_matches long")

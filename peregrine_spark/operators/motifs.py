@@ -2,18 +2,21 @@
 vertex-induced (the reference's count app + convert_counts rewrite,
 /root/reference/core/Peregrine.hh:1054-1095,1025-1041).
 
-Edge-induced counts come from the generic matcher (cheap — no
-anti-edges); vertex-induced counts are recovered by back-substitution:
+Edge-induced counts (cheap — no anti-edges) come from one catalog
+counter, class_counts: the clique frontier for complete classes, the
+fused group counter for every other class. k = 4 uses closed forms
+instead (_k4_counts). Vertex-induced counts are recovered by
+back-substitution:
     v[i] = e[i] − Σ_{j denser} num_mappings(p_j, p_i) · v[j]
 where num_mappings(p_j, p_i) is the number of edge-induced occurrences of
 p_i inside the (tiny) pattern p_j — computed with the same brute-force
-counter the test oracle uses, on a ≤5-vertex graph
+counter the test oracle uses, on a k-vertex graph
 (mirrors core/PatternMatching.hh:2149-2170).
 
-Pattern catalogs for k ≤ 4 are enumerated inline; k = 5 comes from the
+Pattern catalogs for k ≤ 4 are enumerated inline; k = 5..9 come from the
 brute-force isomorphism-class enumeration (plans/generators.all_connected,
-21 classes — the same catalog the reference decodes from graph6 files,
-core/graphs/graph5c.g6). The conversion logic is k-independent.
+21 classes at k = 5 — the same catalog the reference decodes from graph6
+files, core/graphs/graph5c.g6). The conversion logic is k-independent.
 """
 
 from __future__ import annotations
@@ -22,14 +25,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from peregrine_spark.operators.graph import GraphContext, adjacency
-from peregrine_spark.operators.patterns import match_pattern
 from peregrine_spark.plans.patterns import SmallGraph
 from peregrine_spark.reference import pattern_count
 from peregrine_spark.session import local_frame
 
 
 def all_motifs(k: int) -> dict[str, SmallGraph]:
-    """All connected unlabelled patterns on k vertices (k ≤ 8; the
+    """All connected unlabelled patterns on k vertices (3 ≤ k ≤ 9; the
     reference's integration tests count 4/5/6-motif catalogs from graph6
     files, core/integrationtests/Counting_test.hh:14-84, and ship
     catalogs to k=9 in core/graphs/ — here k ≤ 4 get stable human
@@ -85,99 +87,56 @@ def motif_counts(
     default; vertex_induced=True applies the back-substitution rewrite
     (the conversion is driver-side arithmetic on the tiny count vector).
 
-    Routing per class (the reference's special-case dispatch,
-    core/Graph.hh:1024-1080 + the D2-D4 counters):
-    - cliques → the oriented-DAG frontier intersection (clique_count);
-    - everything with a non-trivial group plan → the generalized B5
-      group counter (operators/groups.py) through match_pattern's auto
-      policy, sharing ONE GraphContext so degrees/codegrees are
-      computed once for the whole catalog — only minimum-vertex-cover
-      cores are enumerated, groups are counted;
-    - the residue (single non-core vertex with ≥3 core neighbours, e.g.
-      near-cliques) → the generic join-chain matcher.
-    All branches union into ONE action; degree_order stays off for the
-    enumeration residue because per-pattern orientation would add a
-    degree/orient exchange per class inside the shared job."""
-    from functools import reduce
+    k = 4 runs the closed forms (_k4_counts: degrees, triangle
+    incidences, codegrees and the clique frontier — on the sf0.01
+    co-purchase graph an order of magnitude cheaper than the fused
+    group counter); every other k counts its catalog with class_counts."""
+    cat = all_motifs(k)
+    e_counts = _k4_counts(edges) if k == 4 else class_counts(edges, cat)
+    out = _to_vertex_induced(cat, e_counts) if vertex_induced else e_counts
+    rows = [(n, out[n]) for n in cat]
+    return local_frame(spark, rows, "motif string, count long")
 
+
+def class_counts(edges: DataFrame, patterns: dict[str, SmallGraph]) -> dict[str, int]:
+    """Edge-induced count of each named connected pattern, {name: count}
+    (the reference's per-class dispatch, core/Graph.hh:1024-1080 + the
+    D2-D4 counters):
+    - complete patterns → the oriented-DAG frontier intersection
+      (clique_count), one thread each, concurrent with the group action
+      (independent jobs back-fill each other's straggler tails, guide
+      §2.6);
+    - every other pattern → the fused group counter (group_count_many):
+      one enumerated minimum-vertex-cover core flow per core shape, the
+      sibling groups counted, never enumerated. Every connected pattern
+      has a plan (V minus a non-cut vertex is a connected vertex cover,
+      so some vertex is left to count), so no class is enumerated.
+    One GraphContext serves all of them: its stats job fills the
+    canonical-set and degree caches BEFORE any thread starts (threads
+    started on empty caches compute the same partitions), and each
+    clique count's own context reads them. EAGER; releases its caches."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from peregrine_spark.operators.groups import group_count_many
     from peregrine_spark.operators.patterns import clique_count
 
-    cat = all_motifs(k)
-    names = list(cat)
-    # the union's branches cannot share uncached subplans — without this,
-    # every chain re-derives the input edge table from its sources.
-    # Only drop the cache at the end if WE created it (cache() on an
-    # already-cached input is a no-op; unpersisting would silently kill
-    # a caller's cache — round-5 advice).
-    was_cached = edges.storageLevel.useMemory or edges.storageLevel.useDisk
-    edges = edges.cache()
-
-    e_counts: dict[str, int] = {}
-    if k >= 5:
-        # fused group counting: one enumerated core flow per core SHAPE
-        # (5 shapes for k=5, 11 for k=6) instead of one join chain per
-        # class — the per-class Spark overhead (planning + tiny stages)
-        # otherwise dominates the whole catalog
-        from concurrent.futures import ThreadPoolExecutor
-
-        from peregrine_spark.operators.groups import group_count_many
-
-        plannable: dict[str, SmallGraph] = {}
-        residue: list[str] = []
-        cliques: list[tuple[str, int]] = []
-        for name in names:
-            g = cat[name]
-            nv = len(g.vertices)
-            if len(g.edges) == nv * (nv - 1) // 2:
-                cliques.append((name, nv))
-            elif g.group_count_plan() is not None:
-                plannable[name] = g
-            else:
-                residue.append(name)
-        # clique classes run CONCURRENTLY with the fused group action
-        # (independent jobs back-fill each other's straggler tails,
-        # guide §2.6); results land in catalog order below. Each clique
-        # count opens its own context, which reads this one's canonical
-        # set and degree table.
-        with GraphContext(edges) as ctx, ThreadPoolExecutor(
-            max_workers=max(1, len(cliques))
-        ) as pool:
-            # the stats job fills the canonical-set and degree caches once;
-            # threads started on empty caches compute the same partitions
-            ctx.n_vertices
-            futs = [
-                (name, pool.submit(
-                    lambda nv=nv: clique_count(edges, nv).first()["n_cliques"]
-                ))
-                for name, nv in cliques
-            ]
-            e_counts.update(group_count_many(edges, plannable, ctx))
-            for name in residue:  # none for k ≤ 6; kept for larger catalogs
-                e_counts[name] = match_pattern(
-                    edges, cat[name], degree_order=False, group_ctx=ctx
-                ).first()["n_matches"]
-            for name, f in futs:
-                e_counts[name] = f.result()
-    else:
-        counts_df = reduce(
-            DataFrame.unionByName,
-            [
-                match_pattern(edges, cat[name], degree_order=False).select(
-                    F.lit(name).alias("motif"), F.col("n_matches")
-                )
-                for name in names
-            ],
-        )
-        e_counts = {r["motif"]: r["n_matches"] for r in counts_df.collect()}
-    if not was_cached:  # every branch above is eager; drop OUR input cache
-        edges.unpersist()
-    if not vertex_induced:
-        rows = [(n, e_counts[n]) for n in names]
-        return local_frame(spark, rows, "motif string, count long")
-
-    v_counts = _to_vertex_induced(cat, e_counts)
-    rows = [(n, v_counts[n]) for n in names]
-    return local_frame(spark, rows, "motif string, count long")
+    cliques = {
+        n: len(g.vertices)
+        for n, g in patterns.items()
+        if len(g.edges) == len(g.vertices) * (len(g.vertices) - 1) // 2
+    }
+    rest = {n: g for n, g in patterns.items() if n not in cliques}
+    with GraphContext(edges) as ctx, ThreadPoolExecutor(
+        max_workers=max(1, len(cliques))
+    ) as pool:
+        ctx.n_vertices
+        futs = {
+            n: pool.submit(lambda k=k: clique_count(edges, k).first()["n_cliques"])
+            for n, k in cliques.items()
+        }
+        counts = group_count_many(edges, rest, ctx) if rest else {}
+        counts.update({n: int(f.result()) for n, f in futs.items()})
+    return {n: counts[n] for n in patterns}
 
 
 def _to_vertex_induced(
@@ -346,18 +305,16 @@ def _cycle4(ctx: GraphContext) -> int:
     return int(row["n_cycles"])
 
 
-def motif_counts_k4(
-    spark: SparkSession, edges: DataFrame, vertex_induced: bool = True
-) -> DataFrame:
-    """All six connected 4-vertex motif counts via closed-form counting —
+def _k4_counts(edges: DataFrame) -> dict[str, int]:
+    """All six connected 4-vertex edge-induced motif counts, {name:
+    count}, via closed-form counting —
     the reference's candidate-size / binomial / inclusion-exclusion
     shortcuts (D2-D4, core/PatternMatching.hh:1741-1857) generalized to
     the whole k=4 catalog. Never enumerates a 4-vertex occurrence: only
     degrees, the triangle list, per-edge/per-vertex triangle counts, pair
     codegrees, and the 4-clique frontier.
 
-    Edge-induced identities (then D5 back-substitution when
-    vertex_induced):
+    Edge-induced identities:
       star4    = Σ_v C(deg v, 3)
       path4    = Σ_{(u,v)∈E} (deg u − 1)(deg v − 1) − 3·triangles
       tailed   = Σ_v t_v · (deg v − 2)
@@ -463,7 +420,7 @@ def motif_counts_k4(
                 f.result() for f in [pool.submit(t) for t in terms]
             ]
 
-    e_counts = {
+    return {
         "path4": int(mid) - 3 * n_tri,
         "star4": int(e_star4),
         "cycle4": int(e_cycle4),
@@ -471,10 +428,6 @@ def motif_counts_k4(
         "diamond": int(e_diamond),
         "clique4": int(e_clique4),
     }
-    cat = all_motifs(4)
-    out = _to_vertex_induced(cat, e_counts) if vertex_induced else e_counts
-    rows = [(n, out[n]) for n in cat]
-    return local_frame(spark, rows, "motif string, count long")
 
 
 def star_count(edges: DataFrame, k: int) -> DataFrame:

@@ -89,9 +89,7 @@ def match_pattern(
     count_only: bool = True,
     known_labels: set[int] | None = None,
     group_by_label_of: int | None = None,
-    degree_order: bool | None = None,
     tail_count: bool = True,
-    group_ctx=None,
 ) -> DataFrame:
     """Match `pattern` in the graph given by `edges` (any edge list).
 
@@ -115,19 +113,21 @@ def match_pattern(
     counts (label, n_matches) instead of one total — the reference's
     vector aggregation (D8) over the discovered label.
 
-    degree_order (default: on for counting, off for enumeration/grouped
-    output): vertices are compared by (degree, id) instead of id — the
-    Spark form of the reference's degree-desc renumbering
-    (core/DataConverter.cc:283-287). Every extension whose symmetry
-    condition fixes the direction then joins against the ORIENTED edge
-    table, whose out-degrees are O(sqrt E) — for cliques/cycles the
-    generic matcher collapses to the oriented algorithm instead of
-    fanning out Θ(Σ deg²) wedge rows. Counts are invariant (any strict
-    total order picks exactly one representative per occurrence);
-    WHICH data vertex lands at each automorphic position changes, so
-    enumerated/grouped outputs default to plain id order. A
-    degree-ordered count runs eagerly inside a GraphContext; every other
-    result is lazy and leaves nothing cached."""
+    Degree order: a plain count (no grouped output) whose join chain
+    has an extension step ordered by a symmetry condition against a
+    matched neighbour (triangles, cliques, cycles) compares vertices by
+    (degree, id) instead of id — the Spark form of the reference's
+    degree-desc renumbering (core/DataConverter.cc:283-287). Every such
+    extension then joins against the ORIENTED edge table, whose
+    out-degrees are O(sqrt E), so the matcher collapses to the oriented
+    algorithm instead of fanning out Θ(Σ deg²) wedge rows. Counts are
+    invariant (any strict total order picks exactly one representative
+    per occurrence); WHICH data vertex lands at each automorphic
+    position changes, so enumerated and grouped outputs keep plain id
+    order, as do chains with no ordered extension (the orientation
+    setup would be pure overhead). A degree-ordered count runs eagerly
+    inside a GraphContext; every other result is lazy and leaves
+    nothing cached."""
     pattern.validate_anti_vertices()
     pv = pattern.regular_vertices()
     antis = pattern.anti_vertices()
@@ -171,29 +171,26 @@ def match_pattern(
             )
 
             if plan_profitable(plan, t_tail=t_tail):
-                return group_count(edges, pattern, plan=plan, ctx=group_ctx)
+                return group_count(edges, pattern)
     # B4 multi-order selection: re-order the enumerated head so symmetry
     # conditions prune as early as possible (the trailing counted group
     # stays pinned; t_tail's validity is set-based, so it survives the
     # reorder). See SmallGraph.enumeration_order for the measurements.
     order = pattern.enumeration_order(conds, t_tail=t_tail, default=order)
     prefix = order[: len(order) - t_tail] if t_tail else order
-    if degree_order is None:
-        # orientation only pays when some EXTENSION join (step ≥ 2) can
-        # use the oriented table — i.e. the new vertex is symmetry-ordered
-        # against a matched true-neighbour (triangles, cliques, cycles).
-        # Otherwise the orient()/degrees() setup is pure overhead. Tail
-        # vertices are counted, not joined, so they don't count here.
-        ordered_ext = any(
-            (q, p) in conds or (p, q) in conds
-            for i in range(2, len(prefix))
-            for p in [prefix[i]]
-            for q in prefix[:i]
-            if q in pattern.neighbours(p)
-        )
-        degree_order = (
-            count_only and group_by_label_of is None and ordered_ext
-        )
+    # orientation only pays when some EXTENSION join (step ≥ 2) can
+    # use the oriented table — i.e. the new vertex is symmetry-ordered
+    # against a matched true-neighbour (triangles, cliques, cycles).
+    # Otherwise the orient()/degrees() setup is pure overhead. Tail
+    # vertices are counted, not joined, so they don't count here.
+    ordered_ext = any(
+        (q, p) in conds or (p, q) in conds
+        for i in range(2, len(prefix))
+        for p in [prefix[i]]
+        for q in prefix[:i]
+        if q in pattern.neighbours(p)
+    )
+    degree_order = count_only and group_by_label_of is None and ordered_ext
 
     chain = (
         pattern, labels, count_only, known_labels, group_by_label_of,

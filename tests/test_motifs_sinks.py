@@ -51,23 +51,22 @@ def test_mni_support(spark):
 
 
 @pytest.mark.parametrize("gname", ["k6", "two_tri_bridge", "disconnected", "star_hub"])
-def test_motif_counts_k4_closed_form_vs_generic(spark, gname):
-    """The closed-form D2-D4 counter must equal the generic join-chain
-    matcher (and hence the brute-force oracle) on every golden graph."""
-    from peregrine_spark.operators.motifs import motif_counts_k4
-
+def test_motif_counts_k4_closed_form_vs_oracle(spark, gname):
+    """motif_counts at k = 4 runs the closed-form D2-D4 counter; its edge-
+    and vertex-induced counts must equal the brute-force oracle on every
+    golden graph (star_hub: a 50-leaf hub, every term but star4 zero)."""
     pairs = golden.ALL[gname]
     e = golden.to_spark_edges(spark, pairs)
     for vi in (False, True):
-        closed = {
-            r.motif: r["count"]
-            for r in motif_counts_k4(spark, e, vertex_induced=vi).collect()
-        }
-        generic = {
+        got = {
             r.motif: r["count"]
             for r in motif_counts(spark, e, 4, vertex_induced=vi).collect()
         }
-        assert closed == generic, (gname, vi, closed, generic)
+        want = {
+            name: ref.pattern_count(pairs, _as_complement_anti(pat) if vi else pat)
+            for name, pat in all_motifs(4).items()
+        }
+        assert got == want, (gname, vi, got, want)
 
 
 def test_cycle4_count_oriented_vs_oracle(spark):
@@ -138,22 +137,26 @@ def test_cycle4_count_ids_below_int32(spark):
 def test_motifs5_catalog_vs_oracle(spark):
     """k=5 catalog (21 isomorphism classes) — golden parity with the
     brute-force oracle, mirroring the reference's 5-motif truth files
-    (core/integrationtests/Counting_test.hh:30-50, truth/5m.txt)."""
-    from peregrine_spark.operators.motifs import _as_complement_anti
-
+    (core/integrationtests/Counting_test.hh:30-50, truth/5m.txt). The
+    two-triangle bridge has one nonzero vertex-induced class; the seeded
+    random graph has 15 of 21, so the back-substitution's dense terms
+    are exercised too."""
     cat = all_motifs(5)
     assert len(cat) == 21
-    pairs = golden.TWO_TRI_BRIDGE
-    e = golden.to_spark_edges(spark, pairs)
-    got_e = {
-        r.motif: r["count"]
-        for r in motif_counts(spark, e, 5, vertex_induced=False).collect()
-    }
-    got_v = {
-        r.motif: r["count"]
-        for r in motif_counts(spark, e, 5, vertex_induced=True).collect()
-    }
-    for name, pat in cat.items():
-        assert got_e[name] == ref.pattern_count(pairs, pat), name
-        want_v = ref.pattern_count(pairs, _as_complement_anti(pat))
-        assert got_v[name] == want_v, (name, got_v[name], want_v)
+    for gname, pairs in (
+        ("two_tri_bridge", golden.TWO_TRI_BRIDGE),
+        ("random_12_40_7", golden.random_graph(12, 40, seed=7)),
+    ):
+        e = golden.to_spark_edges(spark, pairs)
+        got_e = {
+            r.motif: r["count"]
+            for r in motif_counts(spark, e, 5, vertex_induced=False).collect()
+        }
+        got_v = {
+            r.motif: r["count"]
+            for r in motif_counts(spark, e, 5, vertex_induced=True).collect()
+        }
+        for name, pat in cat.items():
+            assert got_e[name] == ref.pattern_count(pairs, pat), (gname, name)
+            want_v = ref.pattern_count(pairs, _as_complement_anti(pat))
+            assert got_v[name] == want_v, (gname, name, got_v[name], want_v)

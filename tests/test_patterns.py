@@ -457,7 +457,7 @@ def test_group_count_all_k5_classes(spark):
     for i, g in enumerate(all_connected(5)):
         plan = g.group_count_plan()
         assert plan is not None, i
-        got = group_count(e, g, plan=plan, ctx=ctx).first()["n_matches"]
+        got = group_count(e, g, ctx=ctx).first()["n_matches"]
         want = ref.pattern_count(pairs, g)
         assert got == want, (i, got, want, plan)
     ctx.unpersist()
